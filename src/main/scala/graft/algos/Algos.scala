@@ -60,6 +60,41 @@ object Algos {
   private def cache(df: DataFrame): DataFrame =
     df.persist(StorageLevel.MEMORY_AND_DISK)
 
+  /** The checkpoint cadence of a loop's carried frame `cur`, starting
+    * from the checkpointed `start`. Round `i` [[materialize]]s when
+    * `i % every == 0 || i == last` and [[cache]]s otherwise, so lineage
+    * never spans more than `every` rounds while the eager write-out jobs
+    * (the per-round fixed cost at small data) fall `every`-fold. The
+    * release rule lives here only: the caches pending since the last
+    * checkpoint are unpersisted, and the superseded checkpoint released,
+    * only AFTER the new checkpoint is stored — they are the recompute
+    * path of everything in between.
+    */
+  private final class Rounds(start: DataFrame, every: Int, last: Int) {
+    private var live = start
+    private var lastMat = start
+    private var pending: List[DataFrame] = Nil
+
+    def cur: DataFrame = live
+
+    def step(i: Int, next: DataFrame): DataFrame = {
+      if (i % every == 0 || i == last) checkpoint(next)
+      else { live = cache(next); pending = live :: pending }
+      live
+    }
+
+    /** Checkpoint a pending cache — for loops that exit before `last`. */
+    def flush(): Unit = if (pending.nonEmpty) checkpoint(live)
+
+    private def checkpoint(next: DataFrame): Unit = {
+      live = materialize(next)
+      pending.foreach(_.unpersist())
+      pending = Nil
+      release(lastMat)
+      lastMat = live
+    }
+  }
+
   /** Runs `body` with spark.sql.shuffle.partitions sized to an
     * iterative loop's data instead of the session default, on an
     * isolated session clone. r14 lesson (measured on SCC): 32 tasks
@@ -107,18 +142,6 @@ object Algos {
     val loop = org.apache.spark.sql.graftshim.GraftShims
       .clampedSession(spark, "spark.sql.shuffle.partitions", clamp)
     body(new LoopScope(spark, loop))
-  }
-
-  // opt-in SCC phase timing (set GRAFT_SCC_DEBUG=1): stderr lines per
-  // trim round / coloring step / peel — the diagnostic that located the
-  // r14 plan-blowup and task-launch costs; zero overhead when unset
-  private val sccDebug = sys.env.contains("GRAFT_SCC_DEBUG")
-  // same opt-in timing for the k-truss rounds (GRAFT_TRUSS_DEBUG=1)
-  private val trussDebug = sys.env.contains("GRAFT_TRUSS_DEBUG")
-  private def sccTick(label: String, t0: Long): Long = {
-    val t1 = System.nanoTime
-    if (sccDebug) Console.err.println(f"[scc] $label ${(t1 - t0) / 1e9}%.2fs")
-    t1
   }
 
   /** Single-source BFS shortest hop-distances over a directed edge frame.
@@ -289,13 +312,7 @@ object Algos {
     val c = 60 - p + 1
     val spark = edges.sparkSession
     import spark.implicits._
-    val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-      .filter(col(src) =!= col(dst))
-    // canonical-half distinct (m-row exchange, not 2m) — see louvainSym
-    val canon = fwd.select(least(col("u"), col("v")).as("u"),
-      greatest(col("u"), col("v")).as("v")).distinct()
-    val sym0 = materialize(
-      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
+    val sym0 = symmetric(edges, src, dst)
     val out = withLoopParts(spark, sym0.count()) { sc =>
     val sym = sc.in(sym0)
     val nodes = sym.select(col("u").as("id")).distinct()
@@ -375,18 +392,15 @@ object Algos {
     */
   def neighborhoodFunction(edges: DataFrame, rounds: Int = 3, p: Int = 6,
       src: String = "_src", dst: String = "_dst"): DataFrame =
-    neighborhoodFunctionFrom(hyperBall(edges, rounds, p, src, dst), rounds)
+    neighborhoodFunctionFrom(hyperBall(edges, rounds, p, src, dst))
 
   /** NF(t) over a PRECOMPUTED [[hyperBall]] frame — the overload that
     * stops a caller wanting both the per-node balls and the NF curve
     * from paying the iterative register run twice (r19 advice). `hb`
-    * must be a hyperBall output (or any frame with `t` and 3-dp `est`).
-    * `rounds` is IGNORED (r21 advice): nf_last derives from the frame's
-    * own max t, so a mismatch between the parameter and the frame can
-    * no longer produce zero rows or a curve not ending at 1000; the
-    * parameter is retained for source compatibility only.
+    * must be a hyperBall output (or any frame with `t` and 3-dp `est`);
+    * the round count is the frame's own max t.
     */
-  def neighborhoodFunctionFrom(hb: DataFrame, rounds: Int = 3): DataFrame = {
+  def neighborhoodFunctionFrom(hb: DataFrame): DataFrame = {
     // checkpoint the rounds+1-row aggregate: the reach-permille join
     // reads it through TWO branches, which would otherwise each rescan
     // the (node, t) estimate frame. DECIMAL(38,3), not (20,3): NF is
@@ -904,7 +918,6 @@ object Algos {
     val doneParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     doneParts += selfOnly
     var outer = 0
-    var sccT = sccTick(s"setup rem=$remCount edges=$edgeCount", System.nanoTime)
     // Only the final single-shuffle canonicalization escapes the sized
     // scope, deliberately — it runs at the session's parallelism.
     withLoopParts(spark, edgeCount) { sc =>
@@ -945,7 +958,6 @@ object Algos {
         val dropped = materialize(remaining.join(keepIds, Seq("id"), "left_anti")
           .select(col("id"), col("id").as("root")))
         val nDropped = dropped.count() // cheap: checkpointed, loopParts tasks
-        sccT = sccTick(s"trim#$outer.$trimRounds dropped=$nDropped", sccT)
         if (nDropped == 0L) { trimming = false; release(dropped) }
         else {
           doneParts += dropped
@@ -975,7 +987,6 @@ object Algos {
         // best ancestor reaches me), so chains collapse in O(log d)
         // steps, not O(d).
         val fwd = maxColoring(e, remaining, maxInner)
-        sccT = sccTick(s"fwd#$outer", sccT)
         // ---- backward pass on the REVERSED, same-color-restricted
         // subgraph: every node's color class has ids <= its color c (a
         // node's color is at least itself), and a path u→c inside the
@@ -988,7 +999,6 @@ object Algos {
           .filter(col("cu") === col("cv"))
           .select(col("v").as("u"), col("u").as("v")))
         val bwd = maxColoring(eSame, remaining, maxInner)
-        sccT = sccTick(s"bwd#$outer", sccT)
         val members = materialize(
           fwd.join(bwd.withColumnRenamed("color", "bcolor"), "id")
             .filter(col("color") === col("bcolor"))
@@ -1005,7 +1015,6 @@ object Algos {
         // members/remaining/e are all checkpointed above — every frame of
         // this pass is dead and release is safe
         release(prevR, prevE, fwd, bwd, eSame)
-        sccT = sccTick(s"peel#$outer rem=$remCount", sccT)
       }
       }
       }
@@ -1147,7 +1156,6 @@ object Algos {
           coalesce(col("anc2"), col("anc")).as("anc"))
     }
     while (!fixed && steps < maxInner) {
-      val t0 = System.nanoTime
       steps += 1
       val prev = colors
       colors = materialize(step(prev)) // the step's ONE evaluation job
@@ -1157,7 +1165,6 @@ object Algos {
         fixed = s == prevSum
         prevSum = s
       }
-      if (sccDebug) sccTick(s"  color step=$steps", t0)
     }
     if (!fixed) throw new IllegalStateException(
       s"SCC coloring did not converge in $maxInner steps")
@@ -1174,70 +1181,10 @@ object Algos {
     * formulation) so ranks sum to 1. Returns (id, rank).
     */
   def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85,
-      src: String = "_src", dst: String = "_dst"): DataFrame = {
-    val spark = edges.sparkSession
-    // materialized ONCE: the old lazy frame re-ran the distinct shuffle
-    // every iteration (r14 audit)
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v")).distinct())
-    val eCount = e0.count()
-    val nodes = materialize(
-      e0.select(col("u").as("id")).unionByName(e0.select(col("v").as("id"))).distinct())
-    val n = nodes.count().toDouble
-    val outDeg = e0.groupBy(col("u").as("id")).agg(count(lit(1)).as("outdeg"))
-    val graph0 = materialize(nodes.join(outDeg, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg")))
-    val ranksOut = withLoopParts(spark, eCount) { sc =>
-    val e = sc.in(e0)
-    val graph = sc.in(graph0)
-    // r22 (guide §2.4): ranks CARRIES outdeg through the loop — the
-    // old per-round `ranks.join(graph)` re-attached a static column
-    // ten times; both per-round consumers (contribution join, dangling
-    // aggregate) now read ranks directly. The carried column adds 8
-    // bytes/row to each checkpoint; the update expression and hence
-    // every rank value is unchanged.
-    var ranks = materialize(
-      graph.select(col("id"), col("outdeg"), lit(1.0 / n).as("rank")))
-    // r21: checkpoint every 2nd round (the labelPropagation / kCore
-    // cadence) — lineage depth stays <= 2 rounds while halving the eager
-    // write-out jobs, the loop's dominant fixed cost at small per-round
-    // data. Odd-round caches (each read twice: contribution join +
-    // dangling aggregate) are only dropped once the next checkpoint has
-    // materialized their consumers.
-    var lastMat = ranks
-    var pendingCaches: List[DataFrame] = Nil
-    for (i <- 1 to iterations) {
-      val contribs = ranks.filter(col("outdeg") > 0)
-        .join(e, col("id") === col("u"))
-        .select(col("v").as("id"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy("id").agg(sum("c").as("contrib"))
-      // dangling mass as a broadcast ONE-ROW frame folded into the update
-      // plan — no per-iteration driver action (the `.first()` it replaces
-      // cost one extra job per iteration, 1/3 of the loop's fixed cost)
-      val dangling = ranks.filter(col("outdeg") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      val next = graph
-        .join(contribs, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("outdeg"),
-          (lit((1.0 - damping) / n) + lit(damping) * col("dmass") / n +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      if (i % 2 == 0 || i == iterations) {
-        ranks = materialize(next)
-        pendingCaches.foreach(_.unpersist())
-        pendingCaches = Nil
-        release(lastMat)
-        lastMat = ranks
-      } else {
-        // the lazy odd-round frame itself is the double-read consumer now
-        ranks = cache(next)
-        pendingCaches = ranks :: pendingCaches
-      }
-    }
-    sc.out(ranks.select("id", "rank"))
-    }
-    release(e0, graph0, nodes)
-    ranksOut
-  }
+      src: String = "_src", dst: String = "_dst"): DataFrame =
+    rankLoop(edges.select(col(src).as("u"), col(dst).as("v")).distinct(),
+      iterations, damping, count(lit(1)).as("outdeg"),
+      col("rank") / col("outdeg"))(uniformRestart(damping))
 
   /** WEIGHTED PageRank — [[pageRank]] with per-edge weights: node u
     * splits its rank over out-neighbors PROPORTIONALLY to edge weight
@@ -1254,64 +1201,13 @@ object Algos {
     */
   def pageRankWeighted(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85, src: String = "_src", dst: String = "_dst",
-      weight: String = "_w"): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = materialize(edges
-      .select(col(src).as("u"), col(dst).as("v"),
-        col(weight).cast(LongType).as("w"))
-      .groupBy("u", "v").agg(sum(col("w")).cast(LongType).as("w")))
-    val eCount = e0.count()
-    val nodes = materialize(
-      e0.select(col("u").as("id")).unionByName(e0.select(col("v").as("id"))).distinct())
-    val n = nodes.count().toDouble
-    val outW = e0.groupBy(col("u").as("id")).agg(sum(col("w")).as("wout"))
-    val graph0 = materialize(nodes.join(outW, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("wout"), lit(0L)).as("wout")))
-    val ranksOut = withLoopParts(spark, eCount) { sc =>
-    val e = sc.in(e0)
-    val graph = sc.in(graph0)
-    // r22: ranks carries wout — see pageRank (drops the per-round
-    // static-column re-join; values unchanged)
-    var ranks = materialize(
-      graph.select(col("id"), col("wout"), lit(1.0 / n).as("rank")))
-    // r21: every-2nd-round checkpoint cadence — see pageRank.
-    // r22 (the r21-verdict #2 settle-or-revert): the per-round revert
-    // was A/B'd twice against this cadence — 2.37× WORSE (hot control)
-    // and 1.02× (clean control); the revert is never faster, so the
-    // r21 suite's disjoint-band regression was environmental, not the
-    // cadence. KEPT.
-    var lastMat = ranks
-    var pendingCaches: List[DataFrame] = Nil
-    for (i <- 1 to iterations) {
-      val contribs = ranks.filter(col("wout") > 0)
-        .join(e, col("id") === col("u"))
-        .select(col("v").as("id"),
-          (col("rank") * col("w") / col("wout")).as("c"))
-        .groupBy("id").agg(sum("c").as("contrib"))
-      val dangling = ranks.filter(col("wout") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      val next = graph
-        .join(contribs, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("wout"),
-          (lit((1.0 - damping) / n) + lit(damping) * col("dmass") / n +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      if (i % 2 == 0 || i == iterations) {
-        ranks = materialize(next)
-        pendingCaches.foreach(_.unpersist())
-        pendingCaches = Nil
-        release(lastMat)
-        lastMat = ranks
-      } else {
-        ranks = cache(next)
-        pendingCaches = ranks :: pendingCaches
-      }
-    }
-    sc.out(ranks.select("id", "rank"))
-    }
-    release(e0, graph0, nodes)
-    ranksOut
-  }
+      weight: String = "_w"): DataFrame =
+    rankLoop(edges
+        .select(col(src).as("u"), col(dst).as("v"),
+          col(weight).cast(LongType).as("w"))
+        .groupBy("u", "v").agg(sum(col("w")).cast(LongType).as("w")),
+      iterations, damping, sum(col("w")).as("wout"),
+      col("rank") * col("w") / col("wout"))(uniformRestart(damping))
 
   /** Personalized PageRank: random-walk-with-restart where the restart
     * mass (and any dangling mass) returns to the SEED set instead of the
@@ -1329,54 +1225,88 @@ object Algos {
       iterations: Int = 10, damping: Double = 0.85,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(seeds.nonEmpty, "seed set must be non-empty")
-    val spark = edges.sparkSession
     val sN = seeds.size.toDouble
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v")).distinct())
+    // the restart needs |S| only, never the node count
+    rankLoop(edges.select(col(src).as("u"), col(dst).as("v")).distinct(),
+      iterations, damping, count(lit(1)).as("outdeg"),
+      col("rank") / col("outdeg"), col("id").isin(seeds: _*).as("is_seed")) { _ =>
+      (when(col("is_seed"), lit(1.0 / sN)).otherwise(lit(0.0)),
+        when(col("is_seed"),
+          lit((1.0 - damping) / sN) + lit(damping) * col("dmass") / sN)
+          .otherwise(lit(0.0)))
+    }
+  }
+
+  /** [[pageRank]]'s restart: uniform over the n graph nodes (one count
+    * job on the node frame) — initial rank 1/n, teleport plus dangling
+    * mass spread as (1−d)/n + d·dmass/n. */
+  private def uniformRestart(damping: Double)(nodes: DataFrame): (Column, Column) = {
+    val n = nodes.count().toDouble
+    (lit(1.0 / n), lit((1.0 - damping) / n) + lit(damping) * col("dmass") / n)
+  }
+
+  /** The one loop behind the PageRank family, over an (u, v[, w]) edge
+    * frame: the edges, the node set and the node frame (id, degree,
+    * `carried`…) are materialized ONCE; each round is one contribution
+    * shuffle of `share` (over rank, the degree and the edge columns)
+    * plus a broadcast one-row dangling aggregate `dmass`, and the new
+    * rank is `teleport + d·contrib`. `deg` is the out-degree aggregate,
+    * aliased to the degree column's name. `restart` receives the node
+    * frame and returns (initial rank, teleport term over dmass). Every
+    * rank expression is built term for term the way the DuckDB oracles
+    * replay it. Returns (id, rank).
+    */
+  private def rankLoop(edgeFrame: DataFrame, iterations: Int, damping: Double,
+      deg: Column, share: Column, carried: Column*)(
+      restart: DataFrame => (Column, Column)): DataFrame = {
+    // materialized ONCE: the old lazy frame re-ran the distinct shuffle
+    // every iteration (r14 audit)
+    val e0 = materialize(edgeFrame)
     val eCount = e0.count()
     val nodes = materialize(
       e0.select(col("u").as("id")).unionByName(e0.select(col("v").as("id"))).distinct())
-    val outDeg = e0.groupBy(col("u").as("id")).agg(count(lit(1)).as("outdeg"))
-    val graph0 = materialize(nodes.join(outDeg, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        col("id").isin(seeds: _*).as("is_seed")))
-    val ranksOut = withLoopParts(spark, eCount) { sc =>
+    val (init, teleport) = restart(nodes)
+    val degs = e0.groupBy(col("u").as("id")).agg(deg)
+    val d = degs.columns(1)
+    val graph0 = materialize(nodes.join(degs, Seq("id"), "left_outer")
+      .select(Seq(col("id"), coalesce(col(d), lit(0L)).as(d)) ++ carried: _*))
+    // r22 (guide §2.4): ranks CARRIES the node frame's static columns
+    // through the loop — the old per-round `ranks.join(graph)`
+    // re-attached them every round; both per-round consumers
+    // (contribution join, dangling aggregate) now read ranks directly.
+    // The carried columns widen each checkpoint; every rank value is
+    // unchanged.
+    val static = graph0.columns.toSeq.map(col)
+    val ranksOut = withLoopParts(edgeFrame.sparkSession, eCount) { sc =>
     val e = sc.in(e0)
     val graph = sc.in(graph0)
-    // r22: ranks carries (outdeg, is_seed) — see pageRank (drops the
-    // per-round static-column re-join; values unchanged)
-    var ranks = materialize(graph.select(col("id"), col("outdeg"),
-      col("is_seed"),
-      when(col("is_seed"), lit(1.0 / sN)).otherwise(lit(0.0)).as("rank")))
-    // r21: every-2nd-round checkpoint cadence — see pageRank
-    var lastMat = ranks
-    var pendingCaches: List[DataFrame] = Nil
+    // r21: checkpoint every 2nd round — lineage depth stays <= 2 rounds
+    // while halving the eager write-out jobs, the loop's dominant fixed
+    // cost at small per-round data; odd-round caches are read twice
+    // (contribution join + dangling aggregate). r22 (the r21-verdict #2
+    // settle-or-revert): the per-round revert was A/B'd twice on
+    // q_pagerank_w against this cadence — 2.37× WORSE (hot control) and
+    // 1.02× (clean control); the revert is never faster, so the r21
+    // suite's disjoint-band regression was environmental. KEPT.
+    val ranks = new Rounds(
+      materialize(graph.select(static :+ init.as("rank"): _*)), 2, iterations)
     for (i <- 1 to iterations) {
-      val contribs = ranks.filter(col("outdeg") > 0)
+      val contribs = ranks.cur.filter(col(d) > 0)
         .join(e, col("id") === col("u"))
-        .select(col("v").as("id"), (col("rank") / col("outdeg")).as("c"))
+        .select(col("v").as("id"), share.as("c"))
         .groupBy("id").agg(sum("c").as("contrib"))
-      val dangling = ranks.filter(col("outdeg") === 0)
+      // dangling mass as a broadcast ONE-ROW frame folded into the update
+      // plan — no per-iteration action (the `.first()` it replaces cost
+      // one extra job per iteration, 1/3 of the loop's fixed cost)
+      val dangling = ranks.cur.filter(col(d) === 0)
         .agg(coalesce(sum("rank"), lit(0.0)).as("dmass"))
-      val next = graph
+      ranks.step(i, graph
         .join(contribs, Seq("id"), "left_outer")
         .crossJoin(broadcast(dangling))
-        .select(col("id"), col("outdeg"), col("is_seed"),
-          (when(col("is_seed"),
-            lit((1.0 - damping) / sN) + lit(damping) * col("dmass") / sN)
-            .otherwise(lit(0.0)) +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      if (i % 2 == 0 || i == iterations) {
-        ranks = materialize(next)
-        pendingCaches.foreach(_.unpersist())
-        pendingCaches = Nil
-        release(lastMat)
-        lastMat = ranks
-      } else {
-        ranks = cache(next)
-        pendingCaches = ranks :: pendingCaches
-      }
+        .select(static :+ (teleport +
+          lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"): _*))
     }
-    sc.out(ranks.select("id", "rank"))
+    sc.out(ranks.cur.select("id", "rank"))
     }
     release(e0, graph0, nodes)
     ranksOut
@@ -1390,7 +1320,7 @@ object Algos {
   def labelPropagation(edges: DataFrame, iterations: Int = 5,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-    // canonical-half distinct (m-row exchange, not 2m) — see louvainSym;
+    // canonical-half distinct (m-row exchange, not 2m) — see symmetric;
     // self-loops are NOT filtered here (a self-edge contributes the
     // node's own label, part of the declared semantics), so only the
     // non-self pairs are mirrored back
@@ -1401,16 +1331,13 @@ object Algos {
         .select(col("v").as("u"), col("u").as("v"))))
     val out = withLoopParts(edges.sparkSession, sym0.count()) { sc =>
     val sym = sc.in(sym0)
-    var labels = materialize(
-      sym.select(col("u").as("id")).distinct().withColumn("label", col("id")))
-    // release hygiene: lastMat = the newest CHECKPOINTED labels frame
-    // (releasable once a newer checkpoint exists); pendingCache = the
-    // lazy odd-round frame between two checkpoints (uncache only — its
-    // recompute path runs through lastMat)
-    var lastMat = labels
-    var pendingCache: DataFrame = null
+    // checkpoint every 2nd round: lineage depth stays <= 2 join levels
+    // while halving the eager write-out jobs (the per-round fixed cost)
+    val labels = new Rounds(materialize(
+      sym.select(col("u").as("id")).distinct().withColumn("label", col("id"))),
+      2, iterations)
     for (i <- 1 to iterations) {
-      val neighborLabels = labels.join(sym, col("id") === col("u"))
+      val neighborLabels = labels.cur.join(sym, col("id") === col("u"))
         .groupBy(col("v").as("id"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       val best = neighborLabels
@@ -1421,20 +1348,9 @@ object Algos {
       // `sym` is symmetrized, so every node appears as a join target and
       // `best` covers the whole node set — no join-back needed (isolated
       // nodes can't exist in an edge-derived node set)
-      val next = best
-      // checkpoint every 2nd round: lineage depth stays <= 2 join levels
-      // while halving the eager write-out jobs (the per-round fixed cost)
-      if (i % 2 == 0 || i == iterations) {
-        labels = materialize(next) // forces the chain incl. any pending cache
-        if (pendingCache ne null) { pendingCache.unpersist(); pendingCache = null }
-        release(lastMat)
-        lastMat = labels
-      } else {
-        labels = cache(next)
-        pendingCache = labels
-      }
+      labels.step(i, best)
     }
-    sc.out(labels)
+    sc.out(labels.cur)
     }
     release(sym0) // the returned labels frame is checkpointed
     out
@@ -1458,13 +1374,7 @@ object Algos {
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 4,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
-    val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-      .filter(col(src) =!= col(dst))
-    // canonical-half distinct (m-row exchange, not 2m) — see louvainSym
-    val canon = fwd.select(least(col("u"), col("v")).as("u"),
-      greatest(col("u"), col("v")).as("v")).distinct()
-    val sym0 = materialize(
-      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
+    val sym0 = symmetric(edges, src, dst)
     val out = withLoopParts(edges.sparkSession, sym0.count()) { sc =>
     val sym = sc.in(sym0)
     var undecided = materialize(sym.select(col("u").as("id")).distinct())
@@ -1530,12 +1440,16 @@ object Algos {
     val e = sc.in(e0)
     val nodes = materialize(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct())
-    var scores = materialize(nodes.select(col("id"),
-      lit(1000000L).as("hub"), lit(1000000L).as("auth")))
-    var lastMat = scores
-    for (_ <- 1 to iterations) {
+    // NOTE (r21): the every-2nd-round cadence was tried here and
+    // MEASURED WORSE (5.3s → 9.8s at sf0.1): auth feeds both hRaw and
+    // the final join, so a two-round fused plan duplicates the
+    // half-round subtrees faster than exchange reuse collapses them.
+    // HITS keeps the per-round checkpoint.
+    val scores = new Rounds(materialize(nodes.select(col("id"),
+      lit(1000000L).as("hub"), lit(1000000L).as("auth"))), 1, iterations)
+    for (i <- 1 to iterations) {
       val aRaw = nodes.join(
-          e.join(scores.select(col("id").as("u"), col("hub")), "u")
+          e.join(scores.cur.select(col("id").as("u"), col("hub")), "u")
             .groupBy(col("v").as("id")).agg(sum(col("hub")).as("ar")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("ar"), lit(0L)).as("ar"))
@@ -1550,22 +1464,15 @@ object Algos {
       val hMax = hRaw.agg(greatest(max(col("hr")), lit(1L)).as("hm"))
       val hub = hRaw.crossJoin(broadcast(hMax))
         .select(col("id"), expr("CAST((hr * 1000000) DIV hm AS BIGINT)").as("hub"))
-      // NOTE (r21): the every-2nd-round cadence was tried here and
-      // MEASURED WORSE (5.3s → 9.8s at sf0.1): auth feeds both hRaw and
-      // the final join, so a two-round fused plan duplicates the
-      // half-round subtrees faster than exchange reuse collapses them.
-      // HITS keeps the per-round checkpoint.
       // NOTE (r22, measured and REVERTED): anchoring hRaw on `auth` to
       // drop the final hub⋈auth join measured 1.13-1.14× WORSE across
       // two A/B rounds (control clean): the anchor duplicates the auth
       // subtree (aRaw + max aggregate) into a second consumer of the
       // fused plan — same failure mode as the r21 cadence note above.
-      scores = materialize(hub.join(auth, "id").select("id", "hub", "auth"))
-      release(lastMat)
-      lastMat = scores
+      scores.step(i, hub.join(auth, "id").select("id", "hub", "auth"))
     }
     release(nodes)
-    sc.out(scores)
+    sc.out(scores.cur)
     }
     release(e0)
     out.orderBy("id")
@@ -1592,28 +1499,18 @@ object Algos {
       col(weight).cast(LongType).as("w")))
     val out = withLoopParts(spark, e0.count()) { sc =>
     val e = sc.in(e0)
-    var dist = sc.in(materialize(Seq((source, 0L)).toDF("id", "dist")))
-    var lastMat = dist
-    var pendingCache: DataFrame = null
+    // r21: every-2nd-round checkpoint cadence (the labelPropagation
+    // shape) — odd rounds cache only (dist has TWO consumers next
+    // round: the relax join and the union), even rounds cut lineage
+    val dist = new Rounds(
+      sc.in(materialize(Seq((source, 0L)).toDF("id", "dist"))), 2, rounds)
     for (i <- 1 to rounds) {
-      val relaxed = dist.join(e, col("id") === col("u"))
+      val relaxed = dist.cur.join(e, col("id") === col("u"))
         .select(col("v").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-      // r21: every-2nd-round checkpoint cadence (the labelPropagation
-      // shape) — odd rounds cache only (dist has TWO consumers next
-      // round: the relax join and the union), even rounds cut lineage
-      if (i % 2 == 0 || i == rounds) {
-        dist = materialize(next)
-        if (pendingCache ne null) { pendingCache.unpersist(); pendingCache = null }
-        release(lastMat)
-        lastMat = dist
-      } else {
-        dist = cache(next)
-        pendingCache = dist
-      }
+      dist.step(i, dist.cur.unionByName(relaxed)
+        .groupBy("id").agg(min(col("dist")).as("dist")))
     }
-    sc.out(dist)
+    sc.out(dist.cur)
     }
     release(e0)
     out.orderBy("id")
@@ -1913,20 +1810,21 @@ object Algos {
   def louvain(edges: DataFrame, rounds: Int = 3,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
-    val sym0 = louvainSym(edges, src, dst)
+    val sym0 = symmetric(edges, src, dst)
     val out = louvainOnSym(sym0, rounds)
     release(sym0)
     out.select(col("id"), col("c").as("community"))
   }
 
-  /** The canonical symmetric distinct edge frame every louvain tier
-    * starts from, MATERIALIZED (caller releases). Split out (r22) so
-    * [[louvainLevels]] derives it ONCE and shares it between phase 1
-    * and the level-2 contraction — the fused form paid the whole
-    * union+distinct shuffle twice (guide §1.2: don't recompute what you
-    * already have).
+  /** The canonical symmetric distinct edge frame (u, v), self-loops
+    * dropped, MATERIALIZED (caller releases) — the start of every
+    * louvain tier, [[hyperBall]], [[maximalIndependentSet]] and
+    * [[kCore]]. [[louvainLevels]] derives it ONCE and shares it between
+    * phase 1 and the level-2 contraction (r22) — the fused form paid the
+    * whole union+distinct shuffle twice (guide §1.2: don't recompute
+    * what you already have).
     */
-  private def louvainSym(edges: DataFrame,
+  private def symmetric(edges: DataFrame,
       src: String, dst: String): DataFrame = {
     val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
       .filter(col(src) =!= col(dst))
@@ -1957,45 +1855,42 @@ object Algos {
     // node-count join+exchange (2 joins/round × rounds). k is constant
     // per id, so grouping by (id, k) has the exact same groups as (id)
     // and every label is unchanged (oracle hash-green).
-    var labels = materialize(deg.select(col("id"), col("id").as("c"), col("k")))
-    var lastMat = labels
-    for (_ <- 1 to rounds) {
-      val tot = labels.groupBy("c").agg(sum(col("k")).as("tot"))
+    // NOTE (r21): the every-2nd-round cadence was tried here and
+    // measured WORSE (labels has four consumers per round — the fused
+    // two-round plan re-derives them faster than the saved checkpoint
+    // job pays back). Louvain keeps the per-round checkpoint.
+    val labels = new Rounds(
+      materialize(deg.select(col("id"), col("id").as("c"), col("k"))), 1, rounds)
+    for (i <- 1 to rounds) {
+      val tot = labels.cur.groupBy("c").agg(sum(col("k")).as("tot"))
       // k_{i,in}(C): edges from i into each neighbor community
       val kin = sym
-        .join(labels.select(col("id").as("v"), col("c").as("cand")), "v")
+        .join(labels.cur.select(col("id").as("v"), col("c").as("cand")), "v")
         .groupBy(col("u").as("id"), col("cand"))
         .agg(count(lit(1)).cast(LongType).as("kin"))
       // candidates = neighbor communities ∪ the current community
       // (kin = 0 when no neighbor is in it); max picks the kin row when
       // both sources contribute the same (id, cand)
       val cands = kin.unionByName(
-          labels.select(col("id"), col("c").as("cand"))
+          labels.cur.select(col("id"), col("c").as("cand"))
             .withColumn("kin", lit(0L)))
         .groupBy("id", "cand").agg(max(col("kin")).as("kin"))
       val scored = cands
         .join(tot.withColumnRenamed("c", "cand"), "cand")
-        .join(labels, "id")
+        .join(labels.cur, "id")
         .withColumn("tot2", col("tot") -
           when(col("cand") === col("c"), col("k")).otherwise(lit(0L)))
         .withColumn("score", lit(s) * col("kin") - col("k") * col("tot2"))
-      val next = scored.groupBy("id", "k")
+      labels.step(i, scored.groupBy("id", "k")
         .agg(max_by(struct(col("score"), (-col("cand")).as("neg")),
           struct(col("score"), (-col("cand")).as("neg"))).getField("neg").as("nc"))
-        .select(col("id"), (-col("nc")).as("c"), col("k"))
-      // NOTE (r21): the every-2nd-round cadence was tried here and
-      // measured WORSE (labels has four consumers per round — the fused
-      // two-round plan re-derives them faster than the saved checkpoint
-      // job pays back). Louvain keeps the per-round checkpoint.
-      labels = materialize(next)
-      release(lastMat)
-      lastMat = labels
+        .select(col("id"), (-col("nc")).as("c"), col("k")))
     }
     release(deg)
     // returned with the carried k column — the checkpoint ROOT, so a
     // caller's release() frees the blocks (releaseCheckpoint matches
     // roots only); callers project (id, c) themselves
-    sc.out(labels)
+    sc.out(labels.cur)
     }
     out
   }
@@ -2051,7 +1946,7 @@ object Algos {
     // sym0) and then re-ran the identical union+distinct shuffle for
     // the contraction input. sym0 is released right after the first
     // contraction materializes it into wsym.
-    val sym0 = louvainSym(edges, src, dst)
+    val sym0 = symmetric(edges, src, dst)
     var sym0Live = true
     // already checkpoint-backed by louvain's loop — reads are plan-cheap
     val l1raw = louvainOnSym(sym0, rounds)
@@ -2175,23 +2070,25 @@ object Algos {
     // The weighted move keeps the r21 shape; the unweighted louvain
     // level-1 loop (louvainOnSym) KEEPS its carry-k form, which
     // measured 0.91-0.97× — its deg joins were real exchanges there.
-    var labels = materialize(deg.select(col("id"), col("id").as("c")))
-    var lastMat = labels
+    // per-round checkpoint: the every-2nd-round cadence measured worse
+    // here too — see louvainOnSym
+    val labels = new Rounds(
+      materialize(deg.select(col("id"), col("id").as("c"))), 1, rounds2)
     for (r <- 1 to rounds2) {
-      val tot = labels.join(deg, "id")
+      val tot = labels.cur.join(deg, "id")
         .groupBy("c").agg(sum(col("k")).as("tot"))
       val kin = wsym.filter(col("u") =!= col("v"))
-        .join(labels.select(col("id").as("v"), col("c").as("cand")), "v")
+        .join(labels.cur.select(col("id").as("v"), col("c").as("cand")), "v")
         .groupBy(col("u").as("id"), col("cand"))
         .agg(sum(col("w")).cast(LongType).as("kin"))
       val cands = kin.unionByName(
-          labels.select(col("id"), col("c").as("cand"))
+          labels.cur.select(col("id"), col("c").as("cand"))
             .withColumn("kin", lit(0L)))
         .groupBy("id", "cand").agg(max(col("kin")).as("kin"))
       val scored = cands
         .join(tot.withColumnRenamed("c", "cand"), "cand")
         .join(deg, "id")
-        .join(labels, "id")
+        .join(labels.cur, "id")
         .withColumn("tot2", col("tot") -
           when(col("cand") === col("c"), col("k")).otherwise(lit(0L)))
         .withColumn("score", lit(s) * col("kin") - col("k") * col("tot2"))
@@ -2203,17 +2100,12 @@ object Algos {
       val par = conv(substring(md5(concat(col("id").cast(StringType),
         lit("|"), lit(r).cast(StringType))), 32, 1), 16, 10)
         .cast(LongType) % 2
-      val next = moved.join(labels, "id")
+      labels.step(r, moved.join(labels.cur, "id")
         .select(col("id"),
-          when(par === 0L, col("cNew")).otherwise(col("c")).as("c"))
-      // NOTE (r21): the every-2nd-round cadence measured worse here —
-      // see louvain. Per-round checkpoint stays.
-      labels = materialize(next)
-      release(lastMat)
-      lastMat = labels
+          when(par === 0L, col("cNew")).otherwise(col("c")).as("c")))
     }
     release(deg)
-    sc.out(labels)
+    sc.out(labels.cur)
     }
 
   /** k-core: iteratively drop nodes whose (undirected) degree falls
@@ -2243,24 +2135,13 @@ object Algos {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 10,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
-    val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-      .filter(col(src) =!= col(dst))
-    // canonical-half distinct, then symmetrize: the distinct exchange
-    // carries m rows instead of 2m (the two directions of a canonical
-    // pair can never collide), and the union of a distinct frame with
-    // its self-loop-free reverse is distinct by construction
-    val canon = fwd.select(least(col("u"), col("v")).as("u"),
-      greatest(col("u"), col("v")).as("v")).distinct()
-    val e00 = materialize(
-      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
+    val e00 = symmetric(edges, src, dst)
     val edgeCount = e00.count()
     val eFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
-    var e = sc.in(e00)
-    var deg = materialize(e.groupBy("u").agg(count(lit(1)).as("d")))
-    // release hygiene: checkpointed frames are released only once a
-    // NEWER checkpoint exists; lazy odd-round caches only uncached
-    var lastMat = e
-    var pendingCache: DataFrame = null
+    // checkpoint cadence like labelPropagation: cut lineage every 2nd
+    // round, cache otherwise — halves the eager write-out jobs
+    val e = new Rounds(sc.in(e00), 2, rounds)
+    var deg = materialize(e.cur.groupBy("u").agg(count(lit(1)).as("d")))
     var lastDrop: DataFrame = null
     var i = 1
     var converged = false
@@ -2276,7 +2157,7 @@ object Algos {
         val dropV = drop.withColumnRenamed("u", "v")
         // survivors' degree loss = removed edges incident from the drop
         // side; the semi-join keys on the small drop frame
-        val loss = e.join(dropV, Seq("v"), "left_semi")
+        val loss = e.cur.join(dropV, Seq("v"), "left_semi")
           .groupBy("u").agg(count(lit(1)).as("l"))
         val degNext = deg.join(drop, Seq("u"), "left_anti")
           .join(loss, Seq("u"), "left_outer")
@@ -2284,23 +2165,13 @@ object Algos {
           // a survivor whose last edge died this round leaves deg NOW —
           // keeps deg == per-node counts of e (the old loop's groupBy)
           .filter(col("d") > 0)
-        val next = e.join(drop, Seq("u"), "left_anti")
+        val next = e.cur.join(drop, Seq("u"), "left_anti")
           .join(dropV, Seq("v"), "left_anti")
           .select("u", "v")
         val degPrev = deg
         deg = materialize(degNext)
         release(degPrev)
-        // checkpoint cadence like labelPropagation: cut lineage every
-        // 2nd round, cache otherwise — halves the eager write-out jobs
-        if (i % 2 == 0 || i == rounds) {
-          e = materialize(next)
-          if (pendingCache ne null) { pendingCache.unpersist(); pendingCache = null }
-          release(lastMat)
-          lastMat = e
-        } else {
-          e = cache(next)
-          pendingCache = e
-        }
+        e.step(i, next)
         // the drop frame fed degNext (now checkpointed); the lazy e of
         // odd rounds still reads it, so release one round later
         if (lastDrop ne null) release(lastDrop)
@@ -2308,14 +2179,12 @@ object Algos {
       }
       i += 1
     }
-    if (lastDrop ne null) {
-      // the final e may be a lazy cache whose plan reads lastDrop; force
-      // it into its own checkpoint before releasing
-      if (pendingCache ne null) { e = materialize(e); pendingCache.unpersist() }
-      release(lastDrop)
-    }
+    // the final e may be a lazy cache whose plan reads lastDrop; force
+    // it into its own checkpoint before releasing
+    e.flush()
+    if (lastDrop ne null) release(lastDrop)
     release(deg)
-    sc.out(e)
+    sc.out(e.cur)
     }
     eFinal.groupBy(col("u").as("id")).agg(count(lit(1)).as("core_degree"))
   }
@@ -2344,7 +2213,7 @@ object Algos {
     * by induction (spec-pinned against [[kTrussFullRecount]] across
     * cascade/shared-edge/derived graphs).
     *
-    * Measured honesty (GRAFT_TRUSS_DEBUG=1, sf0.1): round 1 = 17.1s,
+    * Measured honesty (per-round wall time, sf0.1): round 1 = 17.1s,
     * rounds 2-3 = 2.8s, converged at round 3 with every later round a
     * mass-deletion full recount — on the co-order gate graph the delta
     * branch never fires and the hybrid equals the old full-recount loop
@@ -2371,11 +2240,8 @@ object Algos {
     var edgeCount = e00.count()
     val supFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
     // round 1: the one full listing — support of every e00 edge
-    val t1 = System.nanoTime
     var out = materialize(
       supportOf(sc.in(e00), edgeCount).filter(col("sup") >= support))
-    if (trussDebug) Console.err.println(
-      f"[truss] round 1 full  edges=$edgeCount ${(System.nanoTime - t1) / 1e9}%.2fs")
     // deleted set = e00 edges NOT surviving (incl. triangle-less edges,
     // absent from supportOf and pruned by any support >= 1). LAZY on
     // purpose: both parents are checkpointed, so the plan is O(1) and
@@ -2395,7 +2261,6 @@ object Algos {
     edgeCount = n
     var i = 2
     while (i <= rounds && !converged) {
-      val t0 = System.nanoTime
       val e = out.select("u", "v")
       // strategy pivot: deltas win only when the deletion set is small
       // relative to the survivors; after a mass-extinction round the
@@ -2452,9 +2317,6 @@ object Algos {
       lastMat = nextOut
       out = nextOut
       n = out.count()
-      if (trussDebug) Console.err.println(
-        f"[truss] round $i ${if (nDeleted * 8 > edgeCount) "full " else "delta"}" +
-          f" del=$nDeleted surv=$n ${(System.nanoTime - t0) / 1e9}%.2fs")
       nDeleted = edgeCount - n
       converged = n == edgeCount
       edgeCount = n
@@ -2520,23 +2382,19 @@ object Algos {
         .filter(col("u") =!= col("v")).distinct())
     var edgeCount = e00.count()
     val supFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
-    var e = sc.in(e00)
-    var lastMat = e
-    var out: DataFrame = null
+    val out = new Rounds(sc.in(e00), 1, rounds)
+    var e = out.cur
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
-      val sup = supportOf(e, edgeCount).filter(col("sup") >= support)
-      out = materialize(sup)
-      e = out.select("u", "v")
-      release(lastMat)
-      lastMat = out
+      e = out.step(i, supportOf(e, edgeCount).filter(col("sup") >= support))
+        .select("u", "v")
       val n = e.count()
       converged = n == edgeCount
       edgeCount = n
       i += 1
     }
-    sc.out(out)
+    sc.out(out.cur)
     }
     supFinal.select(col("u").as("part_u"), col("v").as("part_v"), col("sup"))
       .orderBy("part_u", "part_v")

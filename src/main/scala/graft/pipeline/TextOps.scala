@@ -1878,7 +1878,7 @@ object TextOps {
   }
 
   /** Train-once handle for compositions that want BOTH the merge table
-    * and token counts (r21, the hbCache / dupPairs pay-once discipline:
+    * and token counts (r21, the hbMemo / dupPairs pay-once discipline:
     * the two gate entries previously each retrained): the raw
     * (merge seq, final vocabulary frame) pair from one [[bpeTrain]]
     * run. The vocabulary frame is checkpoint-backed; the caller owns

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** r21 pay-once memos (the pqBooks precedent): the gate's shared
   * derived frames — phash near-dup pairs, the BPE training run, the
   * (64,8,4) walk corpus — are computed once per (session, dir, data
@@ -9,16 +11,33 @@ package graft
   */
 class MemoSpec extends SparkSpec {
 
+  /** The checkpoint RDDs a frame's plan reads. */
+  private def checkpointIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+
+  /** Same memoized frame: the same instance, or a projection over the
+    * same checkpoint blocks. */
+  private def sameMemo(a: DataFrame, b: DataFrame): Boolean =
+    (a eq b) || { val ids = checkpointIds(a); ids.nonEmpty && ids == checkpointIds(b) }
+
   test("q_dedup_phash memoizes its pair frame — second call is the same instance") {
+    // the same check over the other memo families: the jaccard pair
+    // frame and the hyperBall registers (q_hyperball projects the memo,
+    // so its identity is read through the plan's checkpoint leaf)
+    for (q <- Seq("q_dedup_phash", "q_dedup_jaccard", "q_hyperball")) {
+      SparkEntry.invalidatePairs(spark)
+      val a = SparkEntry.queries(q)(spark, sfDir)
+      val b = SparkEntry.queries(q)(spark, sfDir)
+      assert(sameMemo(a, b), s"$q: cache miss on the second call — the memo is broken")
+      // the reset hook invalidates: a fresh instance (equal values) after
+      SparkEntry.invalidatePairs(spark)
+      val c = SparkEntry.queries(q)(spark, sfDir)
+      assert(!sameMemo(c, a), s"$q: invalidatePairs must evict the memo")
+      assert(sortedRowsOf(c) == sortedRowsOf(a))
+    }
     SparkEntry.invalidatePairs(spark)
-    val a = SparkEntry.queries("q_dedup_phash")(spark, sfDir)
-    val b = SparkEntry.queries("q_dedup_phash")(spark, sfDir)
-    assert(a eq b, "cache miss on the second call — the memo is broken")
-    // the reset hook invalidates: a fresh instance (equal values) after
-    SparkEntry.invalidatePairs(spark)
-    val c = SparkEntry.queries("q_dedup_phash")(spark, sfDir)
-    assert(!(c eq a), "invalidatePairs must evict the memo")
-    assert(sortedRowsOf(c) == sortedRowsOf(a))
   }
 
   test("q_walks memoizes the (64,8,4) walk corpus shared with q_walk_pmi/q_pmi_embed") {

@@ -513,7 +513,7 @@ class AlgosSpec extends SparkSpec {
     // edges form — the API a caller holding both surfaces uses to pay
     // the iterative register run once
     val viaFrame = Algos
-      .neighborhoodFunctionFrom(Algos.hyperBall(e, rounds, p = 4), rounds)
+      .neighborhoodFunctionFrom(Algos.hyperBall(e, rounds, p = 4))
       .collect()
       .map(r => (r.getAs[Long]("t"), r.getAs[Long]("n_nodes"),
         r.getAs[Long]("nf_e3"), r.getAs[Long]("reach_permille")))
@@ -966,12 +966,12 @@ class AlgosSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("_src", "_dst")
     val hb = Algos.hyperBall(e, rounds = 2, p = 4)
-    // caller passes the WRONG rounds — the old t === rounds filter
-    // returned an empty nf_last and silently zero rows
-    val out = Algos.neighborhoodFunctionFrom(hb, rounds = 5).collect()
+    // the round count comes from the frame alone: a t === rounds filter
+    // on a caller-given count returned an empty nf_last on a mismatch
+    val out = Algos.neighborhoodFunctionFrom(hb).collect()
     assert(out.length == 3, s"expected rounds+1 = 3 rows, got ${out.length}")
     assert(out.last.getAs[Long]("reach_permille") == 1000L,
-      "the curve must end at 1000 permille whatever `rounds` claims")
+      "the curve must end at 1000 permille at the frame's own max t")
   }
 
   test("louvainWeighted: weights separate communities a flat topology cannot") {

@@ -82,6 +82,35 @@ class ReleaseSpec extends SparkSpec {
     // live residuals: each algo's RETURNED frame (+ kCore-style final
     // frames) may stay stored; per-iteration frames must not
     assert(leaked <= 4, s"expected bounded residual storage, found $leaked new stored RDDs")
+    // the loops on the shared checkpoint cadence, one at a time: each may
+    // leave only its returned frame stored
+    val weighted = (0L until 63L).map(i => (i, i + 1, 1L + i % 3))
+      .toDF("_src", "_dst", "_w")
+    val k5 = for (i <- 0L to 4L; j <- (i + 1) to 4L) yield (i, j)
+    // k = 3 drops node 9 in round 1 (a cached, odd round) and converges
+    // in round 2: the early exit must still release the input frame
+    val oddExit = (k5 :+ ((4L, 9L))).toDF("_src", "_dst")
+    // ...while this one's last peel is round 2, a checkpointed round
+    val evenExit = (k5 ++ Seq((4L, 9L), (9L, 10L), (9L, 11L))).toDF("_src", "_dst")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRankWeighted" -> (() => Algos.pageRankWeighted(weighted, iterations = 5)),
+      "personalizedPageRank" ->
+        (() => Algos.personalizedPageRank(edges, Seq(0L, 5L), iterations = 5)),
+      "labelPropagation" -> (() => Algos.labelPropagation(edges, iterations = 5)),
+      "weightedShortestPaths" ->
+        (() => Algos.weightedShortestPaths(weighted, source = 0L, rounds = 5)),
+      "hits" -> (() => Algos.hits(edges, iterations = 3)),
+      "louvain" -> (() => Algos.louvain(edges, rounds = 3)),
+      "louvainWeighted" -> (() => Algos.louvainWeighted(weighted, rounds = 3)),
+      "kCore" -> (() => Algos.kCore(edges, k = 2, rounds = 5)),
+      "kCore odd-round exit" -> (() => Algos.kCore(oddExit, k = 3)),
+      "kCore even-round exit" -> (() => Algos.kCore(evenExit, k = 3))
+    ).foreach { case (name, run) =>
+      val pre = storedRddIds
+      run().count()
+      val left = (storedRddIds -- pre).size
+      assert(left <= 1, s"$name: expected at most its result stored, found $left new stored RDDs")
+    }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 }
