@@ -1537,7 +1537,28 @@ object Algos {
     */
   def deterministicWalks(edges: DataFrame, nStarts: Int, steps: Int,
       walksPerStart: Int = 1,
-      src: String = "_src", dst: String = "_dst"): DataFrame = {
+      src: String = "_src", dst: String = "_dst"): DataFrame =
+    walkLoop(edges, nStarts, steps, walksPerStart, src, dst, Nil) { (cur, e, t) =>
+      val key = md5(concat(col("start").cast(StringType), lit("|"),
+        col("wid").cast(StringType), lit("|"),
+        lit(t).cast(StringType), lit("|"), col("v").cast(StringType)))
+      cur.join(e, col("node") === col("u"))
+        .select(col("start"), col("wid"), col("v"), key.as("k"))
+        .groupBy("start", "wid")
+        .agg(min_by(col("v"), struct(col("k"), col("v"))).as("node"))
+        .select(col("start"), col("wid"), lit(t).as("step"), col("node"))
+    }
+
+  /** The loop shared by [[deterministicWalks]] and [[node2vecWalks]]:
+    * the md5-ordered first `nStarts` nodes × `walksPerStart` walk ids
+    * form step 0 (start, wid, step, `extraStart`…, node); then each step
+    * `t` is `next(cur, e, t)` over the walk frame `cur` and the (u, v)
+    * edge frame `e`, until `steps` or until every walk has reached a
+    * sink. Returns (start, walk_id, step, node) over all steps.
+    */
+  private def walkLoop(edges: DataFrame, nStarts: Int, steps: Int,
+      walksPerStart: Int, src: String, dst: String, extraStart: Seq[Column])(
+      next: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
     require(nStarts >= 1 && steps >= 1 && walksPerStart >= 1)
     val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v")))
     val out = withLoopParts(edges.sparkSession, e0.count()) { sc =>
@@ -1550,33 +1571,33 @@ object Algos {
         .orderBy(md5(col("node").cast(StringType)), col("node"))
         .limit(nStarts)
         .crossJoin(broadcast(wids))
-        .select(col("node").as("start"), col("wid"), lit(0L).as("step"),
-          col("node").as("node")))
+        .select(Seq(col("node").as("start"), col("wid"), lit(0L).as("step")) ++
+          extraStart :+ col("node").as("node"): _*))
     var cur = starts
     var acc = Vector(starts)
     var t = 0L
     var exhausted = false
     while (t < steps && !exhausted) {
       t += 1
-      val key = md5(concat(col("start").cast(StringType), lit("|"),
-        col("wid").cast(StringType), lit("|"),
-        lit(t).cast(StringType), lit("|"), col("v").cast(StringType)))
-      val next = cur.join(e, col("node") === col("u"))
-        .select(col("start"), col("wid"), col("v"), key.as("k"))
-        .groupBy("start", "wid")
-        .agg(min_by(col("v"), struct(col("k"), col("v"))).as("node"))
-        .select(col("start"), col("wid"), lit(t).as("step"), col("node"))
+      val step = next(cur, e, t)
       // r21: every-2nd-step checkpoint cadence (the labelPropagation
       // shape) — odd steps cache only (cur feeds the next step's join
       // AND the final union; release(acc) handles both storage kinds).
       // The all-walks-at-sinks early exit is checked only on
       // checkpointed steps: an extra round over an empty frontier
       // unions nothing, so the output is identical.
+      // History: r22 briefly reverted node2vec to per-step materialize
+      // on a marginal sf0.1 A/B (0.95×/0.96×), then RESTORED the cadence
+      // the same round when the 10× probe read the per-step form 2.46×
+      // WORSE with disjoint bands (17.0-17.8s cadenced vs 21.7-63.9s
+      // per-step) — agreeing with the r21 suite's 0.71×. sf0.1 cannot
+      // see this loop's checkpoint cost; the 10× reading is the one
+      // that counts.
       if (t % 2 == 0 || t == steps) {
-        cur = materialize(next)
+        cur = materialize(step)
         exhausted = cur.isEmpty
       } else {
-        cur = cache(next)
+        cur = cache(step)
       }
       acc = acc :+ cur
     }
@@ -1723,28 +1744,10 @@ object Algos {
       walksPerStart: Int = 1, retW: Long = 250L, inW: Long = 1000L,
       outW: Long = 500L,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
-    require(nStarts >= 1 && steps >= 1 && walksPerStart >= 1)
     require(retW >= 1 && inW >= 1 && outW >= 1, "weights are positive integers")
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v")))
-    val out = withLoopParts(edges.sparkSession, e0.count()) { sc =>
-    val e = sc.in(e0)
-    val adj = e.select(col("u").as("pu"), col("v").as("pv"), lit(1).as("adj"))
-    val wids = edges.sparkSession.range(walksPerStart.toLong)
-      .select(col("id").as("wid"))
-    val starts = materialize(
-      e.select(col("u").as("node")).unionByName(e.select(col("v").as("node")))
-        .distinct()
-        .orderBy(md5(col("node").cast(StringType)), col("node"))
-        .limit(nStarts)
-        .crossJoin(broadcast(wids))
-        .select(col("node").as("start"), col("wid"), lit(0L).as("step"),
-          lit(null).cast(LongType).as("prev"), col("node").as("node")))
-    var cur = starts
-    var acc = Vector(starts)
-    var t = 0L
-    var exhausted = false
-    while (t < steps && !exhausted) {
-      t += 1
+    walkLoop(edges, nStarts, steps, walksPerStart, src, dst,
+        Seq(lit(null).cast(LongType).as("prev"))) { (cur, e, t) =>
+      val adj = e.select(col("u").as("pu"), col("v").as("pv"), lit(1).as("adj"))
       val h = graft.pipeline.TextOps.md5Hash60(
         concat(col("start").cast(StringType), lit("|"),
           col("wid").cast(StringType), lit("|"),
@@ -1753,7 +1756,7 @@ object Algos {
         .when(col("v") === col("prev"), lit(retW))
         .when(col("adj").isNotNull, lit(inW))
         .otherwise(lit(outW))
-      val next = cur.join(e, col("node") === col("u"))
+      cur.join(e, col("node") === col("u"))
         .join(adj, col("prev") === col("pu") && col("v") === col("pv"), "left")
         .select(col("start"), col("wid"), col("node"), col("v"),
           // IntegralDivide, never `/` — double division loses exactness
@@ -1764,28 +1767,7 @@ object Algos {
           max(col("node")).as("prev")) // one row per walk — node is constant
         .select(col("start"), col("wid"), lit(t).as("step"), col("prev"),
           col("nx").as("node"))
-      // r21 every-2nd-step cadence (see deterministicWalks). History:
-      // r22 briefly reverted this to per-step materialize on a marginal
-      // sf0.1 A/B (0.95×/0.96×), then RESTORED it the same round when
-      // the 10× probe read the per-step form 2.46× WORSE with disjoint
-      // bands (17.0-17.8s cadenced vs 21.7-63.9s per-step) — agreeing
-      // with the r21 suite's 0.71×. sf0.1 cannot see this loop's
-      // checkpoint cost; the 10× reading is the one that counts.
-      if (t % 2 == 0 || t == steps) {
-        cur = materialize(next)
-        exhausted = cur.isEmpty
-      } else {
-        cur = cache(next)
-      }
-      acc = acc :+ cur
     }
-    val walk = materialize(acc.reduce(_ unionByName _))
-    release(acc: _*)
-    sc.out(walk)
-    }
-    release(e0)
-    out.select(col("start"), col("wid").as("walk_id"), col("step"), col("node"))
-      .orderBy("start", "walk_id", "step")
   }
 
   /** Modularity-based community detection — fixed synchronous rounds of

@@ -1,16 +1,44 @@
 package graft.cypher
 
-import graft.graph.PatternParser.PathPat
-
-/** Cypher query AST (clauses + expressions).
+/** Cypher query AST (graph patterns, clauses, expressions).
   *
   * Reference analog: the clause/expression AST in
   * /root/reference/src/parser.ts:7-180 (interfaces `CypherQuery`,
-  * `MatchClause`, `Expression`, ...). Re-expressed as Scala case classes;
-  * graph patterns reuse [[graft.graph.PatternParser]]'s AST so the string
-  * front-end and the fluent API compile through one pattern pipeline.
+  * `MatchClause`, `Expression`, ...). Re-expressed as Scala case classes.
+  * The pattern types are shared by every entry point: Cypher strings and
+  * [[graft.graph.PropertyGraph.matchPattern]] pattern strings are both
+  * parsed by [[CypherParser]] and compiled by
+  * [[graft.graph.PatternMatcher]].
   */
 object Ast {
+
+  sealed trait Dir
+  case object Out extends Dir        // -[]->
+  case object In extends Dir         // <-[]-
+  case object Undirected extends Dir // -[]-
+
+  /** `label` is the PRIMARY label (the frame the node lives in when
+    * created); `secondary` are additional labels from a `:A:B:C` chain —
+    * the multi-label shim (see [[graft.graph.PropertyGraph.LABELS]]). In
+    * MATCH position every listed label must hold (primary OR registered
+    * secondary of the candidate frame).
+    *
+    * Property values are literals, or the [[Param]]/[[Expr]] the parser
+    * leaves for the compiler to resolve.
+    */
+  final case class NodePat(name: String, anonymous: Boolean,
+      label: Option[String], props: Seq[(String, Any)],
+      secondary: Seq[String] = Seq.empty) {
+    /** Every label this pattern requires. */
+    def allLabels: Set[String] = label.toSet ++ secondary
+  }
+
+  final case class RelPat(name: String, anonymous: Boolean,
+      relType: Option[String], props: Seq[(String, Any)], dir: Dir,
+      minHops: Int, maxHops: Option[Int], isVarLength: Boolean)
+
+  /** nodes.size == rels.size + 1 */
+  final case class PathPat(nodes: Vector[NodePat], rels: Vector[RelPat])
 
   sealed trait Expr
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import Ast._
 import graft.functions.CypherFunctions
 import graft.graph.{PatternMatcher, PropertyGraph}
-import graft.graph.PatternParser.PathPat
 import graft.graph.PropertyGraph.{EID, ID, LABEL}
 
 /** Compiles a parsed Cypher query to a Catalyst plan over a
@@ -40,8 +39,7 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
   graft.functions.VectorExprs.register(spark)
 
   /** path var -> (node vars, rel patterns) bound by MATCH p = ... */
-  private var pathBindings =
-    Map.empty[String, (Seq[String], Seq[graft.graph.PatternParser.RelPat])]
+  private var pathBindings = Map.empty[String, (Seq[String], Seq[RelPat])]
 
   /** rel var -> (source node var, target node var) for directed,
     * fixed-length rels: startNode()/endNode() compile to the endpoint's
@@ -94,9 +92,9 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
           p.rels.indices.foreach { i =>
             val r = p.rels(i)
             if (!r.isVarLength) r.dir match {
-              case graft.graph.PatternParser.Out =>
+              case Out =>
                 relEndpoints += r.name -> (p.nodes(i).name, p.nodes(i + 1).name)
-              case graft.graph.PatternParser.In =>
+              case In =>
                 relEndpoints += r.name -> (p.nodes(i + 1).name, p.nodes(i).name)
               case _ => // undirected: per-row orientation, fall back to ids
             }

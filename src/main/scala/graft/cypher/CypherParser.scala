@@ -2,7 +2,6 @@ package graft.cypher
 
 import Lexer._
 import Ast._
-import graft.graph.PatternParser.{Dir, In, NodePat, Out, PathPat, RelPat, Undirected}
 
 /** Recursive-descent Cypher parser (read-query subset).
   *
@@ -21,6 +20,12 @@ import graft.graph.PatternParser.{Dir, In, NodePat, Out, PathPat, RelPat, Undire
 object CypherParser {
 
   def parse(query: String): Query = new P(Lexer.lex(query), query).parseQuery()
+
+  /** Parse a bare pattern — comma-separated paths and nothing after them
+    * (the [[graft.graph.PropertyGraph.matchPattern]] entry point).
+    */
+  def parsePattern(pattern: String): Vector[PathPat] =
+    new P(Lexer.lex(pattern), pattern).parsePattern()
 
   private val aggNames = Set("count", "sum", "avg", "min", "max", "collect",
     "stdev", "stdevp", "percentilecont", "percentiledisc")
@@ -84,6 +89,12 @@ object CypherParser {
       Query(parts.result(), alls.result())
     }
 
+    def parsePattern(): Vector[PathPat] = {
+      val ps = paths()
+      if (cur.kind != TEof) fail("trailing input")
+      ps
+    }
+
     private def singleQuery(): SingleQuery = {
       val clauses = Vector.newBuilder[Clause]
       var done = false
@@ -102,10 +113,7 @@ object CypherParser {
         else if (isKw("CALL")) { i += 1; clauses += callClause() }
         else if (isKw("CREATE")) {
           i += 1
-          val paths = Vector.newBuilder[PathPat]
-          paths += path()
-          while (tryTok(",")) paths += path()
-          clauses += CreateClause(paths.result())
+          clauses += CreateClause(paths())
         }
         else if (isKw("MERGE")) {
           i += 1
@@ -271,7 +279,21 @@ object CypherParser {
       SortItem(e, asc, text)
     }
 
-    // ---- patterns (token-level mirror of graft.graph.PatternParser) ----
+    // ---- patterns -------------------------------------------------------
+    //
+    //   paths := path (',' path)*
+    //   path  := node (rel node)*
+    //   node  := '(' [var] [':' label (':' label)*] [props] ')'
+    //   rel   := ('-' | '<-') ['[' [var] [':' type ('|' [':'] type)*]
+    //            ['*' hops] [props] ']'] ('-' | '->')
+    //   hops  := INT ['..' [INT]] | '..' INT | (empty = 1..)
+
+    private def paths(): Vector[PathPat] = {
+      val ps = Vector.newBuilder[PathPat]
+      ps += path()
+      while (tryTok(",")) ps += path()
+      ps.result()
+    }
 
     private def path(): PathPat = {
       val ns = Vector.newBuilder[NodePat]
@@ -310,7 +332,8 @@ object CypherParser {
       var isVar = false
       if (tryTok("[")) {
         if (cur.kind == TIdent) name = Some(ident())
-        // `:A|B` or `:A|:B` alternation, pipe-joined (see PatternParser)
+        // `:A|B` or `:A|:B` alternation, kept as one pipe-joined string,
+        // expanded by PropertyGraph.edgeTypesFor
         relType = if (tryTok(":")) {
           val types = Vector.newBuilder[String]
           types += ident()

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import Ast._
 import CypherCompiler.Ctx
 import graft.graph.{EdgeType, PropertyGraph}
-import graft.graph.PatternParser.{NodePat, Out, PathPat}
 import graft.graph.PropertyGraph.{DST, EID, ID, LABELS, SRC}
 
 /** Executes Cypher WRITE queries (CREATE / MERGE / SET / REMOVE / DELETE /
@@ -463,7 +462,7 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
       val relType = r.relType.getOrElse(sys.error("CREATE edge needs a type"))
       if (relType.contains("|"))
         sys.error(s"CREATE cannot use a type alternation: [:$relType]")
-      if (r.dir != Out && r.dir != graft.graph.PatternParser.In)
+      if (r.dir != Out && r.dir != In)
         sys.error("CREATE requires a directed relationship") // reference parity
       def endpoint(n: NodePat): (String, Column, Boolean) =
         if (boundVars(n.name)) {

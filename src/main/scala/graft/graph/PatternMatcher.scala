@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, LongType}
-import PatternParser._
+import graft.cypher.Ast.{Expr, In, NodePat, Out, PathPat, RelPat, Undirected}
+import graft.cypher.CypherParser
 import PropertyGraph.{ID, SRC, DST, EID, LABEL}
 
 /** Compiles Cypher MATCH patterns into Catalyst join plans.
@@ -43,8 +44,19 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
   // public API
   // ------------------------------------------------------------------
 
-  def compile(pattern: String, known: Map[String, String] = Map.empty): DataFrame =
-    compilePaths(PatternParser.parse(pattern), known)
+  /** Parse (with [[CypherParser.parsePattern]]) and compile a pattern
+    * string. Property values must be literals: a `$param` or expression
+    * value throws IllegalArgumentException naming the property — only
+    * the Cypher front end has a params map, and expressions belong in
+    * WHERE.
+    */
+  def compile(pattern: String, known: Map[String, String] = Map.empty): DataFrame = {
+    val paths = CypherParser.parsePattern(pattern)
+    for (p <- paths; (k, v: Expr) <- p.nodes.flatMap(_.props) ++ p.rels.flatMap(_.props))
+      throw new IllegalArgumentException(
+        s"pattern property '$k' must be a literal, got $v in: $pattern")
+    compilePaths(paths, known)
+  }
 
   /** Compile pre-parsed paths (the Cypher string front-end parses patterns
     * itself and enters here).

@@ -251,6 +251,8 @@ final class PropertyGraph private (
 
   /** Compile a Cypher MATCH pattern (comma-separated paths) to a DataFrame
     * with one struct column per pattern variable. See [[PatternMatcher]].
+    * Property values must be literals: `{k: $p}` or `{k: a.x}` throws
+    * IllegalArgumentException naming `k` (`cypher(query, params)` takes parameters).
     */
   def matchPattern(pattern: String, known: Map[String, String] = Map.empty): DataFrame =
     new PatternMatcher(this).compile(pattern, known)

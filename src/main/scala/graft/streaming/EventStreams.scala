@@ -252,6 +252,20 @@ object EventStreams {
     org.apache.spark.sql.graftshim.GraftShims.retarget(body(drain), spark)
   }
 
+  /** Run `stream` into the memory sink `queryName` with one availableNow
+    * trigger, which drains the bounded input fully, and return the sink
+    * table.
+    */
+  private def drain(spark: SparkSession, stream: Dataset[_], queryName: String,
+      mode: OutputMode): DataFrame = {
+    stream.writeStream.format("memory").queryName(queryName)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    spark.table(queryName)
+  }
+
   /** The windowed-count pipeline executed THROUGH Structured Streaming:
     * file-stream ingest of the events parquet (availableNow trigger) →
     * watermark + tumbling windowedCounts → complete-mode memory sink.
@@ -265,13 +279,7 @@ object EventStreams {
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
     val ev = raw  // ts already normalized by eventsRawStream
-    val query = windowedCounts(ev, window = "1 hour")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
+    drain(spark, windowedCounts(ev, window = "1 hour"), queryName, OutputMode.Complete)
     }
 
   /** Streaming stateful exact-dedup: file-stream ingest (availableNow)
@@ -296,15 +304,10 @@ object EventStreams {
       queryName: String = "q_stream_dedup"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw
+    val stream = raw
       .dropDuplicates(keys)
       .select(keys.map(col): _*)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).orderBy(keys.map(col): _*)
+    drain(spark, stream, queryName, OutputMode.Append).orderBy(keys.map(col): _*)
     }
 
   /** Streaming dedup with a watermark TTL — the bounded-state variant
@@ -331,16 +334,11 @@ object EventStreams {
       queryName: String = "q_stream_dedup_ttl"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw
+    val stream = raw
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark(keys)
       .select(keys.map(col): _*)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).orderBy(keys.map(col): _*)
+    drain(spark, stream, queryName, OutputMode.Append).orderBy(keys.map(col): _*)
     }
 
   /** Streaming heavy hitters: per-group top-k keys by exact count over
@@ -366,15 +364,10 @@ object EventStreams {
       queryName: String = "q_stream_topk"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw
+    val stream = raw
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    topKSlice(spark.table(queryName), k)
+    topKSlice(drain(spark, stream, queryName, OutputMode.Complete), k)
     }
 
   /** Input/output rows of [[streamingTopKApprox]]'s bounded-state pass. */
@@ -418,14 +411,9 @@ object EventStreams {
     val raw = eventsRawStream(spark, eventsDir, glob)
     val rows = raw.select(col("event_type").as("grp"),
       col("user_id").as("key")).as[HHRow]
-    val query = topKApproxSummaries(rows, buckets, capacity)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // latest emission per (grp, bucket) = the drained state table
-    val drained = spark.table(queryName).localCheckpoint()
+    val drained = drain(spark, topKApproxSummaries(rows, buckets, capacity),
+      queryName, OutputMode.Append).localCheckpoint()
     val latest = drained.groupBy("grp", "bucket")
       .agg(max(col("version")).as("version"))
     val stateTable = drained.join(latest, Seq("grp", "bucket", "version"))
@@ -478,16 +466,11 @@ object EventStreams {
       state.update((n, heap))
       heap.iterator.map(r => PsState(bucket, n, r.doc_id, r.w, r.priority))
     }
-    val query = rows
+    val stream = rows
       .groupByKey(r => (r.doc_id % buckets).toInt)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(update)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val drained = spark.table(queryName).localCheckpoint()
+    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
     val latest = drained.groupBy("bucket").agg(max(col("version")).as("version"))
     val pool = drained.join(latest, Seq("bucket", "version"))
       .select("doc_id", "w", "priority")
@@ -622,15 +605,10 @@ object EventStreams {
         unix_micros(col("ts")).as("us"))
       .filter(col("step").isNotNull)
       .as[FunnelEv]
-    val query = rows.groupByKey(_.user_id)
+    val stream = rows.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(funnelUpdate)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val drained = spark.table(queryName).localCheckpoint()
+    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
     val latest = drained.groupBy("user_id").agg(max(col("version")).as("version"))
     drained.join(latest, Seq("user_id", "version"))
       .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
@@ -771,16 +749,11 @@ object EventStreams {
         unix_micros(col("ts")).as("us"), col("ts"))
       .filter(col("step").isNotNull)
       .as[FunnelEvT]
-    val query = rows.groupByKey(_.user_id)
+    val stream = rows.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
         funnelUpdateTtl(horizonDays.toLong * 86400000L))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val drained = spark.table(queryName).localCheckpoint()
+    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
     val latest = drained.groupBy("user_id").agg(max(col("version")).as("version"))
     drained.join(latest, Seq("user_id", "version"))
       .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
@@ -825,13 +798,7 @@ object EventStreams {
         .select(uday, col("user_id"))
         .dropDuplicates("uday", "user_id")
     }
-    val query = deduped
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val pairs = spark.table(queryName).localCheckpoint()
+    val pairs = drain(spark, deduped, queryName, OutputMode.Append).localCheckpoint()
     graft.operators.Olap.activeUsersFromPairs(
       if (horizon.isDefined) pairs.distinct() else pairs, windowDays)
     }
@@ -917,15 +884,10 @@ object EventStreams {
       queryName: String = "q_stream_hll"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = graft.pipeline.Sketches.hllCells(raw, valueCol, groupCol, p)
+    val stream = graft.pipeline.Sketches.hllCells(raw, valueCol, groupCol, p)
       .groupBy(col("grp"), col("bucket"))
       .agg(max(col("rho")).as("register"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
+    drain(spark, stream, queryName, OutputMode.Complete)
     }
 
   /** Bloom filter ON THE STREAM — the membership sketch's streaming
@@ -949,17 +911,12 @@ object EventStreams {
       queryName: String = "q_stream_bloom"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = graft.pipeline.Sketches.bloomCells(raw, keyCol, m, k)
+    val stream = graft.pipeline.Sketches.bloomCells(raw, keyCol, m, k)
       .dropDuplicates("pos")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // materialize OUT of the memory sink: the probe joins the bit set
     // twice (probe-positions left-join + presence join) and MemoryPlan
     // views fail Catalyst's conflicting-reference dedup under self-join
-    spark.table(queryName).localCheckpoint()
+    drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
     }
 
   /** ROTATED streaming Bloom filters — the production answer to "a
@@ -994,19 +951,14 @@ object EventStreams {
       queryName: String = "q_stream_bloom_rotate"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw
+    val stream = raw
       .withColumn("win", date_trunc("day", col("ts")))
       .withWatermark("win", "1 day")
       .select(col("win"),
         explode(graft.pipeline.Sketches.bloomPositions(
           col(keyCol), m, k)).as("pos"))
       .dropDuplicates("win", "pos")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName)
+    drain(spark, stream, queryName, OutputMode.Append)
       .groupBy(date_format(col("win"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).cast(LongType).as("n_bits"))
       .orderBy("day")
@@ -1027,17 +979,12 @@ object EventStreams {
       queryName: String = "q_stream_cms"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = graft.pipeline.Sketches.cmsCells(raw, keyCol, d, w)
+    val stream = graft.pipeline.Sketches.cmsCells(raw, keyCol, d, w)
       .groupBy(col("r"), col("bucket"))
       .agg(count(lit(1)).cast(LongType).as("cnt"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // materialize OUT of the memory sink: the estimate probe left-joins
     // the counter table, which a MemoryPlan view can't serve reliably
-    spark.table(queryName).localCheckpoint()
+    drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
     }
 
   /** Chi-square source drift ON THE STREAM —
@@ -1059,16 +1006,11 @@ object EventStreams {
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
     val docs = rawFileStream(spark, docsDir, glob, schema)
-    val query = docs
+    val stream = docs
       .groupBy(col("source").as("src"), col("lang").as("cat"))
       .agg(count(lit(1)).cast(LongType).as("o"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     graft.pipeline.TextOps.sourceDriftFromCounts(
-      spark.table(queryName).localCheckpoint())
+      drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint())
     }
 
   /** Cohort retention ON THE STREAM: the retention matrix's sufficient
@@ -1089,19 +1031,14 @@ object EventStreams {
       queryName: String = "q_stream_retention"): DataFrame =
     withStreamParts(spark, eventsDir, glob) { spark =>
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw.filter(col("event_type") === eventType)
+    val stream = raw.filter(col("event_type") === eventType)
       .select(col("user_id"),
         datediff(col("ts").cast("date"), lit(epochDay).cast("date"))
           .cast(LongType).as("day"))
       .dropDuplicates("user_id", "day")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // localCheckpoint: the cohort assembly self-joins the activity set
     // (cohort min + cells + sizes), which a MemoryPlan view can't serve
-    val act = spark.table(queryName).localCheckpoint()
+    val act = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
     val cohort = act.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
     val sizes = cohort.groupBy("cohort_day")
       .agg(count(lit(1)).cast(LongType).as("cohort_size"))
@@ -1131,7 +1068,7 @@ object EventStreams {
     withStreamParts(spark, eventsDir, glob) { spark =>
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val raw = eventsRawStream(spark, eventsDir, glob)
-    val query = raw
+    val stream = raw
       .select(col("event_type"),
         round(col("value") * lit(1000)).cast(LongType).as("vm"))
       .groupBy("event_type")
@@ -1139,12 +1076,7 @@ object EventStreams {
         sum(col("vm").cast(d38)).cast(d38).as("s1"),
         sum((col("vm").cast(d38) * col("vm").cast(d38)).cast(d38)).cast(d38)
           .as("s2"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val st = spark.table(queryName).localCheckpoint()
+    val st = drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
     val ev = graft.graph.GraphLoader.table(spark, eventsDir, "events")
     val v = ev.select(col("event_type"), col("event_id"),
       round(col("value") * lit(1000)).cast(LongType).as("vm"))
@@ -1180,18 +1112,13 @@ object EventStreams {
     val raw = eventsRawStream(spark, eventsDir, glob)
     val vals = raw.select(col("event_type").as("g"),
       floor(col("value")).cast("long").as("v"))
-    val query = graft.pipeline.Sketches.qhistCells(vals, "v", "g")
+    val stream = graft.pipeline.Sketches.qhistCells(vals, "v", "g")
       .groupBy(col("grp"), col("bucket"))
       .agg(count(lit(1)).cast("long").as("cnt"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // materialize OUT of the memory sink: qsketchFromHist self-joins the
     // histogram (union with its own '__all__' rollup), and a MemoryPlan
     // view fails Catalyst's conflicting-reference dedup under that shape
-    spark.table(queryName).localCheckpoint()
+    drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
     }
 
   /** Rank-and-slice view over a drained (event_type, user_id, cnt)
@@ -1257,18 +1184,13 @@ object EventStreams {
       .select(col("doc_id"), graft.functions.VectorExprs.minhashSig(
         graft.pipeline.Dedup.shingleHashes(col("text"), k),
         lit(numHashes)).as("sig")))
-    val query = withSig
+    val stream = withSig
       .select(col("doc_id"),
         posexplode(graft.pipeline.Dedup.bandKeys(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bucket")))
       .groupBy(col("band"), col("bucket"))
       .agg(collect_set(col("doc_id")).as("docs"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val candidates = spark.table(queryName)
+    val candidates = drain(spark, stream, queryName, OutputMode.Complete)
       .filter(size(col("docs")) >= 2)
       .select(explode(col("docs")).as("id_a"), col("docs"))
       .select(col("id_a"), explode(col("docs")).as("id_b"))
@@ -1352,17 +1274,12 @@ object EventStreams {
     val raw = eventsRawStream(spark, eventsDir, glob)
     val ev = raw  // ts already normalized by eventsRawStream
       .withColumn("tss", date_trunc("second", col("ts")))
-    val query = ev
+    val stream = ev
       .groupBy(session_window(col("tss"), s"${gapMinutes * 60} seconds"),
         col("user_id"))
       .agg(min("ts").as("min_ts"), max("ts").as("max_ts"),
         count(lit(1)).as("n_events"), sum("value").as("total_value"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).select(
+    drain(spark, stream, queryName, OutputMode.Complete).select(
       col("user_id"),
       unix_micros(col("min_ts")).as("session_start"),
       unix_micros(col("max_ts")).as("session_end"),
@@ -1415,15 +1332,10 @@ object EventStreams {
       testPermille: Int = 80, valPermille: Int = 100,
       queryName: String = "q_stream_split"): DataFrame = {
     val raw = rawFileStream(spark, docsDir, glob, rawDocSchema)
-    val query = graft.pipeline.TextOps
+    val stream = graft.pipeline.TextOps
       .hashSplit(raw, testPermille, valPermille)
       .select("doc_id", "split")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).orderBy("doc_id")
+    drain(spark, stream, queryName, OutputMode.Append).orderBy("doc_id")
   }
 
   /** STREAM-STATIC enrichment join: file-stream ingest of events
@@ -1442,13 +1354,7 @@ object EventStreams {
     val ev = eventsRawStream(spark, eventsDir, glob)
     val joined = ev.join(broadcast(dim), col("user_id") === col(dimKey))
       .drop(dimKey)
-    val query = joined
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).orderBy("event_id")
+    drain(spark, joined, queryName, OutputMode.Append).orderBy("event_id")
   }
 
   /** Watermarked STREAM-STREAM interval join — the remaining core
@@ -1479,15 +1385,10 @@ object EventStreams {
       col("l_uid") === col("r_uid") &&
         col("rts") <= col("lts") &&
         col("rts") >= col("lts") - expr(s"INTERVAL $windowMinutes MINUTES"))
-    val query = joined
+    val stream = joined
       .select(col("event_id"), col("l_uid").as("user_id"),
         unix_micros(col("lts")).as("t_us"), unix_micros(col("rts")).as("err_us"))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(queryName).orderBy("event_id", "err_us")
+    drain(spark, stream, queryName, OutputMode.Append).orderBy("event_id", "err_us")
     }
 
   def streamingEdgeAppend(events: DataFrame, edgeDir: String,

@@ -92,6 +92,9 @@ class ReleaseSpec extends SparkSpec {
     val oddExit = (k5 :+ ((4L, 9L))).toDF("_src", "_dst")
     // ...while this one's last peel is round 2, a checkpointed round
     val evenExit = (k5 ++ Seq((4L, 9L), (9L, 10L), (9L, 11L))).toDF("_src", "_dst")
+    // every walk reaches the sink 2 by step 2: the walks stop at the
+    // checkpointed step 4, whose frame is empty
+    val sinkChain = Seq((0L, 1L), (1L, 2L)).toDF("_src", "_dst")
     Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "pageRankWeighted" -> (() => Algos.pageRankWeighted(weighted, iterations = 5)),
       "personalizedPageRank" ->
@@ -104,7 +107,12 @@ class ReleaseSpec extends SparkSpec {
       "louvainWeighted" -> (() => Algos.louvainWeighted(weighted, rounds = 3)),
       "kCore" -> (() => Algos.kCore(edges, k = 2, rounds = 5)),
       "kCore odd-round exit" -> (() => Algos.kCore(oddExit, k = 3)),
-      "kCore even-round exit" -> (() => Algos.kCore(evenExit, k = 3))
+      "kCore even-round exit" -> (() => Algos.kCore(evenExit, k = 3)),
+      "deterministicWalks" ->
+        (() => Algos.deterministicWalks(edges, nStarts = 4, steps = 5, walksPerStart = 2)),
+      "deterministicWalks sink exit" ->
+        (() => Algos.deterministicWalks(sinkChain, nStarts = 3, steps = 8)),
+      "node2vecWalks" -> (() => Algos.node2vecWalks(edges, nStarts = 4, steps = 5))
     ).foreach { case (name, run) =>
       val pre = storedRddIds
       run().count()

@@ -18,6 +18,13 @@ class CypherCompilerSpec extends SparkSpec {
     assert(rowsOf(got) == rowsOf(want))
   }
 
+  test("matchPattern takes literal property values only") {
+    val err = intercept[IllegalArgumentException] {
+      graph.matchPattern("(c:Customer {c_custkey: $k})")
+    }
+    assert(err.getMessage.contains("property 'c_custkey'"), err.getMessage)
+  }
+
   test("WHERE comparison + boolean ops") {
     val got = graph.cypher(
       """MATCH (c:Customer) WHERE c.c_acctbal > 9000 AND c.c_mktsegment = 'BUILDING'

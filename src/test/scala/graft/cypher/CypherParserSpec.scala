@@ -2,7 +2,6 @@ package graft.cypher
 
 import org.scalatest.funsuite.AnyFunSuite
 import Ast._
-import graft.graph.PatternParser.{In, Out, Undirected}
 
 class CypherParserSpec extends AnyFunSuite {
 
@@ -137,5 +136,73 @@ class CypherParserSpec extends AnyFunSuite {
       "CALL db.labels() YIELD label WHERE label <> 'X' RETURN label")
       .parts.head.clauses.head
     assert(where2.nonEmpty)
+  }
+
+  test("pattern grammar: parsePattern ASTs, and malformed patterns throw") {
+    def n(name: String, label: String = null, props: Seq[(String, Any)] = Nil,
+        secondary: Seq[String] = Nil) =
+      NodePat(name, name.startsWith("__anon"), Option(label), props, secondary)
+    def r(name: String, relType: String, dir: Dir, minHops: Int = 1,
+        maxHops: Option[Int] = Some(1), isVarLength: Boolean = false) =
+      RelPat(name, name.startsWith("__anon"), Option(relType), Nil, dir,
+        minHops, maxHops, isVarLength)
+    def p(nodes: NodePat*)(rels: RelPat*) = PathPat(nodes.toVector, rels.toVector)
+    def ab(rel: RelPat) = Vector(p(n("a"), n("b"))(rel))
+    val cases = Seq(
+      // the PropertyGraph.matchPattern / optionalMatch strings in SparkEntry
+      "(c:Customer {c_custkey: 42})" -> Vector(p(n("c", "Customer", Seq("c_custkey" -> 42L)))()),
+      "(c:Customer)-[:PLACED]->(o:Order)" ->
+        Vector(p(n("c", "Customer"), n("o", "Order"))(r("__anon1", "PLACED", Out))),
+      "(r:Region)<-[:IN_REGION]-(n:Nation)<-[:IN_NATION]-(c:Customer)-[:PLACED]->(o:Order)" ->
+        Vector(p(n("r", "Region"), n("n", "Nation"), n("c", "Customer"), n("o", "Order"))(
+          r("__anon1", "IN_REGION", In), r("__anon2", "IN_NATION", In),
+          r("__anon3", "PLACED", Out))),
+      "(p:Part {p_partkey: 1})-[:RELATED_TO*1..2]->(q:Part)" ->
+        Vector(p(n("p", "Part", Seq("p_partkey" -> 1L)), n("q", "Part"))(
+          r("__anon1", "RELATED_TO", Out, 1, Some(2), isVarLength = true))),
+      "(c:Customer)" -> Vector(p(n("c", "Customer"))()),
+      "(u:User)-[:TRIGGERED]->(e:Event)" ->
+        Vector(p(n("u", "User"), n("e", "Event"))(r("__anon1", "TRIGGERED", Out))),
+      // the test call sites
+      "(n:Nation)<-[:IN_NATION*1..1]-(c:Customer)" ->
+        Vector(p(n("n", "Nation"), n("c", "Customer"))(
+          r("__anon1", "IN_NATION", In, 1, Some(1), isVarLength = true))),
+      // bare arrows
+      "(a)<-->(b)" -> ab(r("__anon1", null, Undirected)),
+      "(a)--(b)" -> ab(r("__anon1", null, Undirected)),
+      "(a)-->(b)" -> ab(r("__anon1", null, Out)),
+      "(a)<--(b)" -> ab(r("__anon1", null, In)),
+      // type alternation, pipe-joined
+      "(a)-[:A|B]->(b)" -> ab(r("__anon1", "A|B", Out)),
+      "(a)-[t:A|:B]->(b)" -> ab(r("t", "A|B", Out)),
+      // hop ranges
+      "(a)-[*]->(b)" -> ab(r("__anon1", null, Out, 1, None, isVarLength = true)),
+      "(a)-[*2]->(b)" -> ab(r("__anon1", null, Out, 2, Some(2), isVarLength = true)),
+      "(a)-[*..3]->(b)" -> ab(r("__anon1", null, Out, 1, Some(3), isVarLength = true)),
+      "(a)-[*2..]->(b)" -> ab(r("__anon1", null, Out, 2, None, isVarLength = true)),
+      // secondary labels
+      "(n:X:Y:Z)" -> Vector(p(n("n", "X", secondary = Seq("Y", "Z")))()),
+      // literal value types
+      """(n {s: 'it\'s', d: "dq", i: -3, f: 1.5, t: true, z: null, no: FALSE})""" ->
+        Vector(p(n("n", props = Seq("s" -> "it's", "d" -> "dq", "i" -> -3L,
+          "f" -> 1.5, "t" -> true, "z" -> null, "no" -> false)))()),
+      // several paths; every variable anonymous
+      "(a)-[:R]->(b), (b)-[:S]->(c)" -> Vector(
+        p(n("a"), n("b"))(r("__anon1", "R", Out)),
+        p(n("b"), n("c"))(r("__anon2", "S", Out))),
+      "()-[]->()" -> Vector(p(n("__anon1"), n("__anon3"))(r("__anon2", null, Out))))
+    // case-class equality is cooperative on numbers (42 == 42L), so the
+    // property value classes are compared separately
+    def valueTypes(ps: Vector[PathPat]) =
+      (ps.flatMap(_.nodes).flatMap(_.props) ++ ps.flatMap(_.rels).flatMap(_.props))
+        .map { case (k, v) => k -> Option(v).map(_.getClass) }
+    cases.foreach { case (s, want) =>
+      val got = CypherParser.parsePattern(s)
+      assert(got == want, s)
+      assert(valueTypes(got) == valueTypes(want), s)
+    }
+    Seq("(a", "(a)-[:R]->(b) extra", "(a)-[:R->(b)").foreach { s =>
+      intercept[IllegalArgumentException](CypherParser.parsePattern(s))
+    }
   }
 }
