@@ -51,23 +51,6 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
 
-    // r5 verdict: running 61 queries × 5 in one JVM accumulates cached
-    // frames, localCheckpoint RDD blocks (freed only by ContextCleaner GC)
-    // and heap pressure — late-alphabet queries paid for earlier ones
-    // (q_dedup_simhash reported 17.9s in-suite vs 1.0s isolated). Reset
-    // session state BETWEEN QUERIES so per-query medians are attributable;
-    // a query's own runs still share its caches (run 1 is the discarded
-    // warm-up that rebuilds them).
-    def resetSessionState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.graph.GraphLoader.invalidate(spark)
-      SparkEntry.invalidatePairs(spark)
-      // deterministic release of localCheckpoint blocks (ContextCleaner
-      // would only free them at some future GC)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     // r10 postmortem: a 17.7% total "regression" (3 queries >2.5×) turned
     // out to be background load — the whole round (build, tests, gate,
     // bench) ran in one 498 s window, and nothing in the output could
@@ -83,7 +66,15 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
         System.err.println(s"[bench] running $name")
-        resetSessionState()
+        // r5 verdict: running 61 queries × 5 in one JVM accumulates cached
+        // frames, checkpoint RDD blocks (freed only by ContextCleaner GC)
+        // and heap pressure — late-alphabet queries paid for earlier ones
+        // (q_dedup_simhash reported 17.9s in-suite vs 1.0s isolated). Reset
+        // session state BETWEEN QUERIES so per-query medians are
+        // attributable; a query's own runs still share its caches (run 1
+        // is the discarded warm-up that rebuilds them).
+        SparkEntry.resetSession(spark)
+        System.gc()
         val ts = scala.collection.mutable.ArrayBuffer[Double]()
         var failed = false
         var i = 0

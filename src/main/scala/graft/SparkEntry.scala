@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.graph.GraphLoader
+import graft.util.Frames
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §4
   * (oracle strategy). Every query entry compiles a Cypher-style graph
@@ -579,11 +580,10 @@ object SparkEntry {
       // Checkpoint ONLY (id, n_tokens) — the packing plan never needs
       // the text column, and checkpointing it re-wrote the surviving
       // corpus bytes every run (r14: ~half of q_pipeline_e2e's cost)
-      val survivors = d
+      val survivors = Frames.materialize(d
         .select(col("doc_id"), size(pipeline.TextOps.tokens(col("text")))
           .cast("long").as("n_tokens"))
-        .join(reps, "doc_id").join(keep, "doc_id")
-        .localCheckpoint()
+        .join(reps, "doc_id").join(keep, "doc_id"))
       pipeline.TextOps.packByBudgetFromCounts(survivors, budgetTokens = 2048)
     }),
 
@@ -1904,7 +1904,7 @@ object SparkEntry {
   /** A pay-once memo of one derived value per (session, dir, data
     * generation), the generation being `table`'s fingerprint. A lookup
     * first evicts the superseded generations of its (session, dir), so
-    * their localCheckpoint-backed frames don't accumulate for the
+    * their checkpoint-backed frames don't accumulate for the
     * process life; `drop` forgets a session (the bench reset hook).
     * Each memo family keeps its own map, so evicting one family's
     * generations never drops another's.
@@ -1946,8 +1946,9 @@ object SparkEntry {
     * q_dedup_groups, and the q_pipeline_e2e composition — candidate
     * generation + verify is the dominant cost of all three, and a real
     * pipeline materializes the pair relation once for exactly this
-    * reason. jaccardPrefix already localCheckpoints its result, so the
-    * memo hands every consumer the same materialized frame.
+    * reason. jaccardPrefix already materializes its result (through
+    * graft.util.Frames), so the memo hands every consumer the same
+    * stored frame.
     */
   private val pairsMemo = new Memo[DataFrame]("documents")
 
@@ -1957,7 +1958,7 @@ object SparkEntry {
   /** Memoized perceptual-hash near-dup pairs (decode + dHash + pigeonhole
     * verify), shared by q_dedup_phash and q_dedup_phash_groups — the
     * dupPairs discipline: the image decode is the dominant cost of both
-    * queries, phash already localCheckpoints its result, and a real media
+    * queries, phash already materializes its result, and a real media
     * pipeline materializes the pair relation once for exactly this reason.
     */
   private val phashPairsMemo = new Memo[DataFrame]("documents")
@@ -2007,11 +2008,21 @@ object SparkEntry {
   /** Drop this session's memoized derived frames (near-dup pairs,
     * hyperBall registers, walks, BPE). The bench harness unpersists
     * every RDD between queries — which frees the memoized frames'
-    * localCheckpoint blocks and would leave dangling plans — so its
-    * reset hook must call this alongside GraphLoader.invalidate.
+    * checkpoint blocks and would leave dangling plans — so its reset
+    * hook must call this alongside GraphLoader.invalidate
+    * ([[resetSession]] does both).
     */
   def invalidatePairs(s: SparkSession): Unit =
     Seq(pairsMemo, phashPairsMemo, walksMemo, bpeMemo, hbMemo).foreach(_.drop(s))
+
+  /** Return `s` to a clean state between measured queries: drop the
+    * memoized graph and derived frames, then free every cache entry and
+    * stored RDD ([[Frames.releaseAll]]). */
+  def resetSession(s: SparkSession): Unit = {
+    GraphLoader.invalidate(s)
+    invalidatePairs(s)
+    Frames.releaseAll(s)
+  }
   private def embs(s: SparkSession, dir: String): DataFrame =
     GraphLoader.table(lenient(s), dir, "embeddings")
 

@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
+import graft.util.Frames.{Rounds, cache, materialize, materializeOver, release, uncache}
 
 /** Graph analytics as iterative DataFrame algorithms.
   *
@@ -11,89 +11,15 @@ import org.apache.spark.storage.StorageLevel
   * translation, /root/reference/src/translator.ts:3322-3374); at Spark
   * scale they are bounded iterative join loops: every iteration is one
   * shuffle on the join key, frontiers/labels stay DataFrames (never
-  * collected), and iteration results are persisted + localCheckpoint'd so
-  * lineage (and thus plan size) stays O(1) per iteration instead of
-  * O(iterations).
+  * collected), and iteration results are stored through
+  * [[graft.util.Frames]] (checkpointed on each loop's cadence, cached in
+  * between) so lineage (and thus plan size) stays O(1) per iteration
+  * instead of O(iterations).
   *
   * Edge-frame convention: (`src`, `dst`) long columns, as produced by
   * [[graft.graph.PropertyGraph]] edge frames.
   */
 object Algos {
-
-  /** Cut lineage + materialize an iteration result. localCheckpoint is
-    * the single-cluster analog of checkpoint-to-HDFS; swap for
-    * `checkpoint()` with a checkpoint dir on a real cluster.
-    *
-    * NO Dataset-level persist in front: the checkpoint blocks ARE the
-    * stored copy. The old `persist().localCheckpoint(true)` shape stored
-    * every iteration TWICE (a columnar cache entry nothing ever read
-    * again, plus the checkpoint's raw-row blocks) and the cache entry
-    * was unreleasable (its plan reference is lost inside this helper) —
-    * measured as the storage accumulation behind a 10×-under-load
-    * localCheckpoint INTERNAL_ERROR in r16. The cache DID however reset
-    * the checkpoint's copied statistics to the real materialized size
-    * each step; without that reset per-step size estimates chain-multiply
-    * exponentially (a measured driver-CPU hang) — so the checkpoint goes
-    * through [[GraftShims.localCheckpointRealStats]], which stamps the
-    * actual stored block size onto the result's plan instead.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftShims.localCheckpointRealStats(df)
-
-  /** Free an iteration frame's storage NOW — both shapes: a `cache()`d
-    * frame's CacheManager entry, and a [[materialize]]d frame's
-    * checkpoint RDD blocks (which `Dataset.unpersist` silently does NOT
-    * touch — the loop-hygiene no-op found in r16). Only call on frames
-    * whose every live consumer has already been forced into storage:
-    * checkpointed RDDs cannot be recomputed.
-    */
-  private def release(dfs: DataFrame*): Unit = dfs.foreach { df =>
-    df.unpersist()
-    org.apache.spark.sql.graftshim.GraftShims.releaseCheckpoint(df)
-  }
-
-  /** Cache WITHOUT cutting lineage — for frames one derivation away from
-    * an already-checkpointed parent, where an eager localCheckpoint would
-    * only add a write-out job per iteration (the checkpoint cadence is
-    * the iteration loop's dominant fixed cost at small per-round data).
-    */
-  private def cache(df: DataFrame): DataFrame =
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** The checkpoint cadence of a loop's carried frame `cur`, starting
-    * from the checkpointed `start`. Round `i` [[materialize]]s when
-    * `i % every == 0 || i == last` and [[cache]]s otherwise, so lineage
-    * never spans more than `every` rounds while the eager write-out jobs
-    * (the per-round fixed cost at small data) fall `every`-fold. The
-    * release rule lives here only: the caches pending since the last
-    * checkpoint are unpersisted, and the superseded checkpoint released,
-    * only AFTER the new checkpoint is stored — they are the recompute
-    * path of everything in between.
-    */
-  private final class Rounds(start: DataFrame, every: Int, last: Int) {
-    private var live = start
-    private var lastMat = start
-    private var pending: List[DataFrame] = Nil
-
-    def cur: DataFrame = live
-
-    def step(i: Int, next: DataFrame): DataFrame = {
-      if (i % every == 0 || i == last) checkpoint(next)
-      else { live = cache(next); pending = live :: pending }
-      live
-    }
-
-    /** Checkpoint a pending cache — for loops that exit before `last`. */
-    def flush(): Unit = if (pending.nonEmpty) checkpoint(live)
-
-    private def checkpoint(next: DataFrame): Unit = {
-      live = materialize(next)
-      pending.foreach(_.unpersist())
-      pending = Nil
-      release(lastMat)
-      lastMat = live
-    }
-  }
 
   /** Runs `body` with spark.sql.shuffle.partitions sized to an
     * iterative loop's data instead of the session default, on an
@@ -970,11 +896,11 @@ object Algos {
             .join(remaining.select(col("id").as("v")), Seq("v"))
             .select("u", "v")
           e = if (trimRounds % 3 == 0) materialize(nextE) else cache(nextE)
-          // plain unpersist only (cache entries): the NEW remaining/e are
+          // uncache only (cache entries): the NEW remaining/e are
           // lazy here, so the old frames' checkpoint blocks must survive
           // until the next action forces the chain — release() would
           // break recompute (checkpointed RDDs have no lineage)
-          prevR.unpersist(); prevE.unpersist()
+          uncache(prevR, prevE)
         }
       }
       if (trimRounds > 1) { // cut lineage once after the peel
@@ -1128,7 +1054,7 @@ object Algos {
     * several times, so an UN-checkpointed logical plan grows ~4^k
     * between lineage cuts — at cadence 6 the analyzer+cache-lookup alone
     * cost ~5s/cut at KB-sized data. Checkpoint EVERY step: the eager
-    * localCheckpoint is the step's one evaluation job, keeping the plan
+    * materialize is the step's one evaluation job, keeping the plan
     * O(1) and the job count at ~1.5/step.
     */
   private def maxColoring(e: DataFrame, nodes: DataFrame,
@@ -1648,25 +1574,22 @@ object Algos {
   def walkSkipGramLift(walks: DataFrame, window: Int = 2,
       minCount: Long = 2L, topN: Int = 50): DataFrame = {
     require(window >= 1 && topN >= 1)
-    val cxy = walkPairCounts(walks, window)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cx = cxy.groupBy("node").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
-    val cy = cxy.groupBy("ctx_node")
-      .agg(sum(col("c_xy")).cast(LongType).as("c_y"))
-    val n = cxy.agg(sum(col("c_xy")).cast(LongType).as("n"))
     // force the ≤topN surface before releasing the shared pair counts
     // (the collocations cache discipline)
-    val out = cxy.filter(col("c_xy") >= minCount)
-      .join(cx, "node").join(cy, "ctx_node").crossJoin(broadcast(n))
-      .select(col("node"), col("ctx_node"), col("c_xy"), col("c_x"),
-        col("c_y"),
-        round((col("c_xy") * col("n")).cast(DoubleType) /
-          (col("c_x") * col("c_y")).cast(DoubleType), 6).as("lift"))
-      .orderBy(desc("lift"), asc("node"), asc("ctx_node"))
-      .limit(topN)
-      .localCheckpoint()
-    cxy.unpersist()
-    out
+    materializeOver(walkPairCounts(walks, window)) { cxy =>
+      val cx = cxy.groupBy("node").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
+      val cy = cxy.groupBy("ctx_node")
+        .agg(sum(col("c_xy")).cast(LongType).as("c_y"))
+      val n = cxy.agg(sum(col("c_xy")).cast(LongType).as("n"))
+      cxy.filter(col("c_xy") >= minCount)
+        .join(cx, "node").join(cy, "ctx_node").crossJoin(broadcast(n))
+        .select(col("node"), col("ctx_node"), col("c_xy"), col("c_x"),
+          col("c_y"),
+          round((col("c_xy") * col("n")).cast(DoubleType) /
+            (col("c_x") * col("c_y")).cast(DoubleType), 6).as("lift"))
+        .orderBy(desc("lift"), asc("node"), asc("ctx_node"))
+        .limit(topN)
+    }
   }
 
   /** Deterministic RANDOM-PROJECTION node embedding of the walk
@@ -1697,29 +1620,25 @@ object Algos {
   def walkPmiEmbedding(walks: DataFrame, window: Int = 2,
       minCount: Long = 2L, dim: Int = 8): DataFrame = {
     require(window >= 1 && dim >= 1)
-    val cxy = walkPairCounts(walks, window)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cx = cxy.groupBy("node").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
-    val cy = cxy.groupBy("ctx_node")
-      .agg(sum(col("c_xy")).cast(LongType).as("c_y"))
-    val n = cxy.agg(sum(col("c_xy")).cast(LongType).as("n"))
-    val lifted = cxy.filter(col("c_xy") >= minCount)
-      .join(cx, "node").join(cy, "ctx_node").crossJoin(broadcast(n))
-      .select(col("node"), col("ctx_node"),
-        expr("CAST((c_xy * n * 1000000) DIV (c_x * c_y) AS BIGINT)").as("le6"))
     val sign = when(conv(substring(md5(concat(
         col("ctx_node").cast(StringType), lit("|"),
         col("d").cast(StringType))), 32, 1), 16, 10).cast(LongType) % 2 === 0,
       lit(1L)).otherwise(lit(-1L))
-    val out = lifted
-      .select(col("node"), col("ctx_node"), col("le6"),
-        explode(sequence(lit(0), lit(dim - 1))).as("d"))
-      .groupBy("node", "d")
-      .agg(sum(col("le6") * sign).cast(LongType).as("v"))
-      .orderBy("node", "d")
-      .localCheckpoint()
-    cxy.unpersist()
-    out
+    materializeOver(walkPairCounts(walks, window)) { cxy =>
+      val cx = cxy.groupBy("node").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
+      val cy = cxy.groupBy("ctx_node")
+        .agg(sum(col("c_xy")).cast(LongType).as("c_y"))
+      val n = cxy.agg(sum(col("c_xy")).cast(LongType).as("n"))
+      cxy.filter(col("c_xy") >= minCount)
+        .join(cx, "node").join(cy, "ctx_node").crossJoin(broadcast(n))
+        .select(col("node"), col("ctx_node"),
+          expr("CAST((c_xy * n * 1000000) DIV (c_x * c_y) AS BIGINT)").as("le6"))
+        .select(col("node"), col("ctx_node"), col("le6"),
+          explode(sequence(lit(0), lit(dim - 1))).as("d"))
+        .groupBy("node", "d")
+        .agg(sum(col("le6") * sign).cast(LongType).as("v"))
+        .orderBy("node", "d")
+    }
   }
 
   /** node2vec-BIASED deterministic walks (Grover & Leskovec 2016,
@@ -1870,7 +1789,7 @@ object Algos {
     }
     release(deg)
     // returned with the carried k column — the checkpoint ROOT, so a
-    // caller's release() frees the blocks (releaseCheckpoint matches
+    // caller's release() frees the blocks (release matches checkpoint
     // roots only); callers project (id, c) themselves
     sc.out(labels.cur)
     }
@@ -1954,11 +1873,10 @@ object Algos {
       // is now materialized — free it before the deeper levels run
       if (sym0Live) { release(sym0); sym0Live = false }
       val move = louvainLocalMove(wsym, rounds2)
-      val nextMapping = mapping
+      val nextMapping = materialize(mapping
         .join(move.select(col("id").as("community"), col("c").as("c2")),
           "community")
-        .select(col("id"), col("c2").as("community"))
-        .localCheckpoint()
+        .select(col("id"), col("c2").as("community")))
       if (prevWg != null) release(prevWg)
       if (prevMapping != null) release(prevMapping)
       // the superseded full-node mapping checkpoint (levels ≥ 3): only

@@ -6,6 +6,7 @@ import Ast._
 import CypherCompiler.Ctx
 import graft.graph.{EdgeType, PropertyGraph}
 import graft.graph.PropertyGraph.{DST, EID, ID, LABELS, SRC}
+import graft.util.Frames
 
 /** Executes Cypher WRITE queries (CREATE / MERGE / SET / REMOVE / DELETE /
   * DETACH DELETE, mixed with read clauses) against a [[PropertyGraph]],
@@ -424,10 +425,10 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     }
     val newPats = byName.values.toVector
     val needUid = newPats.exists(!_.props.exists(_._1 == ID))
-    // Per-row uid for id minting, frozen by an eager localCheckpoint so
-    // the node select and the edge select (two evaluations) agree.
+    // Per-row uid for id minting, frozen by an eager materialize so the
+    // node select and the edge select (two evaluations) agree.
     val rowFrame =
-      if (needUid) base.withColumn(ROW_UID, monotonically_increasing_id()).localCheckpoint()
+      if (needUid) Frames.materialize(base.withColumn(ROW_UID, monotonically_increasing_id()))
       else base
     val newNodeIds = scala.collection.mutable.Map[String, (String, Column)]()
     newPats.zipWithIndex.foreach { case (n, pi) =>

@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
+import graft.util.Frames
 
 /** Builds the test-corpus property graph from the TPC-H-ish parquet star
   * schema (see /root/repo/SURVEY.md §3).
@@ -214,9 +214,8 @@ object GraphLoader {
           col("event_id").cast("long").as(DST), col("ts"), col("event_type"))
           .withColumn(EID, eid("TRIGGERED", col(SRC), col(DST)))),
       EdgeType("RELATED_TO", "Part", "Part") -> (() =>
-        derivedSnapshot(spark, dir, "related_to", "lineitem")(
-          relatedToEdges(t("lineitem")))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+        Frames.cache(derivedSnapshot(spark, dir, "related_to", "lineitem")(
+          relatedToEdges(t("lineitem")))))
     )
 
     PropertyGraph.lazily(nodes, edges,

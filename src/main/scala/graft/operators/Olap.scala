@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
+import graft.util.Frames
 
 /** Relational OLAP surface the reference's dashboard queries lean on
   * (reference: benchmark/src/queries.ts aggregation tier + the
@@ -342,14 +343,13 @@ object Olap {
     */
   private[graft] def frequentTriplesPairs(lineitem: DataFrame,
       minSupport: Long, item: Column): (DataFrame, DataFrame, DataFrame) = {
-    val shims = org.apache.spark.sql.graftshim.GraftShims
     val b0 = lineitem.select(col("l_orderkey").as("ok"),
       item.as("pk")).distinct()
     val freq1 = b0.groupBy("pk").agg(count(lit(1)).as("c1"))
       .filter(col("c1") >= minSupport).select("pk")
-    val b = shims.localCheckpointRealStats(
+    val b = Frames.materialize(
       b0.join(freq1, Seq("pk"), "left_semi").select("ok", "pk"))
-    val pairRows = shims.localCheckpointRealStats(
+    val pairRows = Frames.materialize(
       b.as("a").join(b.as("b"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .select(col("a.ok").as("ok"), col("a.pk").as("x"),

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Frames
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -239,11 +240,10 @@ object Ann {
     // cell assignment: native argmin-L2 kernel over the raw float array;
     // the centroid matrix is a plan-external reference object, so plan
     // size is independent of nCells (r5 advice)
-    val assigned = emb
+    val cells = emb
       .withColumn("cell", graft.functions.VectorExprs.nearestCentroid(
         col(vec), model.clusterCenters.map(_.toArray)))
       .select(col(id), col(vec), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // query → nProbe nearest cells: centroids are tiny, crossJoin the
     // broadcast query set against them and rank (Q × nCells rows)
@@ -263,15 +263,14 @@ object Ann {
       .filter(col("rk") <= nProbe)
       .select(col("query_id"), col("qvec"), col("cell")))
 
-    val scored = assigned.join(probed, "cell")
-      .filter(col(id) =!= col("query_id"))
-      .select(col("query_id"), col(id).as("neighbor_id"),
-        cosine(col("qvec"), col(vec)).as("sim"))
     // Eager top-k (small: Q×k rows), then release the cached cell
-    // assignment — no persisted blocks outlive the call.
-    val out = topKPerQuery(scored, k).localCheckpoint()
-    assigned.unpersist()
-    out
+    // assignment — no cache entry outlives the call.
+    Frames.materializeOver(cells) { assigned =>
+      topKPerQuery(assigned.join(probed, "cell")
+        .filter(col(id) =!= col("query_id"))
+        .select(col("query_id"), col(id).as("neighbor_id"),
+          cosine(col("qvec"), col(vec)).as("sim")), k)
+    }
   }
 
   /** Random-hyperplane sign bucket key: `planes` sign bits packed into one
@@ -365,38 +364,34 @@ object Ann {
   def kmeansCluster(emb: DataFrame, k: Int = 8, rounds: Int = 3,
       id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     require(k > 0 && rounds > 0)
-    val e = emb
-      .select(col(id), transform(col(vec), x => x.cast(DoubleType)).as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = e
-      .withColumn("__h", md5(col(id).cast(StringType)))
-      .orderBy(col("__h"), col(id)).limit(k)
-      .select("__v").collect().map(_.getSeq[Double](0).toArray)
     def dists(c: Array[Array[Double]]): Column = array(c.map { cj =>
       round(aggregate(zip_with(col("__v"), typedLit(cj.toSeq),
         (x, y) => (x - y) * (x - y)), lit(0.0), (a, x) => a + x), 6)
     }: _*)
-    def assign(c: Array[Array[Double]]): DataFrame = e
-      .withColumn("__d", dists(c))
-      .withColumn("cluster", array_position(col("__d"), array_min(col("__d"))) - 1)
-      .withColumn("dist2", element_at(col("__d"), (col("cluster") + 1).cast(IntegerType)))
-    var cents = seeds
-    (1 until rounds).foreach { _ =>
-      val byCell = assign(cents)
-        .select(col("cluster"), posexplode(col("__v")))
-        .groupBy("cluster", "pos").agg(round(avg("col"), 6).as("m"))
-        .collect()
-        .groupBy(_.getLong(0)).map { case (cell, rows) =>
-          cell.toInt -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
-        }
-      cents = cents.indices.map(j => byCell.getOrElse(j, cents(j))).toArray
+    Frames.materializeOver(emb
+      .select(col(id), transform(col(vec), x => x.cast(DoubleType)).as("__v"))) { e =>
+      def assign(c: Array[Array[Double]]): DataFrame = e
+        .withColumn("__d", dists(c))
+        .withColumn("cluster", array_position(col("__d"), array_min(col("__d"))) - 1)
+        .withColumn("dist2", element_at(col("__d"), (col("cluster") + 1).cast(IntegerType)))
+      var cents = e
+        .withColumn("__h", md5(col(id).cast(StringType)))
+        .orderBy(col("__h"), col(id)).limit(k)
+        .select("__v").collect().map(_.getSeq[Double](0).toArray)
+      (1 until rounds).foreach { _ =>
+        val byCell = assign(cents)
+          .select(col("cluster"), posexplode(col("__v")))
+          .groupBy("cluster", "pos").agg(round(avg("col"), 6).as("m"))
+          .collect()
+          .groupBy(_.getLong(0)).map { case (cell, rows) =>
+            cell.toInt -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
+          }
+        cents = cents.indices.map(j => byCell.getOrElse(j, cents(j))).toArray
+      }
+      assign(cents)
+        .select(col(id), col("cluster"), col("dist2"))
+        .orderBy(id)
     }
-    val out = assign(cents)
-      .select(col(id), col("cluster"), col("dist2"))
-      .orderBy(id)
-      .localCheckpoint()
-    e.unpersist()
-    out
   }
 
   // ---- int8 scalar quantization (q_quantize / q_ann_int8_recall) ----
@@ -524,11 +519,10 @@ object Ann {
     val d = emb.select(size(col(vec))).first().getInt(0)
     require(d % m == 0, s"embedding dim $d not divisible by m=$m subspaces")
     val dsub = d / m
-    val subs = emb
+    val subs = Frames.cache(emb
       .select(col(id), unitNorm(col(vec)).as("__v"))
       .select(col(id), posexplode(transform(sequence(lit(0), lit(m - 1)),
-        s => slice(col("__v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        s => slice(col("__v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv"))))
 
     // seeds: md5(id) is subspace-independent, so one collect of the ks
     // smallest-hash vectors seeds every subspace (sliced driver-side)
@@ -562,7 +556,7 @@ object Ann {
         means.getOrElse((s, j), books(s)(j))
       }
     }
-    subs.unpersist()
+    Frames.release(subs)
     books
   }
 
@@ -629,9 +623,6 @@ object Ann {
     import spark.implicits._
     val books = pqBooks(emb, m, ks, id = id, vec = vec)
     val dsub = books(0)(0).length
-    val coded = pqEncode(emb, books, id, vec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     // driver-side ADC tables: Q × m × ks exact subspace distances
     val qs = emb.filter(col(id).isin(queryIds: _*))
       .select(col(id), unitNorm(col(vec)).as("__q"))
@@ -655,24 +646,23 @@ object Ann {
     val adc = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
       (acc, s) => acc + element_at(element_at(col("qtab"), s + 1),
         element_at(col("codes"), s + 1) + 1))
-    val cand = topKPerQuery(
-      coded.crossJoin(qtab)
-        .filter(col(id) =!= col("query_id"))
-        .select(col("query_id"), col(id).as("neighbor_id"), (-adc).as("sim")),
-      k * rerank)
-      .select("query_id", "neighbor_id")
-
-    // exact cosine re-rank of the candidate set only
     val queries = broadcast(emb.filter(col(id).isin(queryIds: _*))
       .select(col(id).as("query_id"), col(vec).as("qvec")))
-    val out = topKPerQuery(
-      cand.join(emb.select(col(id).as("neighbor_id"), col(vec).as("nvec")),
-          "neighbor_id")
-        .join(queries, "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          cosine(col("qvec"), col("nvec")).as("sim")),
-      k).localCheckpoint()
-    coded.unpersist()
-    out
+    Frames.materializeOver(pqEncode(emb, books, id, vec)) { coded =>
+      val cand = topKPerQuery(
+        coded.crossJoin(qtab)
+          .filter(col(id) =!= col("query_id"))
+          .select(col("query_id"), col(id).as("neighbor_id"), (-adc).as("sim")),
+        k * rerank)
+        .select("query_id", "neighbor_id")
+      // exact cosine re-rank of the candidate set only
+      topKPerQuery(
+        cand.join(emb.select(col(id).as("neighbor_id"), col(vec).as("nvec")),
+            "neighbor_id")
+          .join(queries, "query_id")
+          .select(col("query_id"), col("neighbor_id"),
+            cosine(col("qvec"), col("nvec")).as("sim")),
+        k)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Frames
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
   *
@@ -97,16 +98,13 @@ object Dedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     val numHashes = bands * rowsPerBand
-    // persisted: signature aggregation + both verify sides reuse it
-    val withSh = docs
+    // cached: signature aggregation + both verify sides reuse it; no
+    // cache entry outlives the call (r4: persist leakage)
+    Frames.materializeOver(docs
       .select(col(id), shingleHashes(col(text), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Eager materialize, then release the cached shingle frame — no
-    // persisted blocks outlive the call (r4: persist leakage).
-    val out = minhashPairsFrom(withSh, bands, rowsPerBand, threshold, id).localCheckpoint()
-    withSh.unpersist()
-    out
+      .filter(size(col("sh")) > 0)) {
+      minhashPairsFrom(_, bands, rowsPerBand, threshold, id)
+    }
   }
 
   /** The lazy pair plan behind [[minhashLsh]] (no persist/checkpoint) —
@@ -179,22 +177,18 @@ object Dedup {
     * the DuckDB string oracle computes, while every shuffle carries
     * 8-byte longs instead of document text.
     *
-    * The result is localCheckpoint-ed (eager) so the intermediate cache
-    * can be released before returning — no persisted blocks outlive the
-    * call (r4 verdict: persist leakage in long-lived sessions).
+    * The result is materialized (eager) so the intermediate cache can be
+    * released before returning — no cache entry outlives the call (r4
+    * verdict: persist leakage in long-lived sessions).
     */
   def jaccardPrefix(docs: DataFrame, k: Int = 3, threshold: Double = 0.8,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
-    // Persisted once: df aggregation, prefix ordering, and both verify
+    // Cached once: df aggregation, prefix ordering, and both verify
     // sides reuse it instead of re-tokenizing.
-    val withSh = docs
+    Frames.materializeOver(docs
       .select(col(id), shingleHashes(col(text), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = jaccardPairsFrom(withSh, threshold, id).localCheckpoint()
-    withSh.unpersist()
-    out
+      .filter(size(col("sh")) > 0))(jaccardPairsFrom(_, threshold, id))
   }
 
   /** Multi-pass sorted-neighborhood near-dup blocking (Hernández &
@@ -233,21 +227,18 @@ object Dedup {
       val keyed = docs.select(
         col(id) +: pass.zipWithIndex.map { case (c, i) => c.as(s"_k$i") }: _*)
       val sortKeys = pass.indices.map(i => col(s"_k$i")) :+ col(id)
-      val local = keyed.repartitionByRange(parts, sortKeys: _*)
+      Frames.materializeOver(keyed.repartitionByRange(parts, sortKeys: _*)
         .withColumn("pid", spark_partition_id())
         .withColumn("lrn", row_number().over(
-          Window.partitionBy("pid").orderBy(sortKeys: _*)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
-        .withColumn("off", coalesce(sum("n").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select("pid", "off")
-      val out = local.join(broadcast(offsets), "pid")
-        .select(col(id), (col("off") + col("lrn")).cast("long").as("rnk"))
-        .localCheckpoint()
-      local.unpersist()
-      out
+          Window.partitionBy("pid").orderBy(sortKeys: _*)))) { local =>
+        val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
+          .withColumn("off", coalesce(sum("n").over(
+            Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0L)))
+          .select("pid", "off")
+        local.join(broadcast(offsets), "pid")
+          .select(col(id), (col("off") + col("lrn")).cast("long").as("rnk"))
+      }
     }
     def candidatesOf(r: DataFrame): DataFrame = {
       val a = r.select(col(id).as("ia"), col("rnk").as("ra"))
@@ -261,14 +252,13 @@ object Dedup {
         .select(least(col("ia"), col("ib")).as("id_a"),
           greatest(col("ia"), col("ib")).as("id_b"))
     }
-    val cand = passes.map(p => candidatesOf(rankBy(p)))
-      .reduce(_ unionByName _).distinct()
-    val withSh = docs
+    val ranks = passes.map(rankBy)
+    val cand = ranks.map(candidatesOf).reduce(_ unionByName _).distinct()
+    val out = Frames.materializeOver(docs
       .select(col(id), shingleHashes(col(text), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = verifyJaccardHashes(cand, withSh, threshold, id).localCheckpoint()
-    withSh.unpersist()
+      .filter(size(col("sh")) > 0))(verifyJaccardHashes(cand, _, threshold, id))
+    // the per-pass rank checkpoints' only reader is now stored
+    Frames.release(ranks: _*)
     out
   }
 
@@ -411,12 +401,9 @@ object Dedup {
     val withSh = docs
       .select(col(id), shingleHashes(col(text), k).as("sh"))
       .filter(size(col("sh")) > 0)
-    // persisted: block-key explode + both hamming-verify sides reuse it
-    val withBits = simhashBitsFrame(withSh, id)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashPairsFrom(withBits, blocks, maxHamming, id).localCheckpoint()
-    withBits.unpersist()
-    out
+    // cached: block-key explode + both hamming-verify sides reuse it
+    Frames.materializeOver(simhashBitsFrame(withSh, id))(
+      simhashPairsFrom(_, blocks, maxHamming, id))
   }
 
   /** Engine-portable SimHash twin: identical pipeline to [[simhash]]
@@ -444,12 +431,8 @@ object Dedup {
     val withSh = docs
       .select(col(id), hashed.as("sh"))
       .filter(size(col("sh")) > 0)
-    val withBits = simhashBitsFrame(withSh, id, nbits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashPairsFrom(withBits, blocks, maxHamming, id, nbits)
-      .localCheckpoint()
-    withBits.unpersist()
-    out
+    Frames.materializeOver(simhashBitsFrame(withSh, id, nbits))(
+      simhashPairsFrom(_, blocks, maxHamming, id, nbits))
   }
 
   /** The lazy pair plan behind [[simhash]] (no persist/checkpoint) — see
@@ -507,11 +490,8 @@ object Dedup {
       rows.flatMap(r => ImageCodec.decode(r.payload)
         .map(img => (r.media_id, ImageCodec.dHashBits(img))))
     }.toDF("media_id", "bits")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashPairsFrom(withBits, blocks, maxHamming, "media_id")
-      .localCheckpoint()
-    withBits.unpersist()
-    out
+    Frames.materializeOver(withBits)(
+      simhashPairsFrom(_, blocks, maxHamming, "media_id"))
   }
 
   // ---- embedding-cosine near-dup (q_dedup_embed) ----
@@ -578,29 +558,26 @@ object Dedup {
       planes: Int = 0, tables: Int = 8,
       id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     graft.functions.VectorExprs.register(emb.sparkSession)
-    val base = embedBase(emb, id, vec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPlanes =
-      if (planes > 0) planes
-      else math.max(1, math.ceil(math.log(base.count() / 128.0) / math.log(2)).toInt)
-    val tabbed = base
-      .withColumn("tbl", explode(typedLit((0 until tables).toArray)))
-      .withColumn("bkt", Ann.hyperplaneKey(col("v"), nPlanes, col("tbl")))
-      .select(col("tbl"), col("bkt"), col("id"))
-    val candidates = tabbed.select(col("tbl"), col("bkt"), col("id").as("a_id"))
-      .join(tabbed.select(col("tbl"), col("bkt"), col("id").as("b_id")), Seq("tbl", "bkt"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val a = base.select(col("id").as("a_id"), col("v").as("va"), col("nrm").as("na"))
-    val b = base.select(col("id").as("b_id"), col("v").as("vb"), col("nrm").as("nb"))
-    val out = candidates.join(a, "a_id").join(b, "b_id")
-      .withColumn("c", graft.functions.VectorExprs.dot(col("va"), col("vb")) /
-        (col("na") * col("nb")))
-      .filter(col("c") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("c"), 6).as("sim"))
-      .localCheckpoint()
-    base.unpersist()
-    out
+    Frames.materializeOver(embedBase(emb, id, vec)) { base =>
+      val nPlanes =
+        if (planes > 0) planes
+        else math.max(1, math.ceil(math.log(base.count() / 128.0) / math.log(2)).toInt)
+      val tabbed = base
+        .withColumn("tbl", explode(typedLit((0 until tables).toArray)))
+        .withColumn("bkt", Ann.hyperplaneKey(col("v"), nPlanes, col("tbl")))
+        .select(col("tbl"), col("bkt"), col("id"))
+      val candidates = tabbed.select(col("tbl"), col("bkt"), col("id").as("a_id"))
+        .join(tabbed.select(col("tbl"), col("bkt"), col("id").as("b_id")), Seq("tbl", "bkt"))
+        .filter(col("a_id") < col("b_id"))
+        .select("a_id", "b_id").distinct()
+      val a = base.select(col("id").as("a_id"), col("v").as("va"), col("nrm").as("na"))
+      val b = base.select(col("id").as("b_id"), col("v").as("vb"), col("nrm").as("nb"))
+      candidates.join(a, "a_id").join(b, "b_id")
+        .withColumn("c", graft.functions.VectorExprs.dot(col("va"), col("vb")) /
+          (col("na") * col("nb")))
+        .filter(col("c") >= threshold)
+        .select(col("a_id"), col("b_id"), round(col("c"), 6).as("sim"))
+    }
   }
 
   /** Auto-sized SemDeDup cluster count: k ≈ N / targetClusterSize

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Frames
 
 /** Cardinality sketches for corpus-scale statistics.
   *
@@ -298,12 +299,10 @@ object Sketches {
       permilles: Seq[Int] = Seq(500, 900, 990)): DataFrame = {
     val base = df.select(col(groupCol).cast(StringType).as("grp"),
       col(valueCol).cast(LongType).as("v"))
-    val hg = qhistSketch(base, "v", "grp").persist()
     // force the (tiny) summary, then release the shared histogram — a
     // lazily returned frame would pin the cache entry until LRU eviction
-    val out = qsketchFromHist(hg, base, permilles).localCheckpoint()
-    hg.unpersist()
-    out
+    Frames.materializeOver(qhistSketch(base, "v", "grp"))(
+      qsketchFromHist(_, base, permilles))
   }
 
   /** Assemble the q_qsketch surface from a PREBUILT per-group histogram
@@ -353,14 +352,6 @@ object Sketches {
     */
   def hllSummary(df: DataFrame, valueCol: String, groupCol: String,
       p: Int = 8): DataFrame = {
-    val regs = hllRegisters(df, valueCol, groupCol, p).persist()
-    // force the cache BEFORE the register table fans out: the summary
-    // reads regs through two subtrees (per-group ∪ merged) of ONE
-    // action, and a lazy persist lets the concurrent scans race cache
-    // population and compute the data-sized scan twice
-    regs.count()
-    val all = hllMerge(regs, "__all__")
-    val est = hllEstimate(regs.unionByName(all), p)
     val exact = df.groupBy(col(groupCol).as("grp"))
       .agg(countDistinct(col(valueCol)).cast(LongType).as("n_exact"))
       .unionByName(df.select(lit("__all__").as("grp"),
@@ -368,16 +359,21 @@ object Sketches {
         .agg(countDistinct(col(valueCol)).cast(LongType).as("n_exact")))
     // force the (one row per group) summary, then release the shared
     // register table — a lazy return would pin the cache entry forever
-    val out = est.join(exact, "grp")
-      .select(col("grp"), col("m"), col("n_exact"), col("n_zero"),
-        col("sum_reg"), col("z_num"), col("est"),
-        (abs(col("est") - col("n_exact")) <=
-          lit(0.1) * col("n_exact").cast(DoubleType))
-          .cast(LongType).as("within_10pct"))
-      .orderBy("grp")
-      .localCheckpoint()
-    regs.unpersist()
-    out
+    Frames.materializeOver(hllRegisters(df, valueCol, groupCol, p)) { regs =>
+      // force the cache BEFORE the register table fans out: the summary
+      // reads regs through two subtrees (per-group ∪ merged) of ONE
+      // action, and a lazy persist lets the concurrent scans race cache
+      // population and compute the data-sized scan twice
+      regs.count()
+      val all = hllMerge(regs, "__all__")
+      hllEstimate(regs.unionByName(all), p).join(exact, "grp")
+        .select(col("grp"), col("m"), col("n_exact"), col("n_zero"),
+          col("sum_reg"), col("z_num"), col("est"),
+          (abs(col("est") - col("n_exact")) <=
+            lit(0.1) * col("n_exact").cast(DoubleType))
+            .cast(LongType).as("within_10pct"))
+        .orderBy("grp")
+    }
   }
 
   // ---- KMV / theta sketch (q_kmv) ----
@@ -446,47 +442,46 @@ object Sketches {
       setA: String, setB: String, k: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val two = df.filter(col(setCol).isin(setA, setB))
-    val sk = kmvMins(two, keyCol, setCol, k).persist()
-    // eager force — the sketch feeds both the union-theta and the
-    // membership subtrees of one action (the q_hll lazy-persist race)
-    sk.count()
-    val uni = sk.select("h").distinct()
-      .withColumn("rk", row_number().over(Window.orderBy("h")))
-      .filter(col("rk") <= k)
-    val theta = uni.agg(max(col("h")).as("theta"),
-      count(lit(1)).cast(LongType).as("k_u"))
-    val membership = sk
-      .groupBy("h")
-      .agg(count(lit(1)).as("c"),
-        sum(when(col("s") === setA, 1L).otherwise(0L)).as("inA"))
-      .crossJoin(broadcast(theta))
-      .filter(col("h") < col("theta"))
-      .agg(sum(when(col("c") === 2, 1L).otherwise(0L)).cast(LongType)
-          .as("n_inter"),
-        sum(when(col("c") === 1 && col("inA") === 1, 1L).otherwise(0L))
-          .cast(LongType).as("n_a_not_b"))
-    val keys = two.select(col(setCol).cast(StringType).as("s"),
-      col(keyCol).cast(StringType).as("key")).distinct()
-    val exact = keys.groupBy("key")
-      .agg(count(lit(1)).as("c"),
-        sum(when(col("s") === setA, 1L).otherwise(0L)).as("inA"))
-      .agg(count(lit(1)).cast(LongType).as("exact_union"),
-        sum(when(col("c") === 2, 1L).otherwise(0L)).cast(LongType)
-          .as("exact_inter"),
-        sum(when(col("c") === 1 && col("inA") === 1, 1L).otherwise(0L))
-          .cast(LongType).as("exact_a_not_b"))
-    // 4503599627370496 = 2^52, the hash-domain size
-    val out = theta.crossJoin(membership).crossJoin(exact)
-      .select(col("theta"), col("k_u"), col("n_inter"), col("n_a_not_b"),
-        expr("CAST((n_inter * 4503599627370496) DIV theta AS BIGINT)")
-          .as("est_inter"),
-        expr("CAST(((k_u - 1) * 4503599627370496) DIV theta AS BIGINT)")
-          .as("est_union"),
-        expr("CAST((n_a_not_b * 4503599627370496) DIV theta AS BIGINT)")
-          .as("est_a_not_b"),
-        col("exact_inter"), col("exact_union"), col("exact_a_not_b"))
-      .localCheckpoint() // force the 1-row surface, then free the sketch
-    sk.unpersist()
-    out
+    // force the 1-row surface, then free the sketch
+    Frames.materializeOver(kmvMins(two, keyCol, setCol, k)) { sk =>
+      // eager force — the sketch feeds both the union-theta and the
+      // membership subtrees of one action (the q_hll lazy-persist race)
+      sk.count()
+      val uni = sk.select("h").distinct()
+        .withColumn("rk", row_number().over(Window.orderBy("h")))
+        .filter(col("rk") <= k)
+      val theta = uni.agg(max(col("h")).as("theta"),
+        count(lit(1)).cast(LongType).as("k_u"))
+      val membership = sk
+        .groupBy("h")
+        .agg(count(lit(1)).as("c"),
+          sum(when(col("s") === setA, 1L).otherwise(0L)).as("inA"))
+        .crossJoin(broadcast(theta))
+        .filter(col("h") < col("theta"))
+        .agg(sum(when(col("c") === 2, 1L).otherwise(0L)).cast(LongType)
+            .as("n_inter"),
+          sum(when(col("c") === 1 && col("inA") === 1, 1L).otherwise(0L))
+            .cast(LongType).as("n_a_not_b"))
+      val keys = two.select(col(setCol).cast(StringType).as("s"),
+        col(keyCol).cast(StringType).as("key")).distinct()
+      val exact = keys.groupBy("key")
+        .agg(count(lit(1)).as("c"),
+          sum(when(col("s") === setA, 1L).otherwise(0L)).as("inA"))
+        .agg(count(lit(1)).cast(LongType).as("exact_union"),
+          sum(when(col("c") === 2, 1L).otherwise(0L)).cast(LongType)
+            .as("exact_inter"),
+          sum(when(col("c") === 1 && col("inA") === 1, 1L).otherwise(0L))
+            .cast(LongType).as("exact_a_not_b"))
+      // 4503599627370496 = 2^52, the hash-domain size
+      theta.crossJoin(membership).crossJoin(exact)
+        .select(col("theta"), col("k_u"), col("n_inter"), col("n_a_not_b"),
+          expr("CAST((n_inter * 4503599627370496) DIV theta AS BIGINT)")
+            .as("est_inter"),
+          expr("CAST(((k_u - 1) * 4503599627370496) DIV theta AS BIGINT)")
+            .as("est_union"),
+          expr("CAST((n_a_not_b * 4503599627370496) DIV theta AS BIGINT)")
+            .as("est_a_not_b"),
+          col("exact_inter"), col("exact_union"), col("exact_a_not_b"))
+    }
   }
 }

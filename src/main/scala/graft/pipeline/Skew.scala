@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Frames
 
 /** Skew mitigation helpers.
   *
@@ -69,27 +70,24 @@ object Skew {
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     val sortKeys = (groupCols ++ orderCols).map(col)
-    val local = df.repartitionByRange(parts, sortKeys: _*)
+    Frames.materializeOver(df.repartitionByRange(parts, sortKeys: _*)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lrn", row_number().over(
         Window.partitionBy(("_pid" +: groupCols).map(col): _*)
-          .orderBy(orderCols.map(col): _*)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ≤ P + |groups-spanning-a-boundary| rows: each range partition holds
-    // a contiguous (group, order) slice, so a group appears in ≥2 rows
-    // here only when it crosses a partition boundary
-    val offsets = local.groupBy(("_pid" +: groupCols).map(col): _*)
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(
-        sum("_n").over(Window.partitionBy(groupCols.map(col): _*)
-          .orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(("_pid" +: groupCols).map(col) :+ col("_off"): _*)
-    val out = local.join(broadcast(offsets), "_pid" +: groupCols)
-      .withColumn(rankCol, (col("_off") + col("_lrn")).cast("long"))
-      .drop("_pid", "_lrn", "_off")
-      .localCheckpoint()
-    local.unpersist()
-    out
+          .orderBy(orderCols.map(col): _*)))) { local =>
+      // ≤ P + |groups-spanning-a-boundary| rows: each range partition holds
+      // a contiguous (group, order) slice, so a group appears in ≥2 rows
+      // here only when it crosses a partition boundary
+      val offsets = local.groupBy(("_pid" +: groupCols).map(col): _*)
+        .agg(count(lit(1)).as("_n"))
+        .withColumn("_off", coalesce(
+          sum("_n").over(Window.partitionBy(groupCols.map(col): _*)
+            .orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+        .select(("_pid" +: groupCols).map(col) :+ col("_off"): _*)
+      local.join(broadcast(offsets), "_pid" +: groupCols)
+        .withColumn(rankCol, (col("_off") + col("_lrn")).cast("long"))
+        .drop("_pid", "_lrn", "_off")
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Frames
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, document fingerprinting.
@@ -255,7 +256,7 @@ object TextOps {
     // carries at most |candidates| rows per partition; the tail never
     // leaves its partition in either pass. Materialize the (<= topN
     // rows) result so the candidate broadcast can be destroyed.
-    val out = tokRows.mapPartitions { it =>
+    val out = Frames.materialize(tokRows.mapPartitions { it =>
       val cs = candSet.value
       val counts = scala.collection.mutable.HashMap.empty[String, Long]
       it.foreach(gs => gramIter(gs).foreach(g =>
@@ -264,8 +265,7 @@ object TextOps {
     }.toDF("gram", "cnt_p")
       .groupBy("gram").agg(sum("cnt_p").as("cnt"))
       .orderBy(desc("cnt"), asc("gram"))
-      .limit(topN)
-      .localCheckpoint()
+      .limit(topN))
     candSet.destroy()
     out
   }
@@ -291,25 +291,23 @@ object TextOps {
       text: String = "text"): DataFrame = {
     val bg = docs.select(explode(gramsCol(docs, 2, text)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).cast(LongType).as("c_xy"))
-    val sp = bg.select(
-      element_at(split(col("gram"), " "), 1).as("w1"),
-      element_at(split(col("gram"), " "), 2).as("w2"),
-      col("c_xy")).persist()
-    val mx = sp.groupBy("w1").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
-    val my = sp.groupBy("w2").agg(sum(col("c_xy")).cast(LongType).as("c_y"))
-    val n = sp.agg(sum(col("c_xy")).cast(LongType).as("n"))
     // force the ≤topN surface, then release the shared bigram split — a
     // lazy return would pin the data-sized cache entry until LRU eviction
-    val out = sp.filter(col("c_xy") >= minCount)
-      .join(mx, "w1").join(my, "w2").crossJoin(broadcast(n))
-      .select(col("w1"), col("w2"), col("c_xy"), col("c_x"), col("c_y"),
-        round((col("c_xy") * col("n")).cast(DoubleType) /
-          (col("c_x") * col("c_y")).cast(DoubleType), 6).as("lift"))
-      .orderBy(desc("lift"), asc("w1"), asc("w2"))
-      .limit(topN)
-      .localCheckpoint()
-    sp.unpersist()
-    out
+    Frames.materializeOver(bg.select(
+      element_at(split(col("gram"), " "), 1).as("w1"),
+      element_at(split(col("gram"), " "), 2).as("w2"),
+      col("c_xy"))) { sp =>
+      val mx = sp.groupBy("w1").agg(sum(col("c_xy")).cast(LongType).as("c_x"))
+      val my = sp.groupBy("w2").agg(sum(col("c_xy")).cast(LongType).as("c_y"))
+      val n = sp.agg(sum(col("c_xy")).cast(LongType).as("n"))
+      sp.filter(col("c_xy") >= minCount)
+        .join(mx, "w1").join(my, "w2").crossJoin(broadcast(n))
+        .select(col("w1"), col("w2"), col("c_xy"), col("c_x"), col("c_y"),
+          round((col("c_xy") * col("n")).cast(DoubleType) /
+            (col("c_x") * col("c_y")).cast(DoubleType), 6).as("lift"))
+        .orderBy(desc("lift"), asc("w1"), asc("w2"))
+        .limit(topN)
+    }
   }
 
   // ---- quality scoring (q_quality) ----
@@ -774,34 +772,31 @@ object TextOps {
       id: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = withTok.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val local = withTok
+    Frames.materializeOver(withTok
       .repartitionByRange(parts, desc("n_tokens"), col(id))
       .withColumn("pid", spark_partition_id())
       .withColumn("local_prefix", sum("n_tokens").over(
-        Window.partitionBy("pid").orderBy(desc("n_tokens"), col(id))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // P-row offset table: cumulative totals of the preceding partitions
-    val offsets = local.groupBy("pid").agg(sum("n_tokens").as("tot"))
-      .withColumn("offset", coalesce(sum("tot").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "offset")
-    val out = local.join(broadcast(offsets), "pid")
-      .withColumn("_prefix",
-        col("offset") + col("local_prefix") - col("n_tokens"))
-      .withColumn("shard", expr(s"_prefix div ${budgetTokens}L"))
-      // where the doc's tokens start inside its shard's token stream —
-      // the writer-side cursor that makes the assignment directly
-      // consumable (docs are not split, so a shard's first doc is NOT
-      // at a budget multiple: subtract the shard's first prefix, a
-      // bounded per-shard window)
-      .withColumn("offset_in_shard",
-        col("_prefix") - min("_prefix").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("shard")))
-      .select(col(id), col("n_tokens"), col("shard"), col("offset_in_shard"))
-      .orderBy(id)
-      .localCheckpoint()
-    local.unpersist()
-    out
+        Window.partitionBy("pid").orderBy(desc("n_tokens"), col(id))))) { local =>
+      // P-row offset table: cumulative totals of the preceding partitions
+      val offsets = local.groupBy("pid").agg(sum("n_tokens").as("tot"))
+        .withColumn("offset", coalesce(sum("tot").over(
+          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select("pid", "offset")
+      local.join(broadcast(offsets), "pid")
+        .withColumn("_prefix",
+          col("offset") + col("local_prefix") - col("n_tokens"))
+        .withColumn("shard", expr(s"_prefix div ${budgetTokens}L"))
+        // where the doc's tokens start inside its shard's token stream —
+        // the writer-side cursor that makes the assignment directly
+        // consumable (docs are not split, so a shard's first doc is NOT
+        // at a budget multiple: subtract the shard's first prefix, a
+        // bounded per-shard window)
+        .withColumn("offset_in_shard",
+          col("_prefix") - min("_prefix").over(
+            org.apache.spark.sql.expressions.Window.partitionBy("shard")))
+        .select(col(id), col("n_tokens"), col("shard"), col("offset_in_shard"))
+        .orderBy(id)
+    }
   }
 
   /** Materializes the packed shards [[packByBudget]] assigns: one row
@@ -1073,23 +1068,20 @@ object TextOps {
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val keyed = docs.select(col(id),
       md5(concat(lit(seed), col(id).cast(StringType))).as("hkey"))
-    val local = keyed
+    Frames.materializeOver(keyed
       .repartitionByRange(parts, col("hkey"), col(id))
       .withColumn("pid", spark_partition_id())
       .withColumn("local_rn", row_number().over(
-        Window.partitionBy("pid").orderBy(col("hkey"), col(id))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum("n").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "offset")
-    val out = local.join(broadcast(offsets), "pid")
-      .select(col(id),
-        (col("offset") + col("local_rn") - 1L).cast(LongType).as("pos"))
-      .orderBy(id)
-      .localCheckpoint()
-    local.unpersist()
-    out
+        Window.partitionBy("pid").orderBy(col("hkey"), col(id))))) { local =>
+      val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
+        .withColumn("offset", coalesce(sum("n").over(
+          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select("pid", "offset")
+      local.join(broadcast(offsets), "pid")
+        .select(col(id),
+          (col("offset") + col("local_rn") - 1L).cast(LongType).as("pos"))
+        .orderBy(id)
+    }
   }
 
   // ---- cross-document duplicate n-gram fraction (q_crossdoc) ----
@@ -1771,32 +1763,29 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val parts = docs.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    val local = scored.select(col(id), col("n_toks"), col("avg_w"))
+    Frames.materializeOver(scored.select(col(id), col("n_toks"), col("avg_w"))
       .repartitionByRange(parts, col("avg_w").desc, col(id).asc)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lrn", row_number().over(
-        Window.partitionBy("_pid").orderBy(col("avg_w").desc, col(id).asc)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // P-row offset table (bounded by the partition count, the
-    // packByBudgetFromCounts discipline) — both partitionless windows
-    // on this path run over these P rows
-    val offsets = local.groupBy("_pid").agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(sum("_n").over(
-        Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("_nt", sum("_n").over(Window.partitionBy()
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("_m",
-        expr(s"CAST((_nt * $selectPct + 99) DIV 100 AS BIGINT)"))
-      .select("_pid", "_off", "_m")
-    val out = local.join(broadcast(offsets), "_pid")
-      .withColumn("rank", (col("_off") + col("_lrn")).cast(LongType))
-      .filter(col("rank") <= col("_m"))
-      .select(col(id), col("n_toks"), col("avg_w"), col("rank"))
-      .orderBy("rank")
-      .localCheckpoint()
-    local.unpersist()
-    out
+        Window.partitionBy("_pid").orderBy(col("avg_w").desc, col(id).asc)))) { local =>
+      // P-row offset table (bounded by the partition count, the
+      // packByBudgetFromCounts discipline) — both partitionless windows
+      // on this path run over these P rows
+      val offsets = local.groupBy("_pid").agg(count(lit(1)).as("_n"))
+        .withColumn("_off", coalesce(sum("_n").over(
+          Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+        .withColumn("_nt", sum("_n").over(Window.partitionBy()
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+        .withColumn("_m",
+          expr(s"CAST((_nt * $selectPct + 99) DIV 100 AS BIGINT)"))
+        .select("_pid", "_off", "_m")
+      local.join(broadcast(offsets), "_pid")
+        .withColumn("rank", (col("_off") + col("_lrn")).cast(LongType))
+        .filter(col("rank") <= col("_m"))
+        .select(col(id), col("n_toks"), col("avg_w"), col("rank"))
+        .orderBy("rank")
+    }
   }
 
   // ---- deterministic BPE vocabulary + subword token counting ----
@@ -1819,7 +1808,8 @@ object TextOps {
     * trick; pair counting is one explode + map-side-combined sum per
     * round, and the argmax collects exactly ONE row per round (bounded
     * driver state, the louvain-S discipline). Round states are
-    * localCheckpoint'd so round r's jobs don't replay rounds 1..r-1.
+    * materialized on a [[Frames.Rounds]] cadence of 1 so round r's jobs
+    * don't replay rounds 1..r-1, and each superseded round is released.
     *
     * Symbol-sequence state is a DOUBLE-separator-joined string
     * ("␟␟c₁␟␟c₂␟␟…", U+001F): applying a merge is ONE literal
@@ -1842,16 +1832,15 @@ object TextOps {
       .select(explode(tokens(lower(col(text)))).as("word"))
       .filter(col("word") =!= "" && !col("word").contains(BpeSep))
       .groupBy("word").agg(count(lit(1)).cast(LongType).as("freq"))
-    var cur = words0
+    val vocab = new Frames.Rounds(Frames.materialize(words0
       .withColumn("s", concat(lit(BpeSep2),
         array_join(expr(
           "transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
           BpeSep2),
-        lit(BpeSep2)))
-      .localCheckpoint()
+        lit(BpeSep2)))), 1, merges)
     val acc = Seq.newBuilder[(Int, String, String, Long)]
     for (rank <- 1 to merges) {
-      val pairs = cur
+      val pairs = vocab.cur
         .select(col("freq"),
           filter(split(col("s"), BpeSep2), x => x =!= "").as("syms"))
         .filter(size(col("syms")) >= 2)
@@ -1867,14 +1856,11 @@ object TextOps {
       val (l, r, cnt) = (top(0).getString(0), top(0).getString(1),
         top(0).getLong(2))
       acc += ((rank, l, r, cnt))
-      val next = cur.withColumn("s", call_function("replace", col("s"),
-          lit(BpeSep + l + BpeSep2 + r + BpeSep),
-          lit(BpeSep + l + r + BpeSep)))
-        .localCheckpoint()
-      cur.unpersist()
-      cur = next
+      vocab.step(rank, vocab.cur.withColumn("s", call_function("replace", col("s"),
+        lit(BpeSep + l + BpeSep2 + r + BpeSep),
+        lit(BpeSep + l + r + BpeSep))))
     }
-    (acc.result(), cur)
+    (acc.result(), vocab.cur)
   }
 
   /** Train-once handle for compositions that want BOTH the merge table
@@ -1920,7 +1906,7 @@ object TextOps {
       text: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     val trained = bpeTrain(docs, merges, text)
-    trained._2.unpersist()
+    Frames.release(trained._2)
     bpeMergesFromTrained(spark, trained)
   }
 

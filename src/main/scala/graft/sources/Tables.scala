@@ -122,7 +122,7 @@ object Tables {
     * this: written graphs hold transformed frames whose plans no
     * longer match the pattern.
     *
-    * Walks the ANALYZED plan (r15): it sees through `.persist()` —
+    * Walks the ANALYZED plan (r15): it sees through a cache —
     * cache substitution happens later in query planning, so a cached
     * parquet frame (the snapshotted RELATED_TO derivation) still
     * footer-counts. That is sound because the relation's file listing

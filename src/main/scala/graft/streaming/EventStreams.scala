@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.util.Frames
 
 /** Structured Streaming over the events table: ingest, windowed
   * aggregation with watermarks, sessionization, and micro-batch graph
@@ -412,8 +413,8 @@ object EventStreams {
     val rows = raw.select(col("event_type").as("grp"),
       col("user_id").as("key")).as[HHRow]
     // latest emission per (grp, bucket) = the drained state table
-    val drained = drain(spark, topKApproxSummaries(rows, buckets, capacity),
-      queryName, OutputMode.Append).localCheckpoint()
+    val drained = Frames.materialize(drain(spark,
+      topKApproxSummaries(rows, buckets, capacity), queryName, OutputMode.Append))
     val latest = drained.groupBy("grp", "bucket")
       .agg(max(col("version")).as("version"))
     val stateTable = drained.join(latest, Seq("grp", "bucket", "version"))
@@ -470,7 +471,7 @@ object EventStreams {
       .groupByKey(r => (r.doc_id % buckets).toInt)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(update)
-    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
+    val drained = Frames.materialize(drain(spark, stream, queryName, OutputMode.Append))
     val latest = drained.groupBy("bucket").agg(max(col("version")).as("version"))
     val pool = drained.join(latest, Seq("bucket", "version"))
       .select("doc_id", "w", "priority")
@@ -608,7 +609,7 @@ object EventStreams {
     val stream = rows.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(funnelUpdate)
-    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
+    val drained = Frames.materialize(drain(spark, stream, queryName, OutputMode.Append))
     val latest = drained.groupBy("user_id").agg(max(col("version")).as("version"))
     drained.join(latest, Seq("user_id", "version"))
       .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
@@ -753,7 +754,7 @@ object EventStreams {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
         funnelUpdateTtl(horizonDays.toLong * 86400000L))
-    val drained = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
+    val drained = Frames.materialize(drain(spark, stream, queryName, OutputMode.Append))
     val latest = drained.groupBy("user_id").agg(max(col("version")).as("version"))
     drained.join(latest, Seq("user_id", "version"))
       .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
@@ -798,7 +799,7 @@ object EventStreams {
         .select(uday, col("user_id"))
         .dropDuplicates("uday", "user_id")
     }
-    val pairs = drain(spark, deduped, queryName, OutputMode.Append).localCheckpoint()
+    val pairs = Frames.materialize(drain(spark, deduped, queryName, OutputMode.Append))
     graft.operators.Olap.activeUsersFromPairs(
       if (horizon.isDefined) pairs.distinct() else pairs, windowDays)
     }
@@ -916,7 +917,7 @@ object EventStreams {
     // materialize OUT of the memory sink: the probe joins the bit set
     // twice (probe-positions left-join + presence join) and MemoryPlan
     // views fail Catalyst's conflicting-reference dedup under self-join
-    drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
+    Frames.materialize(drain(spark, stream, queryName, OutputMode.Append))
     }
 
   /** ROTATED streaming Bloom filters — the production answer to "a
@@ -984,7 +985,7 @@ object EventStreams {
       .agg(count(lit(1)).cast(LongType).as("cnt"))
     // materialize OUT of the memory sink: the estimate probe left-joins
     // the counter table, which a MemoryPlan view can't serve reliably
-    drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
+    Frames.materialize(drain(spark, stream, queryName, OutputMode.Complete))
     }
 
   /** Chi-square source drift ON THE STREAM —
@@ -1010,7 +1011,7 @@ object EventStreams {
       .groupBy(col("source").as("src"), col("lang").as("cat"))
       .agg(count(lit(1)).cast(LongType).as("o"))
     graft.pipeline.TextOps.sourceDriftFromCounts(
-      drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint())
+      Frames.materialize(drain(spark, stream, queryName, OutputMode.Complete)))
     }
 
   /** Cohort retention ON THE STREAM: the retention matrix's sufficient
@@ -1036,9 +1037,9 @@ object EventStreams {
         datediff(col("ts").cast("date"), lit(epochDay).cast("date"))
           .cast(LongType).as("day"))
       .dropDuplicates("user_id", "day")
-    // localCheckpoint: the cohort assembly self-joins the activity set
+    // materialized: the cohort assembly self-joins the activity set
     // (cohort min + cells + sizes), which a MemoryPlan view can't serve
-    val act = drain(spark, stream, queryName, OutputMode.Append).localCheckpoint()
+    val act = Frames.materialize(drain(spark, stream, queryName, OutputMode.Append))
     val cohort = act.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
     val sizes = cohort.groupBy("cohort_day")
       .agg(count(lit(1)).cast(LongType).as("cohort_size"))
@@ -1076,7 +1077,7 @@ object EventStreams {
         sum(col("vm").cast(d38)).cast(d38).as("s1"),
         sum((col("vm").cast(d38) * col("vm").cast(d38)).cast(d38)).cast(d38)
           .as("s2"))
-    val st = drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
+    val st = Frames.materialize(drain(spark, stream, queryName, OutputMode.Complete))
     val ev = graft.graph.GraphLoader.table(spark, eventsDir, "events")
     val v = ev.select(col("event_type"), col("event_id"),
       round(col("value") * lit(1000)).cast(LongType).as("vm"))
@@ -1118,7 +1119,7 @@ object EventStreams {
     // materialize OUT of the memory sink: qsketchFromHist self-joins the
     // histogram (union with its own '__all__' rollup), and a MemoryPlan
     // view fails Catalyst's conflicting-reference dedup under that shape
-    drain(spark, stream, queryName, OutputMode.Complete).localCheckpoint()
+    Frames.materialize(drain(spark, stream, queryName, OutputMode.Complete))
     }
 
   /** Rank-and-slice view over a drained (event_type, user_id, cnt)

@@ -73,10 +73,7 @@ object PlanDump {
           System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       } finally {
         spark.listenerManager.unregister(listener)
-        graft.SparkEntry.invalidatePairs(spark)
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.SparkEntry.resetSession(spark)
       }
     }
     spark.stop()

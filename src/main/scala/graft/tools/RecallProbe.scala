@@ -22,7 +22,7 @@ object RecallProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
-    val exact = graft.pipeline.Ann.cosineTopK(e, qids, k = 10).localCheckpoint()
+    val exact = graft.util.Frames.materialize(graft.pipeline.Ann.cosineTopK(e, qids, k = 10))
     val lsh = graft.pipeline.Ann.recallAt(exact,
       graft.pipeline.Ann.lshTopK(e, qids, k = 10)).head()
     val ivf = graft.pipeline.Ann.recallAt(exact,

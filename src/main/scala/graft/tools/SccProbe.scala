@@ -38,8 +38,8 @@ object SccProbe {
     val closing = cyc.groupBy("ok")
       .agg(max("pk").as("u"), min("pk").as("v"))
       .filter(col("u") =!= col("v")).select("u", "v")
-    val edges = chainOf(cyc).unionByName(closing).unionByName(chainOf(pth))
-      .persist()
+    val edges = graft.util.Frames.cache(
+      chainOf(cyc).unionByName(closing).unionByName(chainOf(pth)))
     val nEdges = edges.count()
 
     def time(mle: Long): (Double, Long) = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftshim.GraftShims
   * for the life of the query; at 10× data under machine load this
   * surfaced as a flaky `localCheckpoint` INTERNAL_ERROR in the bench.
   * `GraftShims.releaseCheckpoint` frees the backing RDD directly, and
-  * `Algos` calls it on dead iteration frames.
+  * `graft.util.Frames.release` calls it on dead frames.
   */
 class ReleaseSpec extends SparkSpec {
 
@@ -66,6 +66,32 @@ class ReleaseSpec extends SparkSpec {
       s"stats must stay at real block size; got a ${size.bitLength}-bit estimate")
     assert(df.count() == 1000)
     GraftShims.releaseCheckpoint(df)
+  }
+
+  test("a lazy frame over a released checkpoint fails loudly, never returns rows") {
+    import org.apache.spark.sql.functions.col
+    // the Frames.release caller contract: a checkpointed RDD has no
+    // lineage, so a dependent planned before the release but run after
+    // it must fail with the missing block, not recompute or go empty
+    val parent = graft.util.Frames.materialize(spark.range(0, 1000).toDF("id"))
+    val ck = parent.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    // the blocks themselves, not the status listener's view of them
+    def blocksOf: Seq[org.apache.spark.storage.BlockId] =
+      org.apache.spark.SparkEnv.get.blockManager
+        .getMatchingBlockIds(_.asRDDId.exists(_.rddId == ck)).toSeq
+    assert(blocksOf.nonEmpty, "materialize should store checkpoint blocks")
+    val dependent = parent.select((col("id") * 2).as("x")).filter(col("x") % 3 === 0)
+    graft.util.Frames.release(parent)
+    val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+    while (blocksOf.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(blocksOf.isEmpty, "Frames.release: checkpoint blocks still stored")
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val err = intercept[org.apache.spark.SparkException] { rows = dependent.collect() }
+    assert(rows == null, "no rows may come back from a lost checkpoint")
+    assert(err.getMessage.contains(s"rdd_${ck}_") && err.getMessage.contains("not found"),
+      s"the error must name the missing checkpoint block: ${err.getMessage}")
   }
 
   test("iterative algos release their per-iteration frames (bounded residual storage)") {
