@@ -242,26 +242,16 @@ object Olap {
     * so at corpus scale the dominant language (realistically half the
     * corpus) sorts inside ONE task — the single-partition-window shape
     * this repo engineered around everywhere else. Instead the per-group
-    * rank comes from the distributed prefix sum
-    * ([[graft.pipeline.Skew.groupedRank]]: range-partition, local
-    * row_number, broadcast offsets) and the tile is SQL NTILE's exact
-    * integer arithmetic over (rank, group count): with n = group size,
-    * base = n DIV 10, rem = n MOD 10, the first rem tiles hold base+1
-    * rows — identical values to `ntile(10) OVER (PARTITION BY lang ORDER
-    * BY n_chars, doc_id)`, which is what the oracle replays.
+    * rank and group size come from [[graft.pipeline.Skew.prefixScan]]
+    * and the tile from [[graft.pipeline.Skew.ntile]] — SQL NTILE's exact
+    * integer arithmetic, identical values to `ntile(10) OVER (PARTITION
+    * BY lang ORDER BY n_chars, doc_id)`, which is what the oracle replays.
     */
   def decileBands(docs: DataFrame): DataFrame = {
-    val ranked = graft.pipeline.Skew.groupedRank(
-      docs.select(col("lang"), col("doc_id"), col("n_chars")),
-      groupCols = Seq("lang"), orderCols = Seq("n_chars", "doc_id"))
-    val sizes = ranked.groupBy("lang").agg(count(lit(1)).as("_gn"))
-    ranked.join(broadcast(sizes), "lang")
-      .withColumn("decile", expr(
-        """CAST(CASE
-             WHEN rnk <= (_gn % 10) * (_gn DIV 10 + 1)
-             THEN (rnk - 1) DIV (_gn DIV 10 + 1) + 1
-             ELSE (_gn % 10) + (rnk - (_gn % 10) * (_gn DIV 10 + 1) - 1) DIV (_gn DIV 10) + 1
-           END AS BIGINT)"""))
+    import graft.pipeline.Skew
+    Skew.prefixScan(docs.select(col("lang"), col("doc_id"), col("n_chars")),
+        Seq("lang"), Seq(col("n_chars"), col("doc_id")), lit(1L), "rnk")
+      .withColumn("decile", Skew.ntile(10, col("rnk"), col("rnk_total")))
       .groupBy("lang", "decile")
       .agg(count(lit(1)).cast(LongType).as("n"),
         min(col("n_chars")).cast(LongType).as("min_chars"),
@@ -338,7 +328,7 @@ object Olap {
     * (x, y)). Both the basket frame and the raw pair frame are
     * checkpointed: `b` feeds three join legs and `pairRows` feeds both
     * the support aggregation and the expansion, so each computes once
-    * (the checkpoint blocks live for the session — the groupedRank
+    * (the checkpoint blocks live for the session — the prefixScan
     * contract for operators that return lazy frames).
     */
   private[graft] def frequentTriplesPairs(lineitem: DataFrame,

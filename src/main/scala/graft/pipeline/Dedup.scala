@@ -201,11 +201,8 @@ object Dedup {
     * (lang, n_chars) catches same-length edits with different openings;
     * the 20-char text prefix catches shared-prefix edits at any length).
     *
-    * Scale shape: the global rank is the distributed prefix-sum
-    * (repartitionByRange + per-partition row_number + a partition-count
-    * offset broadcast — NEVER a single-partition window; range
-    * boundaries only move partition sizes, not the total order, so the
-    * rank is exact); the neighborhood join is an equi-join on
+    * Scale shape: the global rank is [[Skew.prefixScan]] (never a
+    * single-partition window); the neighborhood join is an equi-join on
     * rank-div-window buckets (each row probes its own and the next
     * bucket), so candidates are ≤ (window−1)·N per pass REGARDLESS of
     * key skew and the verify cost tracks the duplicate density, not N².
@@ -217,28 +214,14 @@ object Dedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     require(window >= 2, "window >= 2")
-    import org.apache.spark.sql.expressions.Window
     val passes = Option(keys).getOrElse(Seq(
       Seq(col("lang"), col("n_chars")),
       Seq(substring(trim(lower(col(text))), 1, 20))))
-    val parts = docs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
     def rankBy(pass: Seq[Column]): DataFrame = {
       val keyed = docs.select(
         col(id) +: pass.zipWithIndex.map { case (c, i) => c.as(s"_k$i") }: _*)
       val sortKeys = pass.indices.map(i => col(s"_k$i")) :+ col(id)
-      Frames.materializeOver(keyed.repartitionByRange(parts, sortKeys: _*)
-        .withColumn("pid", spark_partition_id())
-        .withColumn("lrn", row_number().over(
-          Window.partitionBy("pid").orderBy(sortKeys: _*)))) { local =>
-        val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
-          .withColumn("off", coalesce(sum("n").over(
-            Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-          .select("pid", "off")
-        local.join(broadcast(offsets), "pid")
-          .select(col(id), (col("off") + col("lrn")).cast("long").as("rnk"))
-      }
+      Skew.prefixScan(keyed, Nil, sortKeys, lit(1L), "rnk")
     }
     def candidatesOf(r: DataFrame): DataFrame = {
       val a = r.select(col(id).as("ia"), col("rnk").as("ra"))

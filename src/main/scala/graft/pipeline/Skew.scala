@@ -45,49 +45,72 @@ object Skew {
       .groupBy(col(key))
       .agg(count(lit(1)).as(s"n_distinct_$valueCol"))
 
-  /** Per-group dense rank (`row_number() OVER (PARTITION BY group ORDER
-    * BY order)`) WITHOUT a per-group single-task sort — the skew killer:
-    * a plain grouped window hash-exchanges on the group key, so a group
-    * holding half the corpus (the dominant language, the hot tenant)
-    * sorts entirely inside ONE task. This is the distributed prefix-sum
-    * shape already proven by Dedup.sortedNeighborhood's rankBy and
-    * q_pack/q_shuffle: range-partition by (group, order) so every task
-    * gets a contiguous slice of the global order, rank locally within
-    * (task, group), then add per-(task, group) offsets computed from a
-    * tiny P+G-row count frame (broadcast). Output = input columns +
-    * `rankCol` (1-based per group), values identical to the grouped
-    * window's for a total `orderCols` (ties must be broken — include an
-    * id column, same contract as every rank surface here).
+  /** Distributed inclusive prefix scan — the one global rank / running
+    * sum in graft (Blelloch's scan-then-add-offsets, "Prefix Sums and
+    * Their Applications", 1990). Returns `df`'s columns plus `out`, the
+    * running sum of `value` within `group` in `order` (`lit(1L)` gives
+    * the 1-based rank, `row_number()`'s values), and `s"${out}_total"`,
+    * the group's whole sum (its row count, for a rank). `group = Nil`
+    * scans the whole frame. `order` must be total within a group (break
+    * ties with an id column): the running sum uses a ROWS frame.
     *
-    * Each window below partitions by the RANGE-partition id, so its
-    * exchange spreads a hot group across as many tasks as the range
-    * partitioner gave it — bounded by partition size, never group size.
+    * Never a data-sized single-task sort: a plain grouped window
+    * hash-exchanges on the group key, so a group holding half the corpus
+    * (or, with no group, the whole corpus) sorts inside ONE task.
+    * Instead range-partition by (group, order) so every task holds a
+    * contiguous slice of the global order, scan locally within (task,
+    * group), and add the carry-in of the preceding tasks from a
+    * broadcast offset table of one row per (task, group) present —
+    * ≤ P + G rows, so its window partitions are ≤ P rows (the whole
+    * P-row table for `group = Nil`), bounded by task count, never data.
+    * The group total comes from the same window spec, so it adds no
+    * exchange. Range boundaries move only partition sizes, never the
+    * order, so the result is exact at any partition count.
+    *
+    * The range sampler is not deterministic across recomputes, so both
+    * passes read one frozen partitioning: the range-partitioned scan is
+    * cached and the result materialized ([[Frames.materializeOver]]) —
+    * a caller's tail runs lazily over the stored scan. Group keys match
+    * null-safely, so a null group is scanned like any other.
     */
-  def groupedRank(df: DataFrame, groupCols: Seq[String],
-      orderCols: Seq[String], rankCol: String = "rnk"): DataFrame = {
+  def prefixScan(df: DataFrame, group: Seq[String], order: Seq[Column],
+      value: Column, out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(groupCols.nonEmpty && orderCols.nonEmpty)
+    require(order.nonEmpty, "prefixScan needs an order")
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    val sortKeys = (groupCols ++ orderCols).map(col)
-    Frames.materializeOver(df.repartitionByRange(parts, sortKeys: _*)
+    val keys = "_pid" +: group
+    Frames.materializeOver(df.repartitionByRange(parts, group.map(col) ++ order: _*)
       .withColumn("_pid", spark_partition_id())
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy(("_pid" +: groupCols).map(col): _*)
-          .orderBy(orderCols.map(col): _*)))) { local =>
-      // ≤ P + |groups-spanning-a-boundary| rows: each range partition holds
-      // a contiguous (group, order) slice, so a group appears in ≥2 rows
-      // here only when it crosses a partition boundary
-      val offsets = local.groupBy(("_pid" +: groupCols).map(col): _*)
-        .agg(count(lit(1)).as("_n"))
-        .withColumn("_off", coalesce(
-          sum("_n").over(Window.partitionBy(groupCols.map(col): _*)
-            .orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(("_pid" +: groupCols).map(col) :+ col("_off"): _*)
-      local.join(broadcast(offsets), "_pid" +: groupCols)
-        .withColumn(rankCol, (col("_off") + col("_lrn")).cast("long"))
-        .drop("_pid", "_lrn", "_off")
+      .withColumn("_v", value)
+      .withColumn("_lsum", sum("_v").over(Window.partitionBy(keys.map(col): _*)
+        .orderBy(order: _*).rowsBetween(Window.unboundedPreceding, Window.currentRow)))) { scanned =>
+      val w = Window.partitionBy(group.map(col): _*).orderBy("_pid")
+      val offsets = scanned.groupBy(keys.map(col): _*).agg(sum("_v").as("_n"))
+        .select(keys.map(k => col(k).as(s"_o$k")) ++ Seq(
+          coalesce(sum("_n").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0L)).as("_off"),
+          sum("_n").over(w.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)).as(s"${out}_total")): _*)
+      scanned.join(broadcast(offsets),
+          keys.map(k => col(k) <=> col(s"_o$k")).reduce(_ && _))
+        .withColumn(out, col("_off") + col("_lsum"))
+        .drop(Seq("_pid", "_v", "_lsum", "_off") ++ keys.map(k => s"_o$k"): _*)
     }
+  }
+
+  /** SQL `NTILE(n)` of a 1-based `rank` in a group of `size` rows, as
+    * BIGINT: the first `size % n` tiles hold one row more, Spark's and
+    * DuckDB's own distribution. Over a [[prefixScan]] rank and its
+    * `_total`, it equals `ntile(n) OVER (PARTITION BY group ORDER BY
+    * order)` without that window's per-group single-task sort.
+    */
+  def ntile(n: Int, rank: Column, size: Column): Column = {
+    def div(a: Column, b: Column): Column = call_function("div", a, b)
+    val base = div(size, lit(n.toLong))
+    val head = (size % n) * (base + 1) // rows in the larger first tiles
+    when(rank <= head, div(rank - 1, base + 1) + 1)
+      .otherwise(size % n + div(rank - head - 1, base) + 1)
+      .cast("long")
   }
 }

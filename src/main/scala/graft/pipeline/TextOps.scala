@@ -746,14 +746,9 @@ object TextOps {
     * budget). The deterministic global order makes shards reproducible
     * and SQL-replayable.
     *
-    * Scale shape — DISTRIBUTED prefix sum, not a global window: a window
-    * with a global ORDER BY and no PARTITION BY funnels the whole corpus
-    * through ONE partition. Instead: range-repartition on the sort key,
-    * per-partition windows (parallel), then a partition-count-sized
-    * offset table (32 rows, not 32M) carries the cross-partition
-    * carry-in. The frame is persisted so both passes see one frozen
-    * range partitioning (the range sampler is not deterministic across
-    * recomputes).
+    * Scale shape: the token prefix sum is [[Skew.prefixScan]], never a
+    * global window (which would funnel the whole corpus through ONE
+    * partition); the shard columns run lazily over its stored scan.
     */
   def packByBudget(docs: DataFrame, budgetTokens: Long,
       id: String = "doc_id", text: String = "text"): DataFrame =
@@ -769,35 +764,21 @@ object TextOps {
     * to count tokens afterwards).
     */
   def packByBudgetFromCounts(withTok: DataFrame, budgetTokens: Long,
-      id: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parts = withTok.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Frames.materializeOver(withTok
-      .repartitionByRange(parts, desc("n_tokens"), col(id))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("local_prefix", sum("n_tokens").over(
-        Window.partitionBy("pid").orderBy(desc("n_tokens"), col(id))))) { local =>
-      // P-row offset table: cumulative totals of the preceding partitions
-      val offsets = local.groupBy("pid").agg(sum("n_tokens").as("tot"))
-        .withColumn("offset", coalesce(sum("tot").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("pid", "offset")
-      local.join(broadcast(offsets), "pid")
-        .withColumn("_prefix",
-          col("offset") + col("local_prefix") - col("n_tokens"))
-        .withColumn("shard", expr(s"_prefix div ${budgetTokens}L"))
-        // where the doc's tokens start inside its shard's token stream —
-        // the writer-side cursor that makes the assignment directly
-        // consumable (docs are not split, so a shard's first doc is NOT
-        // at a budget multiple: subtract the shard's first prefix, a
-        // bounded per-shard window)
-        .withColumn("offset_in_shard",
-          col("_prefix") - min("_prefix").over(
-            org.apache.spark.sql.expressions.Window.partitionBy("shard")))
-        .select(col(id), col("n_tokens"), col("shard"), col("offset_in_shard"))
-        .orderBy(id)
-    }
-  }
+      id: String = "doc_id"): DataFrame =
+    Skew.prefixScan(withTok, Nil, Seq(desc("n_tokens"), col(id)),
+        col("n_tokens"), "_incl")
+      .withColumn("_prefix", col("_incl") - col("n_tokens"))
+      .withColumn("shard", expr(s"_prefix div ${budgetTokens}L"))
+      // where the doc's tokens start inside its shard's token stream —
+      // the writer-side cursor that makes the assignment directly
+      // consumable (docs are not split, so a shard's first doc is NOT
+      // at a budget multiple: subtract the shard's first prefix, a
+      // bounded per-shard window)
+      .withColumn("offset_in_shard",
+        col("_prefix") - min("_prefix").over(
+          org.apache.spark.sql.expressions.Window.partitionBy("shard")))
+      .select(col(id), col("n_tokens"), col("shard"), col("offset_in_shard"))
+      .orderBy(id)
 
   /** Materializes the packed shards [[packByBudget]] assigns: one row
     * per shard with the member docs' text concatenated in fill order
@@ -1052,36 +1033,17 @@ object TextOps {
     * or rerun produces the identical order, and a different seed is a
     * fresh permutation (epoch reshuffle = new seed).
     *
-    * Scale shape — the same distributed prefix sum as [[packByBudget]],
-    * counting rows instead of tokens: a global `row_number()` window
-    * would funnel the corpus through ONE partition; instead the frame
-    * range-repartitions on the hash key (so partition p holds a
-    * contiguous hash range), each partition numbers its rows in
-    * parallel, and a P-row broadcast offset table adds the carry-in.
-    * The frame is persisted so both passes see one frozen range
-    * partitioning (the range sampler is not deterministic across
-    * recomputes).
+    * Scale shape: the position is a [[Skew.prefixScan]] row count in
+    * (hash, id) order, never a global `row_number()` window (which would
+    * funnel the corpus through ONE partition).
     */
   def globalShuffle(docs: DataFrame, seed: String = "",
       id: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val keyed = docs.select(col(id),
       md5(concat(lit(seed), col(id).cast(StringType))).as("hkey"))
-    Frames.materializeOver(keyed
-      .repartitionByRange(parts, col("hkey"), col(id))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("local_rn", row_number().over(
-        Window.partitionBy("pid").orderBy(col("hkey"), col(id))))) { local =>
-      val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
-        .withColumn("offset", coalesce(sum("n").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("pid", "offset")
-      local.join(broadcast(offsets), "pid")
-        .select(col(id),
-          (col("offset") + col("local_rn") - 1L).cast(LongType).as("pos"))
-        .orderBy(id)
-    }
+    Skew.prefixScan(keyed, Nil, Seq(col("hkey"), col(id)), lit(1L), "rnk")
+      .select(col(id), (col("rnk") - 1L).as("pos"))
+      .orderBy(id)
   }
 
   // ---- cross-document duplicate n-gram fraction (q_crossdoc) ----
@@ -1335,13 +1297,13 @@ object TextOps {
     * the over-represented mega-domain this cap exists to cut can be a
     * double-digit percent of a crawl, so a plain per-source window
     * would funnel it through one reducer. Instead the exact rank is a
-    * distributed prefix sum (same pattern as [[packByBudget]] /
-    * [[globalShuffle]]): salt each source into 256 hash-range buckets
-    * by the md5's leading byte, `row_number` within (source, bucket) —
-    * the widest group is 1/256th of the worst domain — then add the
-    * per-(source,bucket) running offsets from a tiny aggregate
-    * (≤ 256 rows per DISTINCT source, broadcastable at any corpus
-    * size). Ordering by (bucket, hash) equals ordering by hash because
+    * distributed prefix sum ([[Skew.prefixScan]]'s shape, the hash
+    * prefix standing in for its range partition): salt each source into
+    * 256 hash-range buckets by the md5's leading byte, `row_number` within
+    * (source, bucket) — the widest group is 1/256th of the worst domain —
+    * then add the per-(source,bucket) running offsets from a tiny
+    * aggregate (≤ 256 rows per DISTINCT source, broadcastable at any
+    * corpus size). Ordering by (bucket, hash) equals ordering by hash because
     * the bucket IS the hash prefix, so the ranks — and the kept set —
     * are bit-identical to the single-window definition. Emits the keep
     * decision (not just survivors) so pipelines can audit what the cap
@@ -1566,23 +1528,13 @@ object TextOps {
       .withColumn("ppl", round(exp(-col("avg_logp")), 3))
 
     // CCNet head/middle/tail: perplexity tertiles per language — ranked
-    // via Skew.groupedRank, NOT a per-language ntile window (the q_ntile
+    // by Skew.prefixScan, NOT a per-language ntile window (the q_ntile
     // rule, caught by the r18 window audit: a grouped window puts the
-    // DOMINANT language's whole corpus slice in one task; range
-    // partition + offset rank spreads it). Tile from exact NTILE
-    // arithmetic on (rank, group size) — first gn%3 tiles one row
-    // larger, Spark ntile's own distribution — so values are identical
-    // to the old window (spec-pinned) and the oracle is unchanged.
-    val ranked = graft.pipeline.Skew.groupedRank(scored,
-      groupCols = Seq("__lang"), orderCols = Seq("ppl", id))
-    val sizes = ranked.groupBy("__lang").agg(count(lit(1)).as("_gn"))
-    ranked.join(broadcast(sizes), "__lang")
-      .withColumn("__t", expr(
-        """CAST(CASE
-             WHEN rnk <= (_gn % 3) * (_gn DIV 3 + 1)
-             THEN (rnk - 1) DIV (_gn DIV 3 + 1) + 1
-             ELSE (_gn % 3) + (rnk - (_gn % 3) * (_gn DIV 3 + 1) - 1) DIV (_gn DIV 3) + 1
-           END AS INT)"""))
+    // DOMINANT language's whole corpus slice in one task). Skew.ntile's
+    // exact NTILE arithmetic gives the old window's values (spec-pinned),
+    // so the oracle is unchanged.
+    Skew.prefixScan(scored, Seq("__lang"), Seq(col("ppl"), col(id)), lit(1L), "rnk")
+      .withColumn("__t", Skew.ntile(3, col("rnk"), col("rnk_total")))
       .select(col(id), col("__lang").as(lang), col("n_bigrams"),
         col("avg_logp"), col("ppl"),
         when(col("__t") === 1, "head").when(col("__t") === 2, "middle")
@@ -1682,13 +1634,11 @@ object TextOps {
     * broadcast map with a decimal `aggregate` HOF, so token-level data
     * NEVER shuffles and no doc-keyed exchange exists at all. Selection
     * count m = ceil(selectPct% · N_raw) derives from the data (corpus
-    * auto-sizing rule) via one scalar count; because m is data-derived
-    * (billions of rows at 100 TB), selection is the DISTRIBUTED
-    * prefix-sum rank (r21): range-partition the scored frame by
-    * (avg_w desc, doc_id), per-partition row_number, broadcast the
-    * P-row per-partition offsets, filter global rank ≤ m (a Long) —
-    * never TakeOrderedAndProject (which merges per-partition top-m
-    * heaps ON THE DRIVER) and never a partitionless rank window.
+    * auto-sizing rule); because m is data-derived (billions of rows at
+    * 100 TB), selection is the [[Skew.prefixScan]] rank in (avg_w desc,
+    * doc_id) order, whose `_total` is N_raw, filtered to rank ≤ m (a
+    * Long) — never TakeOrderedAndProject (which merges per-partition
+    * top-m heaps ON THE DRIVER) and never a partitionless rank window.
     *
     * Determinism: each per-token log-ratio is ln of a fixed IEEE dag
     * over exact integer counts, rounded to 7 decimals and summed as
@@ -1752,40 +1702,16 @@ object TextOps {
     // TakeOrderedAndProject whose per-partition heaps each held 20% of
     // the corpus and whose result merged ON THE DRIVER, followed by a
     // partitionless rank window in ONE task (and m.toInt wrapped past
-    // ~10.7B raw docs). Replace with the distributed prefix-sum rank
-    // the repo already ships (the packByBudgetFromCounts /
-    // Skew.groupedRank shape): range-partition by the global order,
-    // row_number per partition, add broadcast per-partition offsets,
-    // filter rank ≤ m — no driver merge, no single-task window, output
-    // stays distributed. N_raw (and so m, exact integer ceil-division,
-    // carried as a LONG) folds out of the P-row offset table itself —
-    // no separate corpus-count job.
-    import org.apache.spark.sql.expressions.Window
-    val parts = docs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    Frames.materializeOver(scored.select(col(id), col("n_toks"), col("avg_w"))
-      .repartitionByRange(parts, col("avg_w").desc, col(id).asc)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy("_pid").orderBy(col("avg_w").desc, col(id).asc)))) { local =>
-      // P-row offset table (bounded by the partition count, the
-      // packByBudgetFromCounts discipline) — both partitionless windows
-      // on this path run over these P rows
-      val offsets = local.groupBy("_pid").agg(count(lit(1)).as("_n"))
-        .withColumn("_off", coalesce(sum("_n").over(
-          Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .withColumn("_nt", sum("_n").over(Window.partitionBy()
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("_m",
-          expr(s"CAST((_nt * $selectPct + 99) DIV 100 AS BIGINT)"))
-        .select("_pid", "_off", "_m")
-      local.join(broadcast(offsets), "_pid")
-        .withColumn("rank", (col("_off") + col("_lrn")).cast(LongType))
-        .filter(col("rank") <= col("_m"))
-        .select(col(id), col("n_toks"), col("avg_w"), col("rank"))
-        .orderBy("rank")
-    }
+    // ~10.7B raw docs). The rank is Skew.prefixScan's instead, filtered
+    // to rank ≤ m — no driver merge, no single-task window, output stays
+    // distributed. N_raw is the scan's `_total` (so m, exact integer
+    // ceil-division, is a LONG) — no separate corpus-count job.
+    Skew.prefixScan(scored.select(col(id), col("n_toks"), col("avg_w")), Nil,
+        Seq(col("avg_w").desc, col(id).asc), lit(1L), "rank")
+      .filter(col("rank") <=
+        expr(s"CAST((rank_total * $selectPct + 99) DIV 100 AS BIGINT)"))
+      .select(col(id), col("n_toks"), col("avg_w"), col("rank"))
+      .orderBy("rank")
   }
 
   // ---- deterministic BPE vocabulary + subword token counting ----

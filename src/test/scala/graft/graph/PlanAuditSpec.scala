@@ -365,8 +365,6 @@ class PlanAuditSpec extends SparkSpec {
       "minePairs per-a rank: input sides are require()-guarded <= 100k rows, so a partition is <= 100k",
     "Ann.scala:(\"b_id\")" ->
       "minePairs per-b rank: same guard",
-    "Dedup.scala:(\"pid\")" ->
-      "sorted-neighborhood: per-Spark-partition rank after range partitioning, bounded by partition size",
     "Dedup.scala:(\"rep_id\")" ->
       "semDedup keeper pick: partition = one cluster; auto-k targets constant expected occupancy (cluster count grows with corpus)",
     "Sketches.scala:(\"grp\")" ->
@@ -379,20 +377,12 @@ class PlanAuditSpec extends SparkSpec {
       "kmvMins local k-min: per-(set, Spark partition), bounded by partition size",
     "Sketches.scala:(\"s\")" ->
       "kmvMins final k-min AFTER the local prune: <= k*P rows per set",
-    "Skew.scala:((\"_pid\"+:groupCols).map(col):_*)" ->
-      "groupedRank local row_number: per-(task, group), bounded by partition size",
-    "Skew.scala:(groupCols.map(col):_*)" ->
-      "groupedRank offset sum: partition = P partial-count rows per group (task count, not data)",
-    "TextOps.scala:(\"pid\")" ->
-      "token packing: per-Spark-partition greedy fill, bounded by partition size",
-    "TextOps.scala:(\"_pid\")" ->
-      "dsir selection local rank: per-Spark-partition row_number after range partitioning, bounded by partition size (the r20 verdict #1 fix)",
-    "TextOps.scala:(\"pid\")" ->
-      "hashSampleN local rank: per-partition, bounded by partition size",
+    "Skew.scala:(keys.map(col):_*)" ->
+      "prefixScan local running sum: per-(range partition, group), bounded by partition size",
+    "Skew.scala:(group.map(col):_*)" ->
+      "prefixScan offsets and group total: partition = one group's (task, group) rows, <= P; with group = Nil, the whole P-row offset table (task count, not data)",
     "TextOps.scala:(\"shard\")" ->
       "pack shards: docs per shard bounded by the token budget / mean doc length",
-    "TextOps.scala:()" ->
-      "dsir selection-size fold: whole-frame sum over the P-row offset table (task count, not docs)",
     "TextOps.scala:()" ->
       "balanceMixture global min: frame is |strata| rows (a grouped count), never data-sized",
     "TextOps.scala:()" ->
@@ -490,20 +480,12 @@ class PlanAuditSpec extends SparkSpec {
   // ------------------------------------------------------------------
 
   private val auditedOrderOnlyWindows: Seq[(String, String)] = Seq(
-    "Dedup.scala:(\"pid\")" ->
-      "sortedNeighborhood offset carry-in: P-row per-partition counts (task count, not docs)",
     "Sketches.scala:(\"h\")" ->
       "kmv union-theta rank: input is the distinct union of two k-min sketches, <= 2k rows",
-    "TextOps.scala:(\"pid\")" ->
-      "packByBudgetFromCounts offset carry-in: P-row per-partition totals (task count, not docs)",
-    "TextOps.scala:(\"pid\")" ->
-      "globalShuffle offset carry-in: same P-row shape",
     "TextOps.scala:(col(\"hkey\"),col(id))" ->
       "hashSampleN pick_rank: runs AFTER the constant-n limit cut — <= n rows ever enter",
     "TextOps.scala:(col(\"score\").desc,col(id).asc)" ->
       "bm25 rank: runs AFTER the constant-topK TakeOrderedAndProject cut — <= topK rows ever enter",
-    "TextOps.scala:(\"_pid\")" ->
-      "dsir offset carry-in: P-row per-partition counts (the r20 verdict #1 fix — the corpus-sized rank window this table exists to prevent)",
     "TextOps.scala:(col(\"priority\").desc,col(id))" ->
       "weighted-sample rank: runs after the constant-(k+1) limit cut",
     "EventStreams.scala:(col(\"priority\").desc,col(\"doc_id\"))" ->
@@ -555,6 +537,38 @@ class PlanAuditSpec extends SparkSpec {
         s"task; add them to auditedOrderOnlyWindows WITH the bound: $unaudited")
     assert(stale.isEmpty,
       s"audited partitionless window site(s) no longer exist — drop them: $stale")
+  }
+
+  // ------------------------------------------------------------------
+  // One distributed prefix scan: a global rank or running sum goes
+  // through Skew.prefixScan, never a hand-copied range-partition +
+  // offset-table site. A range partition is that construction's tell,
+  // so each file may hold only the ones listed here (a multiset).
+  // ------------------------------------------------------------------
+
+  private val rangePartitionSites = Seq(
+    "graft/pipeline/Skew.scala", // prefixScan
+    "graft/operators/Olap.scala") // skyline's per-partition prune, not a scan
+
+  test("scan audit: repartitionByRange appears only in Skew.prefixScan and the skyline prune") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"audit must run from the repo root, missing $root")
+    val found = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+      .flatMap { p =>
+        val stripped = graft.AuditLex.stripComments(
+          new String(Files.readAllBytes(p), "UTF-8"))
+        "repartitionByRange".r.findAllMatchIn(stripped)
+          .map(_ => root.relativize(p).toString)
+      }
+    val extra = graft.AuditLex.diffMultiset(found, rangePartitionSites)
+    val missing = graft.AuditLex.diffMultiset(rangePartitionSites, found)
+    assert(extra.isEmpty,
+      s"range partition outside Skew.prefixScan — rank or running-sum through " +
+        s"Skew.prefixScan instead of a hand-rolled offset table: $extra")
+    assert(missing.isEmpty, s"audited range-partition site(s) moved — update the list: $missing")
   }
 
 }

@@ -865,7 +865,7 @@ class PipelineSpec extends SparkSpec {
   test("perplexity tertiles: groupedRank arithmetic equals the ntile(3) window on a skewed corpus") {
     import spark.implicits._
     // 9:1 language skew — the shape where a grouped ntile window would
-    // put the dominant language in one task; the groupedRank + exact
+    // put the dominant language in one task; the prefixScan rank + exact
     // NTILE arithmetic must produce the identical bucketing
     val docs = (1L to 200L).map { i =>
       val lang = if (i <= 180) "en" else "fr"
@@ -882,7 +882,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getInt(3) match {
         case 1 => "head"; case 2 => "middle"; case _ => "tail"
       })).toMap
-    assert(out == ref, "groupedRank tertiles diverge from the ntile window")
+    assert(out == ref, "prefixScan tertiles diverge from the ntile window")
     assert(out.values.toSet == Set("head", "middle", "tail"))
   }
 
