@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.Frames.{Rounds, cache, materialize, materializeOver, release, uncache}
+import graft.util.Frames.{Rounds, cache, loop, materialize, materializeOver, release, uncache}
 
 /** Graph analytics as iterative DataFrame algorithms.
   *
@@ -11,64 +11,22 @@ import graft.util.Frames.{Rounds, cache, materialize, materializeOver, release, 
   * translation, /root/reference/src/translator.ts:3322-3374); at Spark
   * scale they are bounded iterative join loops: every iteration is one
   * shuffle on the join key, frontiers/labels stay DataFrames (never
-  * collected), and iteration results are stored through
-  * [[graft.util.Frames]] (checkpointed on each loop's cadence, cached in
-  * between) so lineage (and thus plan size) stays O(1) per iteration
+  * collected), and lineage (and thus plan size) stays O(1) per iteration
   * instead of O(iterations).
+  *
+  * Every loop runs in one superstep scope: [[graft.util.Frames.loop]]
+  * stores and counts the loop input, runs the loop on a session clamped
+  * to the input size and frees the input; each loop-carried frame is a
+  * [[graft.util.Frames.Rounds]], which checkpoints on the loop's
+  * cadence, caches in between and frees each superseded frame in the
+  * round the loop's release depth, scratch and retained history say.
+  * Loops never free frames by hand (a source audit keeps it so), except
+  * [[stronglyConnectedComponents]]'s rounds.
   *
   * Edge-frame convention: (`src`, `dst`) long columns, as produced by
   * [[graft.graph.PropertyGraph]] edge frames.
   */
 object Algos {
-
-  /** Runs `body` with spark.sql.shuffle.partitions sized to an
-    * iterative loop's data instead of the session default, on an
-    * isolated session clone. r14 lesson (measured on SCC): 32 tasks
-    * over KB-sized loop frames is pure task-launch overhead, and that
-    * per-round fixed cost multiplies by the round count — locally as
-    * scheduler latency, on a cluster as per-job dispatch + straggler
-    * waits. The clamp never RAISES partitions above the session
-    * default, so cluster deployments keep their parallelism for
-    * genuinely large loops; every action of the loop must happen inside
-    * `body` (the algos here materialize per round, so they do).
-    *
-    * The clamp lives on a CLONED session (isolated SQLConf; shared
-    * SparkContext, cache and registered functions), never on the
-    * caller's: `sc.in(df)` rebinds a loop input's plan to the clone so
-    * every loop shuffle runs clamped, `sc.out(df)` hands the result
-    * back under the caller's conf. A concurrent unrelated query on the
-    * caller's session therefore NEVER sees the clamp (the r15 ConfScope
-    * caveat, now solved rather than documented — ConfScope's depth
-    * tracking is obsolete because nothing mutates shared state).
-    *
-    * Caveat (pooled clones): the clamped clone snapshots the parent's
-    * OTHER confs at its creation for a given clamp value; parent conf
-    * changes made later do NOT propagate into an already-pooled clone.
-    */
-  private[algos] final class LoopScope(parent: SparkSession, loop: SparkSession) {
-    /** Rebind a loop input to the clamped clone session (plan-only, free). */
-    def in(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShims.retarget(df, loop)
-    /** Hand a loop result back to the caller's session and conf. */
-    def out(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.GraftShims.retarget(df, parent)
-  }
-  private[algos] def withLoopParts[T](spark: SparkSession, rowCount: Long)(
-      body: LoopScope => T): T = {
-    val orig = spark.conf.get("spark.sql.shuffle.partitions")
-    // ~128k id-pair rows per task: small enough that per-round real work
-    // still spreads across cores (measured at sf0.1: 1.2M-edge pagerank
-    // regressed at 5 partitions), large enough that KB-frame rounds
-    // don't pay 32 task launches; never RAISES above the session default.
-    // The clamped session comes from the per-(parent, value) POOL — a
-    // fresh clone per call measured 2x on BFS loops (per-session
-    // warm-up); pooled clones are conf-immutable, so sharing is safe.
-    val clamp =
-      math.max(4L, math.min(orig.toLong, rowCount / 131072L + 1L)).toString
-    val loop = org.apache.spark.sql.graftshim.GraftShims
-      .clampedSession(spark, "spark.sql.shuffle.partitions", clamp)
-    body(new LoopScope(spark, loop))
-  }
 
   /** Single-source BFS shortest hop-distances over a directed edge frame.
     * Returns (id, dist) for every node reachable within maxDepth
@@ -80,36 +38,30 @@ object Algos {
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // materialized ONCE: the sizing count and every level join read the
-    // same cached projection — the un-cached form paid one extra full
-    // edge scan for the count plus a parquet re-scan per level (r14
-    // advice)
-    val e0 = materialize(edges.select(col(src).as("es"), col(dst).as("ed")))
-    val out = withLoopParts(spark, e0.count()) { sc =>
-      val e = sc.in(e0)
-      // r21: lazy visited union over checkpointed level frames — see
-      // multiSourceBfs (one materialize per level instead of two, no
-      // per-level rewrite of the whole visited set)
-      var fronts = Vector(sc.in(materialize(Seq((source, 0)).toDF("id", "dist"))))
-      var visited = fronts.head
-      var frontier = fronts.head
+    // the loop input is stored ONCE: the sizing count and every level
+    // join read the same checkpointed projection — the un-stored form
+    // paid one extra full edge scan for the count plus a parquet re-scan
+    // per level (r14 advice)
+    loop(edges.select(col(src).as("es"), col(dst).as("ed"))) { (sc, e) =>
+      // r21: lazy visited union over the retained checkpointed level
+      // frames — see multiSourceBfs (one materialize per level instead of
+      // two, no per-level rewrite of the whole visited set)
+      val fronts = new Rounds(sc.in(materialize(Seq((source, 0)).toDF("id", "dist"))),
+        retain = true)
+      var visited = fronts.cur
       var depth = 0
-      while (depth < maxDepth && !frontier.isEmpty) {
+      while (depth < maxDepth && !fronts.cur.isEmpty) {
         depth += 1
-        val next = frontier.join(e, col("id") === col("es"))
+        val next = fronts.cur.join(e, col("id") === col("es"))
           .select(col("ed").as("id"), lit(depth).as("dist"))
           .distinct()
           .join(visited.select("id"), Seq("id"), "left_anti")
-        frontier = materialize(next)
-        fronts = fronts :+ frontier
-        visited = visited.unionByName(frontier)
+        visited = visited.unionByName(fronts.step(depth, next))
       }
       val res = materialize(visited)
-      release(fronts: _*)
-      sc.out(res)
+      fronts.close()
+      res
     }
-    release(e0)
-    out
   }
 
   /** Multi-source BFS hop histogram: per seed, how many nodes are first
@@ -238,21 +190,21 @@ object Algos {
     val c = 60 - p + 1
     val spark = edges.sparkSession
     import spark.implicits._
-    val sym0 = symmetric(edges, src, dst)
-    val out = withLoopParts(spark, sym0.count()) { sc =>
-    val sym = sc.in(sym0)
+    val out = loop(symmetric(edges, src, dst)) { (_, sym) =>
     val nodes = sym.select(col("u").as("id")).distinct()
     val cells = graft.pipeline.Sketches.hllCells(
       nodes.select(col("id"), col("id").as("val")), "val", "id", p)
     // each node contributes exactly one cell (its own hash), so its
     // initial packed vector is a zero array with that one register set
-    var regs = materialize(cells
+    // regs of round t-1 feeds only round t's scatter; released two rounds
+    // back (snapshots are their own checkpoints)
+    val regs = new Rounds(materialize(cells
       .select(col("grp").cast(LongType).as("id"),
         col("bucket").cast(LongType), col("rho"))
       .as[(Long, Long, Int)]
       .map { case (id, b, r) =>
         val a = new Array[Byte](m); a(b.toInt) = r.toByte; (id, a) }
-      .toDF("id", "regs"))
+      .toDF("id", "regs")), back = 2)
     def combine(df: DataFrame): DataFrame =
       df.as[(Long, Array[Byte])]
         .groupByKey(_._1).mapValues(_._2)
@@ -269,26 +221,19 @@ object Algos {
         }
         (id, t.toLong, np, sr, zp + (m.toLong - np) * (1L << c))
       }.toDF("id", "t", "n_present", "sum_reg", "z_num")
-    var acc = Vector(materialize(snap(0, regs)))
-    var older: DataFrame = null
+    val snaps = new Rounds(materialize(snap(0, regs.cur)), retain = true)
     for (t <- 1 to rounds) {
       val scattered = sym
-        .join(regs.withColumnRenamed("id", "v"), "v")
+        .join(regs.cur.withColumnRenamed("id", "v"), "v")
         .select(col("u").as("id"), col("regs"))
-      val next = materialize(combine(scattered.unionByName(regs)))
-      acc = acc :+ materialize(snap(t, next))
-      // regs of round t-1 feeds only round t's scatter — releasable
-      // once round t materialized (snapshots are their own checkpoints)
-      if (older != null) release(older)
-      older = regs
-      regs = next
+      regs.step(t, combine(scattered.unionByName(regs.cur)))
+      snaps.step(t, snap(t, regs.cur))
     }
-    release(older, regs)
-    val snaps = materialize(acc.reduce(_ unionByName _))
-    release(acc: _*)
-    sc.out(snaps)
+    regs.close()
+    val all = materialize(snaps.history.reduce(_ unionByName _))
+    snaps.close()
+    all
     }
-    release(sym0)
     // raw-HLL estimate, exactly the hllEstimate constant and rounding
     val k = 0.7213 / (1.0 + 1.079 / m.toDouble) * m.toDouble * m.toDouble *
       java.lang.Math.scalb(1.0, c)
@@ -391,9 +336,7 @@ object Algos {
       maxDepth: Int, src: String, dst: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = materialize(edges.select(col(src).as("es"), col(dst).as("ed")))
-    val visitedOut = withLoopParts(spark, e0.count()) { sc =>
-      val e = sc.in(e0)
+    loop(edges.select(col(src).as("es"), col(dst).as("ed"))) { (sc, e) =>
       // NOTE (r21): a lazy visited-union over the checkpointed level
       // frames (the betweennessSampled-forward shape) was tried here
       // and measured WORSE on the deep-BFS consumer (q_diameter 1.3-1.8×
@@ -401,26 +344,23 @@ object Algos {
       // separate front checkpoints, and the O(depth²·P) task launches
       // outgrow the saved union write-outs. The incremental
       // materialized union stays.
-      var visited = sc.in(materialize(
-        seeds.map(s => (s, s, 0)).toDF("seed", "id", "dist")))
-      var frontier = visited
+      // Each level's frontier is read by the next level only: scratch.
+      val visited = new Rounds(sc.in(materialize(
+        seeds.map(s => (s, s, 0)).toDF("seed", "id", "dist"))))
+      var frontier = visited.cur
       var depth = 0
       while (depth < maxDepth && !frontier.isEmpty) {
         depth += 1
-        val (pv, pf) = (visited, frontier)
         val next = frontier.join(e, col("id") === col("es"))
           .select(col("seed"), col("ed").as("id"), lit(depth).as("dist"))
           .distinct()
-          .join(visited.select("seed", "id"), Seq("seed", "id"), "left_anti")
+          .join(visited.cur.select("seed", "id"), Seq("seed", "id"), "left_anti")
         frontier = materialize(next)
-        visited = materialize(pv.unionByName(frontier))
-        if (!(pf eq pv)) release(pf)
-        release(pv)
+        visited.step(depth, visited.cur.unionByName(frontier))
+        visited.scratch(frontier)
       }
-      sc.out(visited)
+      visited.done()
     }
-    release(e0)
-    visitedOut
   }
 
   /** Sampled harmonic centrality (Eppstein–Wang '04 estimator shape):
@@ -480,12 +420,11 @@ object Algos {
     require(maxDepth >= 1 && seeds.nonEmpty)
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = materialize(edges.select(col(src).as("es"), col(dst).as("ed")))
-    val out = withLoopParts(spark, e0.count()) { sc =>
-    val e = sc.in(e0)
-    // forward: per-level first-reach frames with path counts σ
-    var levels = Vector(sc.in(materialize(
-      seeds.map(s => (s, s, 1L)).toDF("seed", "id", "sigma"))))
+    loop(edges.select(col(src).as("es"), col(dst).as("ed"))) { (sc, e) =>
+    // forward: per-level first-reach frames with path counts σ, retained
+    // through the backward pass
+    val levels = new Rounds(sc.in(materialize(
+      seeds.map(s => (s, s, 1L)).toDF("seed", "id", "sigma"))), retain = true)
     // r21: the visited set is a LAZY union view over the checkpointed
     // level frames (which stay live through the backward pass anyway) —
     // the old loop re-materialized the whole growing union every level
@@ -493,38 +432,35 @@ object Algos {
     // r22 settle-or-revert: the materialized-union revert A/B'd 1.10× /
     // 0.90× (second round control-confounded) — no consistent win
     // either way; the lazy union stays (it structurally writes less).
-    var visited = levels.head
+    var visited = levels.cur
     var depth = 0
-    var frontier = visited
-    while (depth < maxDepth && !frontier.isEmpty) {
+    while (depth < maxDepth && !levels.cur.isEmpty) {
       depth += 1
-      val next = frontier.join(e, col("id") === col("es"))
+      val next = levels.cur.join(e, col("id") === col("es"))
         .groupBy(col("seed"), col("ed").as("nid"))
         .agg(sum(col("sigma")).cast(LongType).as("sigma"))
         .join(visited.select(col("seed"), col("id").as("nid")),
           Seq("seed", "nid"), "left_anti")
         .select(col("seed"), col("nid").as("id"), col("sigma"))
-      frontier = materialize(next)
-      levels = levels :+ frontier
-      visited = visited.unionByName(frontier)
+      visited = visited.unionByName(levels.step(depth, next))
     }
     // backward: δ per level from deepest-1 up; level frames stay live
-    var deltaNext: DataFrame = null
-    var deltaLevels = Vector.empty[DataFrame]
-    val maxL = levels.length - 1
+    val lv = levels.history
+    val deltas = new Rounds(null, retain = true)
+    val maxL = lv.length - 1
     for (d <- (maxL - 1) to 1 by -1) {
-      val ws0 = levels(d + 1).select(col("seed").as("wseed"),
+      val ws0 = lv(d + 1).select(col("seed").as("wseed"),
         col("id").as("wid"), col("sigma").as("wsigma"))
-      val ws = if (deltaNext eq null) {
+      val ws = if (deltas.cur eq null) {
         ws0.withColumn("wdelta", lit(0L))
       } else {
-        ws0.join(deltaNext.select(col("seed").as("wseed"),
+        ws0.join(deltas.cur.select(col("seed").as("wseed"),
             col("id").as("wid"), col("delta").as("wd0")),
             Seq("wseed", "wid"), "left")
           .withColumn("wdelta", coalesce(col("wd0"), lit(0L)))
           .drop("wd0")
       }
-      val terms = levels(d)
+      val terms = lv(d)
         .join(e, col("id") === col("es"))
         .join(ws, col("seed") === col("wseed") && col("ed") === col("wid"))
         .select(col("seed"), col("id"),
@@ -532,41 +468,26 @@ object Algos {
               (lit(1.0e7) + col("wdelta").cast(DoubleType)) /
               col("wsigma").cast(DoubleType) + lit(0.5))
             .cast(LongType).as("term"))
-      val deltaLevel = materialize(
-        terms.groupBy("seed", "id")
-          .agg(sum(col("term")).cast(LongType).as("delta")))
-      deltaLevels = deltaLevels :+ deltaLevel
-      deltaNext = deltaLevel
+      deltas.step(d, terms.groupBy("seed", "id")
+        .agg(sum(col("term")).cast(LongType).as("delta")))
     }
     val result =
-      if (deltaLevels.isEmpty)
+      if (deltas.history.isEmpty)
         Seq.empty[(Long, Long, Long, Double)]
           .toDF("id", "n_pairs", "betweenness_e7", "betweenness")
-      else materialize(deltaLevels.reduce(_ unionByName _)
+      else materialize(deltas.history.reduce(_ unionByName _)
         .groupBy("id")
         .agg(count(lit(1)).cast(LongType).as("n_pairs"),
           sum(col("delta")).cast(LongType).as("betweenness_e7"))
         .withColumn("betweenness",
           col("betweenness_e7").cast(DoubleType) / lit(1.0e7))
         .orderBy("id"))
-    release(levels: _*)
-    release(deltaLevels: _*)
-    sc.out(result)
+    levels.close()
+    deltas.close()
+    result
     }
-    release(e0)
-    out
   }
 
-  /** Triangle count over the undirected graph given by a canonically
-    * oriented edge frame (src < dst, each undirected edge once).
-    *
-    * Uses degree-ordered orientation (the classic O(m^1.5) wedge bound,
-    * e.g. Schank/Wagner '05): re-orient each edge from its lower-(degree,
-    * id) endpoint to the higher, so wedges are only enumerated at their
-    * low-degree apex — on skewed graphs this is the difference between
-    * m^1.5 and sum(deg^2). The count is orientation-invariant, so the
-    * id-ordered SQL oracle still matches. One row: (triangles).
-    */
   /** Closed wedges of a degree-ORIENTED edge frame: one (a, b, c) row
     * per triangle (b < c), where `closing` is the canonical (b, c)
     * edge set the wedges must close against. Only a few % of wedge
@@ -597,6 +518,16 @@ object Algos {
       .join(closing, Seq("b", "c"), "left_semi")
   }
 
+  /** Triangle count over the undirected graph given by a canonically
+    * oriented edge frame (src < dst, each undirected edge once).
+    *
+    * Uses degree-ordered orientation (the classic O(m^1.5) wedge bound,
+    * e.g. Schank/Wagner '05): re-orient each edge from its lower-(degree,
+    * id) endpoint to the higher, so wedges are only enumerated at their
+    * low-degree apex — on skewed graphs this is the difference between
+    * m^1.5 and sum(deg^2). The count is orientation-invariant, so the
+    * id-ordered SQL oracle still matches. One row: (triangles).
+    */
   def triangleCount(edges: DataFrame, src: String = "_src", dst: String = "_dst"): DataFrame = {
     val e0 = edges.select(col(src).as("u"), col(dst).as("v")).distinct()
     val deg = e0.select(col("u").as("n")).unionByName(e0.select(col("v").as("n")))
@@ -728,31 +659,32 @@ object Algos {
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
       .filter(col(src) =!= col(dst))
-    // canonical small-end-first pairs; `e` is treated as undirected
-    val e00 = materialize(
-      fwd.select(least(col("u"), col("v")).as("u"),
-                 greatest(col("u"), col("v")).as("v")).distinct())
     def checksum(d: DataFrame): (Long, Long, Long, Long) = {
       val r = d.agg(
         count(lit(1)), coalesce(sum("u"), lit(0L)), coalesce(sum("v"), lit(0L)),
         coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L))).first()
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
-    var prev = checksum(e00)
-    val eFinal = withLoopParts(edges.sparkSession, prev._1) { sc =>
-    var e = sc.in(e00)
+    // canonical small-end-first pairs; `e` is treated as undirected. The
+    // first checksum's count sizes the loop.
+    var prev = (0L, 0L, 0L, 0L)
+    val eFinal = loop(fwd.select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v")).distinct(),
+        rows = d => { prev = checksum(d); prev._1 }) { (_, e00) =>
+    val e = new Rounds(e00)
     var iter = 0
     val maxIter = 50 // star contraction: log2(n) rounds; 50 covers n≈2^50
     var converged = false
     while (!converged && iter < maxIter) {
       iter += 1
       // large-star over the symmetrized neighborhood
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      val sym = e.cur.unionByName(e.cur.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy("u").agg(least(min("v"), first("u")).as("m"))
       val ls = sym.join(mins, "u").filter(col("v") > col("u"))
         .select(col("m").as("u"), col("v")).distinct()
-      // one derivation from the checkpointed `e` — cache, don't checkpoint
-      val lsm = cache(ls)
+      // one derivation from the checkpointed `e` — cache, don't
+      // checkpoint; dead once the round's star graph is stored
+      val lsm = e.scratch(cache(ls))
       // small-star over smaller-or-equal neighborhoods (edges already
       // oriented big←small after canonicalization: u = min endpoint)
       val byBig = lsm.select(col("v").as("big"), col("u").as("small"))
@@ -763,19 +695,16 @@ object Algos {
         .filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"),
                 greatest(col("u"), col("v")).as("v")).distinct()
-      val next = materialize(ss)
-      val cur = checksum(next)
+      // the stored star graph supersedes the previous round's
+      val cur = checksum(e.step(iter, ss))
       converged = cur == prev
       prev = cur
-      // next is checkpointed — the previous round's star graph is dead
-      release(e, lsm)
-      e = next
     }
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter star rounds — " +
         "raise maxIter (log2(|V|) rounds expected)")
-    sc.out(e)
+    e.cur
     }
     // final star graph: u = component min for every attached v
     eFinal.select(col("v").as("id"), col("u").as("component"))
@@ -838,16 +767,18 @@ object Algos {
     var remaining = materialize(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct())
     var remCount = remaining.count()
-    val edgeCount = e.count()
     // finished (id, root) pieces are each small and already materialized;
     // buffering them beats re-checkpointing a growing union every round
     val doneParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     doneParts += selfOnly
     var outer = 0
     // Only the final single-shuffle canonicalization escapes the sized
-    // scope, deliberately — it runs at the session's parallelism.
-    withLoopParts(spark, edgeCount) { sc =>
-      e = sc.in(e)
+    // scope, deliberately — it runs at the session's parallelism. The
+    // rounds stay hand-rolled: the capped trim peel's cache/uncache chain
+    // replaces `e` and `remaining` with frames it stored itself, which no
+    // Rounds step takes over.
+    val done = loop(e) { (sc, e0) =>
+      e = e0
       remaining = sc.in(remaining)
       while (remCount > 0 && outer < maxOuter) {
       outer += 1
@@ -944,11 +875,10 @@ object Algos {
       }
       }
       }
+      doneParts.reduce(_ unionByName _) // selfOnly is always a part
     }
     if (remCount > 0) throw new IllegalStateException(
       s"SCC did not finish in $maxOuter outer rounds")
-    val done = doneParts.reduceOption(_ unionByName _)
-      .getOrElse(remaining.select(col("id"), col("id").as("root")))
     // canonical component id = min node id per SCC
     val canon = done.groupBy("root").agg(min("id").as("component"))
     done.join(canon, "root").select(col("id"), col("component"))
@@ -1060,13 +990,13 @@ object Algos {
   private def maxColoring(e: DataFrame, nodes: DataFrame,
       maxInner: Int): DataFrame = {
     val inNbrMax = e.groupBy(col("v").as("id")).agg(max("u").as("nb"))
-    var colors = materialize(nodes
+    val colors = new Rounds(materialize(nodes
       .join(inNbrMax, Seq("id"), "left_outer")
       .select(col("id"), col("id").as("color"),
-        coalesce(col("nb"), col("id")).as("anc")))
+        coalesce(col("nb"), col("id")).as("anc"))))
     def colorSum(c: DataFrame): java.math.BigDecimal =
       c.agg(sum(col("color").cast("decimal(38,0)"))).first().getDecimal(0)
-    var prevSum = colorSum(colors)
+    var prevSum = colorSum(colors.cur)
     var steps = 0
     var fixed = false
     def step(c: DataFrame): DataFrame = {
@@ -1083,22 +1013,20 @@ object Algos {
     }
     while (!fixed && steps < maxInner) {
       steps += 1
-      val prev = colors
-      colors = materialize(step(prev)) // the step's ONE evaluation job
-      release(prev)
+      colors.step(steps, step(colors.cur)) // the step's ONE evaluation job
       if (steps % 2 == 0 || steps >= maxInner) {
-        val s = colorSum(colors) // cheap: runs on the checkpointed frame
+        val s = colorSum(colors.cur) // cheap: runs on the checkpointed frame
         fixed = s == prevSum
         prevSum = s
       }
     }
     if (!fixed) throw new IllegalStateException(
       s"SCC coloring did not converge in $maxInner steps")
-    // materialize the (id, color) projection and release the parent: the
+    // materialize the (id, color) projection and release the rounds: the
     // callers release what we RETURN, so the handed-out frame must own
     // its storage (r14 advice, upgraded to real block release in r16)
-    val out = materialize(colors.select(col("id"), col("color")))
-    release(colors)
+    val out = materialize(colors.cur.select(col("id"), col("color")))
+    colors.close()
     out
   }
 
@@ -1185,16 +1113,18 @@ object Algos {
   private def rankLoop(edgeFrame: DataFrame, iterations: Int, damping: Double,
       deg: Column, share: Column, carried: Column*)(
       restart: DataFrame => (Column, Column)): DataFrame = {
-    // materialized ONCE: the old lazy frame re-ran the distinct shuffle
-    // every iteration (r14 audit)
-    val e0 = materialize(edgeFrame)
-    val eCount = e0.count()
-    val nodes = materialize(
+    // stored ONCE: the old lazy frame re-ran the distinct shuffle every
+    // iteration (r14 audit)
+    loop(edgeFrame) { (sc, e) =>
+    // the node and degree frames are built at the caller's parallelism,
+    // from the caller-session input
+    val e0 = sc.input
+    val nodes = sc.keep(
       e0.select(col("u").as("id")).unionByName(e0.select(col("v").as("id"))).distinct())
     val (init, teleport) = restart(nodes)
     val degs = e0.groupBy(col("u").as("id")).agg(deg)
     val d = degs.columns(1)
-    val graph0 = materialize(nodes.join(degs, Seq("id"), "left_outer")
+    val graph0 = sc.keep(nodes.join(degs, Seq("id"), "left_outer")
       .select(Seq(col("id"), coalesce(col(d), lit(0L)).as(d)) ++ carried: _*))
     // r22 (guide §2.4): ranks CARRIES the node frame's static columns
     // through the loop — the old per-round `ranks.join(graph)`
@@ -1203,8 +1133,6 @@ object Algos {
     // The carried columns widen each checkpoint; every rank value is
     // unchanged.
     val static = graph0.columns.toSeq.map(col)
-    val ranksOut = withLoopParts(edgeFrame.sparkSession, eCount) { sc =>
-    val e = sc.in(e0)
     val graph = sc.in(graph0)
     // r21: checkpoint every 2nd round — lineage depth stays <= 2 rounds
     // while halving the eager write-out jobs, the loop's dominant fixed
@@ -1232,10 +1160,8 @@ object Algos {
         .select(static :+ (teleport +
           lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"): _*))
     }
-    sc.out(ranks.cur.select("id", "rank"))
+    ranks.cur.select("id", "rank")
     }
-    release(e0, graph0, nodes)
-    ranksOut
   }
 
   /** Synchronous label propagation (community detection): each round a
@@ -1252,11 +1178,8 @@ object Algos {
     // non-self pairs are mirrored back
     val canon = fwd.select(least(col("u"), col("v")).as("u"),
       greatest(col("u"), col("v")).as("v")).distinct()
-    val sym0 = materialize(
-      canon.unionByName(canon.filter(col("u") =!= col("v"))
-        .select(col("v").as("u"), col("u").as("v"))))
-    val out = withLoopParts(edges.sparkSession, sym0.count()) { sc =>
-    val sym = sc.in(sym0)
+    loop(canon.unionByName(canon.filter(col("u") =!= col("v"))
+        .select(col("v").as("u"), col("u").as("v")))) { (_, sym) =>
     // checkpoint every 2nd round: lineage depth stays <= 2 join levels
     // while halving the eager write-out jobs (the per-round fixed cost)
     val labels = new Rounds(materialize(
@@ -1276,10 +1199,8 @@ object Algos {
       // nodes can't exist in an edge-derived node set)
       labels.step(i, best)
     }
-    sc.out(labels.cur)
+    labels.cur // checkpointed: the last round always is
     }
-    release(sym0) // the returned labels frame is checkpointed
-    out
   }
 
   /** Maximal independent set — deterministic Luby rounds (Luby 1986,
@@ -1300,49 +1221,38 @@ object Algos {
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 4,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
-    val sym0 = symmetric(edges, src, dst)
-    val out = withLoopParts(edges.sparkSession, sym0.count()) { sc =>
-    val sym = sc.in(sym0)
-    var undecided = materialize(sym.select(col("u").as("id")).distinct())
-    var decided: DataFrame = null // (id, state)
-    var lastUnd = undecided
+    loop(symmetric(edges, src, dst)) { (_, sym) =>
+    val undecided = new Rounds(materialize(sym.select(col("u").as("id")).distinct()))
+    val decided = new Rounds(null) // (id, state); none before round 1
     var i = 1
     var done = false
     while (i <= rounds && !done) {
       val pri = graft.pipeline.TextOps.md5Hash60(
         concat(lit(s"mis$i:"), col("id").cast(StringType)))
-      val p = undecided.select(col("id"), pri.as("p"))
+      val p = undecided.cur.select(col("id"), pri.as("p"))
       // min undecided-neighbor priority (null = no undecided neighbor)
       val nbrMin = p.join(sym, col("id") === col("u"))
         .select(col("v").as("id"), col("p").as("np"))
-        .join(undecided, Seq("id"), "left_semi")
+        .join(undecided.cur, Seq("id"), "left_semi")
         .groupBy("id").agg(min(col("np")).as("np"))
       val winners = p.join(nbrMin, Seq("id"), "left")
         .filter(col("np").isNull || col("p") < col("np"))
         .select("id")
       val losers = winners.join(sym, col("id") === col("u"))
         .select(col("v").as("id")).distinct()
-        .join(undecided, Seq("id"), "left_semi")
+        .join(undecided.cur, Seq("id"), "left_semi")
         .join(winners, Seq("id"), "left_anti")
       val newDecided = winners.withColumn("state", lit("in"))
         .unionByName(losers.withColumn("state", lit("out")))
-      val prevDecided = decided
-      decided = materialize(
-        if (decided eq null) newDecided else decided.unionByName(newDecided))
-      if (prevDecided ne null) release(prevDecided)
-      val nextUnd = materialize(
-        undecided.join(decided, Seq("id"), "left_anti"))
-      release(lastUnd)
-      lastUnd = nextUnd
-      undecided = nextUnd
-      done = undecided.isEmpty
+      decided.step(i, if (decided.cur eq null) newDecided
+        else decided.cur.unionByName(newDecided))
+      undecided.step(i, undecided.cur.join(decided.cur, Seq("id"), "left_anti"))
+      done = undecided.cur.isEmpty
       i += 1
     }
-    sc.out(decided.unionByName(
-      undecided.withColumn("state", lit("undecided"))))
-    }
-    release(sym0)
-    out.orderBy("id")
+    // the result reads both loop frames, each its Rounds' last checkpoint
+    decided.cur.unionByName(undecided.cur.withColumn("state", lit("undecided")))
+    }.orderBy("id")
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) as fixed synchronous
@@ -1360,11 +1270,9 @@ object Algos {
   def hits(edges: DataFrame, iterations: Int = 5,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(iterations >= 1, s"iterations >= 1, got $iterations")
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v"))
-      .filter(col(src) =!= col(dst)).distinct())
-    val out = withLoopParts(edges.sparkSession, e0.count()) { sc =>
-    val e = sc.in(e0)
-    val nodes = materialize(e.select(col("u").as("id"))
+    loop(edges.select(col(src).as("u"), col(dst).as("v"))
+        .filter(col(src) =!= col(dst)).distinct()) { (sc, e) =>
+    val nodes = sc.keep(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct())
     // NOTE (r21): the every-2nd-round cadence was tried here and
     // MEASURED WORSE (5.3s → 9.8s at sf0.1): auth feeds both hRaw and
@@ -1397,11 +1305,8 @@ object Algos {
       // fused plan — same failure mode as the r21 cadence note above.
       scores.step(i, hub.join(auth, "id").select("id", "hub", "auth"))
     }
-    release(nodes)
-    sc.out(scores.cur)
-    }
-    release(e0)
-    out.orderBy("id")
+    scores.cur
+    }.orderBy("id")
   }
 
   /** Weighted single-source shortest paths as FIXED Bellman–Ford rounds
@@ -1421,10 +1326,8 @@ object Algos {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v"),
-      col(weight).cast(LongType).as("w")))
-    val out = withLoopParts(spark, e0.count()) { sc =>
-    val e = sc.in(e0)
+    loop(edges.select(col(src).as("u"), col(dst).as("v"),
+        col(weight).cast(LongType).as("w"))) { (sc, e) =>
     // r21: every-2nd-round checkpoint cadence (the labelPropagation
     // shape) — odd rounds cache only (dist has TWO consumers next
     // round: the relax join and the union), even rounds cut lineage
@@ -1436,10 +1339,8 @@ object Algos {
       dist.step(i, dist.cur.unionByName(relaxed)
         .groupBy("id").agg(min(col("dist")).as("dist")))
     }
-    sc.out(dist.cur)
-    }
-    release(e0)
-    out.orderBy("id")
+    dist.cur
+    }.orderBy("id")
   }
 
   /** Deterministic "random" walks for graph-embedding corpora
@@ -1486,29 +1387,26 @@ object Algos {
       walksPerStart: Int, src: String, dst: String, extraStart: Seq[Column])(
       next: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
     require(nStarts >= 1 && steps >= 1 && walksPerStart >= 1)
-    val e0 = materialize(edges.select(col(src).as("u"), col(dst).as("v")))
-    val out = withLoopParts(edges.sparkSession, e0.count()) { sc =>
-    val e = sc.in(e0)
+    loop(edges.select(col(src).as("u"), col(dst).as("v"))) { (_, e) =>
     val wids = edges.sparkSession.range(walksPerStart.toLong)
       .select(col("id").as("wid"))
-    val starts = materialize(
+    // every step, cached or checkpointed, is retained for the final union
+    val walk = new Rounds(materialize(
       e.select(col("u").as("node")).unionByName(e.select(col("v").as("node")))
         .distinct()
         .orderBy(md5(col("node").cast(StringType)), col("node"))
         .limit(nStarts)
         .crossJoin(broadcast(wids))
         .select(Seq(col("node").as("start"), col("wid"), lit(0L).as("step")) ++
-          extraStart :+ col("node").as("node"): _*))
-    var cur = starts
-    var acc = Vector(starts)
-    var t = 0L
+          extraStart :+ col("node").as("node"): _*)), 2, steps, retain = true)
+    var t = 0
     var exhausted = false
     while (t < steps && !exhausted) {
       t += 1
-      val step = next(cur, e, t)
+      walk.step(t, next(walk.cur, e, t))
       // r21: every-2nd-step checkpoint cadence (the labelPropagation
       // shape) — odd steps cache only (cur feeds the next step's join
-      // AND the final union; release(acc) handles both storage kinds).
+      // AND the final union; the retained history holds both kinds).
       // The all-walks-at-sinks early exit is checked only on
       // checkpointed steps: an extra round over an empty frontier
       // unions nothing, so the output is identical.
@@ -1519,20 +1417,12 @@ object Algos {
       // per-step) — agreeing with the r21 suite's 0.71×. sf0.1 cannot
       // see this loop's checkpoint cost; the 10× reading is the one
       // that counts.
-      if (t % 2 == 0 || t == steps) {
-        cur = materialize(step)
-        exhausted = cur.isEmpty
-      } else {
-        cur = cache(step)
-      }
-      acc = acc :+ cur
+      if (walk.checkpoints(t)) exhausted = walk.cur.isEmpty
     }
-    val walk = materialize(acc.reduce(_ unionByName _))
-    release(acc: _*)
-    sc.out(walk)
-    }
-    release(e0)
-    out.select(col("start"), col("wid").as("walk_id"), col("step"), col("node"))
+    val all = materialize(walk.history.reduce(_ unionByName _))
+    walk.close()
+    all
+    }.select(col("start"), col("wid").as("walk_id"), col("step"), col("node"))
       .orderBy("start", "walk_id", "step")
   }
 
@@ -1711,14 +1601,12 @@ object Algos {
   def louvain(edges: DataFrame, rounds: Int = 3,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
-    val sym0 = symmetric(edges, src, dst)
-    val out = louvainOnSym(sym0, rounds)
-    release(sym0)
-    out.select(col("id"), col("c").as("community"))
+    louvainOnSym(symmetric(edges, src, dst), rounds)
+      .select(col("id"), col("c").as("community"))
   }
 
   /** The canonical symmetric distinct edge frame (u, v), self-loops
-    * dropped, MATERIALIZED (caller releases) — the start of every
+    * dropped, lazy (a [[loop]] input stores it) — the start of every
     * louvain tier, [[hyperBall]], [[maximalIndependentSet]] and
     * [[kCore]]. [[louvainLevels]] derives it ONCE and shares it between
     * phase 1 and the level-2 contraction (r22) — the fused form paid the
@@ -1737,19 +1625,18 @@ object Algos {
     // `fwd ∪ reverse |> distinct`
     val canon = fwd.select(least(col("u"), col("v")).as("u"),
       greatest(col("u"), col("v")).as("v")).distinct()
-    materialize(
-      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
+    canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))
   }
 
-  /** [[louvain]]'s local-move loop over a PRE-MATERIALIZED symmetric
-    * frame; returns checkpointed (id, c), the caller owns sym0. */
-  private def louvainOnSym(sym0: DataFrame, rounds: Int): DataFrame = {
-    val out = withLoopParts(sym0.sparkSession, sym0.count()) { sc =>
-    val sym = sc.in(sym0)
-    val deg = materialize(
+  /** [[louvain]]'s local-move loop over a symmetric frame (a stored one
+    * stays the caller's); returns checkpointed (id, c, k). */
+  private def louvainOnSym(sym0: DataFrame, rounds: Int): DataFrame =
+    loop(sym0) { (sc, sym) =>
+    val deg = sc.keep(
       sym.groupBy(col("u").as("id")).agg(count(lit(1)).cast(LongType).as("k")))
-    // S = Σdeg, one scalar — the only driver-side value of the loop
-    val s = deg.agg(sum(col("k"))).collect()(0).getLong(0)
+    // S = Σdeg, one scalar — the only driver-side value of the loop (0,
+    // not NULL, over a graph with no non-self edge)
+    val s = deg.agg(coalesce(sum(col("k")), lit(0L))).collect()(0).getLong(0)
     // r22 (guide §2.4 — remove shuffles outright): labels CARRIES the
     // node degree k, so the loop no longer joins `deg` anywhere — the
     // per-round tot aggregation and the scored join each drop one
@@ -1787,14 +1674,11 @@ object Algos {
           struct(col("score"), (-col("cand")).as("neg"))).getField("neg").as("nc"))
         .select(col("id"), (-col("nc")).as("c"), col("k")))
     }
-    release(deg)
     // returned with the carried k column — the checkpoint ROOT, so a
-    // caller's release() frees the blocks (release matches checkpoint
+    // caller's release frees the blocks (release matches checkpoint
     // roots only); callers project (id, c) themselves
-    sc.out(labels.cur)
+    labels.cur
     }
-    out
-  }
 
   /** MULTI-LEVEL Louvain (default two levels) — phase 1 ([[louvain]]'s
     * integer local move) +
@@ -1845,54 +1729,42 @@ object Algos {
     // share it between phase 1 and the level-2 contraction — the old
     // form called louvain(edges) (which built and released its own
     // sym0) and then re-ran the identical union+distinct shuffle for
-    // the contraction input. sym0 is released right after the first
-    // contraction materializes it into wsym.
-    val sym0 = symmetric(edges, src, dst)
-    var sym0Live = true
-    // already checkpoint-backed by louvain's loop — reads are plan-cheap
-    val l1raw = louvainOnSym(sym0, rounds)
-    val l1 = l1raw.select(col("id"), col("c").as("community"))
-    // wg: the current-level weighted graph; lab: its nodes' next-tier
-    // labels; mapping: original id -> current deepest label
-    var wg = sym0.select(col("u"), col("v"), lit(1L).as("w"))
-    var lab = l1raw
-    var mapping = l1
-    var prevWg: DataFrame = null
-    var prevMapping: DataFrame = null
-    for (_ <- 2 to levels) {
+    // the contraction input.
+    val sym0 = materialize(symmetric(edges, src, dst))
+    // checkpointed (id, c, k) by louvain's loop — reads are plan-cheap
+    val l1 = louvainOnSym(sym0, rounds)
+    // wg: the current-level weighted graph, from sym0 — each level's
+    // contraction supersedes it (sym0 is freed once the level-2
+    // contraction has stored it); its scratch is the level's local move,
+    // whose last reader is the next contraction. mapping: original id ->
+    // current deepest label, from l1 — each level's join supersedes it.
+    val wg = new Rounds(sym0)
+    val mapping = new Rounds(l1)
+    var lab = l1
+    for (level <- 2 to levels) {
       // contraction: weight between super-nodes = Σ member-pair weights
       // — wg carries both directions (and self-rows from level 2 on),
       // so cross weights land symmetric and the self row (cu = cv)
       // accumulates 2×intra-weight, preserving weighted degrees
-      val wsym = materialize(wg
+      val g =
+        if (level == 2) wg.cur.select(col("u"), col("v"), lit(1L).as("w"))
+        else wg.cur
+      wg.step(level, g
         .join(lab.select(col("id").as("u"), col("c").as("cu")), "u")
         .join(lab.select(col("id").as("v"), col("c").as("cv")), "v")
         .groupBy(col("cu").as("u"), col("cv").as("v"))
         .agg(sum(col("w")).cast(LongType).as("w")))
-      // the shared phase-1 frame's last reader (the level-2 contraction)
-      // is now materialized — free it before the deeper levels run
-      if (sym0Live) { release(sym0); sym0Live = false }
-      val move = louvainLocalMove(wsym, rounds2)
-      val nextMapping = materialize(mapping
-        .join(move.select(col("id").as("community"), col("c").as("c2")),
+      lab = wg.scratch(louvainLocalMove(wg.cur, rounds2))
+      val m =
+        if (level == 2) mapping.cur.select(col("id"), col("c").as("community"))
+        else mapping.cur
+      mapping.step(level, m
+        .join(lab.select(col("id").as("community"), col("c").as("c2")),
           "community")
         .select(col("id"), col("c2").as("community")))
-      if (prevWg != null) release(prevWg)
-      if (prevMapping != null) release(prevMapping)
-      // the superseded full-node mapping checkpoint (levels ≥ 3): only
-      // nextMapping reads it, and that read just materialized — release
-      // now instead of retaining one checkpointed frame per extra level
-      // (never l1: louvain's own loop owns that frame's lifecycle)
-      if (!(mapping eq l1)) release(mapping)
-      prevWg = wsym
-      prevMapping = move
-      wg = wsym
-      lab = move
-      mapping = nextMapping
     }
-    if (prevWg != null) release(prevWg)
-    if (prevMapping != null) release(prevMapping)
-    mapping
+    wg.close()
+    mapping.cur
   }
 
   /** WEIGHTED Louvain phase 1 — [[louvainLocalMove]] (the integer-
@@ -1935,12 +1807,10 @@ object Algos {
     val und = fwd.select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b"), col("w"))
       .groupBy("a", "b").agg(sum(col("w")).cast(LongType).as("w"))
-    val wsym = materialize(
+    louvainLocalMove(
       und.select(col("a").as("u"), col("b").as("v"), col("w"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v"), col("w"))))
-    val out = louvainLocalMove(wsym, rounds)
-    release(wsym)
-    out.select(col("id"), col("c").as("community"))
+        .unionByName(und.select(col("b").as("u"), col("a").as("v"), col("w"))),
+      rounds).select(col("id"), col("c").as("community"))
   }
 
   /** The weighted integer-surrogate local move shared by every coarse
@@ -1948,15 +1818,14 @@ object Algos {
     * score(C) = S·k_{i,in}(C) − k_i·Σtot′ over a weighted symmetric
     * frame (u, v, w) with degree-preserving self-rows (k_{i,in} sums
     * non-self rows — the self-loop is internal whatever the choice, so
-    * it cancels in the argmax; k_i includes it). Input must be
-    * materialized; returns checkpointed (id, c) the caller releases.
+    * it cancels in the argmax; k_i includes it). A stored input stays
+    * the caller's; returns checkpointed (id, c) the caller releases.
     */
   private def louvainLocalMove(wsym0: DataFrame, rounds2: Int): DataFrame =
-    withLoopParts(wsym0.sparkSession, wsym0.count()) { sc =>
-    val wsym = sc.in(wsym0)
-    val deg = materialize(wsym.groupBy(col("u").as("id"))
+    loop(wsym0) { (sc, wsym) =>
+    val deg = sc.keep(wsym.groupBy(col("u").as("id"))
       .agg(sum(col("w")).cast(LongType).as("k")))
-    val s = deg.agg(sum(col("k"))).collect()(0).getLong(0)
+    val s = deg.agg(coalesce(sum(col("k")), lit(0L))).collect()(0).getLong(0)
     // NOTE (r22, measured and REVERTED — twice): the louvain-level-1
     // labels-carry-k trick (r21 verdict #5) was tried here in BOTH
     // shapes and lost both interleaved A/Bs on q_louvain_w:
@@ -2004,8 +1873,7 @@ object Algos {
         .select(col("id"),
           when(par === 0L, col("cNew")).otherwise(col("c")).as("c")))
     }
-    release(deg)
-    sc.out(labels.cur)
+    labels.cur
     }
 
   /** k-core: iteratively drop nodes whose (undirected) degree falls
@@ -2035,31 +1903,27 @@ object Algos {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 10,
       src: String = "_src", dst: String = "_dst"): DataFrame = {
-    val e00 = symmetric(edges, src, dst)
-    val edgeCount = e00.count()
-    val eFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
+    val eFinal = loop(symmetric(edges, src, dst)) { (_, e00) =>
     // checkpoint cadence like labelPropagation: cut lineage every 2nd
     // round, cache otherwise — halves the eager write-out jobs
-    val e = new Rounds(sc.in(e00), 2, rounds)
-    var deg = materialize(e.cur.groupBy("u").agg(count(lit(1)).as("d")))
-    var lastDrop: DataFrame = null
+    val e = new Rounds(e00, 2, rounds)
+    val deg = new Rounds(materialize(e.cur.groupBy("u").agg(count(lit(1)).as("d"))))
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
-      val drop = materialize(deg.filter(col("d") < k).select("u"))
+      val drop = materialize(deg.cur.filter(col("d") < k).select("u"))
       if (drop.isEmpty) {
         // FIXED-POINT early exit — oracle-safe: an empty drop set means
         // the round removes no edge, so every remaining round is a
         // no-op and the result equals the full `rounds` replay
         converged = true
-        release(drop)
       } else {
         val dropV = drop.withColumnRenamed("u", "v")
         // survivors' degree loss = removed edges incident from the drop
         // side; the semi-join keys on the small drop frame
         val loss = e.cur.join(dropV, Seq("v"), "left_semi")
           .groupBy("u").agg(count(lit(1)).as("l"))
-        val degNext = deg.join(drop, Seq("u"), "left_anti")
+        val degNext = deg.cur.join(drop, Seq("u"), "left_anti")
           .join(loss, Seq("u"), "left_outer")
           .select(col("u"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
           // a survivor whose last edge died this round leaves deg NOW —
@@ -2068,23 +1932,19 @@ object Algos {
         val next = e.cur.join(drop, Seq("u"), "left_anti")
           .join(dropV, Seq("v"), "left_anti")
           .select("u", "v")
-        val degPrev = deg
-        deg = materialize(degNext)
-        release(degPrev)
+        deg.step(i, degNext)
         e.step(i, next)
-        // the drop frame fed degNext (now checkpointed); the lazy e of
-        // odd rounds still reads it, so release one round later
-        if (lastDrop ne null) release(lastDrop)
-        lastDrop = drop
       }
+      // the drop frame fed deg's checkpoint; the lazy e of an odd round
+      // still reads it, so it is e's scratch, released one round later
+      e.scratch(drop)
       i += 1
     }
-    // the final e may be a lazy cache whose plan reads lastDrop; force
-    // it into its own checkpoint before releasing
-    e.flush()
-    if (lastDrop ne null) release(lastDrop)
-    release(deg)
-    sc.out(e.cur)
+    // the final e may be a lazy cache whose plan reads the last drop:
+    // done() forces it into its own checkpoint before releasing
+    val out = e.done()
+    deg.close()
+    out
     }
     eFinal.groupBy(col("u").as("id")).agg(count(lit(1)).as("core_degree"))
   }
@@ -2133,35 +1993,31 @@ object Algos {
     require(rounds >= 1, s"rounds >= 1, got $rounds")
     require(support >= 1, s"support >= 1, got $support")
     // canonical undirected edges (u < v), like the oracle's related CTE
-    val e00 = materialize(
-      edges.select(least(col(src), col(dst)).as("u"),
-          greatest(col(src), col(dst)).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
-    var edgeCount = e00.count()
-    val supFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
+    val supFinal = loop(edges.select(least(col(src), col(dst)).as("u"),
+        greatest(col(src), col(dst)).as("v"))
+      .filter(col("u") =!= col("v")).distinct()) { (sc, e00) =>
+    var edgeCount = sc.rows
+    // release cadence: the lazy deleted-set of round i reads the
+    // checkpoints of out_{i-1} AND out_i, so out_{i-1} is only
+    // releasable once round i+1 has built ITS deleted set — two rounds
+    // back. e00 is the initial two-back frame.
+    val out = new Rounds(e00, back = 2)
     // round 1: the one full listing — support of every e00 edge
-    var out = materialize(
-      supportOf(sc.in(e00), edgeCount).filter(col("sup") >= support))
+    out.step(1, supportOf(e00, edgeCount).filter(col("sup") >= support))
     // deleted set = e00 edges NOT surviving (incl. triangle-less edges,
     // absent from supportOf and pruned by any support >= 1). LAZY on
     // purpose: both parents are checkpointed, so the plan is O(1) and
     // the anti-join only ever runs in delta rounds that read it —
     // full-recount rounds never pay for it
-    var deleted = sc.in(e00).join(out.select("u", "v"), Seq("u", "v"),
+    var deleted = e00.join(out.cur.select("u", "v"), Seq("u", "v"),
       "left_anti")
-    // release cadence: the lazy deleted-set of round i reads the
-    // checkpoints of out_{i-1} AND out_i, so out_{i-1} (tracked as
-    // `older`) is only releasable once round i+1 has built ITS deleted
-    // set — two rounds back. e00 is the initial two-back frame.
-    var older = e00
-    var lastMat = out
-    var n = out.count()
+    var n = out.cur.count()
     var nDeleted = edgeCount - n
     var converged = n == edgeCount
     edgeCount = n
     var i = 2
     while (i <= rounds && !converged) {
-      val e = out.select("u", "v")
+      val e = out.cur.select("u", "v")
       // strategy pivot: deltas win only when the deletion set is small
       // relative to the survivors; after a mass-extinction round the
       // pruned graph is what's cheap to relist (measured at sf0.1:
@@ -2206,17 +2062,13 @@ object Algos {
           .join(e, Seq("u", "v"), "left_semi")
           .groupBy("u", "v")
           .agg(count(lit(1)).cast(LongType).as("dec"))
-        out.join(dec, Seq("u", "v"), "left")
+        out.cur.join(dec, Seq("u", "v"), "left")
           .select(col("u"), col("v"),
             (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
       }
-      val nextOut = materialize(supNew.filter(col("sup") >= support))
-      deleted = e.join(nextOut.select("u", "v"), Seq("u", "v"), "left_anti")
-      release(older) // two rounds back — no live reader remains
-      older = lastMat
-      lastMat = nextOut
-      out = nextOut
-      n = out.count()
+      out.step(i, supNew.filter(col("sup") >= support))
+      deleted = e.join(out.cur.select("u", "v"), Seq("u", "v"), "left_anti")
+      n = out.cur.count()
       nDeleted = edgeCount - n
       converged = n == edgeCount
       edgeCount = n
@@ -2226,8 +2078,7 @@ object Algos {
     // final lazy deleted-set is never consumed again — so the two-back
     // frame (e00 itself when the loop converged after round 1 or
     // rounds == 1) has no live reader left (r17 ADVICE leak)
-    release(older)
-    sc.out(out)
+    out.done()
     }
     supFinal.select(col("u").as("part_u"), col("v").as("part_v"), col("sup"))
       .orderBy("part_u", "part_v")
@@ -2276,13 +2127,11 @@ object Algos {
   private[algos] def kTrussFullRecount(edges: DataFrame, support: Int,
       rounds: Int = 5, src: String = "_src", dst: String = "_dst"): DataFrame = {
     require(rounds >= 1 && support >= 1)
-    val e00 = materialize(
-      edges.select(least(col(src), col(dst)).as("u"),
-          greatest(col(src), col(dst)).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
-    var edgeCount = e00.count()
-    val supFinal = withLoopParts(edges.sparkSession, edgeCount) { sc =>
-    val out = new Rounds(sc.in(e00), 1, rounds)
+    val supFinal = loop(edges.select(least(col(src), col(dst)).as("u"),
+        greatest(col(src), col(dst)).as("v"))
+      .filter(col("u") =!= col("v")).distinct()) { (sc, e00) =>
+    var edgeCount = sc.rows
+    val out = new Rounds(e00)
     var e = out.cur
     var i = 1
     var converged = false
@@ -2294,7 +2143,7 @@ object Algos {
       edgeCount = n
       i += 1
     }
-    sc.out(out.cur)
+    out.cur
     }
     supFinal.select(col("u").as("part_u"), col("v").as("part_v"), col("sup"))
       .orderBy("part_u", "part_v")

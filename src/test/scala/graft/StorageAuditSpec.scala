@@ -43,4 +43,31 @@ class StorageAuditSpec extends AnyFunSuite {
       s"storage API called outside graft.util.Frames — store frames through " +
         s"Frames.materialize/cache/release/materializeOver instead: $bypasses")
   }
+
+  /** Algos functions whose loops still free frames by hand: SCC's outer
+    * rounds take over frames its capped trim peel stored itself (a
+    * cache/uncache chain), which no Rounds step adopts. */
+  private val handRolled = Set("stronglyConnectedComponents")
+
+  test("loop audit: Algos frees frames only through Frames.loop and Rounds") {
+    import java.nio.file.{Files, Paths}
+    val p = Paths.get("src/main/scala/graft/algos/Algos.scala")
+    assert(Files.exists(p), s"audit must run from the repo root, missing $p")
+    val lines = AuditLex.stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+      .split("\n", -1)
+    // the object's members sit at two-space indent; a call belongs to the
+    // last member def above it
+    val member = "^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val call = "\\b(release|uncache|clampedSession|retarget)\\(".r
+    val owners = lines.scanLeft("")((o, l) =>
+      member.findFirstMatchIn(l).fold(o)(_.group(1))).tail
+    val found = for {
+      ((line, owner), no) <- lines.toSeq.zip(owners).zipWithIndex
+      m <- call.findAllMatchIn(line)
+      if !handRolled(owner) || !Set("release", "uncache")(m.group(1))
+    } yield s"Algos.scala:${no + 1} in $owner: ${m.group(1)}("
+    assert(found.isEmpty,
+      "an Algos loop stores, advances and frees its frames through " +
+        s"Frames.loop and Frames.Rounds, never by hand: $found")
+  }
 }

@@ -642,19 +642,24 @@ class AlgosSpec extends SparkSpec {
     assert(run(cascade, 5, 10) == ref(cascade, 5, 10))
   }
 
-  test("withLoopParts clamps an ISOLATED clone — the caller's session conf is untouched mid-loop") {
+  test("loop scope clamps an ISOLATED clone — the caller's session conf is untouched mid-loop") {
     val default = spark.conf.get("spark.sql.shuffle.partitions")
-    val clampSeen = Algos.withLoopParts(spark, 10L) { sc =>
-      val in = sc.in(spark.range(10).toDF("x"))
+    var clampSeen = ""
+    val out = graft.util.Frames.loop(spark.range(10).toDF("x")) { (sc, in) =>
       // mid-loop, a concurrent query planned on the CALLER's session
       // sees the default partition count — the r15 ConfScope caveat
       assert(spark.conf.get("spark.sql.shuffle.partitions") == default)
       // the loop-bound frame plans on the clone, at the clamp
       assert(in.sparkSession ne spark)
-      // handing a result back rebinds to the caller's session
-      assert(sc.out(in).sparkSession eq spark)
-      in.sparkSession.conf.get("spark.sql.shuffle.partitions")
+      assert(sc.in(spark.range(1).toDF("y")).sparkSession eq in.sparkSession)
+      assert(sc.rows == 10L)
+      clampSeen = in.sparkSession.conf.get("spark.sql.shuffle.partitions")
+      in
     }
+    // handing a result back rebinds to the caller's session; a loop that
+    // returns its own input keeps that stored frame
+    assert(out.sparkSession eq spark)
+    assert(out.count() == 10L)
     assert(clampSeen == "4", s"expected floor clamp 4, got $clampSeen")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == default)
   }
@@ -1107,5 +1112,57 @@ class AlgosSpec extends SparkSpec {
     assert(scored((1L, 5L)) == ((0L, 0.0)))
     // and the candidate frame canonicalizes order (5,1) -> (1,5)
     assert(!scored.contains((5L, 1L)))
+  }
+
+  test("edge inputs: every iterative entry point returns on an empty and a self-loop-only edge frame") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long, Long)].toDF("_src", "_dst", "_w")
+    val selfLoops = Seq((1L, 1L, 1L), (2L, 2L, 1L)).toDF("_src", "_dst", "_w")
+    // (name, run, rows on the empty frame, rows on the self-loop frame).
+    // Self-loops count as edges for the PageRank family, label
+    // propagation, the walks and SCC (node universe); the other loops drop
+    // them. The Louvain family once threw here: S = Σdeg summed NULL.
+    val none = Seq.empty[String]
+    val walked = Seq("(1,0,0,1)", "(1,0,1,1)", "(1,0,2,1)", "(1,0,3,1)",
+      "(2,0,0,2)", "(2,0,1,2)", "(2,0,2,2)", "(2,0,3,2)")
+    val entries = Seq[(String, DataFrame => DataFrame, Seq[String], Seq[String])](
+      ("pageRank", Algos.pageRank(_, iterations = 3), none, Seq("(1,0.5)", "(2,0.5)")),
+      ("pageRankWeighted", Algos.pageRankWeighted(_, iterations = 3), none,
+        Seq("(1,0.5)", "(2,0.5)")),
+      ("personalizedPageRank", Algos.personalizedPageRank(_, Seq(1L), iterations = 3),
+        none, Seq("(1,1.0)", "(2,0.0)")),
+      ("labelPropagation", Algos.labelPropagation(_, iterations = 3), none,
+        Seq("(1,1)", "(2,2)")),
+      ("hits", Algos.hits(_, iterations = 3), none, none),
+      ("weightedShortestPaths", Algos.weightedShortestPaths(_, source = 1L, rounds = 3),
+        Seq("(1,0)"), Seq("(1,0)")),
+      ("shortestPaths", Algos.shortestPaths(_, source = 1L, maxDepth = 3),
+        Seq("(1,0)"), Seq("(1,0)")),
+      ("hopHistogram", Algos.hopHistogram(_, Seq(1L), maxDepth = 3),
+        Seq("(1,0,1)"), Seq("(1,0,1)")),
+      ("harmonicCentrality", Algos.harmonicCentrality(_, Seq(1L), maxDepth = 3), none, none),
+      ("betweennessSampled", Algos.betweennessSampled(_, Seq(1L), maxDepth = 3), none, none),
+      ("hyperBall", Algos.hyperBall(_, rounds = 2), none, none),
+      ("connectedComponents", Algos.connectedComponents(_), none, none),
+      ("stronglyConnectedComponents", Algos.stronglyConnectedComponents(_), none,
+        Seq("(1,1)", "(2,2)")),
+      ("stronglyConnectedComponents distributed",
+        Algos.stronglyConnectedComponents(_, maxLocalEdges = 0L), none,
+        Seq("(1,1)", "(2,2)")),
+      ("maximalIndependentSet", Algos.maximalIndependentSet(_, rounds = 2), none, none),
+      ("kCore", Algos.kCore(_, k = 1, rounds = 3), none, none),
+      ("kTruss", Algos.kTruss(_, support = 1, rounds = 3), none, none),
+      ("deterministicWalks", Algos.deterministicWalks(_, nStarts = 2, steps = 3), none, walked),
+      ("node2vecWalks", Algos.node2vecWalks(_, nStarts = 2, steps = 3), none, walked),
+      ("louvain", Algos.louvain(_, rounds = 2), none, none),
+      ("louvainLevels", Algos.louvainLevels(_), none, none),
+      ("louvainWeighted", Algos.louvainWeighted(_, rounds = 2), none, none))
+    val wrong = for {
+      (name, run, onEmpty, onSelfLoops) <- entries
+      (input, frame, want) <- Seq(("empty", empty, onEmpty), ("self-loops", selfLoops, onSelfLoops))
+      got = scala.util.Try(run(frame).collect().map(_.mkString("(", ",", ")")).sorted.toSeq)
+      if got != scala.util.Success(want)
+    } yield s"$name on $input: $got"
+    assert(wrong.isEmpty, wrong.mkString("; "))
   }
 }

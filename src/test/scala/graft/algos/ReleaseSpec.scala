@@ -121,29 +121,70 @@ class ReleaseSpec extends SparkSpec {
     // every walk reaches the sink 2 by step 2: the walks stop at the
     // checkpointed step 4, whose frame is empty
     val sinkChain = Seq((0L, 1L), (1L, 2L)).toDF("_src", "_dst")
-    Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "pageRankWeighted" -> (() => Algos.pageRankWeighted(weighted, iterations = 5)),
-      "personalizedPageRank" ->
-        (() => Algos.personalizedPageRank(edges, Seq(0L, 5L), iterations = 5)),
-      "labelPropagation" -> (() => Algos.labelPropagation(edges, iterations = 5)),
-      "weightedShortestPaths" ->
-        (() => Algos.weightedShortestPaths(weighted, source = 0L, rounds = 5)),
-      "hits" -> (() => Algos.hits(edges, iterations = 3)),
-      "louvain" -> (() => Algos.louvain(edges, rounds = 3)),
-      "louvainWeighted" -> (() => Algos.louvainWeighted(weighted, rounds = 3)),
-      "kCore" -> (() => Algos.kCore(edges, k = 2, rounds = 5)),
-      "kCore odd-round exit" -> (() => Algos.kCore(oddExit, k = 3)),
-      "kCore even-round exit" -> (() => Algos.kCore(evenExit, k = 3)),
-      "deterministicWalks" ->
-        (() => Algos.deterministicWalks(edges, nStarts = 4, steps = 5, walksPerStart = 2)),
-      "deterministicWalks sink exit" ->
-        (() => Algos.deterministicWalks(sinkChain, nStarts = 3, steps = 8)),
-      "node2vecWalks" -> (() => Algos.node2vecWalks(edges, nStarts = 4, steps = 5))
-    ).foreach { case (name, run) =>
+    // strongly connected pieces with tails, so the distributed SCC path
+    // (maxLocalEdges = 0) runs trim peels and coloring rounds
+    val cyclic = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (6L, 4L), (6L, 7L), (8L, 1L)).toDF("_src", "_dst")
+    val cascade = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("_src", "_dst")
+    // (name, run, stored RDDs it may leave, jobs it started before the
+    // loops moved onto Frames.loop/Rounds — the same-work bound). Every
+    // run may leave only its result stored; a lazy result over several
+    // stored frames keeps each of them.
+    case class Run(name: String, run: () => org.apache.spark.sql.DataFrame,
+        maxLeft: Int, jobsBefore: Int)
+    Seq(
+      Run("pageRankWeighted", () => Algos.pageRankWeighted(weighted, iterations = 5), 1, 51),
+      Run("personalizedPageRank",
+        () => Algos.personalizedPageRank(edges, Seq(0L, 5L), iterations = 5), 1, 49),
+      Run("labelPropagation", () => Algos.labelPropagation(edges, iterations = 5), 1, 28),
+      Run("weightedShortestPaths",
+        () => Algos.weightedShortestPaths(weighted, source = 0L, rounds = 5), 1, 23),
+      Run("hits", () => Algos.hits(edges, iterations = 3), 1, 45),
+      Run("louvain", () => Algos.louvain(edges, rounds = 3), 1, 35),
+      Run("louvainWeighted", () => Algos.louvainWeighted(weighted, rounds = 3), 1, 38),
+      Run("kCore", () => Algos.kCore(edges, k = 2, rounds = 5), 1, 59),
+      Run("kCore odd-round exit", () => Algos.kCore(oddExit, k = 3), 1, 22),
+      Run("kCore even-round exit", () => Algos.kCore(evenExit, k = 3), 1, 31),
+      Run("deterministicWalks",
+        () => Algos.deterministicWalks(edges, nStarts = 4, steps = 5, walksPerStart = 2), 1, 25),
+      Run("deterministicWalks sink exit",
+        () => Algos.deterministicWalks(sinkChain, nStarts = 3, steps = 8), 1, 21),
+      Run("node2vecWalks", () => Algos.node2vecWalks(edges, nStarts = 4, steps = 5), 1, 30),
+      Run("shortestPaths", () => Algos.shortestPaths(edges, source = 0L, maxDepth = 8), 1, 46),
+      Run("hopHistogram", () => Algos.hopHistogram(edges, Seq(0L, 5L), maxDepth = 8), 1, 55),
+      Run("betweennessSampled",
+        () => Algos.betweennessSampled(edges, Seq(0L, 5L), maxDepth = 6), 1, 64),
+      Run("hyperBall", () => Algos.hyperBall(edges, rounds = 3), 1, 22),
+      Run("connectedComponents", () => Algos.connectedComponents(edges), 1, 99),
+      // the lazy result unions every finished piece (doneParts), each its
+      // own checkpoint, and the hand-rolled trim peel leaves its last
+      // caches: the residual measured before the port is the bound
+      Run("stronglyConnectedComponents distributed",
+        () => Algos.stronglyConnectedComponents(cyclic, maxLocalEdges = 0L), 8, 108),
+      // the lazy result reads both loop frames (decided and undecided)
+      Run("maximalIndependentSet", () => Algos.maximalIndependentSet(edges, rounds = 4), 2, 28),
+      Run("kTruss", () => Algos.kTruss(cascade, support = 2, rounds = 5), 1, 28),
+      Run("louvainLevels", () => Algos.louvainLevels(edges), 1, 65)
+    ).foreach { r =>
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
       val pre = storedRddIds
-      run().count()
+      spark.sparkContext.addSparkListener(listener)
+      try r.run().count()
+      finally {
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
       val left = (storedRddIds -- pre).size
-      assert(left <= 1, s"$name: expected at most its result stored, found $left new stored RDDs")
+      assert(left <= r.maxLeft,
+        s"${r.name}: expected at most ${r.maxLeft} stored RDDs, found $left")
+      assert(jobs.get <= r.jobsBefore,
+        s"${r.name}: started ${jobs.get} jobs, more than the ${r.jobsBefore} before")
     }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
