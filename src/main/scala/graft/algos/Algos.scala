@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.Frames.{Rounds, cache, loop, materialize, materializeOver, release, uncache}
+import graft.util.Frames.{Rounds, cache, loop, materialize, materializeOver}
 
 /** Graph analytics as iterative DataFrame algorithms.
   *
@@ -20,8 +20,7 @@ import graft.util.Frames.{Rounds, cache, loop, materialize, materializeOver, rel
   * [[graft.util.Frames.Rounds]], which checkpoints on the loop's
   * cadence, caches in between and frees each superseded frame in the
   * round the loop's release depth, scratch and retained history say.
-  * Loops never free frames by hand (a source audit keeps it so), except
-  * [[stronglyConnectedComponents]]'s rounds.
+  * Loops never free frames by hand (a source audit keeps it so).
   *
   * Edge-frame convention: (`src`, `dst`) long columns, as produced by
   * [[graft.graph.PropertyGraph]] edge frames.
@@ -753,7 +752,7 @@ object Algos {
     val spark = edges.sparkSession
     import spark.implicits._
     val raw = edges.select(col(src).as("u"), col(dst).as("v")).distinct()
-    var e = materialize(raw.filter(col("u") =!= col("v")))
+    val e = materialize(raw.filter(col("u") =!= col("v")))
     // a node whose only edges are self-loops is still a valid singleton
     // SCC — take the node universe BEFORE the self-loop filter and peel
     // the difference upfront (r13 advice: such nodes vanished entirely)
@@ -764,7 +763,7 @@ object Algos {
           .unionByName(e.select(col("v").as("id"))).distinct(),
           Seq("id"), "left_anti")
         .select(col("id"), col("id").as("root")))
-    var remaining = materialize(e.select(col("u").as("id"))
+    val remaining = materialize(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct())
     var remCount = remaining.count()
     // finished (id, root) pieces are each small and already materialized;
@@ -772,14 +771,18 @@ object Algos {
     val doneParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     doneParts += selfOnly
     var outer = 0
+    val maxPeel = 4 // trim peel steps per outer round
     // Only the final single-shuffle canonicalization escapes the sized
-    // scope, deliberately — it runs at the session's parallelism. The
-    // rounds stay hand-rolled: the capped trim peel's cache/uncache chain
-    // replaces `e` and `remaining` with frames it stored itself, which no
-    // Rounds step takes over.
+    // scope, deliberately — it runs at the session's parallelism.
     val done = loop(e) { (sc, e0) =>
-      e = e0
-      remaining = sc.in(remaining)
+      // `e` and `remaining` across trim peels and coloring passes: a peel
+      // step caches (`e` checkpoints every 3rd), the peel ends with done()
+      // — which checkpoints a pending cache and frees every superseded
+      // frame — and the coloring pass is each outer round's last,
+      // checkpointed step
+      val colorStep = maxPeel + 1
+      val es = new Rounds(e0, every = 3, last = colorStep)
+      val rs = new Rounds(sc.in(remaining), every = Int.MaxValue, last = colorStep)
       while (remCount > 0 && outer < maxOuter) {
       outer += 1
       // ---- local finish: once the residual subgraph fits comfortably on
@@ -791,9 +794,9 @@ object Algos {
       // distributed trim+coloring rounds above it are what shrink a
       // 100 TB graph down to that bound. maxLocalEdges=0 disables the
       // shortcut entirely (used by the distributed-path specs).
-      val eCnt = if (maxLocalEdges > 0L) e.count() else Long.MaxValue
+      val eCnt = if (maxLocalEdges > 0L) es.cur.count() else Long.MaxValue
       if (eCnt <= maxLocalEdges) {
-        doneParts += localTarjan(spark, remaining, e)
+        doneParts += localTarjan(spark, rs.cur, es.cur)
         remCount = 0L
       } else {
       // ---- trim: in-degree-0 or out-degree-0 nodes are singleton SCCs.
@@ -806,75 +809,66 @@ object Algos {
       // serial micro-job pair per round to drop a handful of tail nodes.
       var trimming = true
       var trimRounds = 0
-      while (trimming && trimRounds < 4) {
+      while (trimming && trimRounds < maxPeel) {
         trimRounds += 1
+        val e = es.cur
         val keepIds = e.select(col("u").as("id"), lit(1).as("m"))
           .unionByName(e.select(col("v").as("id"), lit(2).as("m")))
           .groupBy("id").agg(min("m").as("lo"), max("m").as("hi"))
           .filter(col("lo") === 1 && col("hi") === 2).select("id")
-        val dropped = materialize(remaining.join(keepIds, Seq("id"), "left_anti")
+        val dropped = materialize(rs.cur.join(keepIds, Seq("id"), "left_anti")
           .select(col("id"), col("id").as("root")))
         val nDropped = dropped.count() // cheap: checkpointed, loopParts tasks
-        if (nDropped == 0L) { trimming = false; release(dropped) }
+        if (nDropped == 0L) { trimming = false; rs.scratch(dropped) }
         else {
           doneParts += dropped
           remCount -= nDropped
-          val prevR = remaining
-          val prevE = e
-          remaining = cache(
-            remaining.join(dropped.select("id"), Seq("id"), "left_anti"))
-          val nextE = e.join(remaining.select(col("id").as("u")), Seq("u"))
+          val remaining = rs.step(trimRounds,
+            rs.cur.join(dropped.select("id"), Seq("id"), "left_anti"))
+          es.step(trimRounds, e.join(remaining.select(col("id").as("u")), Seq("u"))
             .join(remaining.select(col("id").as("v")), Seq("v"))
-            .select("u", "v")
-          e = if (trimRounds % 3 == 0) materialize(nextE) else cache(nextE)
-          // uncache only (cache entries): the NEW remaining/e are
-          // lazy here, so the old frames' checkpoint blocks must survive
-          // until the next action forces the chain — release() would
-          // break recompute (checkpointed RDDs have no lineage)
-          uncache(prevR, prevE)
+            .select("u", "v"))
         }
       }
-      if (trimRounds > 1) { // cut lineage once after the peel
-        remaining = materialize(remaining); e = materialize(e)
-      }
+      // cut lineage once after the peel; `e` reads `remaining`'s caches,
+      // so it is stored before they are freed
+      val e = es.done()
+      val remaining = rs.done()
       if (remCount > 0) {
         // ---- forward pass: fwd(u) = max id that reaches u. One edge
         // relaxation + one POINTER-JUMPING shortcut per step (fwd(u) :=
         // max(fwd(u), fwd(fwd(u))) — valid because whatever reaches my
         // best ancestor reaches me), so chains collapse in O(log d)
         // steps, not O(d).
-        val fwd = maxColoring(e, remaining, maxInner)
+        val fwd = es.scratch(maxColoring(e, remaining, maxInner))
         // ---- backward pass on the REVERSED, same-color-restricted
         // subgraph: every node's color class has ids <= its color c (a
         // node's color is at least itself), and a path u→c inside the
         // class stays inside the class — so bwd(u) = max id u reaches
         // within its class equals c exactly when u reaches the root.
         // SCC(c) = { u : fwd(u) = bwd(u) = c }, for EVERY class at once.
-        val eSame = materialize(e
+        val eSame = es.scratch(materialize(e
           .join(fwd.select(col("id").as("u"), col("color").as("cu")), Seq("u"))
           .join(fwd.select(col("id").as("v"), col("color").as("cv")), Seq("v"))
           .filter(col("cu") === col("cv"))
-          .select(col("v").as("u"), col("u").as("v")))
-        val bwd = maxColoring(eSame, remaining, maxInner)
+          .select(col("v").as("u"), col("u").as("v"))))
+        val bwd = es.scratch(maxColoring(eSame, remaining, maxInner))
         val members = materialize(
           fwd.join(bwd.withColumnRenamed("color", "bcolor"), "id")
             .filter(col("color") === col("bcolor"))
             .select(col("id"), col("color").as("root")))
         doneParts += members
-        val prevR = remaining
-        val prevE = e
-        remaining = materialize(
-          remaining.join(members.select("id"), Seq("id"), "left_anti"))
-        remCount = remaining.count()
-        e = materialize(
+        // both steps checkpoint, then free the pass's frames: the
+        // superseded `remaining`/`e` and the fwd/eSame/bwd scratch
+        remCount = rs.step(colorStep,
+          remaining.join(members.select("id"), Seq("id"), "left_anti")).count()
+        es.step(colorStep,
           e.join(members.select(col("id").as("u")), Seq("u"), "left_anti")
             .join(members.select(col("id").as("v")), Seq("v"), "left_anti"))
-        // members/remaining/e are all checkpointed above — every frame of
-        // this pass is dead and release is safe
-        release(prevR, prevE, fwd, bwd, eSame)
       }
       }
       }
+      es.close(); rs.close()
       doneParts.reduce(_ unionByName _) // selfOnly is always a part
     }
     if (remCount > 0) throw new IllegalStateException(

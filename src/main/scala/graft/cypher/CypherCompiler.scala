@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 import Ast._
 import graft.functions.CypherFunctions
 import graft.graph.{PatternMatcher, PropertyGraph}
-import graft.graph.PropertyGraph.{EID, ID, LABEL}
+import graft.graph.PatternMatcher.{bindScope, identity, padStructs, scopeKey}
+import graft.graph.PropertyGraph.LABEL
 
 /** Compiles a parsed Cypher query to a Catalyst plan over a
   * [[PropertyGraph]].
@@ -17,8 +18,9 @@ import graft.graph.PropertyGraph.{EID, ID, LABEL}
   * ordering, pushdown, and codegen:
   *
   *  - MATCH      → [[PatternMatcher]] join plans; consecutive MATCHes join
-  *                 on shared variables' node ids (inner / left-outer for
-  *                 OPTIONAL), so Catalyst still sees one join tree.
+  *                 on shared variables' identities (inner / left-outer for
+  *                 OPTIONAL, [[PatternMatcher.bindScope]]), so Catalyst
+  *                 still sees one join tree.
   *  - WHERE      → `Column` predicate pushed into the join (pattern
   *                 predicates become semi/anti joins).
   *  - WITH/RETURN→ projections; implicit Cypher grouping (any aggregate in
@@ -188,55 +190,27 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
       .flatMap(p => p.nodes.map(_.name) ++ p.rels.map(_.name)).toSet
     val patDF = pm.compilePaths(paths, known, keepAnon)
 
+    val whereOn = plainWhere.map(w => (d: DataFrame) => compileExpr(d, w))
     ctx match {
       // leading OPTIONAL MATCH: openCypher yields ONE all-null row when
       // nothing matches — left-outer from a single-row frame, with the
       // WHERE folded into the join condition (filtering after the join
       // would wrongly drop the null row)
       case None if optional =>
-        val matched0 = applyPatternPreds(patDF, patternPreds, newLabels)
-        val whereCond = plainWhere.map(w => compileExpr(matched0, w)).getOrElse(lit(true))
         val one = spark.range(1).select(lit(1).as("__opt_one"))
-        val df = one.join(matched0, whereCond, "left_outer").drop("__opt_one")
-        Ctx(df, newLabels)
+        val matched = applyPatternPreds(patDF, patternPreds, newLabels)
+        Ctx(bindScope(one, matched, "left_outer", whereOn).drop("__opt_one"), newLabels)
       case None =>
         var df = patDF
         df = applyPatternPreds(df, patternPreds, newLabels)
         plainWhere.foreach(w => df = df.filter(compileExpr(df, w)))
         Ctx(df, newLabels, deadMatch)
       case Some(c) =>
-        val shared = c.df.columns.toSet.intersect(patDF.columns.toSet).toSeq.sorted
-        val renamed = shared.foldLeft(patDF)((d, v) => d.withColumnRenamed(v, s"__m_$v"))
-        val joinCond = shared.map { v =>
-          if (isStructWithId(c.df, v)) col(s"$v.$ID") === col(s"__m_$v.$ID")
-          else col(v) === col(s"__m_$v")
-        }.reduceOption(_ && _)
-        // schema-only frame for compiling WHERE that spans both sides
-        val schemaFrame = c.df.crossJoin(renamed)
-        val whereCond = plainWhere.map(w => compileExpr(schemaFrame, w))
-        val joined =
-          if (optional) {
-            val cond = (joinCond ++ whereCond).reduceOption(_ && _).getOrElse(lit(true))
-            c.df.join(renamed, cond, "left_outer")
-          } else joinCond match {
-            case Some(jc) =>
-              val cond = (Seq(jc) ++ whereCond).reduce(_ && _)
-              c.df.join(renamed, cond, "inner")
-            case None =>
-              val crossed = c.df.crossJoin(renamed)
-              whereCond.map(crossed.filter).getOrElse(crossed)
-          }
-        var df = joined.drop(shared.map(v => s"__m_$v"): _*)
-        df = applyPatternPreds(df, patternPreds, newLabels)
-        Ctx(df, newLabels, c.staticallyEmpty || deadMatch)
+        val joined = bindScope(c.df, patDF, if (optional) "left_outer" else "inner", whereOn)
+        Ctx(applyPatternPreds(joined, patternPreds, newLabels), newLabels,
+          c.staticallyEmpty || deadMatch)
     }
   }
-
-  private def isStructWithId(df: DataFrame, name: String): Boolean =
-    df.schema.find(_.name == name).map(_.dataType) match {
-      case Some(st: StructType) => st.fieldNames.contains(ID)
-      case _ => false
-    }
 
   /** Split a WHERE into plain predicate conjuncts and pattern predicates
     * (which compile to semi/anti joins, reference analog:
@@ -272,15 +246,9 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
       val patVars = paths.flatMap(_.nodes).map(_.name).toSet
       val known = labels.filter { case (v, _) => patVars(v) }
       val sub = pm.compilePaths(paths, known)
-      val shared = d.columns.toSet.intersect(sub.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty, "pattern predicate shares no variables with the query")
-      val renamed = shared.foldLeft(sub)((x, v) => x.withColumnRenamed(v, s"__p_$v"))
-      val cond = shared.map { v =>
-        if (isStructWithId(d, v)) col(s"$v.$ID") === col(s"__p_$v.$ID")
-        else col(v) === col(s"__p_$v")
-      }.reduce(_ && _)
-      d.join(renamed.select(shared.map(v => col(s"__p_$v")): _*),
-        cond, if (negated) "left_anti" else "left_semi")
+      require(sub.columns.exists(d.columns.contains),
+        "pattern predicate shares no variables with the query")
+      bindScope(d, sub, if (negated) "left_anti" else "left_semi")
     }
 
   // ------------------------------------------------------------------
@@ -348,14 +316,9 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     val shared = c.df.columns.toSet.intersect(patVars).toSeq.sorted
     require(shared.nonEmpty, "pattern comprehension must use a bound variable")
     val sub = pc.where.map(w => sub0.filter(compileExpr(sub0, w))).getOrElse(sub0)
-    def key(d: DataFrame, v: String): Column =
-      if (isStructWithId(d, v)) col(s"$v.$ID") else col(v)
-    val grouped = sub
-      .groupBy(shared.map(v => key(sub, v).as(s"__pck_$v")): _*)
+    val grouped = sub.groupBy(shared.map(v => scopeKey(sub, v)): _*)
       .agg(collect_list(compileExpr(sub, pc.proj)).as(tmp))
-    val cond = shared.map(v => key(c.df, v) === col(s"__pck_$v")).reduce(_ && _)
-    val joined = c.df.join(grouped, cond, "left_outer")
-      .drop(shared.map(v => s"__pck_$v"): _*)
+    val joined = bindScope(c.df, grouped, "left_outer")
     val listT = joined.schema(tmp).dataType
     (Ctx(joined.withColumn(tmp, coalesce(col(tmp), array().cast(listT))), c.labels), tmp)
   }
@@ -386,23 +349,6 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     }
     go(e)
   }
-
-  /** Identity-key columns for a bare variable bound to a node/edge
-    * struct: fixed-length rels → `_eid`; nodes → `(_id, _label)` (ids are
-    * only unique per label — GraphLoader reuses the relational keys).
-    * None for scalars and var-length rel structs (`{_hops,_eids,_label}`
-    * has no single identity). Used so implicit aggregation shuffles carry
-    * bytes of identity instead of whole property payloads (r5 verdict:
-    * full-node-payload exchange on aggregation keys).
-    */
-  private def entityIdCols(df: DataFrame, n: String): Option[Seq[Column]] =
-    df.schema.fields.find(_.name == n).map(_.dataType).collect {
-      case st: StructType if st.fieldNames.contains(EID) =>
-        Seq(col(n).getField(EID))
-      case st: StructType if st.fieldNames.contains(ID) =>
-        col(n).getField(ID) +:
-          (if (st.fieldNames.contains(LABEL)) Seq(col(n).getField(LABEL)) else Nil)
-    }
 
   private[cypher] def applyProjection(ctx: Option[Ctx], p: Projection): DataFrame = {
     // pattern-comprehension pre-pass: each one joins its collected list
@@ -442,14 +388,16 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
 
     if (hasAgg) {
       val (aggItems0, groupItems) = items.partition(it => CypherParser.containsAgg(it.expr))
-      // Entity group items hash-partition on identity ids, not the whole
-      // property struct; the payload is re-attached with first() so at
-      // most one struct per group per partition crosses the exchange
-      // (map-side combined) instead of one per input row.
+      // Entity group items hash-partition on their identity
+      // (PatternMatcher.identity), not the whole property struct (r5
+      // verdict: full-node-payload exchange on aggregation keys); the
+      // payload is re-attached with first() so at most one struct per
+      // group per partition crosses the exchange (map-side combined)
+      // instead of one per input row.
       val plans = groupItems.zipWithIndex.map { case (it, i) =>
         it.expr match {
-          case Var(n) if entityIdCols(base, n).isDefined =>
-            val keys = entityIdCols(base, n).get.zipWithIndex.map {
+          case Var(n) if identity(base, n).isDefined =>
+            val keys = identity(base, n).get.zipWithIndex.map {
               case (k, j) => k.as(s"__gk_${i}_$j")
             }
             (keys, Some(first(col(n)).as(it.name)))
@@ -468,7 +416,7 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
       // memory contract in the function library, carried since r5).
       val rawKeys: Seq[Column] = groupItems.flatMap { it =>
         it.expr match {
-          case Var(n) if entityIdCols(base, n).isDefined => entityIdCols(base, n).get
+          case Var(n) if identity(base, n).isDefined => identity(base, n).get
           case e => Seq(compileExpr(base, e))
         }
       }
@@ -699,28 +647,13 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     case _ => false
   }
 
-  /** Array of the named struct columns padded to their union field set
-    * (first-seen order, first-seen dtype) so heterogeneous entity schemas
-    * share one Spark array element type — the same padding rule as
-    * PatternMatcher.harmonizeUnion, applied per-row instead of per-frame.
-    */
+  /** Array of the named entity struct columns, padded to one element
+    * type ([[PatternMatcher.padStructs]], applied per row). */
   private def harmonizedStructArray(df: DataFrame, vars: Seq[String]): Column = {
-    val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
-    vars.foreach { v =>
-      df.schema(v).dataType match {
-        case st: StructType =>
-          st.fields.foreach(f => if (!fields.contains(f.name)) fields(f.name) = f)
-        case t => sys.error(s"path variable $v is not an entity struct ($t)")
-      }
-    }
-    val target = fields.values.toSeq
-    array(vars.map { v =>
-      val have = df.schema(v).dataType.asInstanceOf[StructType].fieldNames.toSet
-      struct(target.map { f =>
-        if (have(f.name)) col(s"`$v`.`${f.name}`").as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
-    }.toIndexedSeq: _*)
+    val types = vars.map(v => v -> df.schema(v).dataType)
+    types.collectFirst { case (v, t) if !t.isInstanceOf[StructType] =>
+      sys.error(s"path variable $v is not an entity struct ($t)") }
+    array(padStructs(types): _*)
   }
 
   def compileExpr(df: DataFrame, e: Expr, env: Map[String, Column] = Map.empty): Column = {
@@ -735,7 +668,7 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
       // path functions over a named path. Fixed-length paths return FULL
       // node/relationship structs (reference analog: executor path values
       // carry whole entities); heterogeneous label schemas are padded to
-      // the union of fields like PatternMatcher.harmonizeUnion. Var-length
+      // the union of fields (PatternMatcher.padStructs). Var-length
       // segments materialize only endpoint ids (_eids/_hops) — there the
       // id-array form remains (documented divergence: intermediate
       // entities of a *min..max segment are not re-joined).
@@ -940,9 +873,9 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
           val cols =
             if (star) Seq.empty
             else if (lname == "count") args.flatMap {
-              case Var(n) if !env.contains(n) && entityIdCols(df, n).isDefined =>
-                if (distinct) entityIdCols(df, n).get
-                else entityIdCols(df, n).get.take(1)
+              case Var(n) if !env.contains(n) && identity(df, n).isDefined =>
+                if (distinct) identity(df, n).get
+                else identity(df, n).get.take(1)
               case a => Seq(go(a))
             }
             else args.map(go)

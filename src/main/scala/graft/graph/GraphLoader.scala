@@ -86,11 +86,11 @@ object GraphLoader {
   private val cache = TrieMap.empty[(SparkSession, String), PropertyGraph]
   private val derivedWriteLock = new Object
 
-  /** Content signature of a source table's files (names + sizes +
-    * mtimes) — keys the derived-frame snapshot so a changed corpus can
-    * never serve a stale derivation.
+  /** Content of a source table's files (names + sizes + mtimes) — part
+    * of the derived-frame snapshot key so a changed corpus can never
+    * serve a stale derivation.
     */
-  private def sourceSignature(spark: SparkSession, dir: String, table: String): String = {
+  private def sourceFiles(spark: SparkSession, dir: String, table: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"$dir/$table.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -98,7 +98,7 @@ object GraphLoader {
       case s if s.isDirectory => fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
       case s => Seq(s)
     }
-    md5Hex(dir +: parts.map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}"))
+    parts.map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
   }
 
   /** Identity of a derivation — keys the snapshot so a changed
@@ -106,9 +106,9 @@ object GraphLoader {
     * plan (canonicalization strips session-specific exprIds, and also
     * alias names, hence the output schema too).
     */
-  private def derivationSignature(df: DataFrame): String =
-    md5Hex(Seq(df.queryExecution.analyzed.canonicalized
-      .treeString(verbose = true, maxFields = Int.MaxValue), df.schema.json))
+  private def derivationSignature(df: DataFrame): Seq[String] =
+    Seq(df.queryExecution.analyzed.canonicalized
+      .treeString(verbose = true, maxFields = Int.MaxValue), df.schema.json)
 
   private def md5Hex(parts: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -132,25 +132,33 @@ object GraphLoader {
     * instead of re-deriving. At 100 TB this is the standard "derive
     * once, checkpoint to storage" pattern for expensive derived views.
     *
-    * The key is the name, the files of the `source` table and the
-    * derivation's own identity ([[derivationSignature]]), so neither a
-    * changed source nor a changed derivation can serve a stale snapshot.
-    * Keying needs the derivation's analyzed plan, which also fixes the
-    * snapshot's schema: the read-back takes it instead of inferring it
-    * from a footer.
+    * The key is `<name>_<corpus dir hash>_<signature>`, the signature
+    * hashing the files of the `source` table and the derivation's own
+    * identity ([[derivationSignature]]), so neither a changed source nor
+    * a changed derivation can serve a stale snapshot. A new snapshot
+    * supersedes its siblings — same name, same corpus dir — and the
+    * write deletes them, so a long-lived warehouse keeps one snapshot
+    * per name and corpus. Keying needs the derivation's analyzed plan,
+    * which also fixes the snapshot's schema: the read-back takes it
+    * instead of inferring it from a footer.
     */
   private[graph] def derivedSnapshot(spark: SparkSession, dir: String, name: String,
       source: String)(derive: => DataFrame): DataFrame = {
     import org.apache.hadoop.fs.Path
     val df = derive
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$warehouse/graft_derived/${name}_" +
-      s"${sourceSignature(spark, dir, source)}_${derivationSignature(df)}"
+    val root = new Path(s"${spark.conf.get("spark.sql.warehouse.dir")}/graft_derived")
+    val family = s"${name}_${md5Hex(Seq(dir))}_"
+    val path = s"$root/$family" +
+      md5Hex(sourceFiles(spark, dir, source) ++ derivationSignature(df))
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     derivedWriteLock.synchronized {
-      if (!fs.exists(new Path(path, "_SUCCESS")))
+      if (!fs.exists(new Path(path, "_SUCCESS"))) {
         df.write.mode("overwrite").parquet(path)
+        fs.listStatus(root).map(_.getPath)
+          .filter(s => s.getName.startsWith(family) && s.getName != p.getName)
+          .foreach(fs.delete(_, true))
+      }
     }
     spark.read.schema(df.schema).parquet(path)
   }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType, LongType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType, LongType}
 import graft.cypher.Ast.{Expr, In, NodePat, Out, PathPat, RelPat, Undirected}
 import graft.cypher.CypherParser
 import PropertyGraph.{ID, SRC, DST, EID, LABEL}
@@ -22,16 +22,24 @@ import PropertyGraph.{ID, SRC, DST, EID, LABEL}
   * (label, edge-class) combination — compiled as a union of the per-
   * assignment plans with struct schemas harmonized (missing props null).
   *
+  * This is the one module that decides how a pattern variable is keyed,
+  * filtered, padded and expanded. Identity rule: node ids are only
+  * unique PER LABEL ([[GraphLoader]] reuses the relational keys, so
+  * Person 1 and City 1 both have `_id` 1), so a node is keyed on
+  * `(_id, _label)`, a fixed-length relationship on its type-salted
+  * `_eid`, and anything else (scalars, var-length rel structs) on its
+  * whole value — [[PatternMatcher.identity]]. Every join of a pattern
+  * onto variables already in scope goes through
+  * [[PatternMatcher.bindScope]].
+  *
   * @param varLengthCap expansion bound for `*..`/`*n..` patterns with no
   *   upper bound — a driver-side safety net, not a semantic limit.
   */
 final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
+  import PatternMatcher._
 
   /** True when walking left→right follows the edge's src→dst. */
   private final case class RelChoice(et: EdgeType, forward: Boolean)
-
-  /** Set per compile: lone anonymous var-length rel → frontier dedup. */
-  private var dedupFrontier: Boolean = false
 
   /** Set per compile: every label each variable must carry (union over
     * its pattern occurrences — primary + `:A:B` secondaries). Labels
@@ -72,13 +80,13 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
     // A named path (`keep` contains the rel) makes it observable via
     // relationships(p)/length(p) — trail semantics then apply.
     val rels = paths.flatMap(_.rels)
-    dedupFrontier = rels.size == 1 && rels.head.isVarLength &&
+    val dedup = rels.size == 1 && rels.head.isVarLength &&
       rels.head.anonymous && !keep(rels.head.name)
     val assigns = enumerateAssignments(paths, known)
     // Cypher semantics (and the reference): MATCH on a label / edge class
     // absent from the graph yields zero rows, not an error.
     if (assigns.isEmpty) return emptyResult(paths, keep)
-    val branches = assigns.map(a => compileAssignment(paths, a))
+    val branches = assigns.map(a => compileAssignment(paths, a, dedup))
     val unioned = harmonizeUnion(branches)
     val withUniq = relUniquenessFilters(paths, unioned)
     // anonymous variables are implementation detail — drop them, except
@@ -112,14 +120,8 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
 
   /** OPTIONAL MATCH: left-join `pattern` onto `base` via shared variables. */
   def optional(base: DataFrame, pattern: String,
-      known: Map[String, String] = Map.empty): DataFrame = {
-    val pat = compile(pattern, known)
-    val shared = base.columns.toSet.intersect(pat.columns.toSet).toSeq.sorted
-    val renamed = shared.foldLeft(pat)((d, v) => d.withColumnRenamed(v, s"__opt_$v"))
-    val cond = shared.map(v => col(s"$v.$ID") === col(s"__opt_$v.$ID"))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    base.join(renamed, cond, "left_outer").drop(shared.map(v => s"__opt_$v"): _*)
-  }
+      known: Map[String, String] = Map.empty): DataFrame =
+    bindScope(base, compile(pattern, known), "left_outer")
 
   // ------------------------------------------------------------------
   // label assignment enumeration
@@ -225,15 +227,17 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
   private def hintEdges(ev: DataFrame, choices: Seq[RelChoice]): DataFrame =
     if (choices.forall(c => g.smallTypes(c.et.relType))) broadcast(ev) else ev
 
+  /** Cypher property-map match: a key the frame lacks matches NOTHING
+    * (every row's value for it is null, and null = x is never true) —
+    * zero rows, not an error. */
+  private def propFilter(raw: DataFrame, props: Seq[(String, Any)]): DataFrame =
+    props.foldLeft(raw) { case (d, (k, v)) =>
+      d.filter(if (raw.columns.contains(k)) col(k) === lit(v) else lit(false))
+    }
+
   private def nodeStruct(label: String, pat: NodePat): DataFrame = {
     val raw = g.nodeFrame(label)
-    // Cypher: a property-map key the label's schema lacks matches NOTHING
-    // (every node's value for it is null, and null = x is never true) —
-    // zero rows, not an error
-    val filtered = pat.props.foldLeft(raw) { case (d, (k, v)) =>
-      if (raw.columns.contains(k)) d.filter(col(k) === lit(v))
-      else d.filter(lit(false))
-    }
+    val filtered = propFilter(raw, pat.props)
     // multi-label shim: required labels beyond the frame's own must be
     // present in the row's `_labels` array (null/absent → no match)
     val extraLabels = requiredLabels.getOrElse(pat.name, pat.allLabels) - label
@@ -248,12 +252,7 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
 
   /** Edge view for one choice: rel struct + flat __from/__to join helpers. */
   private def edgeView(r: RelPat, c: RelChoice): DataFrame = {
-    val raw = g.edgeFrame(c.et)
-    // missing property key → matches nothing (same rule as nodeStruct)
-    val filtered = r.props.foldLeft(raw) { case (d, (k, v)) =>
-      if (raw.columns.contains(k)) d.filter(col(k) === lit(v))
-      else d.filter(lit(false))
-    }
+    val filtered = propFilter(g.edgeFrame(c.et), r.props)
     val fields = filtered.columns.map(col) :+ lit(c.et.relType).as(LABEL)
     val fromCol = if (c.forward) SRC else DST
     val toCol = if (c.forward) DST else SRC
@@ -264,7 +263,7 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
   }
 
   private def compileAssignment(paths: Vector[PathPat],
-      assign: Map[String, String]): DataFrame = {
+      assign: Map[String, String], dedup: Boolean): DataFrame = {
     var df: DataFrame = null
     val bound = scala.collection.mutable.Set[String]()
 
@@ -288,7 +287,7 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
         require(choices.nonEmpty, s"No edge class for ${r} between " +
           s"${assign(leftVar)} and ${assign(rightPat.name)}")
         if (r.isVarLength) {
-          df = expandVarLength(df, leftVar, r, choices)
+          df = expandVarLength(df, leftVar, r, choices, dedup)
         } else {
           val ev = harmonizeUnion(choices.map(c => edgeView(r, c)))
           df = df.join(hintEdges(ev, choices), col(s"$leftVar.$ID") === col(s"${r.name}__from"))
@@ -308,11 +307,16 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
     df
   }
 
-  /** Iterative frontier expansion for `-[:T*min..max]->`.
+  /** Iterative frontier expansion for `-[:T*min..max]->`: one hop loop
+    * in one of two modes.
     *
-    * Trail semantics: each path carries its set of used edge ids and an
-    * edge may not repeat (Cypher relationship uniqueness within a path).
-    * Result binds the rel variable to a struct {_hops, _eids, _label} and
+    * Trail (default): each path carries its used edge-id array and a hop
+    * may not reuse an edge (Cypher relationship uniqueness within a
+    * path). Dedup (`dedup`, a lone anonymous var-length rel — see
+    * [[compilePaths]]): each level carries only its hop count and is
+    * `distinct()`-ed on (bound vars, current endpoint) — reachability
+    * with no trail enumeration. Result binds the rel variable to a
+    * struct {_hops, _eids, _label} (`_eids` empty in dedup mode) and
     * leaves flat `<rel>__from` / `<rel>__to` columns for the caller to
     * join the terminal node (dropped afterwards like fixed-length rels).
     *
@@ -322,24 +326,18 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
     * use graft.algos BFS instead.
     */
   private def expandVarLength(df0: DataFrame, leftVar: String, r: RelPat,
-      choices: Seq[RelChoice]): DataFrame = {
+      choices: Seq[RelChoice], dedup: Boolean): DataFrame = {
     val cur = s"${r.name}__cur"
-    val eidsC = s"${r.name}__eids"
+    val carried = s"${r.name}__${if (dedup) "hops" else "eids"}"
     // minimal normalized edge relation (from, to, eid) unioned over
     // choices; the broadcast hint (when every choice is a small dim) goes
     // on the join input itself, not the stored frame — a hint buried under
     // the union drew HintErrorLogger warnings (r2/r3 verdicts)
     val edgesRaw = choices.map { c =>
-      val raw = g.edgeFrame(c.et)
-      // missing property key → matches nothing (same rule as nodeStruct)
-      val filtered = r.props.foldLeft(raw) { case (d, (k, v)) =>
-        if (raw.columns.contains(k)) d.filter(col(k) === lit(v))
-        else d.filter(lit(false))
-      }
       val fromCol = if (c.forward) SRC else DST
       val toCol = if (c.forward) DST else SRC
-      filtered.select(col(fromCol).as("__vl_from"), col(toCol).as("__vl_to"),
-        col(EID).as("__vl_eid"))
+      propFilter(g.edgeFrame(c.et), r.props).select(col(fromCol).as("__vl_from"),
+        col(toCol).as("__vl_to"), col(EID).as("__vl_eid"))
     }.reduce(_ unionByName _)
     val edgesN =
       if (choices.forall(c => g.smallTypes(c.et.relType))) broadcast(edgesRaw)
@@ -352,57 +350,30 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
       if (choices.map(_.et.relType).distinct.size == 1) lit(choices.head.et.relType)
       else lit(null).cast("string")
 
-    val unioned = if (dedupFrontier) {
-      // reachability mode: dedupe (bound vars, current endpoint) per hop;
-      // no edge-id arrays carried, no trail enumeration
-      val hopsC = s"${r.name}__hops"
-      val base = df0
-        .withColumn(cur, col(s"$leftVar.$ID"))
-        .withColumn(hopsC, lit(0L))
-      val levels = Seq.newBuilder[DataFrame]
-      if (r.minHops == 0) levels += base
-      var frontier = base
-      for (h <- 1 to maxH) {
-        frontier = frontier
-          .join(edgesN, col(cur) === col("__vl_from"))
-          .withColumn(cur, col("__vl_to"))
-          .withColumn(hopsC, lit(h.toLong))
-          .drop("__vl_from", "__vl_to", "__vl_eid")
-          .distinct()
-        if (h >= math.max(r.minHops, 1)) levels += frontier
-      }
-      levels.result().reduce(_ unionByName _)
-        .withColumn(r.name, struct(
-          col(hopsC).as("_hops"),
-          typedLit(Array.empty[Long]).as("_eids"),
-          relTypeLit.as(LABEL)))
-        .drop(hopsC)
-    } else {
-      // trail mode: Cypher relationship-uniqueness within a path — carry
-      // the used edge-id set and never reuse an edge
-      val base = df0
-        .withColumn(cur, col(s"$leftVar.$ID"))
-        .withColumn(eidsC, typedLit(Array.empty[Long]))
-      val levels = Seq.newBuilder[DataFrame]
-      if (r.minHops == 0) levels += base
-      var frontier = base
-      for (h <- 1 to maxH) {
-        frontier = frontier
-          .join(edgesN, col(cur) === col("__vl_from"))
-          .filter(!array_contains(col(eidsC), col("__vl_eid")))
-          .withColumn(cur, col("__vl_to"))
-          .withColumn(eidsC, concat(col(eidsC), array(col("__vl_eid"))))
-          .drop("__vl_from", "__vl_to", "__vl_eid")
-        if (h >= math.max(r.minHops, 1)) levels += frontier
-      }
-      levels.result().reduce(_ unionByName _)
-        .withColumn(r.name, struct(
-          size(col(eidsC)).cast(LongType).as("_hops"),
-          col(eidsC).as("_eids"),
-          relTypeLit.as(LABEL)))
-        .drop(eidsC)
+    val noEids = typedLit(Array.empty[Long])
+    val base = df0
+      .withColumn(cur, col(s"$leftVar.$ID"))
+      .withColumn(carried, if (dedup) lit(0L) else noEids)
+    val levels = Seq.newBuilder[DataFrame]
+    if (r.minHops == 0) levels += base
+    var frontier = base
+    for (h <- 1 to maxH) {
+      val joined = frontier.join(edgesN, col(cur) === col("__vl_from"))
+      val next = (if (dedup) joined
+          else joined.filter(!array_contains(col(carried), col("__vl_eid"))))
+        .withColumn(cur, col("__vl_to"))
+        .withColumn(carried,
+          if (dedup) lit(h.toLong) else concat(col(carried), array(col("__vl_eid"))))
+        .drop("__vl_from", "__vl_to", "__vl_eid")
+      frontier = if (dedup) next.distinct() else next
+      if (h >= math.max(r.minHops, 1)) levels += frontier
     }
-    unioned
+    val (hops, eids) =
+      if (dedup) (col(carried), noEids)
+      else (size(col(carried)).cast(LongType), col(carried))
+    levels.result().reduce(_ unionByName _)
+      .withColumn(r.name, struct(hops.as("_hops"), eids.as("_eids"), relTypeLit.as(LABEL)))
+      .drop(carried)
       .withColumn(s"${r.name}__from", col(s"$leftVar.$ID"))
       .withColumn(s"${r.name}__to", col(cur))
       .drop(cur)
@@ -414,39 +385,13 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
 
   /** Union DataFrames whose identically-named struct columns may have
     * different field sets (heterogeneous labels): pad every struct to the
-    * union of fields (nulls for missing), then unionByName.
+    * union of fields ([[PatternMatcher.padStructs]]), then unionByName.
     */
   private def harmonizeUnion(dfs: Seq[DataFrame]): DataFrame = {
     if (dfs.size == 1) return dfs.head
-    val colNames = dfs.head.columns.toSeq
-    // target field list per struct column: ordered union, first-seen dtype
-    val targets: Map[String, Seq[StructField]] = colNames.map { c =>
-      val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
-      dfs.foreach { d =>
-        d.schema(c).dataType match {
-          case st: StructType =>
-            st.fields.foreach(f => if (!fields.contains(f.name)) fields(f.name) = f)
-          case _ => // non-struct column: no harmonization
-        }
-      }
-      c -> fields.values.toSeq
-    }.toMap
-    val padded = dfs.map { d =>
-      val cols = colNames.map { c =>
-        d.schema(c).dataType match {
-          case st: StructType =>
-            val have = st.fieldNames.toSet
-            val fs = targets(c).map { f =>
-              if (have(f.name)) col(s"`$c`.`${f.name}`").as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }
-            struct(fs.toIndexedSeq: _*).as(c)
-          case _ => col(c)
-        }
-      }
-      d.select(cols.toIndexedSeq: _*)
-    }
-    padded.reduce(_ unionByName _)
+    val padded = dfs.head.columns.toSeq.map(c =>
+      padStructs(dfs.map(d => c -> d.schema(c).dataType)))
+    dfs.indices.map(i => dfs(i).select(padded.map(_(i)): _*)).reduce(_ unionByName _)
   }
 
   /** Cypher relationship uniqueness: two relationship bindings in one
@@ -478,5 +423,84 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
       }
     }
     out
+  }
+}
+
+object PatternMatcher {
+
+  /** Identity columns of an entity value of type `t` at `ref`: a
+    * fixed-length relationship's `_eid`; a node's `(_id, _label)` — ids
+    * are only unique per label. None for scalars and var-length rel
+    * structs (`{_hops,_eids,_label}` has no single identity), which are
+    * keyed on their whole value.
+    */
+  def identity(t: DataType, ref: Column): Option[Seq[Column]] =
+    identityFields(t).map(_.map(ref.getField))
+
+  /** [[identity]] of the column `n` of `df`, None when `df` has no `n`. */
+  def identity(df: DataFrame, n: String): Option[Seq[Column]] =
+    df.schema.fields.find(_.name == n).flatMap(f => identity(f.dataType, col(n)))
+
+  private def identityFields(t: DataType): Option[Seq[String]] = t match {
+    case st: StructType if st.fieldNames.contains(EID) => Some(Seq(EID))
+    case st: StructType if st.fieldNames.contains(ID) =>
+      Some(ID +: (if (st.fieldNames.contains(LABEL)) Seq(LABEL) else Nil))
+    case _ => None
+  }
+
+  /** The key columns [[bindScope]] joins `t`-typed values on. */
+  private def key(t: DataType, ref: Column): Seq[Column] = identity(t, ref).getOrElse(Seq(ref))
+
+  /** Joins a compiled `pattern` onto `base` through the variables both
+    * bind, each keyed on its [[PatternMatcher.identity]] (the type in
+    * `base` decides the key). `how` is `inner` (a cross join when nothing
+    * is shared), `left_outer`, `left_semi` or `left_anti`; `on` compiles
+    * an extra condition over a frame holding both sides, where a shared
+    * name resolves to `base`'s column. The result keeps `base`'s binding
+    * of every shared variable.
+    */
+  def bindScope(base: DataFrame, pattern: DataFrame, how: String,
+      on: Option[DataFrame => Column] = None): DataFrame = {
+    val shared = base.columns.toSet.intersect(pattern.columns.toSet).toSeq.sorted
+    val tag = (v: String) => s"__scope_$v"
+    val renamed = shared.foldLeft(pattern)((d, v) => d.withColumnRenamed(v, tag(v)))
+    val keys = shared.flatMap { v =>
+      val t = base.schema(v).dataType
+      key(t, col(v)).zip(key(t, col(tag(v)))).map { case (a, b) => a === b }
+    }
+    val extra = on.map(_(base.crossJoin(renamed))).toSeq
+    val joined =
+      if (keys.isEmpty && how == "inner") extra.foldLeft(base.crossJoin(renamed))(_ filter _)
+      else base.join(renamed, (keys ++ extra).reduceOption(_ && _).getOrElse(lit(true)), how)
+    joined.drop(shared.map(tag): _*)
+  }
+
+  /** `v`'s scope key as one column named `v` — the identity fields of an
+    * entity (a struct [[bindScope]] keys on like the entity itself), or
+    * the whole value: the grouping key of a frame that is later joined
+    * back onto scope. */
+  def scopeKey(df: DataFrame, v: String): Column =
+    identityFields(df.schema(v).dataType)
+      .map(fs => struct(fs.map(f => col(v).getField(f).as(f)): _*))
+      .getOrElse(col(v)).as(v)
+
+  /** Each struct column of `cols` (name, type) padded to the union of
+    * their fields — ordered union, first-seen dtype, null for a field a
+    * struct lacks — so heterogeneous entity structs share one Spark type;
+    * a non-struct column passes through. One padding rule for a union of
+    * frames and for an array of entities in one row.
+    */
+  def padStructs(cols: Seq[(String, DataType)]): Seq[Column] = {
+    val target = cols.flatMap {
+      case (_, st: StructType) => st.fields.toSeq
+      case _ => Nil
+    }.distinctBy(_.name)
+    cols.map {
+      case (c, st: StructType) => struct(target.map { f =>
+        if (st.fieldNames.contains(f.name)) col(s"`$c`.`${f.name}`").as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }: _*).as(c)
+      case (c, _) => col(c)
+    }
   }
 }

@@ -258,8 +258,8 @@ final class PropertyGraph private (
     new PatternMatcher(this).compile(pattern, known)
 
   /** Cypher OPTIONAL MATCH: left-outer join a compiled pattern onto `base`
-    * on the shared variables' node ids. Unmatched rows keep nulls for the
-    * optional pattern's variables.
+    * on the shared variables' identities ([[PatternMatcher.bindScope]]).
+    * Unmatched rows keep nulls for the optional pattern's variables.
     */
   def optionalMatch(base: DataFrame, pattern: String,
       known: Map[String, String] = Map.empty): DataFrame =

@@ -44,11 +44,6 @@ class StorageAuditSpec extends AnyFunSuite {
         s"Frames.materialize/cache/release/materializeOver instead: $bypasses")
   }
 
-  /** Algos functions whose loops still free frames by hand: SCC's outer
-    * rounds take over frames its capped trim peel stored itself (a
-    * cache/uncache chain), which no Rounds step adopts. */
-  private val handRolled = Set("stronglyConnectedComponents")
-
   test("loop audit: Algos frees frames only through Frames.loop and Rounds") {
     import java.nio.file.{Files, Paths}
     val p = Paths.get("src/main/scala/graft/algos/Algos.scala")
@@ -64,7 +59,6 @@ class StorageAuditSpec extends AnyFunSuite {
     val found = for {
       ((line, owner), no) <- lines.toSeq.zip(owners).zipWithIndex
       m <- call.findAllMatchIn(line)
-      if !handRolled(owner) || !Set("release", "uncache")(m.group(1))
     } yield s"Algos.scala:${no + 1} in $owner: ${m.group(1)}("
     assert(found.isEmpty,
       "an Algos loop stores, advances and frees its frames through " +

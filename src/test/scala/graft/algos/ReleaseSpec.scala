@@ -158,10 +158,10 @@ class ReleaseSpec extends SparkSpec {
       Run("hyperBall", () => Algos.hyperBall(edges, rounds = 3), 1, 22),
       Run("connectedComponents", () => Algos.connectedComponents(edges), 1, 99),
       // the lazy result unions every finished piece (doneParts), each its
-      // own checkpoint, and the hand-rolled trim peel leaves its last
-      // caches: the residual measured before the port is the bound
+      // own checkpoint: two of them here hold rows; every trim-peel and
+      // coloring frame is freed (8 stored RDDs before the peel's port)
       Run("stronglyConnectedComponents distributed",
-        () => Algos.stronglyConnectedComponents(cyclic, maxLocalEdges = 0L), 8, 108),
+        () => Algos.stronglyConnectedComponents(cyclic, maxLocalEdges = 0L), 2, 108),
       // the lazy result reads both loop frames (decided and undecided)
       Run("maximalIndependentSet", () => Algos.maximalIndependentSet(edges, rounds = 4), 2, 28),
       Run("kTruss", () => Algos.kTruss(cascade, support = 2, rounds = 5), 1, 28),

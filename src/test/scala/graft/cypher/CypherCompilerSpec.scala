@@ -171,6 +171,28 @@ class CypherCompilerSpec extends SparkSpec {
     assert(rowsOf(got) == rowsOf(want))
   }
 
+  test("fluent optionalMatch and Cypher OPTIONAL MATCH bind the same rows across labels") {
+    import spark.implicits._
+    import graft.graph.{EdgeType, PropertyGraph}
+    // Person 1 and City 1 share the node id 1
+    val g = PropertyGraph(
+      Map("Person" -> Seq((1L, "ann"), (2L, "bob")).toDF("_id", "name"),
+        "City" -> Seq((1L, "oslo"), (5L, "rome")).toDF("_id", "cname")),
+      Map(EdgeType("LIVES_IN", "Person", "City") ->
+        Seq((1L, 1L, 100L), (2L, 5L, 101L)).toDF("_src", "_dst", "_eid")))
+    val fluent = g.optionalMatch(g.matchPattern("(n)"), "(n)-[:LIVES_IN]->(c)")
+      .selectExpr("n._label AS label", "n._id AS id", "c.cname AS city")
+    val cypher = g.cypher("MATCH (n) OPTIONAL MATCH (n)-[:LIVES_IN]->(c) " +
+      "RETURN n._label AS label, n._id AS id, c.cname AS city")
+    val want = Seq(Seq("City", 1L, null), Seq("City", 5L, null),
+      Seq("Person", 1L, "oslo"), Seq("Person", 2L, "rome"))
+    assert(sortedRowsOf(fluent) == sortedRowsOf(cypher))
+    assert(sortedRowsOf(cypher) == want.map(_.map(String.valueOf)))
+    // the anti join keys on the same identity: both cities live nowhere
+    assert(g.cypher("MATCH (n) WHERE NOT (n)-[:LIVES_IN]->() RETURN count(*)")
+      .collect()(0).getLong(0) == 2L)
+  }
+
   test("multi-MATCH joins on shared variables") {
     val got = graph.cypher(
       """MATCH (c:Customer)-[:IN_NATION]->(n:Nation)

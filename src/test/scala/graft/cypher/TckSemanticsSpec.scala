@@ -222,4 +222,40 @@ class TckSemanticsSpec extends SparkSpec {
     assert(scalar("7 % 3") == 1L)
     assert(scalar("-7 % 3") == -1L)
   }
+
+  // ---- entity identity across labels (TCK: clauses/match, with, optional) ----
+
+  test("a variable carried into a later pattern keeps its label: ids are only unique per label") {
+    import spark.implicits._
+    import graft.graph.{EdgeType, PropertyGraph}
+    // Person 1 and City 1 share the node id 1; every shape must count
+    // exactly the two LIVES_IN matches, never City 1 as Person 1
+    val g = PropertyGraph(
+      Map("Person" -> Seq((1L, "ann"), (2L, "bob")).toDF("_id", "name"),
+        "City" -> Seq((1L, "oslo"), (5L, "rome")).toDF("_id", "cname")),
+      Map(EdgeType("LIVES_IN", "Person", "City") ->
+        Seq((1L, 1L, 100L), (2L, 5L, 101L)).toDF("_src", "_dst", "_eid")))
+    def count(q: String): Long = g.cypher(q).collect()(0).getLong(0)
+    val shapes: Seq[(String, () => Long)] = Seq(
+      "MATCH .. WITH .. MATCH" -> (() =>
+        count("MATCH (n) WITH n MATCH (n)-[:LIVES_IN]->(c) RETURN count(*)")),
+      "MATCH .. MATCH" -> (() =>
+        count("MATCH (n) MATCH (n)-[:LIVES_IN]->(c) RETURN count(*)")),
+      "WHERE pattern predicate" -> (() =>
+        count("MATCH (n) WHERE (n)-[:LIVES_IN]->() RETURN count(*)")),
+      "pattern comprehension" -> (() =>
+        count("MATCH (n) RETURN sum(size([(n)-[:LIVES_IN]->(c) | c.cname]))")),
+      "OPTIONAL MATCH" -> (() =>
+        count("MATCH (n) OPTIONAL MATCH (n)-[:LIVES_IN]->(c) RETURN count(c)")),
+      "fluent optionalMatch" -> (() =>
+        g.optionalMatch(g.matchPattern("(n)"), "(n)-[:LIVES_IN]->(c)")
+          .selectExpr("count(c)").collect()(0).getLong(0)),
+      // controls: one pattern binds both ends; a rebound relationship
+      // already compared its whole value
+      "single MATCH" -> (() => count("MATCH (n)-[:LIVES_IN]->(c) RETURN count(*)")),
+      "relationship rebinding" -> (() =>
+        count("MATCH ()-[r:LIVES_IN]->() WITH r MATCH (a)-[r]->(b) RETURN count(*)")))
+    val wrong = shapes.map { case (name, run) => name -> run() }.filter(_._2 != 2L)
+    assert(wrong.isEmpty, s"shapes that miscount (want 2 each): $wrong")
+  }
 }

@@ -321,6 +321,73 @@ class PlanAuditSpec extends SparkSpec {
     assert(top.nonEmpty, "top-50 must compile to TakeOrderedAndProject")
   }
 
+  test("cypher_read shapes: join, aggregate, exchange and node counts are pinned") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Plans extends AdaptiveSparkPlanHelper
+    // range-built frames, so no optimizer rule folds a local relation away
+    def frame(n: Int, cols: String*): DataFrame = spark.range(1, n + 1).selectExpr(cols: _*)
+    val g = PropertyGraph(
+      Map(
+        "Customer" -> frame(8, "id AS _id", "id AS c_custkey", "concat('c', id) AS c_name",
+          "id * 10.0 AS c_acctbal", "'BUILDING' AS c_mktsegment"),
+        "Order" -> frame(16, "id AS _id", "id * 100.0 AS o_totalprice"),
+        "Part" -> frame(8, "id AS _id", "id AS p_partkey", "concat('b', id % 3) AS p_brand",
+          "id * 1.5 AS p_retailprice"),
+        "Nation" -> frame(4, "id AS _id", "concat('n', id) AS n_name"),
+        "Region" -> frame(2, "id AS _id", "concat('r', id) AS r_name"),
+        "User" -> frame(4, "id AS _id", "id AS user_id"),
+        "Event" -> frame(12, "id AS _id", "IF(id % 2 = 0, 'click', 'view') AS event_type")),
+      Map(
+        EdgeType("PLACED", "Customer", "Order") ->
+          frame(16, "id % 8 + 1 AS _src", "id AS _dst", "id AS _eid"),
+        EdgeType("CONTAINS", "Order", "Part") ->
+          frame(32, "id % 16 + 1 AS _src", "id % 8 + 1 AS _dst", "100 + id AS _eid"),
+        EdgeType("IN_NATION", "Customer", "Nation") ->
+          frame(8, "id AS _src", "id % 4 + 1 AS _dst", "200 + id AS _eid"),
+        EdgeType("IN_REGION", "Nation", "Region") ->
+          frame(4, "id AS _src", "id % 2 + 1 AS _dst", "300 + id AS _eid"),
+        EdgeType("RELATED_TO", "Part", "Part") ->
+          frame(7, "id AS _src", "id + 1 AS _dst", "400 + id AS _eid"),
+        EdgeType("TRIGGERED", "User", "Event") ->
+          frame(12, "id % 4 + 1 AS _src", "id AS _dst", "500 + id AS _eid")),
+      smallLabels = Set("Region", "Nation"), smallTypes = Set("IN_REGION", "IN_NATION"))
+    // the benchmark's six read shapes (perfbench READ_Q), verbatim
+    val shapes = Seq(
+      "lookup" -> ("MATCH (c:Customer {c_custkey: $key}) " +
+        "RETURN c.c_name AS name, c.c_acctbal AS acctbal, c.c_mktsegment AS segment"),
+      "hop1_agg" -> ("MATCH (c:Customer {c_custkey: $key})-[:PLACED]->(o:Order) " +
+        "RETURN count(o) AS orders, sum(o.o_totalprice) AS total"),
+      "hop2" -> ("MATCH (c:Customer {c_custkey: $key})-[:PLACED]->(o:Order)-[:CONTAINS]->(p:Part) " +
+        "RETURN p.p_brand AS brand, count(*) AS lines, sum(p.p_retailprice) AS retail " +
+        "ORDER BY lines DESC, brand LIMIT 5"),
+      "hop3_agg" -> ("MATCH (r:Region)<-[:IN_REGION]-(n:Nation)<-[:IN_NATION]-(c:Customer)" +
+        "-[:PLACED]->(o:Order) WHERE o.o_totalprice > $minPrice " +
+        "RETURN r.r_name AS region, count(*) AS orders, sum(o.o_totalprice) AS revenue " +
+        "ORDER BY region"),
+      "varlen" -> ("MATCH (p:Part {p_partkey: $key})-[:RELATED_TO*1..3]->(q:Part) " +
+        "RETURN count(DISTINCT q.p_partkey) AS reach"),
+      "topk" -> ("MATCH (u:User)-[:TRIGGERED]->(e:Event {event_type: $type}) " +
+        "RETURN u.user_id AS uid, count(*) AS n ORDER BY n DESC, uid LIMIT 5"))
+    val params = Map[String, Any]("key" -> 3L, "minPrice" -> 500.0, "type" -> "click")
+    // (optimized joins, optimized aggregates, exchanges in the planned
+    // physical plan, optimized plan nodes), measured before the pattern
+    // compiler's scope joins, filters and frontier loop became one module
+    val want = Map("lookup" -> ((0, 0, 0, 4)), "hop1_agg" -> ((2, 1, 3, 13)),
+      "hop2" -> ((4, 1, 5, 26)), "hop3_agg" -> ((6, 1, 8, 32)),
+      "varlen" -> ((7, 7, 15, 48)), "topk" -> ((2, 1, 3, 16)))
+    val got = shapes.map { case (name, q) =>
+      val qe = g.cypher(q, params).queryExecution
+      val opt = qe.optimizedPlan
+      name -> ((opt.collect { case j: Join => j }.size,
+        opt.collect { case a: Aggregate => a }.size,
+        Plans.collect(qe.executedPlan) { case e: Exchange => e }.size,
+        opt.collect { case p => p }.size))
+    }.toMap
+    assert(got == want, s"read-shape plans moved: got $got")
+  }
+
   // ------------------------------------------------------------------
   // EXHAUSTIVE window audit (r18 — the r17 verdict's #8 ask): a window
   // partition is ATOMIC — AQE splits skewed joins and grouped
