@@ -40,7 +40,48 @@ object Ast {
   /** nodes.size == rels.size + 1 */
   final case class PathPat(nodes: Vector[NodePat], rels: Vector[RelPat])
 
-  sealed trait Expr
+  /** An expression tree. Every rewrite and search over it goes through
+    * [[mapChildren]] / [[children]], so a new node kind is walked
+    * everywhere once it is listed here. Pattern subqueries
+    * ([[PatternPred]], [[PatternComp]]) are leaves: their inner
+    * expressions are scoped to the pattern.
+    */
+  sealed trait Expr {
+    /** This node with `f` applied to each direct child expression. */
+    def mapChildren(f: Expr => Expr): Expr = this match {
+      case ListLit(xs) => ListLit(xs.map(f))
+      case MapLit(kvs) => MapLit(kvs.map { case (k, v) => k -> f(v) })
+      case Prop(b, k) => Prop(f(b), k)
+      case Func(n, args, d) => Func(n, args.map(f), d)
+      case Bin(op, l, r) => Bin(op, f(l), f(r))
+      case Not(x) => Not(f(x))
+      case Neg(x) => Neg(f(x))
+      case IsNull(x, n) => IsNull(f(x), n)
+      case CaseExpr(s, ws, o) =>
+        CaseExpr(s.map(f), ws.map { case (a, b) => (f(a), f(b)) }, o.map(f))
+      case Index(b, i) => Index(f(b), f(i))
+      case Slice(b, lo, hi) => Slice(f(b), lo.map(f), hi.map(f))
+      case Comprehension(v, l, w, p) => Comprehension(v, f(l), w.map(f), p.map(f))
+      case Quantifier(k, v, l, w) => Quantifier(k, v, f(l), f(w))
+      case ReduceExpr(a, init, v, l, p) => ReduceExpr(a, f(init), v, f(l), f(p))
+      case MapProj(v, ps, es, s) => MapProj(v, ps, es.map { case (k, x) => k -> f(x) }, s)
+      case leaf => leaf
+    }
+
+    /** The direct child expressions, in [[mapChildren]] order. */
+    def children: Seq[Expr] = {
+      val out = Seq.newBuilder[Expr]
+      mapChildren { c => out += c; c }
+      out.result()
+    }
+
+    /** Top-down rewrite: `pf` replaces the nodes it is defined at (their
+      * subtrees are not visited); every other node is rebuilt over its
+      * rewritten children.
+      */
+    def transform(pf: PartialFunction[Expr, Expr]): Expr =
+      pf.applyOrElse(this, (e: Expr) => e.mapChildren(_.transform(pf)))
+  }
 
   /** `*` inside count(*). */
   case object Star extends Expr

@@ -323,47 +323,18 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     (Ctx(joined.withColumn(tmp, coalesce(col(tmp), array().cast(listT))), c.labels), tmp)
   }
 
-  /** Rewrite pattern comprehensions inside an item expression to temp
-    * columns, threading the frame through `attach`.
-    */
-  private def extractComps(e: Expr, attach: PatternComp => Expr): Expr = {
-    def go(x: Expr): Expr = x match {
-      case pc: PatternComp => attach(pc)
-      case Bin(op, l, r) => Bin(op, go(l), go(r))
-      case Not(y) => Not(go(y))
-      case Neg(y) => Neg(go(y))
-      case IsNull(y, n) => IsNull(go(y), n)
-      case Prop(b, k) => Prop(go(b), k)
-      case Func(n, args, d) => Func(n, args.map(go), d)
-      case ListLit(xs) => ListLit(xs.map(go))
-      case MapLit(kvs) => MapLit(kvs.map { case (k, v) => k -> go(v) })
-      case MapProj(v, ps, es, s) => MapProj(v, ps, es.map { case (k, y) => k -> go(y) }, s)
-      case CaseExpr(s, ws, o) => CaseExpr(s.map(go),
-        ws.map { case (a, b) => (go(a), go(b)) }, o.map(go))
-      case Index(b, ix) => Index(go(b), go(ix))
-      case Slice(b, f, t) => Slice(go(b), f.map(go), t.map(go))
-      case Comprehension(v, l, w, pr) => Comprehension(v, go(l), w.map(go), pr.map(go))
-      case Quantifier(k, v, l, w) => Quantifier(k, v, go(l), go(w))
-      case ReduceExpr(a, init, v, l, pr) => ReduceExpr(a, go(init), v, go(l), go(pr))
-      case other => other
-    }
-    go(e)
-  }
-
   private[cypher] def applyProjection(ctx: Option[Ctx], p: Projection): DataFrame = {
     // pattern-comprehension pre-pass: each one joins its collected list
     // onto the frame and is replaced by a temp-column reference
     // internal-prefixed seed column so RETURN * can't expand over it
     var curCtx = ctx.getOrElse(
       Ctx(spark.range(1).select(col("id").as("__seed")), Map.empty))
-    val preItems = p.items.map { it =>
-      val ne = extractComps(it.expr, pc => {
-        val (nc, name) = attachPatternComp(curCtx, pc)
-        curCtx = nc
-        Var(name)
-      })
-      it.copy(expr = ne)
+    val extractComps: PartialFunction[Expr, Expr] = { case pc: PatternComp =>
+      val (nc, name) = attachPatternComp(curCtx, pc)
+      curCtx = nc
+      Var(name)
     }
+    val preItems = p.items.map(it => it.copy(expr = it.expr.transform(extractComps)))
     val base = curCtx.df
     // RETURN * — expand to every visible column; with no variables in
     // scope it is a syntax error (openCypher TCK)
@@ -437,18 +408,11 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
           max(when(col(s"${tag}_rn") === target, compileExpr(base2, v))).over(wAll))
         Func("max", Seq(Var(tag)))
       }
-      def rewriteDisc(x: Expr): Expr = x match {
+      val rewriteDisc: PartialFunction[Expr, Expr] = {
         case Func(n, Seq(v, pp), _) if n.toLowerCase == "percentiledisc" =>
           attachDisc(v, pp)
-        case Bin(op, l, r) => Bin(op, rewriteDisc(l), rewriteDisc(r))
-        case Not(y) => Not(rewriteDisc(y))
-        case Neg(y) => Neg(rewriteDisc(y))
-        case Func(n, args, d) => Func(n, args.map(rewriteDisc), d)
-        case CaseExpr(s, ws, o) => CaseExpr(s.map(rewriteDisc),
-          ws.map { case (a, b) => (rewriteDisc(a), rewriteDisc(b)) }, o.map(rewriteDisc))
-        case other => other
       }
-      val aggItems = aggItems0.map(it => it.copy(expr = rewriteDisc(it.expr)))
+      val aggItems = aggItems0.map(it => it.copy(expr = it.expr.transform(rewriteDisc)))
       val aggCols = plans.flatMap(_._2) ++
         aggItems.map(it => compileExpr(base2, it.expr).as(it.name))
       projected =

@@ -35,26 +35,8 @@ object CypherParser {
 
   /** Does the expression contain an aggregate call (at any depth)? */
   def containsAgg(e: Expr): Boolean = e match {
-    case Func(n, args, _) =>
-      aggNames(n.toLowerCase) || args.exists(containsAgg)
-    case Bin(_, l, r) => containsAgg(l) || containsAgg(r)
-    case Not(x) => containsAgg(x)
-    case Neg(x) => containsAgg(x)
-    case IsNull(x, _) => containsAgg(x)
-    case Prop(b, _) => containsAgg(b)
-    case Index(b, i) => containsAgg(b) || containsAgg(i)
-    case Slice(b, f, t) => containsAgg(b) || f.exists(containsAgg) || t.exists(containsAgg)
-    case ListLit(xs) => xs.exists(containsAgg)
-    case MapLit(xs) => xs.exists(kv => containsAgg(kv._2))
-    case CaseExpr(s, ws, o) =>
-      s.exists(containsAgg) || ws.exists(w => containsAgg(w._1) || containsAgg(w._2)) ||
-        o.exists(containsAgg)
-    case Comprehension(_, l, w, p) =>
-      containsAgg(l) || w.exists(containsAgg) || p.exists(containsAgg)
-    case Quantifier(_, _, l, w) => containsAgg(l) || containsAgg(w)
-    case ReduceExpr(_, init, _, l, p) =>
-      containsAgg(init) || containsAgg(l) || containsAgg(p)
-    case _ => false
+    case Func(n, _, _) if isAggFunc(n) => true
+    case _ => e.children.exists(containsAgg)
   }
 
   private final class P(ts: Vector[Token], src: String) {

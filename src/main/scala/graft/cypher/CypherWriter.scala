@@ -22,8 +22,13 @@ import graft.util.Frames
   * Supported subset (documented; the rest raises):
   *  - CREATE of literal node patterns, and of edges between variables
   *    bound by a preceding MATCH (`MATCH (a),(b) CREATE (a)-[:T]->(b)`).
-  *  - MERGE of a single literal node pattern (+ ON CREATE / ON MATCH SET)
-  *    and of edges between bound variables.
+  *  - MERGE of a node pattern, or of a single-relationship path whose
+  *    endpoints are bound variables or node patterns with a property
+  *    map (+ ON CREATE / ON MATCH SET on the pattern's unbound nodes;
+  *    they may change a pattern property). An unbound node
+  *    matches the stored nodes of its label equal to the pattern's
+  *    property map, or to its `_id` when the pattern gives one; rows
+  *    with no match create a node with a content-hash id.
   *  - SET/REMOVE on node properties: `SET n.p = expr` where expr uses
   *    n's own properties and literals; and on relationship properties
   *    (`SET r.p = expr`, `SET r += map`) when the MATCH pins the rel
@@ -36,6 +41,8 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
 
   /** Internal per-row uid column used while minting CREATE node ids. */
   private val ROW_UID = "__row_uid"
+  /** Internal per-row column holding an unbound MERGE node's id. */
+  private val MERGE_ID = "__merge_id"
 
   def run(query: String): (PropertyGraph, Option[DataFrame]) = {
     val q = CypherParser.parse(query)
@@ -125,7 +132,7 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
                   !isConst(it.expr) =>
                 it.expr -> s"__uk_$i"
             }.toMap
-            def liftAgg(e: Expr, i: Int): Expr = e match {
+            def liftAgg(i: Int): PartialFunction[Expr, Expr] = {
               case k if keyCol.contains(k) => Var(keyCol(k))
               case Func(fn, args, dist) if CypherParser.isAggFunc(fn) =>
                 val gargs = args.map {
@@ -147,15 +154,6 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
                     Var(nm)
                 }
                 Func(fn, gargs, dist)
-              case Bin(op, l, r) => Bin(op, liftAgg(l, i), liftAgg(r, i))
-              case Not(x) => Not(liftAgg(x, i))
-              case Neg(x) => Neg(liftAgg(x, i))
-              case IsNull(x, neg) => IsNull(liftAgg(x, i), neg)
-              case Func(fn, args, d) => Func(fn, args.map(liftAgg(_, i)), d)
-              case CaseExpr(sel, ws, o) => CaseExpr(sel.map(liftAgg(_, i)),
-                ws.map { case (a, b) => (liftAgg(a, i), liftAgg(b, i)) },
-                o.map(liftAgg(_, i)))
-              case other => other
             }
             val globalItems = p.items.zipWithIndex.map { case (it, i) =>
               it.expr match {
@@ -164,7 +162,7 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
                   pre += Item(e, Some(nm), nm)
                   Item(Var(nm), Some(it.name), it.name)
                 case e =>
-                  Item(liftAgg(e, i), Some(it.name), it.name)
+                  Item(e.transform(liftAgg(i)), Some(it.name), it.name)
               }
             }
             // ORDER BY over an expression that is not one of the output
@@ -325,23 +323,27 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
   private def ctxOrFail(ctx: Option[Ctx]): Ctx =
     ctx.getOrElse(sys.error("SET/REMOVE/DELETE requires a preceding MATCH"))
 
-  /** Bind a created/merged rel variable by joining the POST-write edge
-    * frame on (src, dst) — so `CREATE/MERGE (a)-[r:T]->(b) RETURN r /
-    * type(r) / r.prop` sees the relationship (reference shape).
-    * Parallel-edge caveat (documented): matches every edge of the class
-    * between the pair, not only the property-matching one.
+  /** The one entity binder: bind `name` in `cur` to the entity rows of
+    * `frame` (a node label or an edge class, tagged `tag`) that equal each
+    * row on every (row value, frame column) pair of `on` — a merged node
+    * on its `_id`, a created or merged relationship on (src, dst) — so a
+    * following RETURN/SET sees every property of the POST-write frame,
+    * ON CREATE / ON MATCH SET results included (reference shape: MERGE
+    * (u {...}) ... RETURN u). MERGE also looks up its stored nodes
+    * through here, with `how` = left_outer. Parallel-edge caveat
+    * (documented): a relationship binds every edge of its class between
+    * the pair, not only the property-matching one.
     */
-  private def bindMergedRel(out: PropertyGraph, cur: DataFrame, relName: String,
-      et: EdgeType, srcId: Column, dstId: Column): DataFrame = {
-    val ef = out.edgeFrame(et)
-    val entity = ef.select(
-      struct((ef.columns.map(col) :+
-        lit(et.relType).as(PropertyGraph.LABEL)).toIndexedSeq: _*).as(relName),
-      col(SRC).as("__mr_src"), col(DST).as("__mr_dst"))
-    cur.withColumn("__mr_s", srcId.cast("long"))
-      .withColumn("__mr_d", dstId.cast("long"))
-      .join(entity, col("__mr_s") === col("__mr_src") && col("__mr_d") === col("__mr_dst"))
-      .drop("__mr_s", "__mr_d", "__mr_src", "__mr_dst")
+  private def bindEntity(cur: DataFrame, name: String, frame: DataFrame,
+      tag: String, on: Seq[(Column, String)], how: String = "inner"): DataFrame = {
+    val (vs, ks) = on.indices.map(i => (s"__bv_$i", s"__bk_$i")).unzip
+    val entity = frame.select(
+      struct((frame.columns.map(col) :+ lit(tag).as(PropertyGraph.LABEL)).toIndexedSeq: _*)
+        .as(name) +: on.zip(ks).map { case ((_, c), k) => col(c).as(k) }: _*)
+    on.zip(vs).foldLeft(cur) { case (d, ((v, _), n)) => d.withColumn(n, v) }
+      .join(entity, vs.zip(ks).map { case (v, k) => col(v) === col(k) }
+        .reduceOption(_ && _).getOrElse(lit(true)), how)
+      .drop(vs ++ ks: _*)
   }
 
   /** rel var -> unique EdgeType, when type + endpoint labels pin it down. */
@@ -385,8 +387,9 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     * range(1,3) CREATE (:N {tag:'a'})` makes 3 nodes — so identical-prop
     * rows must mint distinct ids, and a later identical statement must
     * not collide with ids minted earlier (r4 advice: content-hash +
-    * distinct silently collapsed cardinality). MERGE passes neither:
-    * content addressing IS its match-per-row semantics.
+    * distinct silently collapsed cardinality). MERGE passes neither: a
+    * node it creates is content-addressed, while it finds stored nodes
+    * on the pattern's `_id` or property map ([[withMergeId]]).
     */
   private def nodeIdOf(label: String, props: Seq[(String, Any)],
       frame: DataFrame, rowUid: Option[Column] = None,
@@ -395,6 +398,22 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
       .getOrElse(xxhash64(
         (lit(label) +: (rowUid.toSeq ++ nonce) ++:
           props.sortBy(_._1).map(p => propCol(p._2, frame))): _*))
+
+  /** The one entity-row builder of CREATE and MERGE: `_id`, the
+    * pattern's other properties, and the `_labels` array when the
+    * pattern names secondary labels (multi-label shim: `CREATE (n:A:B:C)`
+    * stores A as the frame and [B, C] in `_labels`; reference: label
+    * arrays, db.ts:47-69).
+    */
+  private def entityCols(label: String, n: NodePat, idCol: Column,
+      frame: DataFrame): Seq[Column] = {
+    val sec = secondaryOf(n, label)
+    (idCol.as(ID) +: n.props.filterNot(_._1 == ID).map { case (k, v) => propCol(v, frame).as(k) }) ++
+      (if (sec.nonEmpty) Seq(array(sec.map(lit): _*).as(LABELS)) else Nil)
+  }
+
+  private def secondaryOf(n: NodePat, label: String): Seq[String] =
+    n.secondary.distinct.filterNot(_ == label)
 
   private def applyCreate(g: PropertyGraph, ctx: Option[Ctx],
       paths: Vector[PathPat]): (PropertyGraph, Option[Ctx]) = {
@@ -441,17 +460,11 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
       val idCol = nodeIdOf(label, n.props, rowFrame,
         rowUid = if (n.props.exists(_._1 == ID)) None else Some(col(ROW_UID)),
         nonce = Seq(lit(g.writeEpoch), lit(pi)))
-      // multi-label shim: `CREATE (n:A:B:C)` stores A as the frame and
-      // [B, C] in the _labels array (reference: label arrays, db.ts:47-69)
-      val sec = n.secondary.distinct.filterNot(_ == label)
-      val cols = (idCol.as(ID) +:
-        n.props.filterNot(_._1 == ID).map { case (k, v) => propCol(v, rowFrame).as(k) }) ++
-        (if (sec.nonEmpty) Seq(array(sec.map(lit): _*).as(LABELS)) else Nil)
       // distinct() only collapses rows that are STILL identical after id
       // minting — i.e. explicit-_id duplicates (content addressing is the
       // user's opt-in); uid-minted rows are one node per row.
-      val row = rowFrame.select(cols: _*).distinct()
-      out = out.addNodes(label, row).registerSecondaryLabels(label, sec.toSet)
+      val row = rowFrame.select(entityCols(label, n, idCol, rowFrame): _*).distinct()
+      out = out.addNodes(label, row).registerSecondaryLabels(label, secondaryOf(n, label).toSet)
       newNodeIds(n.name) = (label, idCol)
     }
     // 2. edges — endpoints either MATCH-bound (per-row) or just created
@@ -465,17 +478,13 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         sys.error(s"CREATE cannot use a type alternation: [:$relType]")
       if (r.dir != Out && r.dir != In)
         sys.error("CREATE requires a directed relationship") // reference parity
-      def endpoint(n: NodePat): (String, Column, Boolean) =
-        if (boundVars(n.name)) {
-          val label = ctx.get.labels.getOrElse(n.name,
-            sys.error(s"CREATE edge endpoint ${n.name} has unknown label"))
-          (label, col(s"${n.name}.$ID"), true)
-        } else {
-          val (label, idc) = newNodeIds(n.name)
-          (label, idc, false)
-        }
-      val (sl, sidCol, _) = endpoint(sv)
-      val (dl, didCol, _) = endpoint(dv)
+      def endpoint(n: NodePat): (String, Column) =
+        if (boundVars(n.name))
+          (ctx.get.labels.getOrElse(n.name,
+            sys.error(s"CREATE edge endpoint ${n.name} has unknown label")), col(s"${n.name}.$ID"))
+        else newNodeIds(n.name)
+      val (sl, sidCol) = endpoint(sv)
+      val (dl, didCol) = endpoint(dv)
       // No distinct(): CREATE makes one edge PER ROW (parallel edges get
       // distinct EIDs from mintEids' per-(src,dst) row numbering).
       val edgeRow = rowFrame.select(
@@ -488,7 +497,7 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     // 3. bind created NODE vars into the context as entity structs so
     // later clauses see them (reference shape: CREATE (...)->(t:Topic)
     // RETURN t); named REL vars bind by joining the post-create edge
-    // frame on (src, dst) — see [[bindMergedRel]].
+    // frame on (src, dst) — see [[bindEntity]].
     val named = newPats.filterNot(_.anonymous)
     val rels = namedRels.result()
     val newCtx =
@@ -497,16 +506,12 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         var df2 = rowFrame
         named.foreach { n =>
           val (label, idc) = newNodeIds(n.name)
-          val sec = n.secondary.distinct.filterNot(_ == label)
-          val fields = (idc.cast("long").as(ID) +:
-            n.props.filterNot(_._1 == ID)
-              .map { case (k, v) => propCol(v, rowFrame).as(k) }) ++
-            (if (sec.nonEmpty) Seq(array(sec.map(lit): _*).as(LABELS)) else Nil) :+
-            lit(label).as(PropertyGraph.LABEL)
-          df2 = df2.withColumn(n.name, struct(fields: _*))
+          df2 = df2.withColumn(n.name, struct(
+            entityCols(label, n, idc, rowFrame) :+ lit(label).as(PropertyGraph.LABEL): _*))
         }
         rels.foreach { case (rn, et, sidCol, didCol) =>
-          df2 = bindMergedRel(out, df2, rn, et, sidCol, didCol)
+          df2 = bindEntity(df2, rn, out.edgeFrame(et), et.relType,
+            Seq(sidCol -> SRC, didCol -> DST))
         }
         df2 = df2.drop(ROW_UID)
         // no prior context: only the created vars are in scope (the
@@ -524,160 +529,115 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
   // MERGE
   // ------------------------------------------------------------------
 
-  /** Bind a merged node var into the context as a full entity struct by
-    * joining the POST-merge label frame on the per-row minted id — so a
-    * following RETURN/SET sees every property, including ON CREATE /
-    * ON MATCH SET results (reference shape: MERGE (u {...}) ... RETURN u).
+  /** MERGE of a node or a single-relationship path, one path for every
+    * shape. Each endpoint resolves to (variable, label): a variable bound
+    * by an earlier clause keeps its row; an unbound node pattern gets
+    * each row's node id ([[withMergeId]]), is merged on that id
+    * ([[mergeNode]]) and is bound to the post-merge frame on it
+    * (anonymous ones under their parser-minted name, so their `_id` is in
+    * reach). The id is decided before any write, so an ON CREATE / ON
+    * MATCH SET that changes a pattern property cannot lose the row. The
+    * relationship, if any, then merges between the endpoint ids — one
+    * edge per distinct (src, dst, props) row — and binds on (src, dst).
+    *
+    * Divergence (documented): openCypher matches the WHOLE pattern
+    * atomically; here each unbound node merges on its own, so a fresh
+    * path reuses existing endpoint nodes and only the edge is created,
+    * and an endpoint pattern equal to several stored nodes gets one edge
+    * to each. An unbound endpoint with no properties would equal every
+    * node of its label, so a relationship MERGE rejects it. ON CREATE /
+    * ON MATCH SET apply per unbound node variable.
     */
-  private def bindMerged(out: PropertyGraph, cur: DataFrame,
-      n: NodePat, label: String, idCol: Column): DataFrame = {
-    if (n.anonymous) return cur
-    val frame = out.nodeFrame(label)
-    val entity = frame.select(
-      struct((frame.columns.map(col) :+
-        lit(label).as(graft.graph.PropertyGraph.LABEL)).toIndexedSeq: _*).as(n.name),
-      col(ID).as("__merge_jid"))
-    cur.withColumn("__merge_id", idCol.cast("long"))
-      .join(entity, col("__merge_id") === col("__merge_jid"))
-      .drop("__merge_id", "__merge_jid")
-  }
-
   private def applyMerge(g: PropertyGraph, ctx: Option[Ctx], path: PathPat,
       onCreate: Seq[(Expr, Expr)], onMatch: Seq[(Expr, Expr)]): (PropertyGraph, Option[Ctx]) = {
+    require(path.rels.size <= 1, "MERGE supports single-relationship paths")
     val boundVars = ctx.map(_.df.columns.toSet).getOrElse(Set.empty)
     val rowFrame = ctx.map(_.df).getOrElse(spark.range(1).toDF())
-    // post-merge context assembly: thread (graph, df, bindings) and
-    // restrict to named entities when there was no prior context (the
-    // internal seed column must not leak into RETURN *)
-    def ctxOf(out: PropertyGraph, df: DataFrame,
-        binds: Seq[(String, String)], extraKeep: Seq[String] = Nil): Option[Ctx] = {
-      val named = binds.filter(_._1.nonEmpty)
-      val df2 =
-        if (ctx.isEmpty) df.select((named.map(_._1) ++ extraKeep).map(col): _*)
-        else df
-      Some(Ctx(df2, ctx.map(_.labels).getOrElse(Map.empty) ++ named))
+    val unbound = path.nodes.filterNot(n => boundVars(n.name))
+    (onCreate ++ onMatch).foreach {
+      case (Prop(Var(v), _), _) if unbound.exists(_.name == v) => ()
+      case (target, _) => sys.error(s"unsupported MERGE SET target: $target — " +
+        "ON CREATE / ON MATCH SET writes an unbound node of the pattern; use a separate SET clause")
     }
-
-
-    def mergeNode(gr: PropertyGraph, n: NodePat,
-        oc: Seq[(Expr, Expr)], om: Seq[(Expr, Expr)]): PropertyGraph = {
-      val label = n.label.getOrElse(sys.error("MERGE node needs a label"))
-      val idCol = nodeIdOf(label, n.props, rowFrame)
-      val sec = n.secondary.distinct.filterNot(_ == label)
-      val cols = (idCol.as(ID) +:
-        n.props.filterNot(_._1 == ID).map { case (k, v) => propCol(v, rowFrame).as(k) }) ++
-        (if (sec.nonEmpty) Seq(array(sec.map(lit): _*).as(LABELS)) else Nil)
-      val row = rowFrame.select(cols: _*).distinct()
-      def assigns(items: Seq[(Expr, Expr)]): Map[String, Column] =
-        items.map {
-          case (Prop(Var(v), key), value) if v == n.name =>
-            key -> compileValueOverFrame(value, n.name)
-          case other => sys.error(s"unsupported MERGE SET target: $other")
-        }.toMap
-      gr.mergeNodesWith(label, row, assigns(oc), assigns(om))
-        .registerSecondaryLabels(label, sec.toSet)
+    if (path.rels.nonEmpty) unbound.find(_.props.isEmpty).foreach { n =>
+      sys.error(s"MERGE relationship endpoint (${if (n.anonymous) "" else n.name}" +
+        s"${n.label.map(":" + _).getOrElse("")}) has no properties, so it would match " +
+        "every node of its label — bind it with MATCH or give it a property map")
     }
-
-    def setsFor(n: NodePat, items: Seq[(Expr, Expr)]) = items.filter {
-      case (Prop(Var(v), _), _) => v == n.name
-      case _ => false
+    var out = g
+    var df = rowFrame
+    val merged = scala.collection.mutable.LinkedHashMap.empty[String, (NodePat, String)]
+    val ends = path.nodes.map { n =>
+      val label =
+        if (boundVars(n.name)) ctx.get.labels.getOrElse(n.name,
+          sys.error(s"MERGE endpoint ${n.name} has unknown label"))
+        else merged.getOrElseUpdate(n.name, {
+          val l = n.label.getOrElse(sys.error("MERGE node needs a label"))
+          df = withMergeId(out, n, l, df)
+          out = mergeNode(out, n, l, onCreate, onMatch, df)
+          df = bindEntity(df, n.name, out.nodeFrame(l), l, Seq(col(MERGE_ID) -> ID)).drop(MERGE_ID)
+          (n, l)
+        })._2
+      n.name -> label
     }
-
-    if (path.rels.isEmpty) {
-      // single node MERGE — one candidate row per current row (UNWIND /
-      // MATCH cardinality), content-deduped
-      val n = path.nodes.head
-      val out = mergeNode(g, n, onCreate, onMatch)
-      val label = n.label.getOrElse(sys.error("MERGE node needs a label"))
-      if (n.anonymous) (out, ctx)
-      else (out, ctxOf(out,
-        bindMerged(out, rowFrame, n, label, nodeIdOf(label, n.props, rowFrame)),
-        Seq(n.name -> label)))
-    } else {
-      require(path.rels.size == 1, "MERGE supports single-relationship paths")
-      val r = path.rels.head
-      val (sv, dv) = if (r.dir == Out) (path.nodes(0), path.nodes(1))
-                     else (path.nodes(1), path.nodes(0))
+    path.rels.headOption.foreach { r =>
       val relType = r.relType.getOrElse(sys.error("MERGE edge needs a type"))
-      if (path.nodes.forall(n => boundVars(n.name))) {
-        // edge MERGE between two bound variables
-        val labels = ctx.get.labels
-        val et = EdgeType(relType, labels(sv.name), labels(dv.name))
-        val rows = ctx.get.df.select(
-          (col(s"${sv.name}.$ID").as(SRC) +: col(s"${dv.name}.$ID").as(DST) +:
-            r.props.map { case (k, v) => propCol(v, ctx.get.df).as(k) }): _*)
-        val out = g.mergeEdges(et, rows)
-        if (r.anonymous) (out, ctx)
-        else (out, Some(Ctx(
-          bindMergedRel(out, ctx.get.df, r.name, et,
-            col(s"${sv.name}.$ID"), col(s"${dv.name}.$ID")),
-          ctx.get.labels, ctx.get.staticallyEmpty)))
-      } else if (path.nodes.exists(n => boundVars(n.name))) {
-        // ONE endpoint bound (reference shape: MATCH (u) MERGE
-        // (u)-[:T]->(l:L {props})): merge the unbound node per row
-        // (content-addressed — reuses an existing node with those props,
-        // same decomposition divergence as the all-unbound branch), then
-        // merge edges between the bound ids and the merged node ids
-        val (bound, unbound) = if (boundVars(sv.name)) (sv, dv) else (dv, sv)
-        (onCreate ++ onMatch).foreach {
-          case (Prop(Var(v), _), _) if v == bound.name => sys.error(
-            s"MERGE ... SET on the already-bound endpoint $v is unsupported — use a separate SET clause")
-          case _ => ()
-        }
-        val out = mergeNode(g, unbound, setsFor(unbound, onCreate), setsFor(unbound, onMatch))
-        val uLabel = unbound.label.getOrElse(sys.error("MERGE endpoint needs a label"))
-        val bLabel = ctx.get.labels.getOrElse(bound.name,
-          sys.error(s"MERGE endpoint ${bound.name} has unknown label"))
-        val uid = nodeIdOf(uLabel, unbound.props, rowFrame)
-        val bid = col(s"${bound.name}.$ID")
-        val (et, srcCol, dstCol) =
-          if (bound eq sv) (EdgeType(relType, bLabel, uLabel), bid, uid)
-          else (EdgeType(relType, uLabel, bLabel), uid, bid)
-        val rows = rowFrame.select(
-          (srcCol.cast("long").as(SRC) +: dstCol.cast("long").as(DST) +:
-            r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*)
-          .distinct()
-        val out2 = out.mergeEdges(et, rows)
-        var df2 = if (unbound.anonymous) rowFrame
-          else bindMerged(out2, rowFrame, unbound, uLabel, uid)
-        if (!r.anonymous) df2 = bindMergedRel(out2, df2, r.name, et, srcCol, dstCol)
-        if (unbound.anonymous && r.anonymous) (out2, ctx)
-        else (out2, ctxOf(out2, df2,
-          Seq(unbound).filterNot(_.anonymous).map(n => n.name -> uLabel),
-          if (r.anonymous) Nil else Seq(r.name)))
-      } else {
-        // general MERGE path with unbound endpoints: decomposed as
-        // merge(src) → merge(dst) → merge(edge). Divergence (documented):
-        // openCypher matches the WHOLE pattern atomically — a pre-existing
-        // node pair without the edge gets only the edge created here,
-        // which openCypher would also do; but a fresh pattern creates
-        // nodes even when an identical edge exists elsewhere. ON CREATE /
-        // ON MATCH SET apply per-endpoint-variable.
-        var out = g
-        out = mergeNode(out, sv, setsFor(sv, onCreate), setsFor(sv, onMatch))
-        out = mergeNode(out, dv, setsFor(dv, onCreate), setsFor(dv, onMatch))
-        val et = EdgeType(relType,
-          sv.label.getOrElse(sys.error("MERGE endpoint needs a label")),
-          dv.label.getOrElse(sys.error("MERGE endpoint needs a label")))
-        val sid = nodeIdOf(et.srcLabel, sv.props, rowFrame)
-        val did = nodeIdOf(et.dstLabel, dv.props, rowFrame)
-        val rows = rowFrame.select(
-          (sid.cast("long").as(SRC) +: did.cast("long").as(DST) +:
-            r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*)
-          .distinct()
-        var df2 = rowFrame
-        val binds = Seq(sv -> et.srcLabel, dv -> et.dstLabel)
-          .filterNot(_._1.anonymous)
-        df2 = binds.foldLeft(df2) { case (d, (n, l)) =>
-          bindMerged(out, d, n, l, nodeIdOf(l, n.props, rowFrame))
-        }
-        val out2 = out.mergeEdges(et, rows)
-        if (!r.anonymous) df2 = bindMergedRel(out2, df2, r.name, et, sid, did)
-        if (binds.isEmpty && r.anonymous) (out2, ctx)
-        else (out2, ctxOf(out2, df2, binds.map { case (n, l) => n.name -> l },
-          if (r.anonymous) Nil else Seq(r.name)))
-      }
+      val Seq((sv, sl), (dv, dl)) = if (r.dir == Out) ends else ends.reverse
+      val et = EdgeType(relType, sl, dl)
+      val (sid, did) = (col(s"$sv.$ID"), col(s"$dv.$ID"))
+      out = out.mergeEdges(et, df.select((sid.as(SRC) +: did.as(DST) +:
+        r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*).distinct())
+      if (!r.anonymous) df = bindEntity(df, r.name, out.edgeFrame(et), relType,
+        Seq(sid -> SRC, did -> DST))
     }
+    val named = merged.values.collect { case (n, l) if !n.anonymous => n.name -> l }.toSeq
+    val newVars = named.map(_._1) ++ path.rels.filterNot(_.anonymous).map(_.name)
+    if (newVars.isEmpty) (out, ctx)
+    else {
+      // no prior context: only the merged vars are in scope (the internal
+      // seed frame's column must not leak into RETURN *)
+      val kept = if (ctx.isEmpty) df.select(newVars.map(col): _*)
+        else df.drop(merged.values.collect { case (n, _) if n.anonymous => n.name }.toSeq: _*)
+      (out, Some(Ctx(kept, ctx.map(_.labels).getOrElse(Map.empty) ++ named)))
+    }
+  }
+
+  /** Adds each row's id for the unbound MERGE node `n` as [[MERGE_ID]],
+    * the one identity rule of MERGE: the pattern's `_id` when it gives
+    * one; else the `_id` of every stored `label` node equal to the
+    * pattern's property map (a property the frame lacks matches nothing,
+    * PatternMatcher's property-map rule; a row equal to several stored
+    * nodes yields one row per node); else the content hash of
+    * [[nodeIdOf]], which names the node the merge creates.
+    */
+  private def withMergeId(g: PropertyGraph, n: NodePat, label: String,
+      df: DataFrame): DataFrame = {
+    val minted = nodeIdOf(label, n.props, df)
+    val stored = Some(label).filter(g.hasLabel).map(g.nodeFrame)
+      .filter(f => n.props.forall(p => f.columns.contains(p._1)))
+    stored match {
+      case Some(f) if !n.props.exists(_._1 == ID) =>
+        bindEntity(df, MERGE_ID, f.select((ID +: n.props.map(_._1)).distinct.map(col): _*), label,
+          n.props.map { case (k, v) => propCol(v, df) -> k }, "left_outer")
+          .withColumn(MERGE_ID, coalesce(col(s"$MERGE_ID.$ID"), minted))
+      case _ => df.withColumn(MERGE_ID, minted)
+    }
+  }
+
+  /** Merge one node pattern per row of `rowFrame` (content-deduped) on
+    * the ids [[withMergeId]] put in it: rows whose id is stored take `n`'s
+    * ON MATCH SET items, the others are created with its ON CREATE SET
+    * items.
+    */
+  private def mergeNode(g: PropertyGraph, n: NodePat, label: String,
+      onCreate: Seq[(Expr, Expr)], onMatch: Seq[(Expr, Expr)],
+      rowFrame: DataFrame): PropertyGraph = {
+    def assigns(items: Seq[(Expr, Expr)]): Map[String, Column] = items.collect {
+      case (Prop(Var(v), k), value) if v == n.name => k -> compileValueOverFrame(value, n.name)
+    }.toMap
+    val row = rowFrame.select(entityCols(label, n, col(MERGE_ID), rowFrame): _*).distinct()
+    g.mergeNodesWith(label, row, assigns(onCreate), assigns(onMatch))
+      .registerSecondaryLabels(label, secondaryOf(n, label).toSet)
   }
 
   // ------------------------------------------------------------------
@@ -691,19 +651,10 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     * n.x = n.x + 1` on x-less nodes sets null, it does not error).
     */
   private def rewriteSelfRefs(e: Expr, v: String,
-      frameCols: Option[Set[String]] = None): Expr = e match {
-    case Prop(Var(`v`), key) =>
+      frameCols: Option[Set[String]] = None): Expr =
+    e.transform { case Prop(Var(`v`), key) =>
       if (frameCols.forall(_.contains(key))) Var(key) else Lit(null)
-    case Bin(op, l, r) => Bin(op, rewriteSelfRefs(l, v, frameCols), rewriteSelfRefs(r, v, frameCols))
-    case Not(x) => Not(rewriteSelfRefs(x, v, frameCols))
-    case Neg(x) => Neg(rewriteSelfRefs(x, v, frameCols))
-    case IsNull(x, n) => IsNull(rewriteSelfRefs(x, v, frameCols), n)
-    case Func(n, args, d) => Func(n, args.map(rewriteSelfRefs(_, v, frameCols)), d)
-    case CaseExpr(s, ws, o) => CaseExpr(s.map(rewriteSelfRefs(_, v, frameCols)),
-      ws.map { case (a, b) => (rewriteSelfRefs(a, v, frameCols), rewriteSelfRefs(b, v, frameCols)) },
-      o.map(rewriteSelfRefs(_, v, frameCols)))
-    case other => other
-  }
+    }
 
   private def compileValueOverFrame(value: Expr, v: String,
       frameCols: Option[Set[String]] = None): Column = {

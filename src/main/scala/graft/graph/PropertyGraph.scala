@@ -335,102 +335,57 @@ final class PropertyGraph private (
     copyWith(n = nodeThunks + (label -> thunk(merged)))
   }
 
-  /** MERGE (:Label {id}) — insert rows whose ID is not already present. */
-  def mergeNodes(label: String, df: DataFrame): PropertyGraph = {
-    val merged = if (hasLabel(label)) {
-      val old = nodeFrame(label)
-      old.unionByName(df.join(old.select(ID), Seq(ID), "left_anti"),
-        allowMissingColumns = true)
-    } else df
-    copyWith(n = nodeThunks + (label -> thunk(merged)))
-  }
-
-  /** MERGE with Cypher's ON CREATE SET / ON MATCH SET: incoming rows
-    * whose ID already exists update the old rows with `onMatch`; new rows
-    * are inserted with `onCreate` applied.
+  /** MERGE with Cypher's ON CREATE SET / ON MATCH SET, keyed on ID: the
+    * stored rows whose ID an incoming row carries take `onMatch` (and
+    * keep their values otherwise); the other incoming rows are inserted
+    * with `onCreate` applied.
     */
   def mergeNodesWith(label: String, df: DataFrame,
       onCreate: Map[String, Column] = Map.empty,
       onMatch: Map[String, Column] = Map.empty): PropertyGraph = {
-    if (!hasLabel(label)) {
-      val created = onCreate.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, v) }
-      return copyWith(n = nodeThunks + (label -> thunk(created)))
-    }
+    def created(d: DataFrame) = onCreate.foldLeft(d) { case (d, (k, v)) => d.withColumn(k, v) }
+    if (!hasLabel(label)) return copyWith(n = nodeThunks + (label -> thunk(created(df))))
     val old = nodeFrame(label)
-    val matchedIds = df.select(ID).distinct().withColumn("__matched", lit(true))
-    val updatedOld0 = old.join(matchedIds, Seq(ID), "left_outer")
-    val updatedOld = onMatch.foldLeft(updatedOld0) { case (d, (k, v)) =>
-      if (d.columns.contains(k))
-        d.withColumn(k, when(coalesce(col("__matched"), lit(false)), v).otherwise(col(k)))
-      else d.withColumn(k, when(coalesce(col("__matched"), lit(false)), v))
-    }.drop("__matched")
-    val news0 = df.join(old.select(ID), Seq(ID), "left_anti")
-    val news = onCreate.foldLeft(news0) { case (d, (k, v)) => d.withColumn(k, v) }
-    copyWith(n = nodeThunks +
-      (label -> thunk(updatedOld.unionByName(news, allowMissingColumns = true))))
+    val news = df.join(old.select(ID), Seq(ID), "left_anti")
+    copyWith(n = nodeThunks + (label -> thunk(
+      assign(old, idFrame(df.select(ID)), onMatch).unionByName(created(news), allowMissingColumns = true))))
   }
 
-  /** SET n.prop = expr for rows matching `cond`. */
-  def setNodeProps(label: String, cond: Column, assigns: Map[String, Column]): PropertyGraph = {
-    val old = nodeFrame(label)
-    val updated = assigns.foldLeft(old) { case (d, (k, v)) =>
-      if (d.columns.contains(k)) d.withColumn(k, when(cond, v).otherwise(col(k)))
-      else d.withColumn(k, when(cond, v))
+  /** The one SET rule: rows of `frame` equal to a row of the distinct
+    * `keys` frame on all of its columns take `assigns`; the other rows
+    * keep their values (null in a new column).
+    */
+  private def assign(frame: DataFrame, keys: DataFrame,
+      assigns: Map[String, Column]): DataFrame =
+    if (assigns.isEmpty) frame
+    else {
+      val marked = frame.join(keys.withColumn("__m", lit(true)), keys.columns.toSeq, "left_outer")
+      val hit = coalesce(col("__m"), lit(false))
+      assigns.foldLeft(marked) { case (d, (k, v)) =>
+        d.withColumn(k, if (d.columns.contains(k)) when(hit, v).otherwise(col(k)) else when(hit, v))
+      }.drop("__m")
     }
-    copyWith(n = nodeThunks + (label -> thunk(updated)))
-  }
+
+  /** An id frame's first column as distinct `key` values: every `*ByIds`
+    * and `*ForIds` method takes its ids through here.
+    */
+  private def idFrame(ids: DataFrame, key: String = ID): DataFrame =
+    ids.select(col(ids.columns.head).as(key)).distinct()
 
   /** SET for rows whose ID appears in `ids` (the Cypher string compiler's
     * entry: MATCH bindings arrive as an id frame, joined — never
     * collected to the driver).
     */
   def setNodePropsForIds(label: String, ids: DataFrame,
-      assigns: Map[String, Column]): PropertyGraph = {
-    val old = nodeFrame(label)
-    val marked = old.join(
-      ids.select(col(ids.columns.head).as(ID)).distinct().withColumn("__m", lit(true)),
-      Seq(ID), "left_outer")
-    val updated = assigns.foldLeft(marked) { case (d, (k, v)) =>
-      if (d.columns.contains(k))
-        d.withColumn(k, when(coalesce(col("__m"), lit(false)), v).otherwise(col(k)))
-      else d.withColumn(k, when(coalesce(col("__m"), lit(false)), v))
-    }.drop("__m")
-    copyWith(n = nodeThunks + (label -> thunk(updated)))
-  }
+      assigns: Map[String, Column]): PropertyGraph =
+    copyWith(n = nodeThunks + (label -> thunk(assign(nodeFrame(label), idFrame(ids), assigns))))
 
-  /** Edge SET for rows whose EID appears in `eids` (the Cypher string
-    * compiler's entry: MATCH-bound rel variables arrive as an eid frame,
-    * joined against the edge class — never collected to the driver).
+  /** Edge SET for rows whose EID appears in `eids` (MATCH-bound rel
+    * variables arrive as an eid frame, joined against the edge class).
     */
   def setEdgePropsForIds(et: EdgeType, eids: DataFrame,
-      assigns: Map[String, Column]): PropertyGraph = {
-    val old = edgeFrame(et)
-    val marked = old.join(
-      eids.select(col(eids.columns.head).as(EID)).distinct().withColumn("__m", lit(true)),
-      Seq(EID), "left_outer")
-    val updated = assigns.foldLeft(marked) { case (d, (k, v)) =>
-      if (d.columns.contains(k))
-        d.withColumn(k, when(coalesce(col("__m"), lit(false)), v).otherwise(col(k)))
-      else d.withColumn(k, when(coalesce(col("__m"), lit(false)), v))
-    }.drop("__m")
-    copyWith(e = edgeThunks + (et -> thunk(updated)))
-  }
-
-  /** SET r.prop = expr on one edge class for rows matching `cond`. */
-  def setEdgeProps(et: EdgeType, cond: Column, assigns: Map[String, Column]): PropertyGraph = {
-    val old = edgeFrame(et)
-    val updated = assigns.foldLeft(old) { case (d, (k, v)) =>
-      if (d.columns.contains(k)) d.withColumn(k, when(cond, v).otherwise(col(k)))
-      else d.withColumn(k, when(cond, v))
-    }
-    copyWith(e = edgeThunks + (et -> thunk(updated)))
-  }
-
-  /** REMOVE n.prop — drop property columns from a label. */
-  def removeNodeProps(label: String, props: Seq[String]): PropertyGraph = {
-    require(!props.contains(ID), "cannot remove node identity")
-    copyWith(n = nodeThunks + (label -> thunk(nodeFrame(label).drop(props: _*))))
-  }
+      assigns: Map[String, Column]): PropertyGraph =
+    copyWith(e = edgeThunks + (et -> thunk(assign(edgeFrame(et), idFrame(eids, EID), assigns))))
 
   /** REMOVE the whole label (all its nodes) + incident edge classes. */
   def removeLabel(label: String): PropertyGraph = {
@@ -461,7 +416,7 @@ final class PropertyGraph private (
     * frame corrupts every downstream join) and fails loudly instead.
     */
   def demotePrimaryLabel(from: String, ids: DataFrame): PropertyGraph = {
-    val idDf = ids.select(col(ids.columns.head).as(ID)).distinct()
+    val idDf = idFrame(ids)
     val frame = nodeFrame(from)
     val hasLabels = frame.columns.contains(LABELS)
     val moved = frame.join(idDf, Seq(ID))
@@ -512,22 +467,15 @@ final class PropertyGraph private (
     */
   private def retypeEdgesFor(from: String, to: String,
       moveIds: DataFrame): PropertyGraph = {
-    val idDf = moveIds.select(col(moveIds.columns.head).as(ID)).distinct()
-    var g = this
-    Seq(SRC, DST).foreach { side =>
-      g.edgeClasses
-        .filter(et => (if (side == SRC) et.srcLabel else et.dstLabel) == from)
-        .foreach { et =>
-          val e = g.edgeFrame(et)
-          val key = idDf.withColumnRenamed(ID, side)
-          val mv = e.join(key, Seq(side), "left_semi")
-          val keep = e.join(key, Seq(side), "left_anti")
-          val newEt =
-            if (side == SRC) et.copy(srcLabel = to) else et.copy(dstLabel = to)
-          g = g.retypeOne(et, keep, newEt, mv)
-        }
+    val idDf = idFrame(moveIds)
+    Seq(SRC, DST).foldLeft(this) { (g, side) =>
+      g.incident(from).filter(_._2.contains(side)).foldLeft(g) { case (g, (et, _)) =>
+        val newEt = if (side == SRC) et.copy(srcLabel = to) else et.copy(dstLabel = to)
+        val e = g.edgeFrame(et)
+        g.retypeOne(et, byEndpoint(e, side, idDf, "left_anti"), newEt,
+          byEndpoint(e, side, idDf, "left_semi"))
+      }
     }
-    g
   }
 
   /** One class split for [[retypeEdgesFor]] — runs on the OWNING instance
@@ -542,65 +490,44 @@ final class PropertyGraph private (
     copyWith(e = edgeThunks + (oldEt -> thunk(keep)) + (newEt -> thunk(mvMerged)))
   }
 
-  /** Plain (non-DETACH) DELETE: Cypher errors when a deleted node still
-    * has relationships (reference: translator.ts DELETE translation).
-    * This forces an eager existence check — an action at call time.
+  /** The edge classes incident to `label`, each with the endpoint
+    * columns (SRC, DST or both) that hold its ids — the one incident-edge
+    * scan behind the plain-DELETE check, the DETACH cascade and the
+    * primary-label retype.
     */
-  def deleteNodes(label: String, cond: Column): PropertyGraph = {
-    val ids = nodeFrame(label).filter(cond).select(ID)
-    val attached = edgeClasses
-      .filter(et => et.srcLabel == label || et.dstLabel == label)
-      .exists { et =>
-        val e = edgeFrame(et)
-        val bySrc = if (et.srcLabel == label)
-          e.join(ids.withColumnRenamed(ID, SRC), Seq(SRC), "left_semi") else e.limit(0)
-        val byDst = if (et.dstLabel == label)
-          e.join(ids.withColumnRenamed(ID, DST), Seq(DST), "left_semi") else e.limit(0)
-        !bySrc.isEmpty || !byDst.isEmpty
-      }
+  private def incident(label: String): Seq[(EdgeType, Seq[String])] =
+    edgeClasses.map { et =>
+      et -> Seq(SRC -> et.srcLabel, DST -> et.dstLabel).collect { case (c, `label`) => c }
+    }.filter(_._2.nonEmpty)
+
+  /** Edges `e` joined (`how`) on endpoint column `side` against `idDf`. */
+  private def byEndpoint(e: DataFrame, side: String, idDf: DataFrame,
+      how: String): DataFrame =
+    e.join(idDf.withColumnRenamed(ID, side), Seq(side), how)
+
+  /** DETACH DELETE for an id frame: the nodes and every incident edge. */
+  def detachDeleteNodesByIds(label: String, ids: DataFrame): PropertyGraph = {
+    val idDf = idFrame(ids)
+    copyWith(
+      n = nodeThunks + (label -> thunk(nodeFrame(label).join(idDf, Seq(ID), "left_anti"))),
+      e = edgeThunks ++ incident(label).map { case (et, sides) =>
+        et -> thunk(sides.foldLeft(edgeFrame(et))(byEndpoint(_, _, idDf, "left_anti")))
+      })
+  }
+
+  /** Plain DELETE for an id frame: Cypher errors when a deleted node
+    * still has relationships (reference: translator.ts DELETE
+    * translation). The check is an eager action at call time.
+    */
+  def deleteNodesByIds(label: String, ids: DataFrame): PropertyGraph = {
+    val idDf = idFrame(ids)
+    val attached = incident(label).exists { case (et, sides) =>
+      sides.exists(side => !byEndpoint(edgeFrame(et), side, idDf, "left_semi").isEmpty)
+    }
     if (attached) throw new IllegalStateException(
       s"Cannot DELETE nodes of :$label that still have relationships; use DETACH DELETE")
     copyWith(n = nodeThunks +
-      (label -> thunk(nodeFrame(label).filter(!coalesce(cond, lit(false))))))
-  }
-
-  /** DETACH DELETE for an id frame (string-compiler entry). */
-  def detachDeleteNodesByIds(label: String, ids: DataFrame): PropertyGraph = {
-    val idDf = ids.select(col(ids.columns.head).as(ID)).distinct()
-    val newEdges = edgeThunks.map { case (et, th) =>
-      if (et.srcLabel != label && et.dstLabel != label) et -> th
-      else {
-        var out = edgeFrame(et)
-        if (et.srcLabel == label)
-          out = out.join(idDf.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-        if (et.dstLabel == label)
-          out = out.join(idDf.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-        et -> thunk(out)
-      }
-    }
-    copyWith(
-      n = nodeThunks + (label ->
-        thunk(nodeFrame(label).join(idDf, Seq(ID), "left_anti"))),
-      e = newEdges)
-  }
-
-  /** DETACH DELETE — remove matching nodes and all incident edges. */
-  def detachDeleteNodes(label: String, cond: Column): PropertyGraph = {
-    val old = nodeFrame(label)
-    val deletedIds = old.filter(cond).select(ID)
-    val newEdges = edgeThunks.map { case (et, _) =>
-      if (et.srcLabel != label && et.dstLabel != label) et -> edgeThunks(et)
-      else {
-        var out = edgeFrame(et)
-        if (et.srcLabel == label)
-          out = out.join(deletedIds.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-        if (et.dstLabel == label)
-          out = out.join(deletedIds.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-        et -> thunk(out)
-      }
-    }
-    copyWith(n = nodeThunks + (label -> thunk(old.filter(!coalesce(cond, lit(false))))),
-      e = newEdges)
+      (label -> thunk(nodeFrame(label).join(idDf, Seq(ID), "left_anti"))))
   }
 
   /** Derive a deterministic EID for a new-edge batch: hash of (relType,
@@ -653,34 +580,10 @@ final class PropertyGraph private (
     copyWith(e = edgeThunks + (et -> thunk(merged)))
   }
 
-  /** DELETE ()-[r]->() — remove matching edges of one class. */
-  def deleteEdges(et: EdgeType, cond: Column): PropertyGraph =
-    copyWith(e = edgeThunks + (et -> thunk(edgeFrame(et).filter(!coalesce(cond, lit(false))))))
-
   /** DELETE edges whose EID appears in `eids` (string-compiler entry). */
-  def deleteEdgesByIds(et: EdgeType, eids: DataFrame): PropertyGraph = {
-    val idDf = eids.select(col(eids.columns.head).as(EID)).distinct()
+  def deleteEdgesByIds(et: EdgeType, eids: DataFrame): PropertyGraph =
     copyWith(e = edgeThunks +
-      (et -> thunk(edgeFrame(et).join(idDf, Seq(EID), "left_anti"))))
-  }
-
-  /** Plain DELETE for an id frame — errors if any id still has edges. */
-  def deleteNodesByIds(label: String, ids: DataFrame): PropertyGraph = {
-    val idDf = ids.select(col(ids.columns.head).as(ID)).distinct()
-    val attached = edgeClasses
-      .filter(et => et.srcLabel == label || et.dstLabel == label)
-      .exists { et =>
-        val e = edgeFrame(et)
-        (et.srcLabel == label &&
-          !e.join(idDf.withColumnRenamed(ID, SRC), Seq(SRC), "left_semi").isEmpty) ||
-        (et.dstLabel == label &&
-          !e.join(idDf.withColumnRenamed(ID, DST), Seq(DST), "left_semi").isEmpty)
-      }
-    if (attached) throw new IllegalStateException(
-      s"Cannot DELETE nodes of :$label that still have relationships; use DETACH DELETE")
-    copyWith(n = nodeThunks +
-      (label -> thunk(nodeFrame(label).join(idDf, Seq(ID), "left_anti"))))
-  }
+      (et -> thunk(edgeFrame(et).join(idFrame(eids, EID), Seq(EID), "left_anti"))))
 
   // ---- snapshot persistence (reference: backup.ts save/restore) ----
 

@@ -258,4 +258,28 @@ class TckSemanticsSpec extends SparkSpec {
     val wrong = shapes.map { case (name, run) => name -> run() }.filter(_._2 != 2L)
     assert(wrong.isEmpty, s"shapes that miscount (want 2 each): $wrong")
   }
+
+  // ---- MERGE on properties (TCK: clauses/merge) ----
+
+  test("MERGE on a property map matches the loaded node; a second MERGE changes nothing") {
+    import org.apache.spark.sql.functions.col
+    // model: the corpus row itself, read straight from parquet
+    val loaded = spark.read.parquet(s"$sfDir/customer.parquet")
+      .filter(col("c_custkey") === 42L).collect()
+    assert(loaded.length == 1)
+    val q = "MERGE (c:Customer {c_custkey: 42}) ON MATCH SET c.hit = true"
+    val before = graph.nodeFrame("Customer").count()
+    val (g2, _) = graph.cypherWrite(q)
+    val customers = g2.nodeFrame("Customer")
+    assert(customers.count() == before, "MERGE on c_custkey must not create a node")
+    val hits = customers.filter(col("hit") === true).collect()
+    assert(hits.length == 1, s"want one matched row, got ${hits.length}")
+    assert(hits(0).getAs[Long]("_id") == 42L)
+    loaded(0).schema.fieldNames.foreach { f =>
+      assert(hits(0).getAs[Any](f) == loaded(0).getAs[Any](f), s"column $f changed")
+    }
+    val (g3, _) = g2.cypherWrite(q)
+    assert(sortedRowsOf(g3.nodeFrame("Customer")) == sortedRowsOf(customers),
+      "a second identical MERGE must change nothing")
+  }
 }

@@ -15,11 +15,13 @@ class GraphWriteSpec extends SparkSpec {
   }
 
   test("addNodes appends; mergeNodes dedupes by id") {
+    // mergeNodesWith with no assignments: an incoming row whose _id is
+    // stored is dropped, the stored row kept
     import spark.implicits._
     val g = tinyGraph()
     val more = Seq((3L, "cyd", 20L), (1L, "dup", 99L)).toDF("_id", "name", "age")
     assert(g.addNodes("Person", more).nodeFrame("Person").count() == 4)
-    val merged = g.mergeNodes("Person", more).nodeFrame("Person")
+    val merged = g.mergeNodesWith("Person", more).nodeFrame("Person")
     assert(merged.count() == 3)
     // existing row wins on merge
     assert(merged.filter(col("_id") === 1L).select("name").head().getString(0) == "ann")
@@ -41,26 +43,32 @@ class GraphWriteSpec extends SparkSpec {
   }
 
   test("setNodeProps / setEdgeProps update matching rows only") {
+    // setNodePropsForIds / setEdgePropsForIds over the ids a condition
+    // selects: only those rows change
     val g = tinyGraph()
-    val g2 = g.setNodeProps("Person", col("name") === "ann", Map("age" -> lit(31L)))
+    val g2 = g.setNodePropsForIds("Person",
+      g.nodeFrame("Person").filter(col("name") === "ann").select("_id"), Map("age" -> lit(31L)))
     val ages = g2.nodeFrame("Person").collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(ages == Map(1L -> 31L, 2L -> 40L))
     val et = EdgeType("KNOWS", "Person", "Person")
-    val g3 = g.setEdgeProps(et, col("_eid") === 100L, Map("since" -> lit(2020L)))
+    val g3 = g.setEdgePropsForIds(et,
+      g.edgeFrame(et).filter(col("_eid") === 100L).select("_eid"), Map("since" -> lit(2020L)))
     assert(g3.edgeFrame(et).select("since").head().getLong(0) == 2020L)
   }
 
   test("plain DELETE refuses attached nodes; DETACH DELETE cascades") {
     val g = tinyGraph()
+    def ids(cond: org.apache.spark.sql.Column) =
+      g.nodeFrame("Person").filter(cond).select("_id")
     val err = intercept[IllegalStateException] {
-      g.deleteNodes("Person", col("_id") === 1L)
+      g.deleteNodesByIds("Person", ids(col("_id") === 1L))
     }
     assert(err.getMessage.contains("DETACH"))
-    val g2 = g.detachDeleteNodes("Person", col("_id") === 1L)
+    val g2 = g.detachDeleteNodesByIds("Person", ids(col("_id") === 1L))
     assert(g2.nodeFrame("Person").count() == 1)
     assert(g2.edgeFrame(EdgeType("KNOWS", "Person", "Person")).count() == 0)
     // unattached node deletes fine
-    val g3 = g.deleteNodes("Person", col("_id") === 2L && lit(false))
+    val g3 = g.deleteNodesByIds("Person", ids(col("_id") === 2L && lit(false)))
     assert(g3.nodeFrame("Person").count() == 2)
   }
 
@@ -465,6 +473,80 @@ class GraphWriteSpec extends SparkSpec {
     intercept[Exception](
       g.cypherWrite("MATCH (n) SET n.x = 1 RETURN id(n) + count(n) AS b")
         ._2.get.collect())
+  }
+
+  test("cypherWrite: SET self-references inside list literals and indexes") {
+    val g = tinyGraph()
+    val (g2, _) = g.cypherWrite("MATCH (n:Person) SET n.pair = [n.age, 1]")
+    val pairs = g2.nodeFrame("Person").collect()
+      .map(r => r.getAs[Long]("_id") -> r.getAs[Seq[Long]]("pair")).toMap
+    assert(pairs == Map(1L -> Seq(30L, 1L), 2L -> Seq(40L, 1L)))
+    val (g3, _) = g.cypherWrite("MATCH (n:Person) SET n.first = [n.age, 1][0]")
+    val firsts = g3.nodeFrame("Person").collect()
+      .map(r => r.getAs[Long]("_id") -> r.getAs[Long]("first")).toMap
+    assert(firsts == Map(1L -> 30L, 2L -> 40L))
+  }
+
+  test("unlabeled-match write RETURN lifts an aggregate nested in a list") {
+    import spark.implicits._
+    val g = PropertyGraph(
+      Map("Person" -> Seq((1L, "ann"), (2L, "bob")).toDF("_id", "name"),
+        "City" -> Seq((1L, "oslo")).toDF("_id", "city")),
+      Map.empty[EdgeType, org.apache.spark.sql.DataFrame])
+    val (_, ret) = g.cypherWrite("MATCH (n) SET n.x = 1 RETURN [count(n)] AS c")
+    assert(ret.get.collect().map(_.getSeq[Long](0)).toSeq == Seq(Seq(3L)))
+  }
+
+  test("cypherWrite: MERGE between bound endpoints over repeated rows makes one edge") {
+    val g = tinyGraph()
+    val (g2, _) = g.cypherWrite(
+      """MATCH (a:Person {name: 'bob'}), (b:Person {name: 'ann'})
+         UNWIND [1, 2] AS x MERGE (a)-[:KNOWS]->(b)""")
+    val e = g2.edgeFrame(EdgeType("KNOWS", "Person", "Person"))
+    assert(e.count() == 2, "the stored 1->2 edge plus ONE new 2->1 edge")
+    assert(e.filter(col("_src") === 2L && col("_dst") === 1L).count() == 1)
+  }
+
+  test("cypherWrite: MERGE on properties matches the stored node") {
+    val g = tinyGraph()
+    val (g2, _) = g.cypherWrite("MERGE (p:Person {name: 'ann'}) ON MATCH SET p.seen = true")
+    val people = g2.nodeFrame("Person").collect()
+      .map(r => r.getAs[Long]("_id") -> Option(r.getAs[Any]("seen"))).toMap
+    assert(people == Map(1L -> Some(true), 2L -> None),
+      s"MERGE must match ann (_id 1), not mint a new node: $people")
+  }
+
+  test("cypherWrite: MERGE ON CREATE / ON MATCH SET may change a pattern property") {
+    val g = tinyGraph()
+    val (g2, ret) = g.cypherWrite("MERGE (n:L {k: 1}) ON CREATE SET n.k = 2 RETURN n.k AS k")
+    assert(ret.get.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(g2.nodeFrame("L").collect().map(_.getAs[Long]("k")).toSeq == Seq(2L))
+    val (g3, ret2) = g.cypherWrite(
+      "MERGE (p:Person {name: 'ann'}) ON MATCH SET p.name = 'anna' RETURN id(p) AS i, p.name AS n")
+    assert(ret2.get.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq == Seq(1L -> "anna"))
+    assert(g3.nodeFrame("Person").count() == 2)
+    // the relationship path: the edge joins the node the SET changed
+    val (g4, _) = g.cypherWrite(
+      "MERGE (a:A {k: 1})-[:T]->(b:B {k: 1}) ON CREATE SET a.k = 2")
+    val a = g4.nodeFrame("A").collect()
+    assert(a.map(_.getAs[Long]("k")).toSeq == Seq(2L))
+    val t = g4.edgeFrame(EdgeType("T", "A", "B")).collect()
+    assert(t.map(r => r.getAs[Long]("_src") -> r.getAs[Long]("_dst")).toSeq ==
+      Seq(a.head.getAs[Long]("_id") -> g4.nodeFrame("B").head().getAs[Long]("_id")))
+  }
+
+  test("cypherWrite: relationship MERGE rejects an unbound endpoint with no properties") {
+    import spark.implicits._
+    val g = tinyGraph().addNodes("Language", Seq((1L, "en"), (2L, "fr")).toDF("_id", "code"))
+    val err = intercept[RuntimeException] {
+      g.cypherWrite(
+        """MATCH (p:Person {name: 'ann'}) MERGE (p)-[r:SPEAKS]->(:Language) RETURN r""")
+    }
+    assert(err.getMessage.contains("no properties"), err.getMessage)
+    // a node MERGE with no properties matches every node of its label
+    val (g2, ret) = g.cypherWrite("MERGE (l:Language) RETURN l.code AS c")
+    assert(ret.get.collect().map(_.getString(0)).sorted.toSeq == Seq("en", "fr"))
+    assert(g2.nodeFrame("Language").count() == 2)
   }
 
   test("snapshot save/load round-trips a written graph") {

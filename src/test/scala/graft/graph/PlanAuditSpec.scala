@@ -2,7 +2,10 @@ package graft.graph
 
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins._
 
 /** Pins the physical-plan shape of the headline queries so broadcast /
@@ -10,11 +13,26 @@ import org.apache.spark.sql.execution.joins._
   * the bench (r10: a hint refactor dropped every fixed-length pattern-join
   * hint and nothing noticed until the judge read the plans).
   *
-  * Uses `queryExecution.sparkPlan` — the strategy-chosen plan BEFORE AQE
-  * wrapping: hint handling happens at strategy time, and the pre-AQE tree
-  * is traversable with `collect`.
+  * Join and scan shapes use `queryExecution.sparkPlan` — the
+  * strategy-chosen plan BEFORE AQE wrapping: hint handling happens at
+  * strategy time, and the pre-AQE tree is traversable with `collect`.
+  * Exchange counts use the planned `executedPlan` ([[exchanges]]).
   */
 class PlanAuditSpec extends SparkSpec {
+
+  private object Adaptive extends AdaptiveSparkPlanHelper
+
+  /** Shuffle exchanges of the planned physical plan (`hashOnly`: hash
+    * partitioned ones only). Under AQE, EnsureRequirements places
+    * exchanges inside the adaptive plan, so `sparkPlan` holds none; the
+    * planned `executedPlan`, walked through [[AdaptiveSparkPlanHelper]],
+    * holds them all.
+    */
+  private def exchanges(df: DataFrame, hashOnly: Boolean = false): Seq[ShuffleExchangeExec] =
+    Adaptive.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec
+        if !hashOnly || e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
 
   private def joinKinds(df: DataFrame): Seq[String] =
     df.queryExecution.sparkPlan.collect {
@@ -69,17 +87,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_repetition: row-local kernel — the ONLY exchange is the output sort") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = SparkEntry.queries("q_repetition")(spark, sfDir)
     assert(joinKinds(df).isEmpty,
       "repetition must be join-free")
     // r14: every signal is a within-document aggregate, computed by the
     // RepStats kernel in the scan — no aggregation exchange may remain;
-    // the final orderBy contributes the single range exchange
-    val exchanges = df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchanges.length <= 1, s"unexpected exchanges: ${exchanges.length}")
+    // the final orderBy contributes the single range exchange (1 planned)
+    val n = exchanges(df).length
+    assert(n <= 1, s"unexpected exchanges: $n")
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
     val aggs = df.queryExecution.sparkPlan.collect {
       case a: HashAggregateExec => a
@@ -120,13 +135,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_normalize: row-local cleanup — no joins, no aggregates, sort-only exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = SparkEntry.queries("q_normalize")(spark, sfDir)
     assert(joinKinds(df).isEmpty, "normalization must be join-free")
-    val exchanges = df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchanges.length <= 1, s"unexpected exchanges: ${exchanges.length}")
+    val n = exchanges(df).length // 1 planned: the output sort
+    assert(n <= 1, s"unexpected exchanges: $n")
   }
 
   test("NFC kernel survives forced codegen") {
@@ -144,42 +156,30 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("hllRegisters: exactly one hash exchange (the m-row register agg)") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = graft.pipeline.Sketches.hllRegisters(
       GraphLoader.table(spark, sfDir, "lineitem"), "l_orderkey", "l_returnflag")
     assert(joinKinds(df).isEmpty, "register build must be join-free")
-    val exchanges = df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec => e
-    }
-    // 0 when the test-SF scan is a single partition, 1 otherwise —
-    // never more than the one partial→final register aggregation
-    assert(exchanges.length <= 1,
-      s"register build should shuffle at most once, got ${exchanges.length}")
+    // the one partial→final register aggregation (1 planned)
+    val n = exchanges(df, hashOnly = true).length
+    assert(n == 1, s"register build should shuffle exactly once, got $n")
   }
 
   test("q_funnel: per-step joins reuse the user_id partitioning — ≤ 4 hash exchanges") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = SparkEntry.queries("q_funnel")(spark, sfDir)
     val js = joinKinds(df)
     assert(!js.exists(Set("bnlj", "cartesian")), s"funnel joins degraded: $js")
-    val hashEx = df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec
-        if e.outputPartitioning.toString.contains("hashpartitioning") => e
-    }
-    // 3 per-step inputs + the first aggregation; later groupBys are
-    // satisfied by the join's user_id partitioning (superset clustering)
-    assert(hashEx.length <= 4,
-      s"funnel re-shuffles between steps: ${hashEx.length} hash exchanges")
+    // The name's "≤ 4" is the old bound; this asserts ≤ 1 hash exchange,
+    // the planned count: the per-step joins and later groupBys are
+    // satisfied by one user_id partitioning (superset clustering)
+    val n = exchanges(df, hashOnly = true).length
+    assert(n <= 1, s"funnel re-shuffles between steps: $n hash exchanges")
   }
 
   test("q_chunk: row-local chunking — no joins, no aggregates, sort-only exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = SparkEntry.queries("q_chunk")(spark, sfDir)
     assert(joinKinds(df).isEmpty, "chunking must be join-free")
-    val exchanges = df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchanges.length <= 1, s"unexpected exchanges: ${exchanges.length}")
+    val n = exchanges(df).length // 1 planned: the output sort
+    assert(n <= 1, s"unexpected exchanges: $n")
   }
 
   test("q_dedup_substr: span cut is keyed joins only, text never theta-joins") {
@@ -323,9 +323,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("cypher_read shapes: join, aggregate, exchange and node counts are pinned") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
-    object Plans extends AdaptiveSparkPlanHelper
     // range-built frames, so no optimizer rule folds a local relation away
     def frame(n: Int, cols: String*): DataFrame = spark.range(1, n + 1).selectExpr(cols: _*)
     val g = PropertyGraph(
@@ -382,7 +380,7 @@ class PlanAuditSpec extends SparkSpec {
       val opt = qe.optimizedPlan
       name -> ((opt.collect { case j: Join => j }.size,
         opt.collect { case a: Aggregate => a }.size,
-        Plans.collect(qe.executedPlan) { case e: Exchange => e }.size,
+        Adaptive.collect(qe.executedPlan) { case e: Exchange => e }.size,
         opt.collect { case p => p }.size))
     }.toMap
     assert(got == want, s"read-shape plans moved: got $got")
