@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Ast._
 import CypherCompiler.Ctx
-import graft.graph.{EdgeType, PropertyGraph}
-import graft.graph.PropertyGraph.{DST, EID, ID, LABELS, SRC}
+import graft.graph.{EdgeType, PatternMatcher, PropertyGraph}
+import graft.graph.PropertyGraph.{DST, EID, ID, LABEL, LABELS, SRC}
 import graft.util.Frames
 
 /** Executes Cypher WRITE queries (CREATE / MERGE / SET / REMOVE / DELETE /
@@ -17,7 +17,8 @@ import graft.util.Frames
   * /root/reference/src/translator.ts (CREATE/MERGE/SET/DELETE into SQLite
   * DML). Spark-first divergence: writes are snapshot transforms — MATCH
   * bindings flow into id FRAMES that join against label frames; nothing is
-  * collected to the driver.
+  * collected to the driver. Read clauses, WITH and RETURN compile through
+  * [[CypherCompiler]].
   *
   * Supported subset (documented; the rest raises):
   *  - CREATE of literal node patterns, and of edges between variables
@@ -28,13 +29,26 @@ import graft.util.Frames
   *    they may change a pattern property). An unbound node
   *    matches the stored nodes of its label equal to the pattern's
   *    property map, or to its `_id` when the pattern gives one; rows
-  *    with no match create a node with a content-hash id.
-  *  - SET/REMOVE on node properties: `SET n.p = expr` where expr uses
-  *    n's own properties and literals; and on relationship properties
-  *    (`SET r.p = expr`, `SET r += map`) when the MATCH pins the rel
-  *    variable to one edge class (type + endpoint labels).
+  *    with no match create a node.
+  *  - SET / REMOVE of node properties and labels; SET / REMOVE of
+  *    relationship properties when the MATCH pins the rel variable to one
+  *    edge class (type + endpoint labels).
   *  - DELETE / DETACH DELETE of node variables; DELETE of relationship
   *    variables when the edge class is unambiguous.
+  *
+  * Bound nodes: every write finds the frame of a bound node through
+  * [[homes]] — the variable's static label, else each row's `_label`
+  * (reference: translator.ts SET/DELETE are label-agnostic over one node
+  * table), so `MATCH (n) SET n.x = 1` writes every label's frame in one
+  * pass.
+  *
+  * SET values evaluate over the target's frame row: `n.p` reads column
+  * `p` (null when the frame lacks it), and a bare `n` or a map projection
+  * `n{...}` is the row as a struct (frame columns plus `_label`). After a
+  * SET or REMOVE the written variables are rebound to the post-write
+  * frames ([[rebind]]), so a later clause and RETURN see the new values;
+  * a REMOVE that edits a node's labels does not rebind it (removing its
+  * primary label moves it to another frame).
   */
 final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     params: Map[String, Any] = Map.empty) {
@@ -50,245 +64,48 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     runPart(q.parts.head)
   }
 
-  /** Writes through an UNLABELED match (`MATCH (n) SET n.x = 1`): the
-    * write clauses resolve labels statically (per-label ids are not
-    * globally unique, so one cross-frame id join could touch wrong
-    * rows), so the query expands to one run per candidate label with
-    * the variable's NodePat pinned — the write-side analog of the read
-    * compiler's union-over-label-assignments, threading the graph
-    * snapshot through the runs (frames are disjoint, so order is
-    * unobservable). RETURN parts union by name; heterogeneous entity
-    * structs across labels reject naturally in the union. Reference:
-    * unlabeled writes update every matching node (translator.ts SET/
-    * DELETE translation is label-agnostic over the generic node table).
-    *
-    * Aggregating / DISTINCT / ORDER BY / SKIP / LIMIT RETURNs cannot
-    * simply union per-label projections (an aggregate would collapse
-    * per label, a LIMIT would apply per label). Those shapes are
-    * answered by SPLITTING the projection: each per-label run returns
-    * the raw grouping keys and aggregate ARGUMENTS (row-wise, so the
-    * per-label compile stays trivial), the rows union across labels,
-    * and the original aggregation + DISTINCT + ORDER BY/SKIP/LIMIT
-    * apply ONCE over the union — the reference's single-nodes-table
-    * aggregation (translator.ts), re-expressed. Spark's hash aggregate
-    * still partial-aggregates the union map-side, so count/sum/min/max
-    * keep the same scale shape the old per-label-partials path had,
-    * while avg/collect/stdev/percentiles/DISTINCT aggregates are now
-    * answered exactly. Aggregates nested inside expressions
-    * (`RETURN count(n)+1`, r13) and implicit grouping — non-aggregate
-    * items as grouping keys, including a key expression reused inside
-    * an aggregating item (`RETURN n.y, n.y + count(*)`, r14) — are both
-    * answered; no write-RETURN shape rejects by design anymore. The one
-    * deliberate error left: a NON-key row expression mixed with an
-    * aggregate (`RETURN id(n) + count(n)` with no id(n) item), which
-    * openCypher itself rejects and the reference's SQLite translation
-    * answers with an arbitrary row's value.
-    */
-  private def runPart(part: SingleQuery): (PropertyGraph, Option[DataFrame]) =
-    unlabeledWriteTarget(part) match {
-      case Some((ci, pi, ni)) =>
-        val retIdx = part.clauses.indexWhere {
-          case ReturnClause(p) =>
-            p.items.exists(it => CypherParser.containsAgg(it.expr)) ||
-              p.distinct || p.orderBy.nonEmpty || p.skip.nonEmpty ||
-              p.limit.nonEmpty
-          case _ => false
-        }
-        // (per-label pre-projection, global post-union projection)
-        val split: Option[(Projection, Projection)] =
-          if (retIdx < 0) None
-          else {
-            val p = part.clauses(retIdx).asInstanceOf[ReturnClause].p
-            if (p.items.exists(_.expr == Star)) sys.error(
-              "RETURN * with DISTINCT/aggregates/ORDER BY/SKIP/LIMIT over " +
-                "an unlabeled write match is unsupported — label the " +
-                "matched variable or list the columns")
-            def isConst(e: Expr): Boolean = e match {
-              case Lit(_) | Param(_) => true
-              case Neg(x) => isConst(x)
-              case _ => false
-            }
-            val pre = scala.collection.mutable.Buffer.empty[Item]
-            var liftN = 0
-            // Rewrite an aggregating item for the split: every aggregate
-            // call's arguments lift into per-label pre-columns; the
-            // expression AROUND the aggregates (count(n)+1, avg(x)*2,
-            // sum(a)/sum(b), toFloat(count(n))...) survives verbatim and
-            // evaluates once over the global aggregation — the read
-            // compiler accepts aggregates nested in expressions natively.
-            // Cypher implicit grouping: the non-aggregate ITEMS are the
-            // grouping keys, and a copy of a key expression appearing
-            // INSIDE an aggregating item (`RETURN n.y, n.y + count(*)`)
-            // must resolve to the same lifted key column over the union
-            // — maximal key-equal subtrees map to their __uk columns. A
-            // non-key row subtree mixed with an aggregate (`RETURN
-            // id(n) + count(n)` with no id(n) item) stays an error
-            // (openCypher rejects it; the reference's SQLite translation
-            // returns an arbitrary row's value for it): it errors
-            // downstream when the variable fails to resolve over the
-            // union frame.
-            val keyCol: Map[Expr, String] = p.items.zipWithIndex.collect {
-              case (it, i) if !CypherParser.containsAgg(it.expr) &&
-                  !isConst(it.expr) =>
-                it.expr -> s"__uk_$i"
-            }.toMap
-            def liftAgg(i: Int): PartialFunction[Expr, Expr] = {
-              case k if keyCol.contains(k) => Var(keyCol(k))
-              case Func(fn, args, dist) if CypherParser.isAggFunc(fn) =>
-                val gargs = args.map {
-                  // count(*): count a constant over the union rows
-                  case Star => Lit(1L)
-                  case a if isConst(a) => a
-                  // plain count only needs a null indicator — lifting
-                  // it (not the value) keeps `count(n)` workable when
-                  // the entity structs are heterogeneous across labels
-                  case a if fn.equalsIgnoreCase("count") && !dist =>
-                    val nm = s"__ua_${i}_$liftN"; liftN += 1
-                    pre += Item(CaseExpr(None,
-                      Seq((IsNull(a, negated = true), Lit(1L))), None),
-                      Some(nm), nm)
-                    Var(nm)
-                  case a =>
-                    val nm = s"__ua_${i}_$liftN"; liftN += 1
-                    pre += Item(a, Some(nm), nm)
-                    Var(nm)
-                }
-                Func(fn, gargs, dist)
-            }
-            val globalItems = p.items.zipWithIndex.map { case (it, i) =>
-              it.expr match {
-                case e if !CypherParser.containsAgg(e) =>
-                  val nm = s"__uk_$i"
-                  pre += Item(e, Some(nm), nm)
-                  Item(Var(nm), Some(it.name), it.name)
-                case e =>
-                  Item(e.transform(liftAgg(i)), Some(it.name), it.name)
-              }
-            }
-            // ORDER BY over an expression that is not one of the output
-            // items (legal in Cypher without DISTINCT/aggregates) rides
-            // along as a hidden lifted column
-            val itemKeys = p.items.map(_.name).toSet ++ p.items.map(_.text)
-            val hasAgg = p.items.exists(it => CypherParser.containsAgg(it.expr))
-            val globalSorts = p.orderBy.zipWithIndex.map { case (s, k) =>
-              val covered = s.expr match {
-                case Var(n) => itemKeys(n)
-                case _ => itemKeys(s.text)
-              }
-              if (covered || hasAgg || p.distinct) s
-              else {
-                val nm = s"__os_$k"
-                pre += Item(s.expr, Some(nm), nm)
-                SortItem(Var(nm), s.asc, nm)
-              }
-            }
-            Some((
-              Projection(pre.toSeq, distinct = false, Nil, None, None, p.where),
-              Projection(globalItems, p.distinct, globalSorts, p.skip,
-                p.limit, None)))
-          }
-        var cur = g0
-        val rets = scala.collection.mutable.Buffer.empty[DataFrame]
-        g0.labels.foreach { l =>
-          val m = part.clauses(ci).asInstanceOf[MatchClause]
-          val path = m.paths(pi)
-          val pinned = path.copy(nodes =
-            path.nodes.updated(ni, path.nodes(ni).copy(label = Some(l))))
-          val clauses0 = part.clauses.updated(ci,
-            m.copy(paths = m.paths.updated(pi, pinned)))
-          val clauses = split match {
-            case Some((preP, _)) =>
-              clauses0.updated(retIdx, ReturnClause(preP))
-            case None => clauses0
-          }
-          val (g2, r) = new CypherWriter(cur, spark, params)
-            .runPart(SingleQuery(clauses))
-          cur = g2
-          r.foreach(rets += _)
-        }
-        val ret =
-          if (rets.isEmpty) None
-          else {
-            val u = rets.reduce(_.unionByName(_, allowMissingColumns = true))
-            split match {
-              case Some((_, globalP)) =>
-                Some(new CypherCompiler(cur, spark, params)
-                  .applyProjection(Some(Ctx(u, Map.empty)), globalP))
-              case None => Some(u)
-            }
-          }
-        (cur, ret)
-      case None => runResolved(part)
-    }
-
-  /** First (clause, path, node) position binding an unlabeled,
-    * non-anonymous variable that a later write clause targets.
-    */
-  private def unlabeledWriteTarget(part: SingleQuery): Option[(Int, Int, Int)] = {
-    val written: Set[String] = part.clauses.flatMap {
-      case SetClause(items) => items.flatMap {
-        case (Prop(Var(v), _), _) => Seq(v)
-        case (Var(v), _) => Seq(v)
-        case _ => Nil
-      }
-      case RemoveClause(items) => items.flatMap {
-        case Prop(Var(v), _) => Seq(v)
-        case LabelPred(v, _) => Seq(v)
-        case _ => Nil
-      }
-      case DeleteClause(vars, _) => vars
-      case _ => Nil
-    }.toSet
-    part.clauses.zipWithIndex.flatMap {
-      case (m: MatchClause, ci) =>
-        for {
-          (p, pi) <- m.paths.zipWithIndex
-          (n, ni) <- p.nodes.zipWithIndex
-          if !n.anonymous && n.allLabels.isEmpty && written(n.name)
-        } yield (ci, pi, ni)
-      case _ => Nil
-    }.headOption
-  }
-
-  private def runResolved(part: SingleQuery): (PropertyGraph, Option[DataFrame]) = {
+  private def runPart(part: SingleQuery): (PropertyGraph, Option[DataFrame]) = {
     var graph = g0
     def compiler = new CypherCompiler(graph, spark, params)
     var ctx: Option[Ctx] = None
     // edge classes bound to rel variables by the MATCHes seen so far
     var relClasses = Map.empty[String, EdgeType]
     var returned: Option[DataFrame] = None
+    // rebinds what a SET / REMOVE wrote when a later clause reads it
+    def rebound(i: Int, vars: Seq[String]): Option[Ctx] =
+      if (i == part.clauses.size - 1) ctx
+      else ctx.map(rebind(graph, _, vars, relClasses))
 
-    part.clauses.foreach {
-      case MatchClause(paths, optional, where, _) =>
+    part.clauses.zipWithIndex.foreach {
+      case (MatchClause(paths, optional, where, _), _) =>
         ctx = Some(compiler.applyMatch(ctx, paths, optional, where))
         relClasses = relClasses ++ boundRelClasses(graph, paths,
           ctx.map(_.labels).getOrElse(Map.empty))
-      case UnwindClause(list, alias) =>
+      case (UnwindClause(list, alias), _) =>
         ctx = Some(compiler.applyUnwind(ctx, list, alias))
-      case WithClause(p) =>
+      case (WithClause(p), _) =>
         val c = compiler
         ctx = Some(Ctx(c.applyProjection(ctx, p), c.keptLabels(ctx, p),
           ctx.exists(_.staticallyEmpty)))
       // a statically-empty context (MATCH over an unsatisfiable label
       // set) makes every write a no-op — reference parity: writes over an
-      // empty match succeed and do nothing. Guarded here because the
-      // writes below resolve labels STATICALLY and would otherwise error
-      // on a frame that provably matches nothing.
-      case CreateClause(_) | MergeClause(_, _, _) | SetClause(_) |
-           RemoveClause(_) | DeleteClause(_, _)
+      // empty match succeed and do nothing.
+      case (CreateClause(_) | MergeClause(_, _, _) | SetClause(_) |
+           RemoveClause(_) | DeleteClause(_, _), _)
           if ctx.exists(_.staticallyEmpty) => ()
-      case CreateClause(paths) =>
+      case (CreateClause(paths), _) =>
         val (g2, ctx2) = applyCreate(graph, ctx, paths)
         graph = g2; ctx = ctx2
-      case MergeClause(path, onCreate, onMatch) =>
+      case (MergeClause(path, onCreate, onMatch), _) =>
         val (g2, ctx2) = applyMerge(graph, ctx, path, onCreate, onMatch)
         graph = g2; ctx = ctx2
-      case SetClause(items) =>
+      case (SetClause(items), i) =>
         graph = applySet(graph, ctxOrFail(ctx), items, relClasses)
-      case RemoveClause(items) =>
+        ctx = rebound(i, items.map(_._1).collect { case Prop(Var(v), _) => v; case Var(v) => v })
+      case (RemoveClause(items), i) =>
         val (labelItems, propItems) = items.partition(_.isInstanceOf[LabelPred])
-        graph = applySet(graph, ctxOrFail(ctx), propItems.map(p => p -> Lit(null)),
-          relClasses)
+        val c = ctxOrFail(ctx)
+        graph = applySet(graph, c, propItems.map(p => p -> Lit(null)), relClasses)
         // REMOVE n:Label — two cases under the multi-label shim:
         //  * removing the PRIMARY label: NON-detaching demotion — the
         //    node moves to its first remaining label's frame (or the
@@ -300,22 +117,24 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         //    REMOVE drops one entry from the label array). Removing a
         //    label the node doesn't carry is a no-op (reference parity).
         labelItems.foreach { case LabelPred(v, label) =>
-          val c = ctxOrFail(ctx)
-          val primary = c.labels.getOrElse(v,
-            sys.error(s"REMOVE $v:$label: $v has no statically-known label"))
-          val ids = c.df.select(col(s"$v.${graft.graph.PropertyGraph.ID}"))
-          if (primary == label) graph = graph.demotePrimaryLabel(label, ids)
-          else if (graph.nodeFrame(primary).columns.contains(LABELS))
-            graph = graph.setNodePropsForIds(primary, ids,
-              Map(LABELS -> array_remove(col(LABELS), label)))
-          // else: the frame has no secondary labels at all — no-op
+          graph = homes(graph, c, v).foldLeft(graph) { case (acc, (l, on)) =>
+            val ids = idsAt(c, v, on)
+            if (l == label) acc.demotePrimaryLabel(l, ids)
+            else if (acc.nodeFrame(l).columns.contains(LABELS))
+              acc.setNodePropsForIds(l, ids, Map(LABELS -> array_remove(col(LABELS), label)))
+            else acc // the frame has no secondary labels at all
+          }
         case other => sys.error(s"unsupported REMOVE item: $other")
         }
-      case DeleteClause(vars, detach) =>
+        // a node whose labels this REMOVE edits keeps its binding: a
+        // primary-label REMOVE moves it out of the frame it is keyed in
+        val relabeled = labelItems.collect { case LabelPred(v, _) => v }.toSet
+        ctx = rebound(i, propItems.collect { case Prop(Var(v), _) if !relabeled(v) => v })
+      case (DeleteClause(vars, detach), _) =>
         graph = applyDelete(graph, ctxOrFail(ctx), vars, detach, relClasses)
-      case ReturnClause(p) =>
+      case (ReturnClause(p), _) =>
         returned = Some(compiler.applyProjection(ctx, p))
-      case other => sys.error(s"unsupported clause in write query: $other")
+      case (other, _) => sys.error(s"unsupported clause in write query: $other")
     }
     (graph, returned)
   }
@@ -323,28 +142,93 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
   private def ctxOrFail(ctx: Option[Ctx]): Ctx =
     ctx.getOrElse(sys.error("SET/REMOVE/DELETE requires a preceding MATCH"))
 
-  /** The one entity binder: bind `name` in `cur` to the entity rows of
-    * `frame` (a node label or an edge class, tagged `tag`) that equal each
-    * row on every (row value, frame column) pair of `on` — a merged node
-    * on its `_id`, a created or merged relationship on (src, dst) — so a
-    * following RETURN/SET sees every property of the POST-write frame,
-    * ON CREATE / ON MATCH SET results included (reference shape: MERGE
-    * (u {...}) ... RETURN u). MERGE also looks up its stored nodes
-    * through here, with `how` = left_outer. Parallel-edge caveat
-    * (documented): a relationship binds every edge of its class between
-    * the pair, not only the property-matching one.
+  /** The one bound-node rule of every write: the frames that hold the
+    * node bound to `v`, each with the condition its rows meet. A
+    * statically-labeled `v` lives in its label's frame on every row (no
+    * condition); otherwise each graph label `l` holds the rows whose
+    * struct has `_label = l` — ids are only unique per label, so the
+    * condition also keeps City 1 from being taken for Person 1.
     */
-  private def bindEntity(cur: DataFrame, name: String, frame: DataFrame,
-      tag: String, on: Seq[(Column, String)], how: String = "inner"): DataFrame = {
+  private def homes(g: PropertyGraph, ctx: Ctx, v: String): Seq[(String, Option[Column])] =
+    ctx.labels.get(v) match {
+      case Some(l) => Seq(l -> None)
+      case None =>
+        require(PatternMatcher.identity(ctx.df, v).exists(_.size == 2),
+          s"write target $v is not a bound node")
+        g.labels.map(l => l -> Some(col(s"$v.$LABEL") === l))
+    }
+
+  /** The ids of the `v` nodes on the rows of `ctx` that meet `on`. */
+  private def idsAt(ctx: Ctx, v: String, on: Option[Column]): DataFrame =
+    on.fold(ctx.df)(ctx.df.filter).select(col(s"$v.$ID"))
+
+  /** Rebinds `vars` of `ctx` to their rows in the post-write frames of `g`,
+    * keyed on their identity — a node on `(_id, _label)` over the frames
+    * [[homes]] finds it in, a relationship on `_eid` — so later clauses
+    * read the written values. Each variable keeps its column position.
+    */
+  private def rebind(g: PropertyGraph, ctx: Ctx, vars: Seq[String],
+      relClasses: Map[String, EdgeType]): Ctx =
+    vars.distinct.foldLeft(ctx) { (c, v) =>
+      val old = s"__old_$v"
+      val (frames, key) = relClasses.get(v) match {
+        case Some(et) => (Seq(g.edgeFrame(et) -> et.relType), Seq(col(s"$old.$EID") -> EID))
+        case None => (homes(g, c, v).map { case (l, _) => g.nodeFrame(l) -> l },
+          Seq(col(s"$old.$ID") -> ID, col(s"$old.$LABEL") -> LABEL))
+      }
+      if (frames.isEmpty) c
+      else c.copy(df = bindEntity(c.df.withColumnRenamed(v, old), v, frames, key, "left_outer")
+        .select(c.df.columns.map(col).toIndexedSeq: _*))
+    }
+
+  /** The one entity binder: bind `name` in `cur` to the entity rows of
+    * `frames` (node labels or edge classes, each with its `_label` tag)
+    * that equal each row on every (row value, frame column) pair of `on`
+    * — `_label` keys on the tag. A merged node binds on its `_id`, a
+    * created or merged relationship on (src, dst), a rebound entity on
+    * its identity ([[rebind]]), so a following RETURN/SET sees every
+    * property of the POST-write frame (reference shape: MERGE (u {...})
+    * ... RETURN u). Several frames are padded to one struct type and
+    * unioned. MERGE also looks up its stored nodes through here, with
+    * `how` = left_outer. Parallel-edge caveat (documented): a
+    * relationship binds every edge of its class between the pair, not
+    * only the property-matching one.
+    */
+  private def bindEntity(cur: DataFrame, name: String, frames: Seq[(DataFrame, String)],
+      on: Seq[(Column, String)], how: String = "inner"): DataFrame = {
     val (vs, ks) = on.indices.map(i => (s"__bv_$i", s"__bk_$i")).unzip
-    val entity = frame.select(
-      struct((frame.columns.map(col) :+ lit(tag).as(PropertyGraph.LABEL)).toIndexedSeq: _*)
-        .as(name) +: on.zip(ks).map { case ((_, c), k) => col(c).as(k) }: _*)
+    val parts = frames.map { case (frame, tag) => frame.select(
+      struct((frame.columns.map(col) :+ lit(tag).as(LABEL)).toIndexedSeq: _*).as(name) +:
+        on.zip(ks).map { case ((_, c), k) => (if (c == LABEL) lit(tag) else col(c)).as(k) }: _*)
+    }
+    val entity =
+      if (parts.size == 1) parts.head
+      else parts.zip(PatternMatcher.padStructs(parts.map(p => name -> p.schema(name).dataType)))
+        .map { case (p, padded) => p.withColumn(name, padded) }.reduce(_ unionByName _)
     on.zip(vs).foldLeft(cur) { case (d, ((v, _), n)) => d.withColumn(n, v) }
       .join(entity, vs.zip(ks).map { case (v, k) => col(v) === col(k) }
         .reduceOption(_ && _).getOrElse(lit(true)), how)
       .drop(vs ++ ks: _*)
   }
+
+  /** Each edge class a `relType` relationship writes between endpoints
+    * given as (label, id column, row condition): one per pair of endpoint
+    * frames, with the condition its rows meet.
+    */
+  private def edgeClasses(relType: String, src: Seq[(String, Column, Option[Column])],
+      dst: Seq[(String, Column, Option[Column])]): Seq[(EdgeType, Column, Column, Option[Column])] =
+    for ((sl, sid, sOn) <- src; (dl, did, dOn) <- dst)
+      yield (EdgeType(relType, sl, dl), sid, did, (sOn ++ dOn).reduceOption(_ && _))
+
+  /** Binds relationship variable `name` on each row of `df` to the edge of
+    * its class (from [[edgeClasses]]) between the row's endpoints.
+    */
+  private def bindRel(df: DataFrame, name: String, g: PropertyGraph,
+      classes: Seq[(EdgeType, Column, Column, Option[Column])]): DataFrame =
+    classes.map { case (et, sid, did, on) =>
+      bindEntity(on.fold(df)(df.filter), name, Seq(g.edgeFrame(et) -> et.relType),
+        Seq(sid -> SRC, did -> DST))
+    }.reduce(_ unionByName _)
 
   /** rel var -> unique EdgeType, when type + endpoint labels pin it down. */
   private def boundRelClasses(g: PropertyGraph, paths: Vector[PathPat],
@@ -387,9 +271,11 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     * range(1,3) CREATE (:N {tag:'a'})` makes 3 nodes — so identical-prop
     * rows must mint distinct ids, and a later identical statement must
     * not collide with ids minted earlier (r4 advice: content-hash +
-    * distinct silently collapsed cardinality). MERGE passes neither: a
-    * node it creates is content-addressed, while it finds stored nodes
-    * on the pattern's `_id` or property map ([[withMergeId]]).
+    * distinct silently collapsed cardinality). MERGE passes the
+    * writeEpoch only: the rows of one statement that create the same
+    * pattern mint one node, while it finds stored nodes on the pattern's
+    * `_id` or property map ([[withMergeId]]), never on a hash a previous
+    * statement minted.
     */
   private def nodeIdOf(label: String, props: Seq[(String, Any)],
       frame: DataFrame, rowUid: Option[Column] = None,
@@ -467,8 +353,9 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
       out = out.addNodes(label, row).registerSecondaryLabels(label, secondaryOf(n, label).toSet)
       newNodeIds(n.name) = (label, idCol)
     }
-    // 2. edges — endpoints either MATCH-bound (per-row) or just created
-    val namedRels = Seq.newBuilder[(String, EdgeType, Column, Column)]
+    // 2. edges — endpoints either MATCH-bound (per-row, in the frames
+    // [[homes]] finds) or just created
+    val namedRels = Seq.newBuilder[(String, Seq[(EdgeType, Column, Column, Option[Column])])]
     for (p <- paths; i <- p.rels.indices) {
       val r = p.rels(i)
       val (sv, dv) = if (r.dir == Out) (p.nodes(i), p.nodes(i + 1))
@@ -478,21 +365,19 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         sys.error(s"CREATE cannot use a type alternation: [:$relType]")
       if (r.dir != Out && r.dir != In)
         sys.error("CREATE requires a directed relationship") // reference parity
-      def endpoint(n: NodePat): (String, Column) =
+      def endpoint(n: NodePat): Seq[(String, Column, Option[Column])] =
         if (boundVars(n.name))
-          (ctx.get.labels.getOrElse(n.name,
-            sys.error(s"CREATE edge endpoint ${n.name} has unknown label")), col(s"${n.name}.$ID"))
-        else newNodeIds(n.name)
-      val (sl, sidCol) = endpoint(sv)
-      val (dl, didCol) = endpoint(dv)
+          homes(g, ctx.get, n.name).map { case (l, on) => (l, col(s"${n.name}.$ID"), on) }
+        else { val (l, idc) = newNodeIds(n.name); Seq((l, idc, None)) }
+      val classes = edgeClasses(relType, endpoint(sv), endpoint(dv))
       // No distinct(): CREATE makes one edge PER ROW (parallel edges get
       // distinct EIDs from mintEids' per-(src,dst) row numbering).
-      val edgeRow = rowFrame.select(
-        (sidCol.cast("long").as(SRC) +: didCol.cast("long").as(DST) +:
-          r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*)
-      val et = EdgeType(relType, sl, dl)
-      out = out.addEdges(et, edgeRow)
-      if (!r.anonymous) namedRels += ((r.name, et, sidCol, didCol))
+      classes.foreach { case (et, sidCol, didCol, on) =>
+        out = out.addEdges(et, on.fold(rowFrame)(rowFrame.filter).select(
+          (sidCol.cast("long").as(SRC) +: didCol.cast("long").as(DST) +:
+            r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*))
+      }
+      if (!r.anonymous) namedRels += (r.name -> classes)
     }
     // 3. bind created NODE vars into the context as entity structs so
     // later clauses see them (reference shape: CREATE (...)->(t:Topic)
@@ -507,12 +392,9 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         named.foreach { n =>
           val (label, idc) = newNodeIds(n.name)
           df2 = df2.withColumn(n.name, struct(
-            entityCols(label, n, idc, rowFrame) :+ lit(label).as(PropertyGraph.LABEL): _*))
+            entityCols(label, n, idc, rowFrame) :+ lit(label).as(LABEL): _*))
         }
-        rels.foreach { case (rn, et, sidCol, didCol) =>
-          df2 = bindEntity(df2, rn, out.edgeFrame(et), et.relType,
-            Seq(sidCol -> SRC, didCol -> DST))
-        }
+        rels.foreach { case (rn, classes) => df2 = bindRel(df2, rn, out, classes) }
         df2 = df2.drop(ROW_UID)
         // no prior context: only the created vars are in scope (the
         // internal seed frame's column must not leak)
@@ -568,27 +450,25 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     var df = rowFrame
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, (NodePat, String)]
     val ends = path.nodes.map { n =>
-      val label =
-        if (boundVars(n.name)) ctx.get.labels.getOrElse(n.name,
-          sys.error(s"MERGE endpoint ${n.name} has unknown label"))
-        else merged.getOrElseUpdate(n.name, {
-          val l = n.label.getOrElse(sys.error("MERGE node needs a label"))
-          df = withMergeId(out, n, l, df)
-          out = mergeNode(out, n, l, onCreate, onMatch, df)
-          df = bindEntity(df, n.name, out.nodeFrame(l), l, Seq(col(MERGE_ID) -> ID)).drop(MERGE_ID)
-          (n, l)
-        })._2
-      n.name -> label
+      val idc = col(s"${n.name}.$ID")
+      if (boundVars(n.name)) homes(out, ctx.get, n.name).map { case (l, on) => (l, idc, on) }
+      else Seq((merged.getOrElseUpdate(n.name, {
+        val l = n.label.getOrElse(sys.error("MERGE node needs a label"))
+        df = withMergeId(out, n, l, df)
+        out = mergeNode(out, n, l, onCreate, onMatch, df)
+        df = bindEntity(df, n.name, Seq(out.nodeFrame(l) -> l), Seq(col(MERGE_ID) -> ID)).drop(MERGE_ID)
+        (n, l)
+      })._2, idc, None))
     }
     path.rels.headOption.foreach { r =>
       val relType = r.relType.getOrElse(sys.error("MERGE edge needs a type"))
-      val Seq((sv, sl), (dv, dl)) = if (r.dir == Out) ends else ends.reverse
-      val et = EdgeType(relType, sl, dl)
-      val (sid, did) = (col(s"$sv.$ID"), col(s"$dv.$ID"))
-      out = out.mergeEdges(et, df.select((sid.as(SRC) +: did.as(DST) +:
-        r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*).distinct())
-      if (!r.anonymous) df = bindEntity(df, r.name, out.edgeFrame(et), relType,
-        Seq(sid -> SRC, did -> DST))
+      val Seq(src, dst) = if (r.dir == Out) ends else ends.reverse
+      val classes = edgeClasses(relType, src, dst)
+      classes.foreach { case (et, sid, did, on) =>
+        out = out.mergeEdges(et, on.fold(df)(df.filter).select((sid.as(SRC) +: did.as(DST) +:
+          r.props.map { case (k, v) => propCol(v, rowFrame).as(k) }): _*).distinct())
+      }
+      if (!r.anonymous) df = bindRel(df, r.name, out, classes)
     }
     val named = merged.values.collect { case (n, l) if !n.anonymous => n.name -> l }.toSeq
     val newVars = named.map(_._1) ++ path.rels.filterNot(_.anonymous).map(_.name)
@@ -608,16 +488,19 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
     * pattern's property map (a property the frame lacks matches nothing,
     * PatternMatcher's property-map rule; a row equal to several stored
     * nodes yields one row per node); else the content hash of
-    * [[nodeIdOf]], which names the node the merge creates.
+    * [[nodeIdOf]] salted with the graph's writeEpoch, which names the node
+    * the merge creates. The salt keeps a later identical MERGE from
+    * finding, by id, a node this one created and an ON CREATE SET then
+    * changed.
     */
   private def withMergeId(g: PropertyGraph, n: NodePat, label: String,
       df: DataFrame): DataFrame = {
-    val minted = nodeIdOf(label, n.props, df)
+    val minted = nodeIdOf(label, n.props, df, nonce = Seq(lit(g.writeEpoch)))
     val stored = Some(label).filter(g.hasLabel).map(g.nodeFrame)
       .filter(f => n.props.forall(p => f.columns.contains(p._1)))
     stored match {
       case Some(f) if !n.props.exists(_._1 == ID) =>
-        bindEntity(df, MERGE_ID, f.select((ID +: n.props.map(_._1)).distinct.map(col): _*), label,
+        bindEntity(df, MERGE_ID, Seq(f.select((ID +: n.props.map(_._1)).distinct.map(col): _*) -> label),
           n.props.map { case (k, v) => propCol(v, df) -> k }, "left_outer")
           .withColumn(MERGE_ID, coalesce(col(s"$MERGE_ID.$ID"), minted))
       case _ => df.withColumn(MERGE_ID, minted)
@@ -644,108 +527,111 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
   // SET / REMOVE / DELETE
   // ------------------------------------------------------------------
 
-  /** Rewrite `v.prop` references to bare frame columns so the value expr
-    * can be evaluated against the label frame itself. When `frameCols` is
-    * known, a self-reference to a property the frame does NOT have
-    * becomes literal null (Cypher: missing property reads as null — `SET
-    * n.x = n.x + 1` on x-less nodes sets null, it does not error).
+  /** Rewrites references to the SET target `v` so the value evaluates
+    * over `v`'s frame row: `v.prop` becomes the bare column `prop`. When
+    * the frame is known (`frame` = its `_label` tag and columns), a
+    * property it lacks reads as literal null (Cypher: missing property is
+    * null — `SET n.x = n.x + 1` on x-less nodes sets null, it does not
+    * error), and a bare `v` or a map projection `v{...}` becomes the row
+    * as a map: the frame columns plus `_label`, or the projected keys.
     */
   private def rewriteSelfRefs(e: Expr, v: String,
-      frameCols: Option[Set[String]] = None): Expr =
-    e.transform { case Prop(Var(`v`), key) =>
-      if (frameCols.forall(_.contains(key))) Var(key) else Lit(null)
+      frame: Option[(String, Seq[String])]): Expr = {
+    val cols = frame.map(_._2)
+    e.transform {
+      case Prop(Var(`v`), key) =>
+        if (cols.forall(_.contains(key))) Var(key) else Lit(null)
+      case Var(`v`) if frame.nonEmpty =>
+        MapLit(cols.get.map(c => c -> Var(c)) :+ (LABEL -> Lit(frame.get._1)))
+      case MapProj(`v`, props, entries, star) if frame.nonEmpty =>
+        val items = ((if (star) cols.get.filterNot(_.startsWith("_")) else Nil) ++ props)
+          .map(k => k -> Prop(Var(v), k)) ++ entries
+        rewriteSelfRefs(MapLit(items.map(_._1).distinct
+          .map(k => k -> items.findLast(_._1 == k).get._2)), v, frame)
     }
+  }
 
   private def compileValueOverFrame(value: Expr, v: String,
-      frameCols: Option[Set[String]] = None): Column = {
-    val rewritten = rewriteSelfRefs(value, v, frameCols)
+      frame: Option[(String, Seq[String])] = None): Column = {
+    val rewritten = rewriteSelfRefs(value, v, frame)
     // Var(key) resolves as a column of the label frame when the returned
     // Column is applied by set*Props; the frame passed here is only used
     // for (unneeded) type probes
     new CypherCompiler(g0, spark, params).compileExpr(spark.range(0).toDF(), rewritten)
   }
 
-  private val internalCols = Set(ID, EID, SRC, DST, "_label", "_hops", "_eids", LABELS)
+  private val internalCols = Set(ID, EID, SRC, DST, LABEL, "_hops", "_eids", LABELS)
 
-  private def applySet(g: PropertyGraph, ctx: Ctx,
-      items: Seq[(Expr, Expr)],
-      relClasses: Map[String, EdgeType] = Map.empty): PropertyGraph =
-    items.foldLeft(g) {
+  /** The labels `SET v:A:B` adds to a node whose frame is `primary`. */
+  private def addedLabels(value: Expr, primary: String): Seq[String] = value match {
+    case Func("__set_labels", ls, _) => ls.map {
+      case Lit(s: String) => s
+      case other => sys.error(s"unexpected SET-label item: $other")
+    }.filterNot(_ == primary)
+    case _ => Nil
+  }
+
+  /** The assignments of one SET item on target `v`, whose frame `frame` is
+    * tagged `tag` (node label or relationship type).
+    */
+  private def assignments(target: Expr, value: Expr, v: String, frame: DataFrame,
+      tag: String): Map[String, Column] = {
+    def compile(e: Expr) = compileValueOverFrame(e, v, Some(tag -> frame.columns.toSeq))
+    (target, value) match {
+      case (Prop(_, key), _) => Map(key -> compile(value))
       // SET n:Label1:Label2 — multi-label shim: append to the `_labels`
       // array (distinct, declaration order preserved); the primary label
       // is implicit and never duplicated in. Reference:
       // translator.ts:921-933 (SET-labels over label arrays).
-      case (acc, (Var(v), Func("__set_labels", labelLits, _))) =>
-        val label = ctx.labels.getOrElse(v,
-          sys.error(s"SET $v:... has no statically-known label"))
-        val adds = labelLits.map {
-          case Lit(s: String) => s
-          case other => sys.error(s"unexpected SET-label item: $other")
-        }.filterNot(_ == label)
-        if (adds.isEmpty) acc
+      case (_, Func("__set_labels", _, _)) =>
+        require(!frame.columns.contains(EID), s"SET $v:... — a relationship has no labels")
+        val adds = addedLabels(value, tag)
+        if (adds.isEmpty) Map.empty
         else {
-          val ids = ctx.df.select(col(s"$v.$ID"))
           val addArr = array(adds.map(lit): _*)
-          val newVal =
-            if (acc.nodeFrame(label).columns.contains(LABELS))
-              array_distinct(concat(
-                coalesce(col(LABELS), array().cast("array<string>")), addArr))
-            else addArr
-          acc.setNodePropsForIds(label, ids, Map(LABELS -> newVal))
-            .registerSecondaryLabels(label, adds.toSet)
+          Map(LABELS -> (if (frame.columns.contains(LABELS))
+            array_distinct(concat(coalesce(col(LABELS), array().cast("array<string>")), addArr))
+          else addArr))
         }
-      // SET r.prop = expr — rel variable pinned to one edge class by the
-      // MATCH (type + endpoint labels); updates join on the eid frame
-      // (reference: translator.ts SET translation covers rel updates
-      // alongside node updates)
-      case (acc, (Prop(Var(v), key), value)) if relClasses.contains(v) =>
-        val eids = ctx.df.select(col(s"$v.$EID"))
-        acc.setEdgePropsForIds(relClasses(v), eids,
-          Map(key -> compileValueOverFrame(value, v,
-            Some(acc.edgeFrame(relClasses(v)).columns.toSet))))
-      // SET r = {map} / SET n = {map} — replace ALL properties: every
-      // existing prop not in the map goes to null, map keys assign
-      // (reference: translator.ts SET map replacement; `SET n = {}`
-      // clears)
-      case (acc, (Var(v), Func("__set_replace", Seq(m), _))) =>
-        val kvs = m match {
-          case MapLit(items) => items
-          case other => sys.error(s"SET $v = expects a map literal, got $other")
-        }
-        val newProps = kvs.map { case (k, e) => k -> compileValueOverFrame(e, v) }.toMap
-        relClasses.get(v) match {
-          case Some(et) =>
-            val eids = ctx.df.select(col(s"$v.$EID"))
-            val existing = acc.edgeFrame(et).columns.filterNot(internalCols).toSeq
-            acc.setEdgePropsForIds(et, eids,
-              existing.map(k => k -> lit(null)).toMap ++ newProps)
-          case None =>
-            val label = ctx.labels.getOrElse(v,
-              sys.error(s"SET target $v has no statically-known label"))
-            val ids = ctx.df.select(col(s"$v.$ID"))
-            val existing = acc.nodeFrame(label).columns.filterNot(internalCols).toSeq
-            acc.setNodePropsForIds(label, ids,
-              existing.map(k => k -> lit(null)).toMap ++ newProps)
-        }
-      // SET r += {k: v, ...}
-      case (acc, (Var(v), MapLit(kvs))) if relClasses.contains(v) =>
-        val eids = ctx.df.select(col(s"$v.$EID"))
-        acc.setEdgePropsForIds(relClasses(v), eids,
-          kvs.map { case (k, e) => k -> compileValueOverFrame(e, v) }.toMap)
-      case (acc, (Prop(Var(v), key), value)) =>
-        val label = ctx.labels.getOrElse(v,
-          sys.error(s"SET target $v has no statically-known label"))
-        val ids = ctx.df.select(col(s"$v.$ID"))
-        acc.setNodePropsForIds(label, ids, Map(key -> compileValueOverFrame(value, v,
-          Some(acc.nodeFrame(label).columns.toSet))))
+      // SET n = {map} — replace ALL properties: every existing prop not in
+      // the map goes to null, map keys assign (reference: translator.ts
+      // SET map replacement; `SET n = {}` clears)
+      case (_, Func("__set_replace", Seq(MapLit(kvs)), _)) =>
+        frame.columns.filterNot(internalCols).map(_ -> lit(null)).toMap ++
+          kvs.map { case (k, e) => k -> compile(e) }
+      case (_, Func("__set_replace", Seq(m), _)) =>
+        sys.error(s"SET $v = expects a map literal, got $m")
       // SET n += {k: v, ...} — per-key map merge
-      case (acc, (Var(v), MapLit(kvs))) =>
-        val label = ctx.labels.getOrElse(v,
-          sys.error(s"SET target $v has no statically-known label"))
-        val ids = ctx.df.select(col(s"$v.$ID"))
-        acc.setNodePropsForIds(label, ids,
-          kvs.map { case (k, e) => k -> compileValueOverFrame(e, v) }.toMap)
-      case (_, other) => sys.error(s"unsupported SET target: $other")
+      case (_, MapLit(kvs)) => kvs.map { case (k, e) => k -> compile(e) }.toMap
+      case _ => sys.error(s"unsupported SET target: $target")
+    }
+  }
+
+  /** SET: a rel variable pinned to one edge class by the MATCH updates on
+    * its eid frame (reference: translator.ts SET translation covers rel
+    * updates alongside node updates); a node variable updates each frame
+    * [[homes]] finds it in.
+    */
+  private def applySet(g: PropertyGraph, ctx: Ctx,
+      items: Seq[(Expr, Expr)],
+      relClasses: Map[String, EdgeType]): PropertyGraph =
+    items.foldLeft(g) { case (acc, (target, value)) =>
+      val v = target match {
+        case Prop(Var(v), _) => v
+        case Var(v) => v
+        case other => sys.error(s"unsupported SET target: $other")
+      }
+      relClasses.get(v) match {
+        case Some(et) =>
+          acc.setEdgePropsForIds(et, ctx.df.select(col(s"$v.$EID")),
+            assignments(target, value, v, acc.edgeFrame(et), et.relType))
+        case None => homes(acc, ctx, v).foldLeft(acc) { case (a, (l, on)) =>
+          val assigns = assignments(target, value, v, a.nodeFrame(l), l)
+          if (assigns.isEmpty) a
+          else a.setNodePropsForIds(l, idsAt(ctx, v, on), assigns)
+            .registerSecondaryLabels(l, addedLabels(value, l).toSet)
+        }
+      }
     }
 
   private def applyDelete(g: PropertyGraph, ctx: Ctx, vars: Seq[String],
@@ -755,12 +641,10 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
         case Some(et) =>
           val eids = ctx.df.select(col(s"$v.$EID").as(EID)).distinct()
           acc.deleteEdgesByIds(et, eids)
-        case None =>
-          val label = ctx.labels.getOrElse(v,
-            sys.error(s"DELETE target $v has no statically-known label"))
-          val ids = ctx.df.select(col(s"$v.$ID"))
-          if (detach) acc.detachDeleteNodesByIds(label, ids)
-          else acc.deleteNodesByIds(label, ids)
+        case None => homes(acc, ctx, v).foldLeft(acc) { case (a, (l, on)) =>
+          if (detach) a.detachDeleteNodesByIds(l, idsAt(ctx, v, on))
+          else a.deleteNodesByIds(l, idsAt(ctx, v, on))
+        }
       }
     }
 }

@@ -549,6 +549,89 @@ class GraphWriteSpec extends SparkSpec {
     assert(g2.nodeFrame("Language").count() == 2)
   }
 
+  /** Person {1, 2} + City {1}: ids collide across labels. */
+  private def twoLabelGraph() = {
+    import spark.implicits._
+    PropertyGraph(
+      Map("Person" -> Seq((1L, "ann", 30L), (2L, "bob", 40L)).toDF("_id", "name", "age"),
+        "City" -> Seq((1L, "oslo")).toDF("_id", "city")),
+      Map(EdgeType("KNOWS", "Person", "Person") ->
+        Seq((1L, 2L, 100L)).toDF("_src", "_dst", "_eid")))
+  }
+
+  test("cypherWrite: RETURN after SET / REMOVE sees the written values") {
+    val (_, ret) = tinyGraph().cypherWrite("MATCH (n:Person) SET n.age = 99 RETURN n.age AS a")
+    assert(ret.get.collect().map(_.getLong(0)).toSeq == Seq(99L, 99L))
+    val (_, ret2) = twoLabelGraph().cypherWrite("MATCH (n) SET n.age = 99 RETURN n.age AS a")
+    assert(ret2.get.collect().map(_.getLong(0)).toSeq == Seq(99L, 99L, 99L))
+    val (_, ret3) = tinyGraph().cypherWrite(
+      "MATCH (n:Person) REMOVE n.age RETURN n.name AS m, n.age AS a ORDER BY m")
+    assert(ret3.get.collect().map(r => r.getString(0) -> r.isNullAt(1)).toSeq ==
+      Seq("ann" -> true, "bob" -> true))
+    // a later SET reads the earlier SET's value; a relationship rebinds too
+    val (g4, ret4) = tinyGraph().cypherWrite(
+      """MATCH (a:Person)-[r:KNOWS]->(b:Person) SET a.x = 1, r.w = 5
+         SET a.y = a.x + 1 RETURN a.y AS y, r.w AS w""")
+    assert(ret4.get.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq == Seq(2L -> 5L))
+    assert(g4.nodeFrame("Person").filter(col("y") === 2L).count() == 1)
+  }
+
+  test("cypherWrite: SET with a map projection or a bare reference of its own target") {
+    val (g2, _) = tinyGraph().cypherWrite("MATCH (n:Person) SET n.s = n{.name}")
+    val s = g2.nodeFrame("Person").select("_id", "s.name").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(s == Map(1L -> "ann", 2L -> "bob"))
+    val (g3, _) = tinyGraph().cypherWrite(
+      "MATCH (n:Person) SET n.t = n{.age, .nope, tag: n.name + '!'}, n.i = id(n)")
+    val t = g3.nodeFrame("Person").select("_id", "t.age", "t.nope", "t.tag", "i").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.isNullAt(2), r.getString(3), r.getLong(4))).toMap
+    assert(t == Map(1L -> ((30L, true, "ann!", 1L)), 2L -> ((40L, true, "bob!", 2L))))
+  }
+
+  test("cypherWrite: a repeated MERGE does not find the node its first run created and changed") {
+    val q = "MERGE (n:L {k: 1}) ON CREATE SET n.k = 2"
+    val (g2, _) = tinyGraph().cypherWrite(q)
+    val (g3, _) = g2.cypherWrite(q)
+    assert(g3.nodeFrame("L").collect().map(_.getAs[Long]("k")).toSeq == Seq(2L, 2L))
+    assert(g3.nodeFrame("L").select("_id").distinct().count() == 2)
+    // the rows of one statement still merge into one node
+    val (g4, _) = tinyGraph().cypherWrite("UNWIND [1, 2, 3] AS x MERGE (n:L {k: 1})")
+    assert(g4.nodeFrame("L").count() == 1)
+  }
+
+  test("cypherWrite: unlabeled write targets need no re-run per label") {
+    val g = twoLabelGraph()
+    // two unlabeled targets in one SET
+    val (g2, _) = g.cypherWrite("MATCH (a)-[:KNOWS]->(b) SET a.x = 1, b.y = 2")
+    val p = g2.nodeFrame("Person").collect().map(r =>
+      r.getAs[Long]("_id") -> (Option(r.getAs[Any]("x")), Option(r.getAs[Any]("y")))).toMap
+    assert(p == Map(1L -> ((Some(1L), None)), 2L -> ((None, Some(2L)))))
+    val city = g2.nodeFrame("City")
+    assert(Seq("x", "y").forall(c => !city.columns.contains(c) || city.filter(col(c).isNotNull).isEmpty))
+    // an unlabeled CREATE endpoint, with and without a SET before it:
+    // exactly one T edge, from Person 1 (not City 1)
+    Seq("MATCH (n) WHERE n.name = 'ann' SET n.v = 1 CREATE (n)-[:T]->(:X {q: 1})",
+        "MATCH (n) WHERE n.name = 'ann' CREATE (n)-[:T]->(:X {q: 1})").foreach { q =>
+      val (g3, _) = g.cypherWrite(q)
+      val edges = g3.edgeTypesFor(Some("T"), None, None).flatMap(et =>
+        g3.edgeFrame(et).collect().map(r => et.srcLabel -> r.getAs[Long]("_src")))
+      assert(edges == Seq("Person" -> 1L), s"$q: $edges")
+    }
+    // unlabeled REMOVE of a secondary and of a primary label
+    val (g4, _) = g.cypherWrite("MATCH (n) WHERE n.name = 'ann' SET n:Admin")
+    val (g5, _) = g4.cypherWrite("MATCH (n) REMOVE n:Admin")
+    assert(g5.cypher("MATCH (n:Admin) RETURN n").count() == 0)
+    assert(g5.nodeFrame("Person").count() == 2)
+    val (g6, _) = g.cypherWrite("MATCH (n) WHERE n.city = 'oslo' REMOVE n:City")
+    assert(g6.nodeFrame("City").count() == 0 && g6.nodeFrame("Person").count() == 2)
+    assert(g6.cypher("MATCH (n) RETURN count(n) AS c").head().getLong(0) == 3L)
+    // RETURN of the written unlabeled variable: padded structs
+    val (_, ret) = g.cypherWrite("MATCH (n) SET n.x = 1 RETURN n")
+    val rows = ret.get.select("n._id", "n._label", "n.x").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(r => (r._2, r._1)).toSeq
+    assert(rows == Seq((1L, "City", 1L), (1L, "Person", 1L), (2L, "Person", 1L)))
+  }
+
   test("snapshot save/load round-trips a written graph") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-write-snap").toString
     val (g2, _) = tinyGraph().cypherWrite(
