@@ -3,6 +3,8 @@ package graft.cypher
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftshim.ParamLiteral
 import Ast._
 import graft.functions.CypherFunctions
 import graft.graph.{PatternMatcher, PropertyGraph}
@@ -69,16 +71,62 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
       case None => body
     }
 
+  /** Set when a parameter's value, not just its type, shaped the plan
+    * being compiled: SKIP/LIMIT counts ([[litInt]]), duration components
+    * ([[litNum]]), and null, list or array values. Such a plan is not
+    * prepared ([[compileQuery]]); nor is one whose analysis read a value
+    * ([[ParamLiteral.Scope.preparable]]). */
+  private var valueBound = false
+
+  /** The [[ParamLiteral]] scope of this compile's parameters. */
+  private val paramScope = new ParamLiteral.Scope
+
   def run(query: String): DataFrame = compileQuery(CypherParser.parse(query))
 
+  /** Compile `q` once per graph snapshot, then re-bind parameter values.
+    *
+    * Every scalar `$param` compiles to a
+    * [[org.apache.spark.sql.graftshim.ParamLiteral]]: a Catalyst literal
+    * that keeps its parameter's name and whose generated code loads the
+    * value instead of inlining it. So a compiled plan is the same for
+    * every value of its parameters: the snapshot's prepared-plan cache
+    * ([[CypherCompiler.PreparedPlans]], LRU, at most
+    * [[CypherCompiler.MaxPrepared]] plans) keeps the analyzed plan, and a
+    * later call with new values only re-binds them into it and wraps it
+    * in a Dataset — no DataFrame construction and no re-analysis of each
+    * step — while whole-stage codegen reuses the classes it compiled for
+    * the first value.
+    *
+    * The key is the session, the parsed query, each parameter's Catalyst
+    * type, and the confs analysis reads: session time zone, ANSI mode and
+    * case sensitivity. Never cached: plans a parameter's VALUE shaped
+    * (SKIP/LIMIT counts, duration components, null, list and array
+    * values, and plans whose analysis read a value, such as an integer
+    * compared with a decimal property), and writes (`cypherWrite` does
+    * not compile through here).
+    */
   def compileQuery(q: Query): DataFrame = {
-    val parts = q.parts.map(compileSingle)
-    if (parts.size == 1) parts.head
-    else {
-      val unioned = parts.reduce(_ unionByName _)
-      // openCypher forbids mixing UNION and UNION ALL; a plain UNION
-      // dedupes the whole result
-      if (q.unionAll.contains(false)) unioned.distinct() else unioned
+    val conf = spark.sessionState.conf
+    val key = CypherCompiler.PlanKey(spark, q,
+      params.map { case (k, v) => k -> ParamLiteral.scalar(v).map(_.dataType) },
+      conf.sessionLocalTimeZone, conf.ansiEnabled, conf.caseSensitiveAnalysis)
+    g.preparedPlans.get(key) match {
+      case Some(p) => ParamLiteral.bind(p.session, p.plan, params, p.scope)
+      case None =>
+        val parts = q.parts.map(compileSingle)
+        val df =
+          if (parts.size == 1) parts.head
+          else {
+            val unioned = parts.reduce(_ unionByName _)
+            // openCypher forbids mixing UNION and UNION ALL; a plain UNION
+            // dedupes the whole result
+            if (q.unionAll.contains(false)) unioned.distinct() else unioned
+          }
+        val analyzed = df.queryExecution.analyzed
+        if (!valueBound && paramScope.preparable(analyzed))
+          g.preparedPlans.put(key, CypherCompiler.Prepared(analyzed, df.sparkSession,
+            paramScope.id))
+        df
     }
   }
 
@@ -131,14 +179,13 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
   // MATCH
   // ------------------------------------------------------------------
 
-  /** Substitute `$param` values into pattern property maps; reject
-    * non-literal property expressions (those are CREATE/MERGE-only —
-    * in MATCH they belong in WHERE).
+  /** Substitute `$param` values into pattern property maps (a scalar as
+    * its [[paramLit]] Column); reject non-literal property expressions
+    * (those are CREATE/MERGE-only — in MATCH they belong in WHERE).
     */
   private def resolveParams(paths: Vector[PathPat]): Vector[PathPat] = {
     def resolve(kv: (String, Any)): (String, Any) = kv match {
-      case (k, Param(nm)) => k -> params.getOrElse(nm,
-        sys.error(s"missing parameter $$$nm"))
+      case (k, Param(nm)) => k -> paramLit(nm)
       case (k, e: Expr) => sys.error(
         s"MATCH pattern property '$k' must be a literal or parameter " +
         s"(got expression $e — use WHERE, or CREATE/MERGE for per-row values)")
@@ -469,19 +516,25 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
   private def litInt(e: Expr): Int = e match {
     case Lit(v: Long) => v.toInt
     case Lit(v: Int) => v
-    case Param(n) => params.getOrElse(n,
-      sys.error(s"missing parameter $$$n")).toString.toInt
+    case Param(n) =>
+      valueBound = true
+      params.getOrElse(n, sys.error(s"missing parameter $$$n")).toString.toInt
     case _ => sys.error(s"SKIP/LIMIT must be an integer literal, got $e")
   }
 
-  /** Literal Column for a parameter value (scalars + homogeneous seqs). */
+  /** Literal Column for a parameter value: a scalar is a
+    * [[ParamLiteral]]; null and homogeneous seqs are inlined and mark the
+    * plan [[valueBound]]. */
   private def paramLit(n: String): Column = {
     val v = params.getOrElse(n, sys.error(s"missing parameter $$$n"))
-    v match {
-      case null => lit(null)
-      case xs: Seq[_] => array(xs.map(x => lit(x)): _*)
-      case xs: Array[_] => array(xs.toSeq.map(x => lit(x)): _*)
-      case other => lit(other)
+    paramScope.column(n, v).getOrElse {
+      valueBound = true
+      v match {
+        case null => lit(null)
+        case xs: Seq[_] => array(xs.map(x => lit(x)): _*)
+        case xs: Array[_] => array(xs.toSeq.map(x => lit(x)): _*)
+        case other => lit(other)
+      }
     }
   }
 
@@ -499,11 +552,13 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     case Lit(v: Int) => Some(v.toDouble)
     case Lit(v: Double) => Some(v)
     case Neg(x) => litNum(x).map(-_)
-    case Param(n) => params.get(n).collect {
-      case v: Long => v.toDouble
-      case v: Int => v.toDouble
-      case v: Double => v
-    }
+    case Param(n) =>
+      valueBound = true
+      params.get(n).collect {
+        case v: Long => v.toDouble
+        case v: Int => v.toDouble
+        case v: Double => v
+      }
     case _ => None
   }
 
@@ -1028,8 +1083,12 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
               case Some(st: StructType) if !st.fieldNames.contains(s) => lit(null)
               case _ => bc.getField(s)
             }
+          // a literal index n >= 0 is getItem (0-based): the optimizer
+          // folds it over a list literal, where element_at's non-nullable
+          // result generates code janino rejects (it assigns an undeclared
+          // isNull) — Spark then falls back to interpreted evaluation
           case Lit(i: Long) =>
-            if (i >= 0) element_at(bc, i.toInt + 1) else element_at(bc, i.toInt)
+            if (i >= 0) bc.getItem(i.toInt) else element_at(bc, i.toInt)
           case dyn =>
             val ic = go(dyn)
             element_at(bc, when(ic >= 0, ic + 1).otherwise(ic).cast(IntegerType))
@@ -1138,4 +1197,29 @@ object CypherCompiler {
     */
   final case class Ctx(df: DataFrame, labels: Map[String, String],
       staticallyEmpty: Boolean = false)
+
+  /** Plans a snapshot's [[PreparedPlans]] keeps, least recently used
+    * evicted first. */
+  private[graft] val MaxPrepared = 64
+
+  /** What a prepared plan depends on besides the snapshot
+    * ([[CypherCompiler.compileQuery]]): a parameter's type is None when
+    * its value is not a scalar. */
+  private[graft] final case class PlanKey(session: SparkSession, query: Query,
+      paramTypes: Map[String, Option[DataType]], timeZone: String, ansi: Boolean,
+      caseSensitive: Boolean)
+
+  /** A prepared read: the analyzed plan, the session its Dataset ran on,
+    * and the [[ParamLiteral]] scope of its parameters. */
+  private[graft] final case class Prepared(plan: LogicalPlan, session: SparkSession, scope: Long)
+
+  /** One graph snapshot's prepared read plans, per [[PlanKey]]. */
+  private[graft] final class PreparedPlans {
+    private val lru = new java.util.LinkedHashMap[PlanKey, Prepared](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[PlanKey, Prepared]): Boolean =
+        size() > MaxPrepared
+    }
+    def get(k: PlanKey): Option[Prepared] = synchronized(Option(lru.get(k)))
+    def put(k: PlanKey, v: Prepared): Unit = synchronized(lru.put(k, v))
+  }
 }

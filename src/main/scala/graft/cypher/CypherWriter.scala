@@ -145,9 +145,11 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
   /** The one bound-node rule of every write: the frames that hold the
     * node bound to `v`, each with the condition its rows meet. A
     * statically-labeled `v` lives in its label's frame on every row (no
-    * condition); otherwise each graph label `l` holds the rows whose
-    * struct has `_label = l` — ids are only unique per label, so the
-    * condition also keeps City 1 from being taken for Person 1.
+    * condition); otherwise each label some row of `ctx` carries holds the
+    * rows whose struct has `_label = l` — ids are only unique per label,
+    * so the condition also keeps City 1 from being taken for Person 1, and
+    * a frame no row lives in is not written (no null column, no empty
+    * edge class).
     */
   private def homes(g: PropertyGraph, ctx: Ctx, v: String): Seq[(String, Option[Column])] =
     ctx.labels.get(v) match {
@@ -155,8 +157,16 @@ final class CypherWriter(g0: PropertyGraph, spark: SparkSession,
       case None =>
         require(PatternMatcher.identity(ctx.df, v).exists(_.size == 2),
           s"write target $v is not a bound node")
-        g.labels.map(l => l -> Some(col(s"$v.$LABEL") === l))
+        val carried = rowLabels.getOrElseUpdate((ctx.df, v),
+          ctx.df.select(col(s"$v.$LABEL")).distinct().collect().map(_.getString(0)).toSet)
+        g.labels.filter(carried).map(l => l -> Some(col(s"$v.$LABEL") === l))
     }
+
+  /** The labels the rows of a scope carry for a variable, per (scope
+    * frame, variable): one distinct job, shared by a write and the
+    * rebind after it. */
+  private val rowLabels =
+    scala.collection.mutable.Map.empty[(DataFrame, String), Set[String]]
 
   /** The ids of the `v` nodes on the rows of `ctx` that meet `on`. */
   private def idsAt(ctx: Ctx, v: String, on: Option[Column]): DataFrame =

@@ -77,7 +77,12 @@ object CypherFunctions {
         // literal delimiters so "." or "|" split as characters.
         argLit(1) match {
           case Some(d: String) => split(a0, java.util.regex.Pattern.quote(d))
-          case _ => split(a0, args(1).cast(StringType).toString)
+          case _ =>
+            // a delimiter known at run time, quoted as Pattern.quote does
+            val d = args(1).cast(StringType)
+            split(a0, concat(lit("\\Q"),
+              org.apache.spark.sql.functions.replace(d, lit("\\E"), lit("\\E\\\\E\\Q")),
+              lit("\\E")))
         }
       case "substring" =>
         // Cypher 0-based start; Spark 1-based

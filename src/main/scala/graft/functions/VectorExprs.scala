@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -818,41 +819,35 @@ object VectorExprs {
       copy(children = newChildren)
   }
 
+  /** graft's session functions, by name. */
+  private val sessionFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> (exprs => DotProduct(exprs(0), exprs(1))),
+    "graft_l2norm" -> (exprs => L2Norm(exprs(0))),
+    "graft_sliding_min" -> (exprs => SlidingMin(exprs(0), exprs(1))),
+    "graft_shingle_hashes" -> (exprs => ShingleHashes(exprs(0), exprs(1))),
+    "graft_rep_stats" -> (exprs => RepStats(exprs)),
+    "graft_minhash_sig" -> (exprs => MinHashSig(exprs(0), exprs(1))),
+    "graft_simhash_bits" -> (exprs => SimHashBits(exprs(0), exprs(1))),
+    "graft_shingle_md5" -> (exprs => ShingleMd5(exprs(0), exprs(1))),
+    "graft_nfc" -> (exprs => NfcNormalize(exprs(0))),
+    "graft_ngram_join" -> (exprs => NGramJoin(exprs(0), exprs(1))),
+    "graft_count_in" -> (exprs => ArrayCountIn(exprs(0), exprs(1))),
+    "graft_hyperplane_key" -> (exprs => HyperplaneKey(exprs(0), exprs(1), exprs(2))),
+    // the centroid literal is consumed HERE, at function-build time: the
+    // resolved plan carries only the reference object, never the literal
+    "graft_nearest_centroid" -> (exprs => NearestCentroid(exprs(0), literalMatrix(exprs(1)))),
+    "graft_plus" -> (exprs => CypherPlus(exprs(0), exprs(1))))
+
   /** Register as session functions; `dot`/`l2norm` Columns below use
-    * call_function so callers never touch catalyst internals.
+    * call_function so callers never touch catalyst internals. A no-op
+    * when the session's registry already holds them (every Cypher
+    * compile calls this, and a session clone copies the registry):
+    * re-registering replaces each function and logs a warning per name.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l2norm",
-      exprs => L2Norm(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sliding_min",
-      exprs => SlidingMin(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => ShingleHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_rep_stats",
-      exprs => RepStats(exprs), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSig(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_bits",
-      exprs => SimHashBits(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_md5",
-      exprs => ShingleMd5(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_ngram_join",
-      exprs => NGramJoin(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_count_in",
-      exprs => ArrayCountIn(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hyperplane_key",
-      exprs => HyperplaneKey(exprs(0), exprs(1), exprs(2)), "built-in")
-    // the centroid literal is consumed HERE, at function-build time: the
-    // resolved plan carries only the reference object, never the literal
-    reg.createOrReplaceTempFunction("graft_nearest_centroid",
-      exprs => NearestCentroid(exprs(0), literalMatrix(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_plus",
-      exprs => CypherPlus(exprs(0), exprs(1)), "built-in")
+    if (!sessionFunctions.forall { case (n, _) => reg.functionExists(FunctionIdentifier(n)) })
+      sessionFunctions.foreach { case (n, f) => reg.createOrReplaceTempFunction(n, f, "built-in") }
   }
 
   private def literalMatrix(e: Expression): Array[Array[Double]] = e match {

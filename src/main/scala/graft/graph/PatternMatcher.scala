@@ -229,7 +229,8 @@ final class PatternMatcher(g: PropertyGraph, varLengthCap: Int = 10) {
 
   /** Cypher property-map match: a key the frame lacks matches NOTHING
     * (every row's value for it is null, and null = x is never true) —
-    * zero rows, not an error. */
+    * zero rows, not an error. A value is a literal or a Column (the
+    * Cypher front end's `$param`s, `lit` passes a Column through). */
   private def propFilter(raw: DataFrame, props: Seq[(String, Any)]): DataFrame =
     props.foldLeft(raw) { case (d, (k, v)) =>
       d.filter(if (raw.columns.contains(k)) col(k) === lit(v) else lit(false))

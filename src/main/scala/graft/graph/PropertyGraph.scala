@@ -171,6 +171,8 @@ final class PropertyGraph private (
 
   private val nodeCache = TrieMap.empty[String, DataFrame]
   private val edgeCache = TrieMap.empty[EdgeType, DataFrame]
+  /** This snapshot's prepared Cypher read plans ([[cypher]]). */
+  private[graft] val preparedPlans = new graft.cypher.CypherCompiler.PreparedPlans
 
   // ---- catalog (reference: CALL db.labels() / db.relationshipTypes(),
   //      src/translator.ts:4398-4412) ----
@@ -272,7 +274,23 @@ final class PropertyGraph private (
   def cypher(query: String): DataFrame =
     new graft.cypher.CypherCompiler(this, SparkSession.active).run(query)
 
-  /** Cypher with `$param` bindings (scalars and lists). */
+  /** Cypher with `$param` bindings (scalars and lists).
+    *
+    * Reads are prepared: this snapshot compiles each parameterized read
+    * once and re-binds new parameter values into the analyzed plan
+    * ([[graft.cypher.CypherCompiler.compileQuery]]). The cache key is the
+    * session, the parsed query, each parameter's Catalyst type, and the
+    * session's time zone, ANSI mode and case sensitivity. Scalar
+    * parameters compile to
+    * [[org.apache.spark.sql.graftshim.ParamLiteral]]s, literals whose
+    * generated code loads the value rather than inlining it, so a new
+    * value neither re-analyzes the plan nor makes janino compile new
+    * classes. Plans a value shaped (SKIP/LIMIT counts, durations, null,
+    * list and array values, and plans whose analysis read a value, such
+    * as an integer compared with a decimal property) are never cached,
+    * nor are writes
+    * ([[cypherWrite]]); a write returns a new snapshot with an empty cache.
+    */
   def cypher(query: String, params: Map[String, Any]): DataFrame =
     new graft.cypher.CypherCompiler(this, SparkSession.active, params).run(query)
 

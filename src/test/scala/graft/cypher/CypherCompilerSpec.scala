@@ -598,4 +598,92 @@ class CypherCompilerSpec extends SparkSpec {
     assert(graph.cypher("RETURN [1, 2, 3] AS l").collect()
       .head.getSeq[Long](0) == Seq(1L, 2L, 3L))
   }
+
+  // ------------------------------------------------------------------
+  // prepared reads: each case runs one query text with different values
+  // on one snapshot, so a stale plan or a stale value shows up
+  // ------------------------------------------------------------------
+
+  test("prepared reads: SKIP, LIMIT, IN-list, null and duration parameters bind per value") {
+    def col0(q: String, p: Map[String, Any]): Seq[Any] = rowsOf(graph.cypher(q, p)).map(_.head)
+    val ordered = "MATCH (c:Customer) RETURN c.c_custkey AS k ORDER BY k"
+    val all = col0(ordered, Map.empty)
+    Seq(1L, 3L).foreach { n =>
+      assert(col0(ordered + " SKIP $n LIMIT 2", Map("n" -> n)) == all.slice(n.toInt, n.toInt + 2))
+      assert(col0(ordered + " LIMIT $n", Map("n" -> n)) == all.take(n.toInt))
+    }
+    val in = "MATCH (c:Customer) WHERE c.c_custkey IN $ks RETURN c.c_custkey AS k ORDER BY k"
+    assert(col0(in, Map("ks" -> Seq(all(0), all(1)))) == Seq(all(0), all(1)))
+    assert(col0(in, Map("ks" -> Seq(all(4)))) == Seq(all(4)))
+    val orNull = "MATCH (c:Customer) WHERE c.c_custkey = coalesce($k, $d) RETURN c.c_custkey AS k"
+    Seq[(Any, Any)]((all(5), all(2)), (null, all(2)), (all(6), all(2)), (null, all(3))).foreach {
+      case (k, d) =>
+        assert(col0(orNull, Map("k" -> k, "d" -> d)) == Seq(Option(k).getOrElse(d)), s"k = $k")
+    }
+    val dur = "RETURN toString(date('2024-01-31') + duration({days: $d})) AS x"
+    assert(col0(dur, Map("d" -> 1L)) == Seq("2024-02-01"))
+    assert(col0(dur, Map("d" -> 10L)) == Seq("2024-02-10"))
+  }
+
+  test("prepared reads: one query text with a Long, then a Double parameter") {
+    val q = "MATCH (c:Customer) WHERE c.c_acctbal > $b RETURN count(*) AS n, $b * 2 AS b2"
+    val cust = raw("customer")
+    Seq[Any](1000L, 1000.5, 2000L).foreach { b =>
+      val want = cust.filter(col("c_acctbal") > lit(b)).count()
+      val got = graph.cypher(q, Map("b" -> b)).head()
+      assert(got.getLong(0) == want, s"b = $b")
+      assert(got.get(1) == (b match { case l: Long => l * 2; case d: Double => d * 2 }), s"b = $b")
+    }
+  }
+
+  test("prepared reads: an integral parameter against a decimal property binds per value") {
+    // Catalyst casts an integral literal met by a decimal to the decimal
+    // type of the literal's digits: 5 to DECIMAL(1,0), 123456 to
+    // DECIMAL(6,0). A plan analyzed for 5 cannot take 123456.
+    import spark.implicits._
+    val items = Seq((1L, "a", "10.50"), (2L, "b", "200000.25")).toDF("_id", "name", "price")
+      .withColumn("price", col("price").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+    val g = graft.graph.PropertyGraph(Map("Item" -> items),
+      Map.empty[graft.graph.EdgeType, org.apache.spark.sql.DataFrame])
+    val q = "MATCH (i:Item) WHERE i.price > $p RETURN i.name AS n, toFloat(i.price * $p) AS t ORDER BY n"
+    def run(p: Long) = rowsOf(g.cypher(q, Map("p" -> p)))
+    assert(run(5L) == Seq(Seq("a", 52.5), Seq("b", 1000001.25)))
+    assert(run(123456L) == Seq(Seq("b", 24691230864.0)))
+    assert(run(7L) == Seq(Seq("a", 73.5), Seq("b", 1400001.75)))
+  }
+
+  test("prepared reads: a split delimiter parameter binds per value") {
+    // the delimiter splits as characters, not as a regex
+    val q = "RETURN split('a.b,c.d', $d) AS xs"
+    def run(d: String) = graph.cypher(q, Map("d" -> d)).head().getSeq[String](0)
+    assert(run(",") == Seq("a.b", "c.d"))
+    assert(run(".") == Seq("a", "b,c", "d"))
+    assert(run("\\E") == Seq("a.b,c.d"))
+  }
+
+  test("prepared reads: a read after cypherWrite sees the write; the old snapshot does not") {
+    import spark.implicits._
+    val g = graft.graph.PropertyGraph(
+      Map("Person" -> Seq((1L, "ann", 30L), (2L, "bob", 40L)).toDF("_id", "name", "age")),
+      Map.empty[graft.graph.EdgeType, org.apache.spark.sql.DataFrame])
+    val q = "MATCH (p:Person {name: $n}) RETURN p.age AS a"
+    def age(gr: graft.graph.PropertyGraph, n: String) = gr.cypher(q, Map("n" -> n)).head().getLong(0)
+    assert(age(g, "ann") == 30L && age(g, "bob") == 40L)
+    val (g2, _) = g.cypherWrite("MATCH (p:Person {name: $n}) SET p.age = $a",
+      Map("n" -> "ann", "a" -> 31L))
+    assert(age(g2, "ann") == 31L && age(g2, "bob") == 40L)
+    assert(age(g, "ann") == 30L)
+  }
+
+  test("prepared reads: a session time-zone change recompiles a timestamp cast") {
+    val q = "RETURN datetime($s).epochSeconds AS e"
+    val p = Map[String, Any]("s" -> "2024-01-01 00:00:00")
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      assert(graph.cypher(q, p).head().getLong(0) == 1704067200L)
+      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+      assert(graph.cypher(q, p).head().getLong(0) == 1704085200L)
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+  }
 }

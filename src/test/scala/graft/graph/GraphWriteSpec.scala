@@ -374,8 +374,8 @@ class GraphWriteSpec extends SparkSpec {
     // WHERE on a prop only one label carries: missing prop matches nothing
     val (g3, _) = g.cypherWrite("MATCH (n) WHERE n.age > 35 SET n.senior = true")
     assert(g3.nodeFrame("Person").filter(col("senior")).count() == 1)
-    // the column may appear on the other frame, but no row matches
-    assert(g3.nodeFrame("City").filter(col("senior") === true).count() == 0)
+    // no matched row is a City, so City's frame is not written at all
+    assert(!g3.nodeFrame("City").columns.contains("senior"))
     // non-aggregate RETURN unions across labels (one row per matched node)
     val (_, ret) = g.cypherWrite("MATCH (n) SET n.audit = 2 RETURN id(n) AS i")
     assert(ret.get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 1L, 2L))
@@ -630,6 +630,15 @@ class GraphWriteSpec extends SparkSpec {
     val rows = ret.get.select("n._id", "n._label", "n.x").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(r => (r._2, r._1)).toSeq
     assert(rows == Seq((1L, "City", 1L), (1L, "Person", 1L), (2L, "Person", 1L)))
+  }
+
+  test("cypherWrite: an unlabeled write touches only the labels its rows carry") {
+    val g = twoLabelGraph()
+    val (g2, _) = g.cypherWrite("MATCH (a)-[:KNOWS]->(b) SET a.x = 1")
+    assert(!g2.nodeFrame("City").columns.contains("x"))
+    assert(g2.cypher("MATCH (c:City) RETURN keys(c) AS k").head().getSeq[String](0) == Seq("city"))
+    val (g3, _) = g.cypherWrite("MATCH (n) WHERE n.name = 'ann' CREATE (n)-[:T]->(:X {q: 1})")
+    assert(g3.edgeTypesFor(Some("T"), None, None) == Seq(EdgeType("T", "Person", "X")))
   }
 
   test("snapshot save/load round-trips a written graph") {

@@ -30,22 +30,36 @@ COUNTERS = ("*.jobs", "*_jobs", "*.stages", "*.tasks", "*_bytes",
             "*.plan_nodes", "*.exchanges")
 
 
-def metrics(path):
+def json_objects(lines):
+    """The JSON objects among `lines` (a benchmark run's stdout), in order."""
+    for line in lines:
+        line = line.strip()
+        if not line.startswith("{"):
+            continue
+        try:
+            obj = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(obj, dict):
+            yield obj
+
+
+def result_line(lines):
+    """The last result line (the object carrying a "metrics" dict), or None."""
     found = None
+    for obj in json_objects(lines):
+        if isinstance(obj.get("metrics"), dict):
+            found = obj
+    return found
+
+
+def metrics(path):
     with open(path) as f:
-        for line in f:
-            line = line.strip()
-            if not line.startswith("{"):
-                continue
-            try:
-                obj = json.loads(line)
-            except ValueError:
-                continue
-            if isinstance(obj, dict) and isinstance(obj.get("metrics"), dict):
-                found = obj["metrics"]
+        found = result_line(f)
     if found is None:
         sys.exit(f"{path}: no result line with metrics")
-    return {k: v["value"] if isinstance(v, dict) else v for k, v in found.items()}
+    return {k: v["value"] if isinstance(v, dict) else v
+            for k, v in found["metrics"].items()}
 
 
 def is_counter(name):
