@@ -72,8 +72,8 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     }
 
   /** Set when a parameter's value, not just its type, shaped the plan
-    * being compiled: SKIP/LIMIT counts ([[litInt]]), duration components
-    * ([[litNum]]), and null, list or array values. Such a plan is not
+    * being compiled: SKIP/LIMIT counts ([[litInt]]), a `round` precision
+    * (`argLit`), and null, list or array values. Such a plan is not
     * prepared ([[compileQuery]]); nor is one whose analysis read a value
     * ([[ParamLiteral.Scope.preparable]]). */
   private var valueBound = false
@@ -100,7 +100,7 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     * The key is the session, the parsed query, each parameter's Catalyst
     * type, and the confs analysis reads: session time zone, ANSI mode and
     * case sensitivity. Never cached: plans a parameter's VALUE shaped
-    * (SKIP/LIMIT counts, duration components, null, list and array
+    * (SKIP/LIMIT counts, a `round` precision, null, list and array
     * values, and plans whose analysis read a value, such as an integer
     * compared with a decimal property), and writes (`cypherWrite` does
     * not compile through here).
@@ -538,120 +538,14 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
     }
   }
 
-  // ------------------------------------------------------------------
-  // durations (reference: executor.ts:4048-4141 — duration values ARE
-  // ISO 8601 strings; fractional components spill to smaller units with
-  // ns→s→min→h normalization but no h→d / mo→y carry)
-  // ------------------------------------------------------------------
-
-  /** A statically-known duration: arithmetic components + ISO form. */
-  private case class Dur(months: Long, days: Long, micros: Long, iso: String)
-
-  private def litNum(e: Expr): Option[Double] = e match {
-    case Lit(v: Long) => Some(v.toDouble)
-    case Lit(v: Int) => Some(v.toDouble)
-    case Lit(v: Double) => Some(v)
-    case Neg(x) => litNum(x).map(-_)
-    case Param(n) =>
-      valueBound = true
-      params.get(n).collect {
-        case v: Long => v.toDouble
-        case v: Int => v.toDouble
-        case v: Double => v
-      }
-    case _ => None
-  }
-
-  private val IsoDur =
-    """P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+(?:\.\d+)?)S)?)?""".r
-
-  /** Statically evaluate duration({...}) / duration('P...') to components.
-    * Divergence (documented): non-literal duration components are not
-    * supported — durations are almost always query constants.
-    */
-  private def staticDuration(e: Expr): Option[Dur] = e match {
-    case Func(fn, Seq(arg), _) if fn.toLowerCase == "duration" =>
-      arg match {
-        case MapLit(kvs) =>
-          val m = kvs.map { case (k, v) =>
-            k.toLowerCase -> litNum(v).getOrElse(return None)
-          }.toMap
-          // fractional spill, reference order: y→mo→(w)→d→h→min→s→ns
-          var years = m.getOrElse("years", 0.0)
-          var months = m.getOrElse("months", 0.0) + (years - years.floor) * 12
-          years = years.floor
-          var days = m.getOrElse("days", 0.0) + (months - months.floor) * (365.2425 / 12)
-          months = months.floor
-          var weeks = m.getOrElse("weeks", 0.0)
-          days += (weeks - weeks.floor) * 7
-          weeks = weeks.floor
-          var hours = m.getOrElse("hours", 0.0) + (days - days.floor) * 24
-          days = days.floor
-          var minutes = m.getOrElse("minutes", 0.0) + (hours - hours.floor) * 60
-          hours = hours.floor
-          var seconds = m.getOrElse("seconds", 0.0) + (minutes - minutes.floor) * 60
-          minutes = minutes.floor
-          var nanos = math.round(m.getOrElse("nanoseconds", 0.0) +
-            m.getOrElse("milliseconds", 0.0) * 1e6 +
-            m.getOrElse("microseconds", 0.0) * 1e3 +
-            (seconds - seconds.floor) * 1e9)
-          seconds = seconds.floor
-          var s = seconds.toLong + nanos / 1000000000L; nanos %= 1000000000L
-          var mi = minutes.toLong + s / 60; s %= 60
-          var h = hours.toLong + mi / 60; mi %= 60
-          val (y, mo, w, d) = (years.toLong, months.toLong, weeks.toLong, days.toLong)
-          val datePart = (if (y != 0) s"${y}Y" else "") + (if (mo != 0) s"${mo}M" else "") +
-            (if (w != 0) s"${w}W" else "") + (if (d != 0) s"${d}D" else "")
-          val timePart = (if (h != 0) s"${h}H" else "") + (if (mi != 0) s"${mi}M" else "") +
-            (if (s != 0 || nanos != 0)
-               (if (nanos != 0) s"$s.${"%09d".format(nanos)}S" else s"${s}S")
-             else "")
-          val iso = if (timePart.nonEmpty) s"P${datePart}T$timePart"
-                    else if (datePart.nonEmpty) s"P$datePart" else "PT0S"
-          Some(Dur(y * 12 + mo, w * 7 + d,
-            h * 3600000000L + mi * 60000000L + s * 1000000L + nanos / 1000, iso))
-        case Lit(iso: String) => iso match {
-          case IsoDur(y, mo, w, d, h, mi, sec) =>
-            def l(x: String): Long = Option(x).map(_.toLong).getOrElse(0L)
-            val secF = Option(sec).map(_.toDouble).getOrElse(0.0)
-            Some(Dur(l(y) * 12 + l(mo), l(w) * 7 + l(d),
-              l(h) * 3600000000L + l(mi) * 60000000L + math.round(secF * 1e6), iso))
-          case _ => None
-        }
-        case _ => None
-      }
-    case _ => None
-  }
-
   /** Syntactically a duration-valued expression: a duration()/duration.*
     * call, or a +/- combination of two of them (temporal ± duration is a
     * temporal, so mixed operands don't qualify).
     */
   private def isDurationExpr(e: Expr): Boolean = e match {
-    case Func(fn, _, _) => fn.toLowerCase.startsWith("duration")
+    case Func(fn, _, _) => fn.toLowerCase == "duration" || fn.toLowerCase.startsWith("duration.")
     case Bin("+" | "-", l, r) => isDurationExpr(l) && isDurationExpr(r)
     case _ => false
-  }
-
-  /** date/timestamp ± duration. For DateType the result stays a date
-    * (sub-day components are dropped — Neo4j date + duration semantics);
-    * timestamps get the full month/day/microsecond interval.
-    */
-  private def addDur(lc: Column, lt: Option[DataType], dur: Dur, sign: Int): Column = {
-    val m = (sign * dur.months).toInt
-    val d = (sign * dur.days).toInt
-    val us = sign * dur.micros
-    lt match {
-      case Some(DateType) =>
-        val afterM = if (m != 0) add_months(lc, m) else lc
-        if (d != 0) date_add(afterM, d) else afterM
-      case _ =>
-        val ts = lc.cast(TimestampType)
-        val withCal =
-          if (m != 0 || d != 0) ts + expr(s"INTERVAL '$m' MONTH") + expr(s"INTERVAL '$d' DAY")
-          else ts
-        if (us != 0) withCal + expr(s"INTERVAL '$us' MICROSECOND") else withCal
-    }
   }
 
   // ------------------------------------------------------------------
@@ -810,39 +704,17 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
           case _ => current_timestamp()
         }
 
-      // duration value: compiles to its ISO 8601 string (the reference's
-      // duration representation, executor.ts:4115). Literal components
-      // fold at compile time; non-literal maps build the string per row
-      // with the same spill/normalize rules (reference
+      // duration value: its ISO 8601 string (the reference's duration
+      // representation, executor.ts:4115), written from a component map
+      // by CypherFunctions.durationFromComponents (reference
       // translator.ts:8524-8705); any other argument passes through as an
-      // ISO string (null propagates).
-      case e0 @ Func(fn, Seq(arg), _) if fn.toLowerCase == "duration" =>
-        staticDuration(e0) match {
-          case Some(dur) => lit(dur.iso)
-          case None => arg match {
-            case MapLit(kvs) =>
-              CypherFunctions.durationFromComponents(
-                kvs.map { case (k, v) => k.toLowerCase -> go(v) }.toMap)
-            case other => go(other)
-          }
-        }
-      // duration.between/inMonths/inDays/inSeconds (reference:
-      // translator.ts:8711-8808, simplified second/month/day diffs)
-      case Func(fn, Seq(a, b), _)
-          if Set("duration.between", "duration.inmonths", "duration.indays",
-                 "duration.inseconds")(fn.toLowerCase) =>
-        val ac = go(a); val bc = go(b)
-        fn.toLowerCase match {
-          case "duration.between" | "duration.inseconds" =>
-            concat(lit("PT"),
-              (bc.cast(TimestampType).cast(LongType) -
-                ac.cast(TimestampType).cast(LongType)).cast(StringType), lit("S"))
-          case "duration.inmonths" =>
-            concat(lit("P"),
-              ((year(bc) - year(ac)) * 12 + (month(bc) - month(ac))).cast(StringType),
-              lit("M"))
-          case "duration.indays" =>
-            concat(lit("P"), datediff(bc, ac).cast(StringType), lit("D"))
+      // ISO string (null propagates)
+      case Func(fn, Seq(arg), _) if fn.toLowerCase == "duration" =>
+        arg match {
+          case MapLit(kvs) =>
+            CypherFunctions.durationFromComponents(
+              kvs.map { case (k, v) => k.toLowerCase -> go(v) }.toMap)
+          case other => go(other)
         }
       // Heterogeneous list literals ride Spark's non-ANSI coercion:
       // [1, 'two'] becomes a STRING array (['1', 'two']) — a documented
@@ -907,39 +779,33 @@ final class CypherCompiler(g: PropertyGraph, spark: SparkSession,
               case _ => None
             })
             else None
+          // a parameter's value shapes the plan: not prepared
           def argLit(i: Int): Option[Any] =
-            if (i < args.size) args(i) match { case Lit(v) => Some(v); case _ => None }
+            if (i < args.size) args(i) match {
+              case Lit(v) => Some(v)
+              case Neg(Lit(v: Long)) => Some(-v)
+              case Param(n) =>
+                valueBound = true
+                Some(params.getOrElse(n, sys.error(s"missing parameter $$$n")))
+              case _ => None
+            }
             else None
           CypherFunctions.scalar(lname, cols, argType, argLit)
         }
 
-      // temporal ± duration and duration + duration
-      case Bin(op, l, r) if (op == "+" || op == "-") && staticDuration(r).isDefined =>
-        val dur = staticDuration(r).get
-        staticDuration(l) match {
-          case Some(ld) =>
-            val sign = if (op == "+") 1 else -1
-            val us = ld.micros + sign * dur.micros
-            val (h, rem) = (us / 3600000000L, us % 3600000000L)
-            val (mi, rem2) = (rem / 60000000L, rem % 60000000L)
-            val timePart = (if (h != 0) s"${h}H" else "") + (if (mi != 0) s"${mi}M" else "") +
-              (if (rem2 != 0) s"${rem2 / 1000000.0}S".replace(".0S", "S")
-               else if (h == 0 && mi == 0) "" else "")
-            val mo = ld.months + sign * dur.months
-            val d = ld.days + sign * dur.days
-            val datePart = (if (mo != 0) s"${mo}M" else "") + (if (d != 0) s"${d}D" else "")
-            lit(if (timePart.nonEmpty) s"P${datePart}T$timePart"
-                else if (datePart.nonEmpty) s"P$datePart" else "PT0S")
-          case None =>
-            val lc = go(l)
-            addDur(lc, dt(lc), dur, if (op == "+") 1 else -1)
+      // duration ± duration, temporal ± duration, and duration + temporal
+      // (duration on the LEFT) — chosen by syntax, so each would
+      // otherwise fall into string concat silently
+      case Bin(op @ ("+" | "-"), l, r) if isDurationExpr(r) =>
+        val sign = if (op == "+") 1 else -1
+        if (isDurationExpr(l)) CypherFunctions.addDurations(go(l), go(r), sign)
+        else {
+          val lc = go(l)
+          CypherFunctions.addDuration(lc, dt(lc), go(r), sign)
         }
-
-      // duration + temporal (duration on the LEFT) — would otherwise
-      // fall into string concat silently
-      case Bin("+", l, r) if staticDuration(l).isDefined =>
+      case Bin("+", l, r) if isDurationExpr(l) =>
         val rc = go(r)
-        addDur(rc, dt(rc), staticDuration(l).get, 1)
+        CypherFunctions.addDuration(rc, dt(rc), go(l), 1)
 
       // duration ordering: lexicographic string comparison would order
       // "P10D" before "P2D" — compare total magnitude instead

@@ -59,7 +59,8 @@ object CypherFunctions {
     }
 
   /** Resolve a scalar call. `argType(i)` is the resolved Spark type of
-    * argument i when statically known (None inside lambdas).
+    * argument i when statically known (None inside lambdas); `argLit(i)`
+    * is its value when the compiler knows it (a literal or parameter).
     */
   def scalar(name: String, args: Seq[Column], argType: Int => Option[DataType],
       argLit: Int => Option[Any] = _ => None): Column = {
@@ -74,16 +75,12 @@ object CypherFunctions {
       case "replace" => call_function("replace", args: _*)
       case "split" =>
         // Cypher split = literal delimiter; Spark split = regex. Quote
-        // literal delimiters so "." or "|" split as characters.
-        argLit(1) match {
-          case Some(d: String) => split(a0, java.util.regex.Pattern.quote(d))
-          case _ =>
-            // a delimiter known at run time, quoted as Pattern.quote does
-            val d = args(1).cast(StringType)
-            split(a0, concat(lit("\\Q"),
-              org.apache.spark.sql.functions.replace(d, lit("\\E"), lit("\\E\\\\E\\Q")),
-              lit("\\E")))
-        }
+        // the delimiter as Pattern.quote does, so "." or "|" split as
+        // characters (a literal delimiter folds to Pattern.quote's text)
+        val d = args(1).cast(StringType)
+        split(a0, concat(lit("\\Q"),
+          org.apache.spark.sql.functions.replace(d, lit("\\E"), lit("\\E\\\\E\\Q")),
+          lit("\\E")))
       case "substring" =>
         // Cypher 0-based start; Spark 1-based
         if (args.size >= 3) substr(a0, args(1) + lit(1), args(2))
@@ -119,8 +116,14 @@ object CypherFunctions {
         // single-arg round follows the reference (executor.ts ROUND →
         // JS Math.round): half rounds toward +inf, so round(-2.5) = -2
         // (Spark's round is half-away-from-zero: -3). 2-arg round is a
-        // graft extension, Spark semantics.
-        if (args.size >= 2) round(a0, argLit(1).map(_.toString.toInt).getOrElse(0))
+        // graft extension, Spark semantics; its precision must be known
+        // at compile time (for a decimal input it sets the result type).
+        if (args.size >= 2) argLit(1) match {
+          case Some(n: Number) => round(a0, n.intValue)
+          case other => throw new IllegalArgumentException(
+            "round(x, precision): the precision must be an integer literal or " +
+              s"parameter, got ${other.getOrElse("an expression")}")
+        }
         else floor(a0 + lit(0.5)).cast(DoubleType)
       case "sqrt" => sqrt(a0)
       case "sign" => signum(a0).cast(LongType)
@@ -210,6 +213,17 @@ object CypherFunctions {
       case "timestamp" => (unix_timestamp() * 1000).cast(LongType)
       case "epochmillis" => (a0.cast(DoubleType) * 1000).cast(LongType)
       case "duration_between_days" => datediff(args(1), a0).cast(LongType)
+      // duration.between/inMonths/inDays/inSeconds (reference:
+      // translator.ts:8711-8808, simplified second/month/day diffs)
+      case "duration.between" | "duration.inseconds" =>
+        concat(lit("PT"),
+          (args(1).cast(TimestampType).cast(LongType) -
+            a0.cast(TimestampType).cast(LongType)).cast(StringType), lit("S"))
+      case "duration.inmonths" =>
+        concat(lit("P"),
+          ((year(args(1)) - year(a0)) * 12 + (month(args(1)) - month(a0))).cast(StringType),
+          lit("M"))
+      case "duration.indays" => concat(lit("P"), datediff(args(1), a0).cast(StringType), lit("D"))
       case other =>
         // fall through to any Spark SQL builtin with matching name/arity —
         // keeps the surface wide without re-listing every math function
@@ -219,29 +233,24 @@ object CypherFunctions {
 
   // ------------------------------------------------------------------
   // durations — ISO 8601 strings (the reference representation,
-  // executor.ts:4048-4141). Accessors parse components out of the string
-  // with the reference's cumulative semantics (translator.ts:13286-13330):
-  // months = Y*12 + M, minutes = H*60 + M, seconds = H*3600 + M*60 + S;
-  // years/days/hours are the bare component; weeks = D div 7 (a `W`
-  // component is NOT consulted by `weeks`, faithfully to the reference).
+  // executor.ts:4048-4141). This section is the one place that knows the
+  // format: [[durationFromComponents]] writes every duration, the field
+  // readers below read every duration, and the arithmetic is built on
+  // both. Every component keeps its own sign (P-1DT-12H, PT-1.500000000S).
+  // Accessors use the reference's cumulative semantics
+  // (translator.ts:13286-13330): months = Y*12 + M, minutes = H*60 + M,
+  // seconds = H*3600 + M*60 + S; years/days/hours are the bare component;
+  // weeks = D div 7 (a `W` component is NOT consulted by `weeks`,
+  // faithfully to the reference). Writer and readers use each input only
+  // a few times, so a reader over a writer (the sum of two per-row
+  // durations) stays a small expression.
   // ------------------------------------------------------------------
 
-  /** Truncate-toward-zero integer division (SQL `div`); Spark's `/` on
-    * longs goes through Double and `floor` would round negatives away
-    * from zero.
-    */
-  private def tdiv(a: Column, b: Long): Column =
-    ((a - (a % b)) / b).cast(LongType)
+  /** Truncate-toward-zero integer division (SQL `div`). */
+  private def tdiv(a: Column, b: Long): Column = call_function("div", a, lit(b))
 
   private def comp(v: Column, re: String): Column =
     coalesce(regexp_extract(v, re, 1).cast(LongType), lit(0L))
-
-  /** First `n` digits of the fractional-seconds field, zero-padded to
-    * nanosecond width (the writer always prints %09d).
-    */
-  private def fracDigits(v: Column, n: Int): Column =
-    coalesce(substring(rpad(regexp_extract(v, "\\.(\\d+)S", 1), 9, "0"), 1, n)
-      .cast(LongType), lit(0L))
 
   private def durY(v: Column) = comp(v, "^P(-?\\d+)Y")
   private def durMo(v: Column) = comp(v, "^P(?:-?\\d+Y)?(-?\\d+)M")
@@ -249,88 +258,90 @@ object CypherFunctions {
   private def durD(v: Column) = comp(v, "^P(?:-?\\d+Y)?(?:-?\\d+M)?(?:-?\\d+W)?(-?\\d+)D")
   private def durH(v: Column) = comp(v, "T(-?\\d+)H")
   private def durMi(v: Column) = comp(v, "T(?:-?\\d+H)?(-?\\d+)M")
-  private def durS(v: Column) = comp(v, "T(?:-?\\d+H)?(?:-?\\d+M)?(-?\\d+)(?:\\.\\d+)?S")
+
+  /** The seconds field in nanoseconds. Its sign applies to its fraction:
+    * PT-0.5S holds -500000000. */
+  private def durSNanos(v: Column): Column =
+    coalesce((regexp_extract(v, "T(?:-?\\d+H)?(?:-?\\d+M)?(-?\\d+(?:\\.\\d+)?)S", 1)
+      .cast(DecimalType(20, 9)) * 1000000000).cast(LongType), lit(0L))
+
+  /** What arithmetic adds: months (Y*12 + M), days (W*7 + D), and the
+    * clock part in nanoseconds (H*3600 + M*60 seconds, plus S). */
+  private def durMonths(v: Column) = durY(v) * 12 + durMo(v)
+  private def durDays(v: Column) = durW(v) * 7 + durD(v)
+  private def durHM(v: Column) = durH(v) * 3600 + durMi(v) * 60
+  private def durNanos(v: Column) = durHM(v) * 1000000000L + durSNanos(v)
 
   /** Duration component access (`dur.days`); None when `key` is not a
     * duration accessor. Accessor names are the reference's (exact case).
     */
   def durationComponent(c: Column, key: String): Option[Column] = {
-    lazy val totalMonths = durY(c) * 12 + durMo(c)
-    lazy val totalSeconds = durH(c) * 3600 + durMi(c) * 60 + durS(c)
+    lazy val hm = durHM(c)
+    lazy val sn = durSNanos(c)
     val out: Option[Column] = key match {
       case "years" => Some(durY(c))
-      case "months" => Some(totalMonths)
-      case "quarters" => Some(tdiv(totalMonths, 3))
+      case "months" => Some(durMonths(c))
+      case "quarters" => Some(tdiv(durMonths(c), 3))
       case "weeks" => Some(tdiv(durD(c), 7))
       case "days" => Some(durD(c))
       case "hours" => Some(durH(c))
       case "minutes" => Some(durH(c) * 60 + durMi(c))
-      case "seconds" => Some(totalSeconds)
-      case "milliseconds" => Some(totalSeconds * 1000 + fracDigits(c, 3))
-      case "microseconds" => Some(totalSeconds * 1000000L + fracDigits(c, 6))
-      case "nanoseconds" => Some(totalSeconds * 1000000000L + fracDigits(c, 9))
+      case "seconds" => Some(hm + tdiv(sn, 1000000000L))
+      case "milliseconds" => Some(hm * 1000 + tdiv(sn, 1000000L))
+      case "microseconds" => Some(hm * 1000000L + tdiv(sn, 1000L))
+      case "nanoseconds" => Some(hm * 1000000000L + sn)
       case "quartersOfYear" => Some(tdiv(durMo(c), 3))
       case "monthsOfQuarter" => Some(durMo(c) % 3)
       case "monthsOfYear" => Some(durMo(c))
       case "daysOfWeek" => Some(durD(c) % 7)
       case "minutesOfHour" => Some(durMi(c))
-      case "secondsOfMinute" => Some(durS(c))
-      case "millisecondsOfSecond" => Some(fracDigits(c, 3))
-      case "microsecondsOfSecond" => Some(fracDigits(c, 6))
-      case "nanosecondsOfSecond" => Some(fracDigits(c, 9))
+      case "secondsOfMinute" => Some(tdiv(sn, 1000000000L))
+      case "millisecondsOfSecond" => Some(tdiv(sn % 1000000000L, 1000000L))
+      case "microsecondsOfSecond" => Some(tdiv(sn % 1000000000L, 1000L))
+      case "nanosecondsOfSecond" => Some(sn % 1000000000L)
       case _ => None
     }
     out.map(x => when(c.isNull, lit(null).cast(LongType)).otherwise(x))
   }
 
-  /** duration({...}) with per-row (non-literal) components → ISO string.
-    * Same fractional-spill (y→mo→d→h→min→s→ns, Gregorian-average month)
-    * and s→min→h normalization as the literal path (reference
-    * executor.ts:4060-4140); null components count as 0, per the
-    * reference's `Number(map.x ?? 0)`.
+  /** duration({...}) → ISO string, the one duration writer. Fractions
+    * spill y→mo→d→h→min→s→ns (Gregorian-average month) and truncate
+    * toward zero, so every component keeps its own sign (reference
+    * executor.ts:4060-4140). Null components count as 0, per the
+    * reference's `Number(map.x ?? 0)`. Literal components fold to one
+    * literal in Catalyst's constant folding.
     */
   def durationFromComponents(m: Map[String, Column]): Column = {
     def get(k: String): Column =
       coalesce(m.getOrElse(k, lit(0d)).cast(DoubleType), lit(0d))
-    val rawYears = get("years")
-    val finalYears = rawYears.cast(LongType)
-    val totalMonths = get("months") + (rawYears - finalYears.cast(DoubleType)) * 12
-    val finalMonths = totalMonths.cast(LongType)
-    val rawWeeks = get("weeks")
-    val finalWeeks = rawWeeks.cast(LongType)
-    val totalDays = get("days") +
-      (totalMonths - finalMonths.cast(DoubleType)) * (365.2425 / 12) +
-      (rawWeeks - finalWeeks.cast(DoubleType)) * 7
-    val finalDays = totalDays.cast(LongType)
-    val totalHours = get("hours") + (totalDays - finalDays.cast(DoubleType)) * 24
-    val hoursPre = totalHours.cast(LongType)
-    val totalMins = get("minutes") + (totalHours - hoursPre.cast(DoubleType)) * 60
-    val minsPre = totalMins.cast(LongType)
-    val secsFromFrac = (totalMins - minsPre.cast(DoubleType)) * 60
-    val totalNanos = round((get("seconds") + secsFromFrac) * 1e9 +
-      get("milliseconds") * 1e6 + get("microseconds") * 1e3 +
-      get("nanoseconds")).cast(LongType)
-    val totalSecs = tdiv(totalNanos, 1000000000L)
-    val remNanos = totalNanos % 1000000000L
-    val finalSecs = totalSecs % 60
-    val totalMinutes = minsPre + tdiv(totalSecs, 60)
-    val finalMinutes = totalMinutes % 60
-    val finalHours = hoursPre + tdiv(totalMinutes, 60)
+    // the fraction of `from` (x % 1 keeps x's sign) spills into `to`
+    def spill(from: Column, to: String, per: Double): Column = get(to) + (from % 1) * per
+    val years = get("years")
+    val months = spill(years, "months", 12)
+    val weeks = get("weeks")
+    val days = spill(months, "days", 365.2425 / 12) + (weeks % 1) * 7
+    val hours = spill(days, "hours", 24)
+    val minutes = spill(hours, "minutes", 60)
+    val nanos = round(spill(minutes, "seconds", 60) * 1e9 + get("milliseconds") * 1e6 +
+      get("microseconds") * 1e3 + get("nanoseconds")).cast(LongType)
+    def whole(x: Column) = x.cast(LongType)
+    write(whole(years), whole(months), whole(weeks), whole(days), whole(hours),
+      whole(minutes), nanos)
+  }
 
-    def piece(v: Column, unit: String): Column =
-      when(v =!= 0, concat(v.cast(StringType), lit(unit))).otherwise(lit(""))
-    val datePart = concat(piece(finalYears, "Y"), piece(finalMonths, "M"),
-      piece(finalWeeks, "W"), piece(finalDays, "D"))
-    val secStr = when(remNanos =!= 0,
-        concat(when(finalSecs === 0 && remNanos < 0, lit("-0"))
-            .otherwise(finalSecs.cast(StringType)),
-          lit("."), lpad(abs(remNanos).cast(StringType), 9, "0"), lit("S")))
-      .otherwise(when(finalSecs =!= 0, concat(finalSecs.cast(StringType), lit("S")))
-        .otherwise(lit("")))
-    val timePart = concat(piece(finalHours, "H"), piece(finalMinutes, "M"), secStr)
-    when(timePart =!= "", concat(lit("P"), datePart, lit("T"), timePart))
-      .otherwise(when(datePart =!= "", concat(lit("P"), datePart))
-        .otherwise(lit("PT0S")))
+  /** The ISO text of whole years, months, weeks, days, hours and minutes
+    * plus `nanos` nanoseconds. The nanoseconds carry into minutes and
+    * hours (no h→d or mo→y carry); zero fields are left out, and the zero
+    * duration is PT0S.
+    */
+  private def write(y: Column, mo: Column, w: Column, d: Column, h: Column, mi: Column,
+      nanos: Column): Column = {
+    val minutes = mi + tdiv(nanos, 60000000000L)
+    val text = format_string("P%dY%dM%dW%dDT%dH%dM%.9fS", y, mo, w, d,
+      h + tdiv(minutes, 60), minutes % 60, (nanos % 60000000000L) / 1e9)
+    // drop zero fields and a zero fraction, then an empty time part
+    regexp_replace(regexp_replace(regexp_replace(text,
+      "(?<=[PTYMWDH])0(?:[YMWDH]|\\.0{9}S)|\\.0{9}(?=S)", ""), "T$", ""), "^P$", "PT0S")
   }
 
   /** Comparable magnitude of an ISO duration in (fractional) microseconds,
@@ -339,12 +350,35 @@ object CypherFunctions {
     * its tests; this follows Neo4j's average-length total ordering.
     */
   def durationTotalMicros(c: Column): Column =
-    ((durY(c) * 12 + durMo(c)).cast(DoubleType) * (365.2425 / 12) * 86400e6) +
-      ((durW(c) * 7 + durD(c)).cast(DoubleType) * 86400e6) +
-      durH(c).cast(DoubleType) * 3600e6 +
-      durMi(c).cast(DoubleType) * 60e6 +
-      durS(c).cast(DoubleType) * 1e6 +
-      fracDigits(c, 9).cast(DoubleType) / 1000
+    (durMonths(c).cast(DoubleType) * (365.2425 / 12) * 86400e6) +
+      (durDays(c).cast(DoubleType) * 86400e6) + durNanos(c).cast(DoubleType) / 1000
+
+  /** `t + sign * d` for a temporal `t` of type `tType` and a duration
+    * `d`: months, then days, then the clock part. A date stays a date and
+    * drops the clock part (Neo4j date + duration semantics); any other
+    * value is taken as a timestamp. A null duration gives null.
+    */
+  def addDuration(t: Column, tType: Option[DataType], d: Column, sign: Int): Column = {
+    val months = durMonths(d) * sign
+    val days = durDays(d) * sign
+    val out = tType match {
+      case Some(DateType) =>
+        date_add(add_months(t, months.cast(IntegerType)), days.cast(IntegerType))
+      case _ =>
+        timestamp_add("MICROSECOND", tdiv(durNanos(d), 1000L) * sign,
+          timestamp_add("DAY", days, timestamp_add("MONTH", months, t.cast(TimestampType))))
+    }
+    when(d.isNotNull, out)
+  }
+
+  /** `a + sign * b` for two durations: months, days and the clock part
+    * add field by field (no month/day carry) and are written as
+    * [[durationFromComponents]] writes. Null if either is null.
+    */
+  def addDurations(a: Column, b: Column, sign: Int): Column =
+    when(a.isNotNull && b.isNotNull,
+      write(lit(0L), durMonths(a) + durMonths(b) * sign, lit(0L),
+        durDays(a) + durDays(b) * sign, lit(0L), lit(0L), durNanos(a) + durNanos(b) * sign))
 
   /** Temporal component access (`d.year`) for date/timestamp values. */
   def temporalComponent(c: Column, key: String): Option[Column] = key.toLowerCase match {

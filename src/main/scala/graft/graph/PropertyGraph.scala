@@ -285,8 +285,8 @@ final class PropertyGraph private (
     * [[org.apache.spark.sql.graftshim.ParamLiteral]]s, literals whose
     * generated code loads the value rather than inlining it, so a new
     * value neither re-analyzes the plan nor makes janino compile new
-    * classes. Plans a value shaped (SKIP/LIMIT counts, durations, null,
-    * list and array values, and plans whose analysis read a value, such
+    * classes. Plans a value shaped (SKIP/LIMIT counts, a `round`
+    * precision, null, list and array values, and plans whose analysis read a value, such
     * as an integer compared with a decimal property) are never cached,
     * nor are writes
     * ([[cypherWrite]]); a write returns a new snapshot with an empty cache.

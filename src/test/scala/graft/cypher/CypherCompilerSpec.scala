@@ -518,6 +518,52 @@ class CypherCompilerSpec extends SparkSpec {
     assert(nul.getAs[Boolean]("isnull"))
   }
 
+  test("durations: literal, per-row and parameter components give one value") {
+    // each form is run three ways — `?` as a literal, as an UNWIND
+    // variable and as a parameter — and all three must give `want`.
+    // Negative fractions truncate toward zero and every component keeps
+    // its own sign, so the printed string reads as its value.
+    val forms = Seq[(String, Any, Any)](
+      ("duration({days: ?})", -1.5, "P-1DT-12H"),
+      ("duration({hours: ?})", -0.5, "PT-30M"),
+      ("duration({seconds: ?})", -1.5, "PT-1.500000000S"),
+      ("duration({days: ?})", 2.5, "P2DT12H"),
+      ("duration({seconds: ?}).milliseconds", -1.5, -1500L),
+      ("duration({seconds: ?}).millisecondsOfSecond", -1.5, -500L),
+      ("duration({seconds: ?}).nanoseconds", -0.5, -500000000L),
+      ("duration({seconds: ?}).microsecondsOfSecond", -0.25, -250000L),
+      ("toString(date('2024-01-31') + duration({days: ?}))", 3L, "2024-02-03"),
+      ("toString(date('2024-01-31') + duration(?))", "P3D", "2024-02-03"),
+      ("toString(date('2024-01-31') + duration({months: ?}))", 1L, "2024-02-29"),
+      ("toString(date('1996-03-15') - duration({days: ?}))", 20L, "1996-02-24"),
+      ("toString(duration({days: ?}) + date('1996-01-01'))", 5L, "1996-01-06"),
+      ("toString(datetime('2024-01-31T10:00:00') + duration({hours: ?}))", 1.5,
+        "2024-01-31 11:30:00"),
+      ("toString(datetime('2024-01-31T10:00:00') - duration({seconds: ?}))", 0.5,
+        "2024-01-31 09:59:59.5"),
+      ("toString(duration({months: ?}) + datetime('2024-01-31T10:00:00'))", 1L,
+        "2024-02-29 10:00:00"),
+      ("toString(datetime('2024-01-31T10:00:00') + duration({hours: ?}))", 1000L,
+        "2024-03-13 02:00:00"),
+      ("duration({days: ?}) + duration({days: 2})", 1L, "P3D"),
+      ("duration({seconds: ?}) + duration({seconds: 2})", 1.5, "PT3.500000000S"),
+      ("duration({hours: ?}) - duration({minutes: 30})", 1L, "PT30M"),
+      ("duration({seconds: ?}) - duration({seconds: 1})", 0.5, "PT-0.500000000S"),
+      ("duration({days: ?}) < duration({hours: 25})", 1L, true),
+      ("duration({days: ?}) >= duration({hours: 25})", 1L, false),
+      ("duration({seconds: ?}) < duration({seconds: -1})", -1.5, true))
+    forms.foreach { case (form, v, want) =>
+      val text = v match { case s: String => s"'$s'"; case x => x.toString }
+      Seq(
+        "literal" -> graph.cypher(s"RETURN ${form.replace("?", text)} AS r"),
+        "per-row" -> graph.cypher(s"UNWIND [$text] AS x RETURN ${form.replace("?", "x")} AS r"),
+        "parameter" -> graph.cypher(s"RETURN ${form.replace("?", "$x")} AS r", Map("x" -> v))
+      ).foreach { case (way, df) =>
+        assert(df.head().get(0) == want, s"$form with ? = $text as $way")
+      }
+    }
+  }
+
   test("pattern comprehension collects correlated lists") {
     val got = graph.cypher(
       """MATCH (r:Region)
@@ -650,6 +696,27 @@ class CypherCompilerSpec extends SparkSpec {
     assert(run(5L) == Seq(Seq("a", 52.5), Seq("b", 1000001.25)))
     assert(run(123456L) == Seq(Seq("b", 24691230864.0)))
     assert(run(7L) == Seq(Seq("a", 73.5), Seq("b", 1400001.75)))
+  }
+
+  test("prepared reads: a round precision parameter binds per value") {
+    val q = "RETURN round(3.14159, $d) AS r"
+    assert(Seq(0L, 2L, 0L).map(d => graph.cypher(q, Map("d" -> d)).head().getDouble(0)) ==
+      Seq(3.0, 3.14, 3.0))
+    // for a decimal input the precision sets the result type
+    import spark.implicits._
+    val items = Seq((1L, "10.567")).toDF("_id", "price")
+      .withColumn("price", col("price").cast(org.apache.spark.sql.types.DecimalType(12, 3)))
+    val g = graft.graph.PropertyGraph(Map("Item" -> items),
+      Map.empty[graft.graph.EdgeType, org.apache.spark.sql.DataFrame])
+    val dq = "MATCH (i:Item) RETURN round(i.price, $d) AS r"
+    assert(Seq(0L, 2L, 0L).map(d => g.cypher(dq, Map("d" -> d)).head().getDecimal(0)) ==
+      Seq(new java.math.BigDecimal("11"), new java.math.BigDecimal("10.57"),
+        new java.math.BigDecimal("11")))
+    // a precision known only per row is an error, not 0 digits
+    val err = intercept[IllegalArgumentException] {
+      graph.cypher("UNWIND [2] AS d RETURN round(3.14159, d) AS r").collect()
+    }
+    assert(err.getMessage.contains("round"), err.getMessage)
   }
 
   test("prepared reads: a split delimiter parameter binds per value") {

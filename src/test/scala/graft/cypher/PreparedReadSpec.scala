@@ -85,6 +85,13 @@ class PreparedReadSpec extends SparkSpec {
       "RETURN c.c_custkey AS k, o.o_totalprice > $bal AS big", ps)
   }
 
+  test("duration parameters: prepared date and datetime arithmetic") {
+    agrees("RETURN toString(date('2024-01-31') + duration({days: $d})) AS x",
+      Seq(1L, 30L, -400L).map(d => Map[String, Any]("d" -> d)))
+    agrees("RETURN toString(datetime('2024-01-31T10:00:00') + duration({hours: $h})) AS x",
+      Seq(1.5, 1000.0, -0.25).map(h => Map[String, Any]("h" -> h)))
+  }
+
   test("a prepared lookup with a new key is a cache hit and compiles no new class") {
     val q = "MATCH (c:Customer {c_custkey: $key}) RETURN c.c_name AS name, c.c_acctbal AS acctbal"
     val Seq(k1, k2) = keys("Customer", "c_custkey", 2)

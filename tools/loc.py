@@ -5,9 +5,14 @@ A line counts when it is not blank and, once stripped, does not start
 with `//`, `/*` or `*` (the scaladoc continuation lines). Prints one
 `count path` line per file and a final `total` line.
 
+With --diff, prints `before -> after (delta) path` for each file whose
+count differs between git revision REV and the working tree (a file
+absent on one side counts 0 there), then the same for the total.
+
 Usage:
-    python3 tools/loc.py          # the working tree
-    python3 tools/loc.py REV      # the tree at git revision REV
+    python3 tools/loc.py              # the working tree
+    python3 tools/loc.py REV          # the tree at git revision REV
+    python3 tools/loc.py --diff REV   # REV -> the working tree, changed files
 """
 import os
 import subprocess
@@ -45,13 +50,29 @@ def sources(rev):
                 yield p, git("show", f"{rev}:{p}")
 
 
+def counts(rev):
+    return {path: code_lines(text) for path, text in sources(rev)}
+
+
+def diff(rev):
+    before, after = counts(rev), counts(None)
+    for path in sorted(set(before) | set(after)):
+        b, a = before.get(path, 0), after.get(path, 0)
+        if a != b:
+            print(f"{b:6d} -> {a:6d} ({a - b:+d}) {path}")
+    b, a = sum(before.values()), sum(after.values())
+    print(f"{b:6d} -> {a:6d} ({a - b:+d}) total")
+
+
 def main(argv):
-    if len(argv) > 2:
+    if len(argv) == 3 and argv[1] == "--diff":
+        diff(argv[2])
+        return
+    if len(argv) > 2 or (len(argv) == 2 and argv[1].startswith("-")):
         sys.exit(__doc__)
     rev = argv[1] if len(argv) == 2 else None
     total = 0
-    for path, text in sorted(sources(rev)):
-        n = code_lines(text)
+    for path, n in sorted(counts(rev).items()):
         total += n
         print(f"{n:6d} {path}")
     print(f"{total:6d} total")
